@@ -870,25 +870,10 @@ object Curation {
     * Verify compare read the IDENTICAL centroid bits.
     */
   def ensureSemanticQuantizer(
-      s: SparkSession, dir: String, k: Int = NumCentroids): String = {
-    val qpath = cachedQuantizerPath(dir, k, corpusFingerprint(s, dir))
-    if (!new java.io.File(s"$qpath/_SUCCESS").exists()) {
-      // race-safe publish: train into a private dir, then atomically
-      // rename into place. Training is deterministic, so a concurrent
-      // session losing the rename race discards a bit-identical copy.
-      val tmp = qpath + "_w" + java.util.UUID.randomUUID().toString.take(8)
-      writeSemanticQuantizer(s, dir, tmp, k)
-      if (!new java.io.File(tmp).renameTo(new java.io.File(qpath)))
-        deleteRecursively(new java.io.File(tmp))
-    }
-    qpath
-  }
-
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+      s: SparkSession, dir: String, k: Int = NumCentroids): String =
+    ArtifactStore.ensure("semquant", s"_k$k", dir,
+      ArtifactStore.fingerprint(s, dir, "embeddings"))(
+      writeSemanticQuantizer(s, dir, _, k))
 
   /** Train the Lloyd's quantizer on a corpus's embeddings and persist
     * it as a (cent_id, cent) table — the train-once half of the split.
@@ -942,43 +927,6 @@ object Curation {
         batch.select(col("vec_id"), col("e")).as[(Long, Array[Double])],
         readSemanticQuantizer(s, quantizerPath))
       .select(col("vec_id"), col("v"), col("cluster"))
-  }
-
-  /** Cheap content fingerprint of a corpus's embeddings: row count plus
-    * an order-independent sum of per-row murmur hashes, in one bounded
-    * 1-row aggregate. Rewriting the corpus IN PLACE — even with the same
-    * row count and ids — changes the fingerprint, so a cached quantizer
-    * can never silently outlive the data it was trained on (the /tmp
-    * cache survives JVM restarts, so a path-only key could).
-    */
-  private[graft] def corpusFingerprint(s: SparkSession, dir: String): String = {
-    // EVERY column participates in the hash (r15 ADVICE): the r15 form
-    // hashed only (vec_id, embedding), but IVF coarse cells derive from
-    // the LABEL column (centroidsExact), so a label-only table change
-    // served a stale frozen index and broke the serve==inline parity
-    // contract. Hashing all columns (name-sorted, so physical column
-    // order is immaterial) closes that class for any future dependency.
-    val e = t(s, dir, "embeddings")
-    val r = e
-      .agg(count(lit(1)),
-        coalesce(
-          sum(hash(e.columns.sorted.map(col).toIndexedSeq: _*).cast("long")),
-          lit(0L)))
-      .head()
-    s"${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}"
-  }
-
-  /** Quantizer cache location for the registered query form: one frozen
-    * model per (corpus dir, k, corpus fingerprint), under the JVM temp
-    * root — the driver and bench invoke queries as (SparkSession, dir)
-    * pairs, so the first invocation trains and every later one applies;
-    * a corpus rewrite shifts the fingerprint and forces a retrain.
-    */
-  private[graft] def cachedQuantizerPath(dir: String, k: Int, fp: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val tag = md.digest(s"$dir|$fp".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft_semquant_${tag}_k$k"
   }
 
   // ---- per-language top-k n-grams ----
@@ -1571,12 +1519,12 @@ object Curation {
     * (ta_charlm, ta_charlm_buckets, repeat bench sweeps). The model is
     * all-integer (trigram counts on a lineage-truncated frame), so a
     * cache hit is bit-identical to a retrain; the fingerprint is the
-    * rewrite-sensitive [[TextAnalysis.docsFingerprint]], the
-    * quantizer/BPE-cache invalidation discipline.
+    * rewrite-sensitive [[ArtifactStore.fingerprint]] of the documents
+    * table, the quantizer/BPE-cache invalidation discipline.
     */
   def charLmFor(s: SparkSession, dir: String): CharLm =
     lmCache.computeIfAbsent(
-      dir + "|" + TextAnalysis.docsFingerprint(s, dir),
+      dir + "|" + ArtifactStore.fingerprint(s, dir, "documents"),
       _ => trainCharLm(t(s, dir, "documents")))
 
   def taCharLm(s: SparkSession, dir: String): DataFrame =

@@ -179,15 +179,8 @@ object Scale {
       s.sql(s"DROP TABLE IF EXISTS $table")
       // a dropped-but-orphaned location (e.g. from a killed session)
       // blocks CREATE TABLE — clear it
-      val loc = new java.io.File(
-        new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath, table)
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(loc)
-      }
+      graft.streaming.StateFs.deleteRecursively(new org.apache.hadoop.fs.Path(
+        s.conf.get("spark.sql.warehouse.dir"), table).toString)
       df.write.mode("overwrite")
         .bucketBy(buckets, key).sortBy(key)
         .saveAsTable(table)

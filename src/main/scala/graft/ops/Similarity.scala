@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
 import graft.ops.Scale.GatedCheckpoint
+import graft.streaming.StateFs
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float> 64-dim, label).
@@ -1182,14 +1183,86 @@ object Similarity {
       it.flatMap { case (id, v) =>
         val code = pqEncode(unitVec(v), bks)
         tbs.iterator.filter(_._1 != id).map { case (qid, tb) =>
-          var acc = 0.0
-          var m = 0
-          while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
-          (qid, id, acc)
+          (qid, id, adcSum(tb, code))
         }
       }
     }.toDF("query_id", "cand_id", "approx")
     rerankPool(all, approx)
+  }
+
+  /** What the 8 code bytes of an IVF-PQ index encode — the ONLY thing
+    * the three tiers differ in. Coarse assignment, probe ranking, pool
+    * width and the exact re-rank are shared.
+    *
+    *  - `anchored = false` ([[PqEncoding.Plain]], FAISS
+    *    `by_residual=false`): codes quantize the unit vector v̂ itself,
+    *    approx = Σₘ tb[m][codeₘ].
+    *  - `anchored = true` ([[PqEncoding.Residual]], FAISS's
+    *    `by_residual=true` default): codes quantize r = v̂ − c̄ against
+    *    the RAW cell mean ([[residualOf]]), so the same [[PqK]]
+    *    centroids per subspace spend their resolution on LOCAL detail;
+    *    approx = qu·c̄ + Σₘ tb[m][codeₘ], the coarse term riding the
+    *    probe list and the table cell-independent.
+    *  - `rotation` ([[PqEncoding.Opq]], OPQ-style, Ge et al. CVPR 2013):
+    *    codes quantize R·r with the seeded orthogonal [[opqRotation]],
+    *    so every original coordinate feeds every PQ subspace; the ADC
+    *    table dots the rotated query R·qu (rotations preserve dot
+    *    products, so the decomposition stays exact) and the coarse
+    *    term stays unrotated.
+    *
+    * A frozen index records its encoding itself (`_residual`/`_opq`
+    * markers, `_rotation` sidecar), and [[indexTier]] reads it back, so
+    * search and append can never pick another tier's decoder.
+    */
+  final case class PqEncoding(anchored: Boolean,
+      rotation: Option[Array[Array[Double]]]) {
+
+    /** The vector PQ quantizes for v in coarse cell `ci`: v̂, or
+      * (R·)(v̂ − c̄). The plain encoding pays no residual subtraction.
+      */
+    def coded(v: Array[Double], cents: Array[(Long, Array[Double])],
+        ci: Int): Array[Double] =
+      if (!anchored) unitVec(v)
+      else {
+        val r = residualOf(v, cents(ci)._2)
+        rotation match { case Some(m) => rotate(m, r); case None => r }
+      }
+
+    def encode(v: Array[Double], cents: Array[(Long, Array[Double])],
+        ci: Int, books: Array[Array[Array[Double]]]): Array[Byte] =
+      pqEncode(coded(v, cents, ci), books)
+
+    /** [[pqTrain]] over the deterministic sample's coded vectors — a
+      * bounded driver-side pure function of sample + centroids,
+      * interpolatable as oracle literals.
+      */
+    def train(sample: Array[Array[Double]],
+        cents: Array[(Long, Array[Double])]): Array[Array[Array[Double]]] =
+      pqTrain(sample.map(v => coded(v, cents, coarseCellOf(v, cents))))
+
+    /** The per-query ADC table (rotated-space when rotating). */
+    def table(qu: Array[Double],
+        books: Array[Array[Array[Double]]]): Array[Array[Double]] =
+      adcTableOf(rotation match { case Some(m) => rotate(m, qu); case None => qu },
+        books)
+
+    /** The per-(query, cell) coarse term added before the table sum. */
+    def coarse(qu: Array[Double], cbar: Array[Double]): Double =
+      if (anchored) dotArr(qu, cbar) else 0.0
+
+    /** The tier's marker directory, if it has one. */
+    def marker: Option[String] =
+      if (rotation.isDefined) Some("opq") else if (anchored) Some("residual") else None
+
+    /** The artifact-store kind of its frozen index (`graft_<kind>_*`). */
+    def kind: String =
+      if (rotation.isDefined) "ivfpqo" else if (anchored) "ivfpqr" else "ivfpq"
+  }
+
+  object PqEncoding {
+    val Plain = PqEncoding(anchored = false, None)
+    val Residual = PqEncoding(anchored = true, None)
+    def Opq: PqEncoding = PqEncoding(anchored = true, Some(opqRotation()))
   }
 
   /** IVF-PQ hybrid ANN (VERDICT r14 ask #6) — the production serving
@@ -1201,75 +1274,71 @@ object Similarity {
     * gate HOW each survivor is scored ([[PqM]] table lookups against
     * an 8-byte code, never float math on the stored vector), and an
     * exact double re-rank of the per-query top-[[PqCand]] pool
-    * restores metric fidelity. Codes quantize the UNIT vectors
-    * themselves (FAISS `by_residual=false`), which keeps the ADC
-    * tables pure query-side artifacts and the whole search replayable
-    * in SQL.
+    * restores metric fidelity. `enc` is what the codes quantize
+    * ([[PqEncoding]]); at equal nprobe the residual tier's recall is
+    * spec-pinned ≥ the plain tier's, and the OPQ tier's ≥ the
+    * residual's.
     *
-    * 100 TB shape: both model artifacts are bounded and broadcast (the
+    * 100 TB shape: every model artifact is bounded and broadcast (the
     * codebook trains driver-side on the deterministic vec_id-ordered
     * sample — [[pqTrain]]'s trust model; the coarse centroids are the
-    * k-row exact fold; the probe lists are a queries×k grid). The
-    * corpus is scanned ONCE with coarse-assign + encode + ADC fused in
-    * one compiled pass and NO shuffle before the bounded
+    * k-row exact fold; R is 64×64; the probe lists are a queries×k
+    * grid). The corpus is scanned ONCE with coarse-assign + encode +
+    * ADC fused in one compiled pass and NO shuffle before the bounded
     * (query, cand, approx) scalar stream — a vector whose cell no
     * query probes emits nothing and its code is never built. The
     * top-pool window and exact re-rank ride id scalars exactly as the
     * PQ/SQ tiers do.
     *
     * Identity anchor (spec-pinned): with `nprobe = k` every cell is
-    * probed, so the hybrid degenerates to exactly [[simPqANN]] — the
-    * recall knob's correctness anchor, the nprobe=k ⇒ brute-force
+    * probed, so the plain hybrid degenerates to exactly [[simPqANN]] —
+    * the recall knob's correctness anchor, the nprobe=k ⇒ brute-force
     * stance of [[simIvfANN]] applied at the PQ tier.
     */
-  def simIvfPqANN(s: SparkSession, dir: String,
-      nprobe: Int = NProbe): DataFrame = {
+  def simIvfPqANN(s: SparkSession, dir: String, nprobe: Int = NProbe,
+      enc: PqEncoding = PqEncoding.Plain): DataFrame = {
     import s.implicits._
     val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
     val typed = all.as[(Long, Array[Double])]
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(t => unitVec(t._2))
-    val books = pqTrain(sample)
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val (cents, books) = ivfPqModel(s, dir, typed, enc)
     val queries = typed.filter(_._1 < NumQueries).collect().sortBy(_._1)
-    // per-query ADC tables over the probed-cell set — the shared
-    // trunk of the inline and frozen-index forms
-    val tables = ivfPqProbeTables(queries, cents, books, nprobe)
-    val bcBooks = s.sparkContext.broadcast(books)
-    val bcCents = s.sparkContext.broadcast(cents)
-    val bcTables = s.sparkContext.broadcast(tables)
+    val bcModel = s.sparkContext.broadcast((cents, books, enc))
+    val bcTables = s.sparkContext.broadcast(
+      ivfPqProbeTables(queries, cents, books, enc, nprobe))
     val approx = typed.mapPartitions { it =>
-      val bks = bcBooks.value
-      val cs = bcCents.value
+      val (cs, bks, e) = bcModel.value
       val tbs = bcTables.value
       it.flatMap { case (id, v) =>
-        // coarse assign: the shared coarseCellOf (max cosine, lowest
-        // cent_id on ties over the cent_id-ascending array)
-        val bestId = if (cs.isEmpty) -1L else cs(coarseCellOf(v, cs))._1
-        val qs = tbs.getOrElse(bestId, Array.empty[(Long, Array[Array[Double]])])
-        if (qs.isEmpty) Iterator.empty // unprobed cell: code never built
-        else {
-          val code = pqEncode(unitVec(v), bks)
-          qs.iterator.filter(_._1 != id).map { case (qid, tb) =>
-            var acc = 0.0
-            var m = 0
-            while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
-            (qid, id, acc)
-          }
+        val ci = coarseCellOf(v, cs)
+        tbs.get(cellIdOf(cs, ci)) match {
+          case Some(qs) => adcScores(id, e.encode(v, cs, ci, bks), qs)
+          case None => Iterator.empty // unprobed cell: code never built
         }
       }
     }.toDF("query_id", "cand_id", "approx")
     rerankPool(all, approx)
   }
 
+  /** The coarse centroids (cent_id-ascending) and the encoding's
+    * codebook, derived from the corpus — the model every inline form
+    * and the index writer share.
+    */
+  private def ivfPqModel(s: SparkSession, dir: String,
+      typed: org.apache.spark.sql.Dataset[(Long, Array[Double])],
+      enc: PqEncoding)
+      : (Array[(Long, Array[Double])], Array[Array[Array[Double]]]) = {
+    import s.implicits._
+    val cents = centroidsExact(emb(s, dir))
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val sample = typed.filter(_._1 < PqSampleIds).collect()
+      .sortBy(_._1).map(_._2)
+    (cents, enc.train(sample, cents))
+  }
+
   /** Coarse cell INDEX of v (max cosine, lowest cent_id on ties —
     * cents must be cent_id-ascending, so strict > IS the tie-break):
-    * THE shared assignment primitive of every IVF-PQ derivation —
-    * [[simIvfPqANN]], [[assignEncode]], both recall curves and the
-    * residual tier all route through it, so the oracle-load-bearing
-    * tie-break has exactly one definition (r16 review finding: the
-    * first cut left three inline copies).
+    * THE shared assignment primitive of every IVF-PQ derivation, so
+    * the oracle-load-bearing tie-break has exactly one definition.
     */
   private def coarseCellOf(v: Array[Double],
       cents: Array[(Long, Array[Double])]): Int = {
@@ -1283,6 +1352,28 @@ object Similarity {
     }
     best
   }
+
+  private def cellIdOf(cents: Array[(Long, Array[Double])], ci: Int): Long =
+    if (cents.isEmpty) -1L else cents(ci)._1
+
+  /** Σₘ tb[m][codeₘ] — the in-order ADC fold every PQ tier shares. */
+  private def adcSum(tb: Array[Array[Double]], code: Array[Byte]): Double = {
+    var acc = 0.0
+    var m = 0
+    while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
+    acc
+  }
+
+  /** (query, cand, approx) for one coded candidate against its cell's
+    * probe list: coarse FIRST, table-sum second — the oracle's
+    * `coarse + list_sum(...)` association, bit-for-bit.
+    */
+  private def adcScores(id: Long, code: Array[Byte],
+      qs: Array[(Long, Double, Array[Array[Double]])])
+      : Iterator[(Long, Long, Double)] =
+    qs.iterator.filter(_._1 != id).map { case (qid, coarse, tb) =>
+      (qid, id, coarse + adcSum(tb, code))
+    }
 
   /** Unit-space residual r = v/‖v‖ − c̄, where c̄ is the coarse cell's
     * RAW centroid (the exact mean, NOT re-normalized): the cell mean
@@ -1301,18 +1392,6 @@ object Similarity {
     while (i < u.length) { r(i) = u(i) - cbar(i); i += 1 }
     r
   }
-
-  /** Residual PQ codebooks (FAISS `by_residual=true`): [[pqTrain]] run
-    * over the deterministic sample's residuals against their coarse
-    * cells — same trust model (a bounded driver-side pure function of
-    * sample + centroids, interpolatable as oracle literals).
-    */
-  def pqTrainResidual(sample: Array[Array[Double]],
-      cents: Array[(Long, Array[Double])]): Array[Array[Array[Double]]] =
-    pqTrain(sample.map(v =>
-      residualOf(v, cents(coarseCellOf(v, cents))._2)))
-
-  // ---- OPQ-style rotated residual tier (VERDICT r16 ask #5) ----
 
   /** Householder reflectors composed into the OPQ rotation. The count
     * is the seeded init's one hyperparameter, chosen by a measured
@@ -1378,237 +1457,77 @@ object Similarity {
       v: Array[Double]): Array[Double] =
     Array.tabulate(rot.length)(i => dotArr(rot(i), v))
 
-  /** OPQ codebooks: [[pqTrain]] over the deterministic sample's
-    * ROTATED residuals — the codebook lives in rotated space, so both
-    * encode (R·r) and the ADC table (R·qu) rotate before touching it.
-    */
-  def pqTrainOpq(sample: Array[Array[Double]],
-      cents: Array[(Long, Array[Double])],
-      rot: Array[Array[Double]]): Array[Array[Array[Double]]] =
-    pqTrain(sample.map(v =>
-      rotate(rot, residualOf(v, cents(coarseCellOf(v, cents))._2))))
-
-  /** Per-query residual-ADC artifacts keyed by probed cell. Residual
-    * encoding makes the [PqM][PqK] lookup table CELL-INDEPENDENT (it
-    * dots the query against the residual codebook, which is shared by
-    * every cell); the per-(query, cell) part collapses to ONE scalar —
-    * the coarse term qu·cu the decomposition adds back. At a large k
-    * this is the residual tier's serving advantage: probing more cells
-    * costs one double per cell, not a fresh table.
-    */
-  private def ivfPqResidualProbeTables(
-      queries: Array[(Long, Array[Double])],
-      cents: Array[(Long, Array[Double])],
-      books: Array[Array[Array[Double]]],
-      nprobe: Int,
-      rot: Option[Array[Array[Double]]] = None)
-      : Map[Long, Array[(Long, Double, Array[Array[Double]])]] = {
-    val cbars = cents.map(c => (c._1, c._2)).toMap
-    queries
-      .flatMap { case (qid, qv) =>
-        val qu = unitVec(qv)
-        // OPQ: qu·r̂ = qu·Rᵀẑ = (R·qu)·ẑ — the ADC table dots the
-        // ROTATED query against the rotated-space codebook; the coarse
-        // term qu·c̄ below stays in the original space (the
-        // decomposition rotates only the coded residual)
-        val tb = adcTableOf(rot.fold(qu)(r => rotate(r, qu)), books)
-        cents.map { case (cid, c) => (cid, qid, cosArr(qv, c)) }
-          .sortBy { case (cid, _, cos) => (-cos, cid) }
-          .take(nprobe)
-          .map { case (cid, _, _) => (cid, (qid, dotArr(qu, cbars(cid)), tb)) }
-      }
-      .groupBy(_._1).map { case (cid, xs) => cid -> xs.map(_._2) }
-  }
-
-  /** IVF-PQ with RESIDUAL encoding (VERDICT r15 ask #6; FAISS's
-    * `by_residual=true` default): codes quantize r = v̂ − c̄ (the raw
-    * cell mean) instead of v̂ itself. Residuals are zero-mean within
-    * each cell with the coarse structure removed, so the same [[PqK]]
-    * centroids per subspace spend their resolution on LOCAL detail —
-    * higher recall at equal bits (spec-pinned ≥ the non-residual tier
-    * at equal nprobe). ADC decomposes as approx = qu·c̄ + Σₘ tb[m][codeₘ]: the
-    * coarse term rides the probe list, the table is per-query and
-    * cell-independent. Coarse assignment, probe ranking, pool width
-    * and the exact re-rank are byte-identical to [[simIvfPqANN]] —
-    * the two tiers differ ONLY in what the 8 bytes encode.
-    *
-    * 100 TB shape: identical to the non-residual hybrid's — bounded
-    * broadcast model artifacts, ONE fused corpus scan with no shuffle
-    * before the bounded (query, cand, approx) stream, unprobed cells
-    * never encode.
-    */
-  def simIvfPqResidualANN(s: SparkSession, dir: String,
-      nprobe: Int = NProbe): DataFrame = {
-    import s.implicits._
-    val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
-    val typed = all.as[(Long, Array[Double])]
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(_._2)
-    val books = pqTrainResidual(sample, cents)
-    val queries = typed.filter(_._1 < NumQueries).collect().sortBy(_._1)
-    val tables = ivfPqResidualProbeTables(queries, cents, books, nprobe)
-    val bcBooks = s.sparkContext.broadcast(books)
-    val bcCents = s.sparkContext.broadcast(cents)
-    val bcTables = s.sparkContext.broadcast(tables)
-    val approx = typed.mapPartitions { it =>
-      val bks = bcBooks.value
-      val cs = bcCents.value
-      val tbs = bcTables.value
-      it.flatMap { case (id, v) =>
-        val ci = coarseCellOf(v, cs)
-        val qs = tbs.getOrElse(cs(ci)._1,
-          Array.empty[(Long, Double, Array[Array[Double]])])
-        if (qs.isEmpty) Iterator.empty // unprobed cell: code never built
-        else {
-          val code = pqEncode(residualOf(v, cs(ci)._2), bks)
-          qs.iterator.filter(_._1 != id).map { case (qid, coarse, tb) =>
-            var acc = 0.0
-            var m = 0
-            while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
-            // coarse FIRST, table-sum second — the oracle's
-            // `coarse + list_sum(...)` association, bit-for-bit
-            (qid, id, coarse + acc)
-          }
-        }
-      }
-    }.toDF("query_id", "cand_id", "approx")
-    rerankPool(all, approx)
-  }
-
-  /** IVF-PQ with OPQ-STYLE ROTATED residual encoding (VERDICT r16 ask
-    * #5): codes quantize R·r — the residual after the deterministic
-    * orthogonal [[opqRotation]] — so every original coordinate feeds
-    * every PQ subspace, decorrelating coordinate-aligned structure the
-    * per-slice codebooks can't otherwise spend bits on. The ADC
-    * decomposition stays exact because rotations preserve dot
-    * products: approx = qu·c̄ + (R·qu)·ẑ with ẑ the decoded rotated
-    * residual. Coarse assignment, probe ranking, pool width and the
-    * exact re-rank are byte-identical to [[simIvfPqResidualANN]] — the
-    * tiers differ ONLY in the space the 8 coded bytes live in (and the
-    * shared [[ivfPqResidualProbeTables]]/[[assignEncodeResidual]]
-    * kernels take the rotation as a parameter, so the three tiers
-    * cannot drift).
-    *
-    * 100 TB shape: identical to the residual hybrid's — R is a 64×64
-    * broadcast model artifact (32 KB), rotation is 64 dots per encoded
-    * vector inside the same fused scan, still no shuffle before the
-    * bounded (query, cand, approx) stream.
-    */
-  def simIvfPqOpqANN(s: SparkSession, dir: String,
-      nprobe: Int = NProbe,
-      reflectors: Int = OpqReflectors): DataFrame = {
-    import s.implicits._
-    val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
-    val typed = all.as[(Long, Array[Double])]
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(_._2)
-    val rot = opqRotation(reflectors = reflectors)
-    val books = pqTrainOpq(sample, cents, rot)
-    val queries = typed.filter(_._1 < NumQueries).collect().sortBy(_._1)
-    val tables =
-      ivfPqResidualProbeTables(queries, cents, books, nprobe, Some(rot))
-    val bcBooks = s.sparkContext.broadcast(books)
-    val bcCents = s.sparkContext.broadcast(cents)
-    val bcRot = s.sparkContext.broadcast(rot)
-    val bcTables = s.sparkContext.broadcast(tables)
-    val approx = typed.mapPartitions { it =>
-      val bks = bcBooks.value
-      val cs = bcCents.value
-      val rt = bcRot.value
-      val tbs = bcTables.value
-      it.flatMap { case (id, v) =>
-        val ci = coarseCellOf(v, cs)
-        val qs = tbs.getOrElse(cs(ci)._1,
-          Array.empty[(Long, Double, Array[Array[Double]])])
-        if (qs.isEmpty) Iterator.empty // unprobed cell: code never built
-        else {
-          val code = pqEncode(rotate(rt, residualOf(v, cs(ci)._2)), bks)
-          qs.iterator.filter(_._1 != id).map { case (qid, coarse, tb) =>
-            var acc = 0.0
-            var m = 0
-            while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
-            (qid, id, coarse + acc)
-          }
-        }
-      }
-    }.toDF("query_id", "cand_id", "approx")
-    rerankPool(all, approx)
-  }
-
-  // ---- frozen on-disk IVF-PQ index (the production serving form) ----
-
-  /** Per-query ADC tables keyed by probed cell — shared by the inline
-    * [[simIvfPqANN]] and the frozen-index [[searchIvfPqIndex]] so the
-    * two probe derivations cannot drift (the winnow-trunk stance).
-    * cents must be cent_id-ascending: "max cos, strict >" is then the
-    * (d asc, cent_id asc) window order of simIvfANN/ivfCells.
+  /** Per-query ADC artifacts keyed by probed cell — shared by the
+    * inline [[simIvfPqANN]] and the frozen-index [[searchIvfPqIndex]]
+    * so the two probe derivations cannot drift. Each (query, cell)
+    * entry carries the coarse scalar and the query's cell-independent
+    * table, so probing more cells costs one double per cell, not a
+    * fresh table. cents must be cent_id-ascending: "max cos, strict >"
+    * is then the (d asc, cent_id asc) window order of simIvfANN/ivfCells.
     */
   private def ivfPqProbeTables(
       queries: Array[(Long, Array[Double])],
       cents: Array[(Long, Array[Double])],
       books: Array[Array[Array[Double]]],
-      nprobe: Int): Map[Long, Array[(Long, Array[Array[Double]])]] = {
+      enc: PqEncoding,
+      nprobe: Int): Map[Long, Array[(Long, Double, Array[Array[Double]])]] =
     queries
       .flatMap { case (qid, qv) =>
         val qu = unitVec(qv)
-        val tb = adcTableOf(qu, books)
-        cents.map { case (cid, c) => (cid, qid, cosArr(qv, c)) }
+        val tb = enc.table(qu, books)
+        cents.map { case (cid, c) => (cid, c, cosArr(qv, c)) }
           .sortBy { case (cid, _, cos) => (-cos, cid) }
           .take(nprobe)
-          .map { case (cid, _, _) => (cid, (qid, tb)) }
+          .map { case (cid, c, _) => (cid, (qid, enc.coarse(qu, c), tb)) }
       }
       .groupBy(_._1).map { case (cid, xs) => cid -> xs.map(_._2) }
-  }
 
-  /** Fused coarse-assign + PQ-encode pass — one compiled corpus scan,
-    * no shuffle; shared by [[writeIvfPqIndex]] and
-    * [[appendIvfPqBatch]] so the stored codes can never drift between
-    * initial build and incremental maintenance.
+  /** Fused coarse-assign + encode pass — one compiled corpus scan, no
+    * shuffle; shared by [[writeIvfPqIndex]] and [[appendIvfPqBatch]]
+    * so the stored codes can never drift between initial build and
+    * incremental maintenance.
     */
   private def assignEncode(
       typed: org.apache.spark.sql.Dataset[(Long, Array[Double])],
       cents: Array[(Long, Array[Double])],
-      books: Array[Array[Array[Double]]]): DataFrame = {
+      books: Array[Array[Array[Double]]],
+      enc: PqEncoding): DataFrame = {
     val s = typed.sparkSession
     import s.implicits._
-    val bcC = s.sparkContext.broadcast(cents)
-    val bcB = s.sparkContext.broadcast(books)
+    val bcModel = s.sparkContext.broadcast((cents, books, enc))
     typed.mapPartitions { it =>
-      val cs = bcC.value
-      val bks = bcB.value
+      val (cs, bks, e) = bcModel.value
       it.map { case (id, v) =>
-        val bestId = if (cs.isEmpty) -1L else cs(coarseCellOf(v, cs))._1
-        (id, bestId, pqEncode(unitVec(v), bks))
+        val ci = coarseCellOf(v, cs)
+        (id, cellIdOf(cs, ci), e.encode(v, cs, ci, bks))
       }
     }.toDF("vec_id", "cent_id", "code")
   }
 
   /** Write the frozen IVF-PQ index: 8-byte PQ codes partitioned by
     * coarse cell (probes become PARTITION FILTERS — directories
-    * outside the probe set are never opened), plus the two model
-    * sidecars (`_pqcentroids`, `_codebook` — underscore-prefixed so
-    * root scans ignore them, the [[writeIvfIndex]] `_centroids`
-    * convention). The index stores NO vectors: 8 B/vector of codes vs
-    * 256 B of float32 — the 32× RAM/disk compression that makes
-    * >10⁹-vector serving fit a cluster; the exact re-rank reads the
-    * full vectors by id from the PRIMARY store, never from the index.
+    * outside the probe set are never opened), plus the model sidecars
+    * (`_pqcentroids`, `_codebook`, and for OPQ the 64×64 `_rotation`
+    * as (i, row) rows — the index is self-contained, a reader
+    * recomputing R from a different reflector count would decode
+    * garbage) and the encoding's marker directory (`_residual` /
+    * `_opq`, read back by [[indexTier]]). Sidecars are
+    * underscore-prefixed so root scans ignore them, the
+    * [[writeIvfIndex]] `_centroids` convention. The index stores NO
+    * vectors: 8 B/vector of codes vs 256 B of float32 — the 32×
+    * RAM/disk compression that makes >10⁹-vector serving fit a
+    * cluster; the exact re-rank reads the full vectors by id from the
+    * PRIMARY store, never from the index.
     */
-  def writeIvfPqIndex(s: SparkSession, dir: String, path: String): Unit = {
+  def writeIvfPqIndex(s: SparkSession, dir: String, path: String,
+      enc: PqEncoding = PqEncoding.Plain): Unit = {
     import s.implicits._
     val typed = emb(s, dir)
       .select($"vec_id", asDouble($"embedding").as("e"))
       .as[(Long, Array[Double])]
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(t => unitVec(t._2))
-    val books = pqTrain(sample)
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val (cents, books) = ivfPqModel(s, dir, typed, enc)
     // root overwrite truncates, so codes go first, sidecars second
-    assignEncode(typed, cents, books)
+    assignEncode(typed, cents, books, enc)
       .write.mode("overwrite").partitionBy("cent_id").parquet(path)
     cents.toSeq.toDF("cent_id", "cent")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_pqcentroids")
@@ -1616,6 +1535,15 @@ object Similarity {
       yield (m, k, books(m)(k).toSeq))
       .toDF("m", "k", "c")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebook")
+    enc.rotation.foreach { rot =>
+      rot.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
+        .toDF("i", "r")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/_rotation")
+    }
+    enc.marker.foreach { m =>
+      Seq(true).toDF(m)
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/_$m")
+    }
   }
 
   private def readPqCentroids(
@@ -1637,22 +1565,50 @@ object Similarity {
     books
   }
 
+  /** The [[PqEncoding]] of the index at `path`, from the writer-owned
+    * marker directories and the `_rotation` sidecar — legacy
+    * marker-less layouts are plain by construction. The layouts are
+    * physically identical (cent_id-partitioned 8-byte codes) but the
+    * codes mean different things per tier, so search and append take
+    * the decoder from here and never from their caller.
+    *
+    * Resolved through the path's OWN Hadoop filesystem — the index I/O
+    * is spark.read/write.parquet, so hdfs://s3a:// layouts are
+    * first-class, and a java.io.File probe would read every remote
+    * residual index as plain (silently wrong scores).
+    *
+    * The probe is the marker DIRECTORY the writer creates ITSELF, not
+    * the committer's `_SUCCESS` inside it (ADVICE r16): with
+    * mapreduce.fileoutputcommitter.marksuccessfuljobs=false no
+    * `_SUCCESS` is ever written, and a `_SUCCESS`-keyed probe would
+    * fail OPEN. Keying on the directory fails CLOSED: a half-written
+    * `_opq` marker still selects the rotated decoder, whose missing
+    * `_rotation` sidecar then fails the read.
+    */
+  private[graft] def indexTier(s: SparkSession, path: String): PqEncoding = {
+    import s.implicits._
+    def marked(m: String): Boolean = StateFs.exists(s"$path/$m")
+    if (marked("_opq"))
+      PqEncoding(anchored = true, Some(
+        s.read.parquet(s"$path/_rotation")
+          .select(col("i").cast("int"), col("r"))
+          .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)))
+    else if (marked("_residual")) PqEncoding.Residual
+    else PqEncoding.Plain
+  }
+
   /** Incremental maintenance: a new batch of (vec_id, e) rows is
-    * assigned + encoded against the FROZEN quantizer and codebook and
-    * appended into the existing partition directories — cost ∝ batch,
-    * the resident index never rewrites (the [[appendIvfBatch]]
-    * contract at the PQ tier).
+    * assigned + encoded against the index's FROZEN centroids,
+    * codebook and encoding, and appended into the existing partition
+    * directories — cost ∝ batch, the resident index never rewrites
+    * (the [[appendIvfBatch]] contract at the PQ tier).
     */
   def appendIvfPqBatch(s: SparkSession, path: String,
       batch: DataFrame): Unit = {
     import s.implicits._
-    // cross-tier refusal: plain-encoding a batch into a residual or
-    // OPQ index would make every appended vector ADC-decode wrongly,
-    // with no error anywhere — refuse like the search paths
-    requireIndexTier(s, path, "plain", "appendIvfPqBatch")
     assignEncode(
       batch.select(col("vec_id"), col("e")).as[(Long, Array[Double])],
-      readPqCentroids(s, path), readPqCodebook(s, path))
+      readPqCentroids(s, path), readPqCodebook(s, path), indexTier(s, path))
       .write.mode("append").partitionBy("cent_id").parquet(path)
   }
 
@@ -1662,19 +1618,20 @@ object Similarity {
     * reads 8-byte codes (no vector ever leaves the index), and the
     * exact re-rank joins the bounded pool back to the primary vector
     * store. With the same model artifacts this reproduces the inline
-    * [[simIvfPqANN]] EXACTLY (spec-pinned — the frozen-equals-fresh
-    * stance of [[searchIvfIndex]]).
+    * [[simIvfPqANN]] of the index's own encoding EXACTLY (spec-pinned
+    * for every encoding — the frozen-equals-fresh stance of
+    * [[searchIvfIndex]]).
     */
   def searchIvfPqIndex(s: SparkSession, dir: String, path: String,
       nprobe: Int = NProbe): DataFrame = {
     import s.implicits._
-    requireIndexTier(s, path, "plain", "searchIvfPqIndex")
+    val enc = indexTier(s, path)
     val books = readPqCodebook(s, path)
     val cents = readPqCentroids(s, path)
     val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
     val queries = all.as[(Long, Array[Double])]
       .filter(_._1 < NumQueries).collect().sortBy(_._1)
-    val tables = ivfPqProbeTables(queries, cents, books, nprobe)
+    val tables = ivfPqProbeTables(queries, cents, books, enc, nprobe)
     val probeIds = tables.keys.toSeq.sorted
     val bcTables = s.sparkContext.broadcast(tables)
     val idx = s.read.parquet(path)
@@ -1684,19 +1641,14 @@ object Similarity {
     val approx = idx.mapPartitions { it =>
       val tbs = bcTables.value
       it.flatMap { case (id, cell, code) =>
-        tbs.getOrElse(cell, Array.empty[(Long, Array[Array[Double]])])
-          .iterator.filter(_._1 != id).map { case (qid, tb) =>
-            var acc = 0.0
-            var m = 0
-            while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
-            (qid, id, acc)
-          }
+        adcScores(id, code,
+          tbs.getOrElse(cell, Array.empty[(Long, Double, Array[Array[Double]])]))
       }
     }.toDF("query_id", "cand_id", "approx")
     rerankPool(all, approx)
   }
 
-  /** sim_ivfpq_recall_curve: recall@[[TopK]] of the IVF-PQ hybrid as a
+  /** Recall@[[TopK]] of the IVF-PQ hybrid of encoding `enc` as a
     * function of nprobe — THE tuning artifact an IVFPQ deployment
     * derives before choosing its probe budget, measured against the
     * EXACT brute-force truth (so unlike [[simRecallCurve]], recall at
@@ -1709,6 +1661,13 @@ object Similarity {
     * scored stream, one pool window and one exact re-rank per tier
     * (the [[simRecallCurve]] one-pass stance applied at the PQ tier).
     *
+    * The curve is monotone for the plain encoding. It is not globally
+    * monotone for the anchored ones at a FIXED re-rank pool: widening
+    * the probe set adds high-approx candidates that can evict true
+    * positives from the bounded pool — the saturation cliff this
+    * artifact exists to surface (pick nprobe at the peak, or widen
+    * [[PqCand]] with the probe budget).
+    *
     * 100 TB shape: same artifacts as [[simIvfPqANN]] (all bounded,
     * broadcast); the scan emits one scored row per (query, cand) —
     * the curve deliberately scores ALL cells (it must know what
@@ -1717,43 +1676,37 @@ object Similarity {
     * every tuning curve here, production derives it on a corpus
     * sample at benchmark cadence, not per query.
     */
-  def simIvfPqRecallCurve(s: SparkSession, dir: String): DataFrame = {
+  def simIvfPqRecallCurve(s: SparkSession, dir: String,
+      enc: PqEncoding = PqEncoding.Plain): DataFrame = {
     import s.implicits._
     val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
     val typed = all.as[(Long, Array[Double])]
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(t => unitVec(t._2))
-    val books = pqTrain(sample)
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val (cents, books) = ivfPqModel(s, dir, typed, enc)
     val k = cents.length
     val queries = typed.filter(_._1 < NumQueries).collect().sortBy(_._1)
-    // per query: the ADC table + the cell → probe-rank map (the same
-    // (-cos, cent_id) order as ivfPqProbeTables, ranks 1..k)
-    val qArt: Array[(Long, Array[Array[Double]], Map[Long, Int])] =
+    // per query: the ADC table, cell → probe rank (the same
+    // (-cos, cent_id) order as ivfPqProbeTables, ranks 1..k), and
+    // cell → coarse term
+    val qArt: Array[(Long, Array[Array[Double]], Map[Long, Int], Map[Long, Double])] =
       queries.map { case (qid, qv) =>
         val qu = unitVec(qv)
-        val tb = adcTableOf(qu, books)
         val prOf = cents.map { case (cid, c) => (cid, cosArr(qv, c)) }
           .sortBy { case (cid, cos) => (-cos, cid) }
           .zipWithIndex.map { case ((cid, _), i) => cid -> (i + 1) }.toMap
-        (qid, tb, prOf)
+        val coarseOf = cents.map { case (cid, c) => cid -> enc.coarse(qu, c) }.toMap
+        (qid, enc.table(qu, books), prOf, coarseOf)
       }
-    val bcBooks = s.sparkContext.broadcast(books)
-    val bcCents = s.sparkContext.broadcast(cents)
+    val bcModel = s.sparkContext.broadcast((cents, books, enc))
     val bcQ = s.sparkContext.broadcast(qArt)
     val scored = typed.mapPartitions { it =>
-      val bks = bcBooks.value
-      val cs = bcCents.value
+      val (cs, bks, e) = bcModel.value
       val qs = bcQ.value
       it.flatMap { case (id, v) =>
-        val bestId = if (cs.isEmpty) -1L else cs(coarseCellOf(v, cs))._1
-        val code = pqEncode(unitVec(v), bks)
-        qs.iterator.filter(_._1 != id).map { case (qid, tb, prOf) =>
-          var acc = 0.0
-          var m = 0
-          while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
-          (qid, id, acc, prOf(bestId))
+        val ci = coarseCellOf(v, cs)
+        val cellId = cellIdOf(cs, ci)
+        val code = e.encode(v, cs, ci, bks)
+        qs.iterator.filter(_._1 != id).map { case (qid, tb, prOf, coarseOf) =>
+          (qid, id, coarseOf(cellId) + adcSum(tb, code), prOf(cellId))
         }
       }
     }.toDF("query_id", "cand_id", "approx", "pr")
@@ -1792,438 +1745,25 @@ object Similarity {
       .orderBy("nprobe")
   }
 
-  /** sim_ivfpq_residual_recall_curve: [[simIvfPqRecallCurve]] for the
-    * RESIDUAL tier — recall@[[TopK]] per probe budget against the
-    * exact brute truth, one pass (candidates carry their probe rank,
-    * tiers are filters), with the residual decomposition's
-    * per-(query, cell) coarse scalar folded into the approx score
-    * exactly as [[simIvfPqResidualANN]] does. The residual tier's
-    * tuning artifact: at equal nprobe its curve should ride at or
-    * above the plain tier's (the equal-bits claim, spec-anchored at
-    * the registered nprobe). NOTE the curve is not globally monotone
-    * at a FIXED re-rank pool: widening the probe set adds high-approx
-    * candidates that can evict true positives from the bounded pool —
-    * the saturation cliff this artifact exists to surface (pick nprobe
-    * at the peak, or widen [[PqCand]] with the probe budget).
-    */
-  def simIvfPqResidualRecallCurve(s: SparkSession, dir: String): DataFrame =
-    ivfPqResidualCurveWith(s, dir, None)
-
-  /** sim_ivfpq_opq_recall_curve: the residual curve machinery over the
-    * ROTATED tier — same one-pass probe-rank fan-out, codes and ADC
-    * tables in rotated space, coarse terms unrotated (the shared-
-    * kernel stance: both curves ride ONE implementation, the rotation
-    * an Option, so the tiers' tuning artifacts cannot drift either).
-    */
-  def simIvfPqOpqRecallCurve(s: SparkSession, dir: String): DataFrame =
-    ivfPqResidualCurveWith(s, dir, Some(opqRotation()))
-
-  private def ivfPqResidualCurveWith(s: SparkSession, dir: String,
-      rotOpt: Option[Array[Array[Double]]]): DataFrame = {
-    import s.implicits._
-    val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
-    val typed = all.as[(Long, Array[Double])]
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(_._2)
-    val books = rotOpt match {
-      case None => pqTrainResidual(sample, cents)
-      case Some(rot) => pqTrainOpq(sample, cents, rot)
-    }
-    val k = cents.length
-    val queries = typed.filter(_._1 < NumQueries).collect().sortBy(_._1)
-    // per query: residual ADC table (rotated-space when rotating),
-    // cell → probe rank, cell → coarse term (qu·c̄ — the
-    // decomposition's exact half, always unrotated)
-    val qArt: Array[(Long, Array[Array[Double]], Map[Long, Int], Map[Long, Double])] =
-      queries.map { case (qid, qv) =>
-        val qu = unitVec(qv)
-        val tb = adcTableOf(rotOpt.fold(qu)(r => rotate(r, qu)), books)
-        val prOf = cents.map { case (cid, c) => (cid, cosArr(qv, c)) }
-          .sortBy { case (cid, cos) => (-cos, cid) }
-          .zipWithIndex.map { case ((cid, _), i) => cid -> (i + 1) }.toMap
-        val coarseOf = cents.map { case (cid, c) =>
-          cid -> dotArr(qu, c) }.toMap
-        (qid, tb, prOf, coarseOf)
-      }
-    val bcBooks = s.sparkContext.broadcast(books)
-    val bcCents = s.sparkContext.broadcast(cents)
-    val bcRot = s.sparkContext.broadcast(rotOpt)
-    val bcQ = s.sparkContext.broadcast(qArt)
-    val scored = typed.mapPartitions { it =>
-      val bks = bcBooks.value
-      val cs = bcCents.value
-      val rt = bcRot.value
-      val qs = bcQ.value
-      it.flatMap { case (id, v) =>
-        val ci = coarseCellOf(v, cs)
-        val cellId = cs(ci)._1
-        val r = residualOf(v, cs(ci)._2)
-        val code = pqEncode(rt.fold(r)(m => rotate(m, r)), bks)
-        qs.iterator.filter(_._1 != id).map { case (qid, tb, prOf, coarseOf) =>
-          var acc = 0.0
-          var m = 0
-          while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
-          (qid, id, coarseOf(cellId) + acc, prOf(cellId))
-        }
-      }
-    }.toDF("query_id", "cand_id", "approx", "pr")
-    val ps = s.range(1, k + 1).toDF("nprobe")
-    val wPool = Window.partitionBy($"nprobe", $"query_id")
-      .orderBy($"approx".desc, $"cand_id".asc)
-    val pool = scored.crossJoin(broadcast(ps))
-      .filter($"pr" <= $"nprobe")
-      .withColumn("ark", row_number().over(wPool))
-      .filter($"ark" <= PqCand)
-      .select($"nprobe", $"query_id", $"cand_id")
-    val qVecs = all.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"e".as("qe"))
-    val wTop = Window.partitionBy($"nprobe", $"query_id")
-      .orderBy($"cos".desc, $"cand_id".asc)
-    val top = all.join(broadcast(pool), $"vec_id" === $"cand_id")
-      .join(broadcast(qVecs), Seq("query_id"))
-      .select($"nprobe", $"query_id", $"cand_id",
-        cosine($"qe", $"e").as("cos"))
-      .withColumn("rk", row_number().over(wTop))
-      .filter($"rk" <= TopK)
-      .select($"nprobe", $"query_id", $"cand_id")
-    val truth = simBruteTopK(s, dir).select($"query_id", $"cand_id")
-    val ntdf = truth.agg(count(lit(1)).as("n_truth"))
-    val hits = top.join(broadcast(truth), Seq("query_id", "cand_id"),
-        "left_semi")
-      .groupBy($"nprobe").agg(count(lit(1)).as("n_hits"))
-    ps.join(hits, Seq("nprobe"), "left")
-      .crossJoin(broadcast(ntdf))
-      .select($"nprobe",
-        coalesce($"n_hits", lit(0L)).as("n_hits"),
-        (coalesce($"n_hits", lit(0L)).cast("double") /
-          $"n_truth".cast("double")).as("recall"))
-      .orderBy("nprobe")
-  }
-
   /** Build-once gate for the frozen per-corpus-fingerprint IVF-PQ
-    * index — the [[ensureGraphIndex]] lifecycle applied to the PQ
-    * tier (temp-dir build + atomic rename, cached per corpus
-    * fingerprint; a deployment rebuilds on corpus refresh cadence,
-    * never per query).
+    * index of encoding `enc` ([[ArtifactStore]]; `graft_ivfpq_*`,
+    * `graft_ivfpqr_*`, `graft_ivfpqo_*`).
     */
-  private[graft] def ensureIvfPqIndex(s: SparkSession, dir: String): String =
-    ensureFrozenIndex(s, dir, "graft_ivfpq_", "_codebook/_SUCCESS",
-      writeIvfPqIndex)
-
-  /** The shared build-once lifecycle of both frozen PQ indexes:
-    * temp-dir build + atomic rename, cached per corpus fingerprint
-    * under the JVM temp root (a deployment rebuilds on corpus refresh
-    * cadence, never per query). `probe` is the file whose existence
-    * marks a completed build — the LAST artifact each writer commits.
-    */
-  private def ensureFrozenIndex(s: SparkSession, dir: String,
-      prefix: String, probe: String,
-      build: (SparkSession, String, String) => Unit): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val tag = md.digest(
-      s"$dir|${Curation.corpusFingerprint(s, dir)}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val ipath = s"${System.getProperty("java.io.tmpdir")}/$prefix$tag"
-    if (!new java.io.File(s"$ipath/$probe").exists()) {
-      val tmp = ipath + "_w" + java.util.UUID.randomUUID().toString.take(8)
-      build(s, dir, tmp)
-      if (!new java.io.File(tmp).renameTo(new java.io.File(ipath)))
-        Curation.deleteRecursively(new java.io.File(tmp))
-    }
-    ipath
-  }
+  private[graft] def ensureIvfPqIndex(s: SparkSession, dir: String,
+      enc: PqEncoding = PqEncoding.Plain): String =
+    ArtifactStore.ensure(enc.kind, "", dir,
+      ArtifactStore.fingerprint(s, dir, "embeddings"))(
+      writeIvfPqIndex(s, dir, _, enc))
 
   /** Registered form: serve the query set against the corpus's FROZEN
-    * on-disk IVF-PQ index (built on first invocation, cached per
-    * corpus fingerprint). Identical output to [[simIvfPqANN]], so it
-    * shares the full [[ivfPqOracleSql]] replay.
+    * on-disk index of encoding `enc` (built on first invocation,
+    * cached per corpus fingerprint). Identical output to the inline
+    * [[simIvfPqANN]] of the same encoding, so each tier's serve shares
+    * its inline tier's full oracle replay.
     */
-  def simIvfPqServe(s: SparkSession, dir: String): DataFrame =
-    searchIvfPqIndex(s, dir, ensureIvfPqIndex(s, dir))
-
-  // ---- frozen RESIDUAL IVF-PQ index (by_residual=true serving) ----
-
-  /** Fused coarse-assign + RESIDUAL-encode pass — the [[assignEncode]]
-    * sibling with codes quantizing v̂ − c̄; shared by the residual
-    * index writer and its incremental append so stored codes can never
-    * drift between build and maintenance.
-    */
-  private def assignEncodeResidual(
-      typed: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      cents: Array[(Long, Array[Double])],
-      books: Array[Array[Array[Double]]],
-      rot: Option[Array[Array[Double]]] = None): DataFrame = {
-    val s = typed.sparkSession
-    import s.implicits._
-    val bcC = s.sparkContext.broadcast(cents)
-    val bcB = s.sparkContext.broadcast(books)
-    val bcR = s.sparkContext.broadcast(rot)
-    typed.mapPartitions { it =>
-      val cs = bcC.value
-      val bks = bcB.value
-      val rt = bcR.value
-      it.map { case (id, v) =>
-        val ci = coarseCellOf(v, cs)
-        val r = residualOf(v, cs(ci)._2)
-        (id, cs(ci)._1, pqEncode(rt.fold(r)(m => rotate(m, r)), bks))
-      }
-    }.toDF("vec_id", "cent_id", "code")
-  }
-
-  /** Write the frozen RESIDUAL IVF-PQ index: the [[writeIvfPqIndex]]
-    * layout (cent_id-partitioned 8-byte codes + `_pqcentroids` /
-    * `_codebook` sidecars) with residual-trained codebooks and
-    * residual codes, plus a `_residual` marker sidecar so the two
-    * physically-identical layouts can never be served through the
-    * wrong decoder (codes mean different things per tier; both search
-    * paths check the marker and refuse a mismatch).
-    */
-  def writeIvfPqResidualIndex(s: SparkSession, dir: String, path: String): Unit = {
-    import s.implicits._
-    val typed = emb(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("e"))
-      .as[(Long, Array[Double])]
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(_._2)
-    val books = pqTrainResidual(sample, cents)
-    assignEncodeResidual(typed, cents, books)
-      .write.mode("overwrite").partitionBy("cent_id").parquet(path)
-    cents.toSeq.toDF("cent_id", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_pqcentroids")
-    (for { m <- 0 until PqM; k <- 0 until PqK }
-      yield (m, k, books(m)(k).toSeq))
-      .toDF("m", "k", "c")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebook")
-    Seq(true).toDF("residual")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_residual")
-  }
-
-  /** The encoding TIER of the index at `path` — "opq", "residual", or
-    * "plain" (legacy marker-less layouts are plain by construction) —
-    * from the writer-owned marker directories. The three layouts are
-    * physically identical (cent_id-partitioned 8-byte codes), but the
-    * codes mean different things per tier, so every search/append path
-    * resolves the tier ONCE here and refuses a mismatch
-    * ([[requireIndexTier]]): a single definition, so adding a tier
-    * extends every refusal direction at once (r16's four-direction
-    * audit becomes 3 tiers × both ops without per-site code).
-    *
-    * Resolved through the path's OWN Hadoop filesystem — the index I/O
-    * is spark.read/write.parquet, so hdfs://s3a:// layouts are
-    * first-class, and a java.io.File probe would read every remote
-    * residual index as plain: the search guard would then serve
-    * residual codes through the plain decoder, the silent-wrong-scores
-    * case the markers exist to prevent.
-    *
-    * The probe is the marker DIRECTORY the writer creates ITSELF, not
-    * the committer's `_SUCCESS` inside it (ADVICE r16): with
-    * mapreduce.fileoutputcommitter.marksuccessfuljobs=false — the
-    * common object-store-committer setting — no `_SUCCESS` is ever
-    * written, and a `_SUCCESS`-keyed guard would fail OPEN (a residual
-    * index reads as plain and its codes decode with plain semantics).
-    * Keying on the directory fails CLOSED: a half-written marker still
-    * refuses the other tiers' decoders.
-    */
-  private def indexTier(s: SparkSession, path: String): String = {
-    def marked(m: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$m")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-    }
-    if (marked("_opq")) "opq"
-    else if (marked("_residual")) "residual"
-    else "plain"
-  }
-
-  /** Refuse to serve or append an index through another tier's
-    * decoder — all 3 tiers × {search, append} refusal directions ride
-    * this one check.
-    */
-  private def requireIndexTier(s: SparkSession, path: String,
-      want: String, via: String): Unit = {
-    val got = indexTier(s, path)
-    require(got == want,
-      s"$path is a '$got'-tier IVF-PQ index: its codes would decode " +
-        s"silently wrong through the '$want' path ($via) — use the " +
-        s"'$got' tier's search/append entry points")
-  }
-
-  /** Incremental maintenance of a residual index — cost ∝ batch
-    * against the FROZEN centroids + residual codebook.
-    */
-  def appendIvfPqResidualBatch(s: SparkSession, path: String,
-      batch: DataFrame): Unit = {
-    import s.implicits._
-    requireIndexTier(s, path, "residual", "appendIvfPqResidualBatch")
-    assignEncodeResidual(
-      batch.select(col("vec_id"), col("e")).as[(Long, Array[Double])],
-      readPqCentroids(s, path), readPqCodebook(s, path))
-      .write.mode("append").partitionBy("cent_id").parquet(path)
-  }
-
-  /** Residual IVF-PQ ANN against a [[writeIvfPqResidualIndex]] layout:
-    * probed cells are PARTITION FILTERS, per-row score = the
-    * per-(query, cell) coarse scalar + the cell-independent per-query
-    * residual-ADC table, exact re-rank from the primary store. With
-    * the same model artifacts this reproduces the inline
-    * [[simIvfPqResidualANN]] EXACTLY (spec-pinned).
-    */
-  def searchIvfPqResidualIndex(s: SparkSession, dir: String, path: String,
-      nprobe: Int = NProbe): DataFrame = {
-    import s.implicits._
-    requireIndexTier(s, path, "residual", "searchIvfPqResidualIndex")
-    val books = readPqCodebook(s, path)
-    val cents = readPqCentroids(s, path)
-    val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
-    val queries = all.as[(Long, Array[Double])]
-      .filter(_._1 < NumQueries).collect().sortBy(_._1)
-    val tables = ivfPqResidualProbeTables(queries, cents, books, nprobe)
-    val probeIds = tables.keys.toSeq.sorted
-    val bcTables = s.sparkContext.broadcast(tables)
-    val idx = s.read.parquet(path)
-      .filter($"cent_id".isin(probeIds: _*))
-      .select($"vec_id", $"cent_id".cast("long").as("cent_id"), $"code")
-      .as[(Long, Long, Array[Byte])]
-    val approx = idx.mapPartitions { it =>
-      val tbs = bcTables.value
-      it.flatMap { case (id, cell, code) =>
-        tbs.getOrElse(cell, Array.empty[(Long, Double, Array[Array[Double]])])
-          .iterator.filter(_._1 != id).map { case (qid, coarse, tb) =>
-            var acc = 0.0
-            var m = 0
-            while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
-            (qid, id, coarse + acc)
-          }
-      }
-    }.toDF("query_id", "cand_id", "approx")
-    rerankPool(all, approx)
-  }
-
-  /** Build-once gate for the frozen residual index — the
-    * [[ensureIvfPqIndex]] lifecycle with its own cache namespace.
-    */
-  private[graft] def ensureIvfPqResidualIndex(s: SparkSession,
-      dir: String): String =
-    ensureFrozenIndex(s, dir, "graft_ivfpqr_", "_residual/_SUCCESS",
-      writeIvfPqResidualIndex)
-
-  /** Registered form: the residual tier against its FROZEN on-disk
-    * index. Identical output to [[simIvfPqResidualANN]], so it shares
-    * the full [[ivfPqResidualOracleSql]] replay.
-    */
-  def simIvfPqResidualServe(s: SparkSession, dir: String): DataFrame =
-    searchIvfPqResidualIndex(s, dir, ensureIvfPqResidualIndex(s, dir))
-
-  // ---- frozen OPQ-rotated residual IVF-PQ index ----
-
-  /** Write the frozen OPQ index: the residual layout plus TWO extra
-    * sidecars — `_rotation` (the 64×64 orthogonal matrix as (i, row)
-    * rows: the index must be self-contained, a reader recomputing R
-    * from a different reflector count would decode garbage) and the
-    * `_opq` tier marker ([[indexTier]]).
-    */
-  def writeIvfPqOpqIndex(s: SparkSession, dir: String, path: String): Unit = {
-    import s.implicits._
-    val typed = emb(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("e"))
-      .as[(Long, Array[Double])]
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(_._2)
-    val rot = opqRotation()
-    val books = pqTrainOpq(sample, cents, rot)
-    assignEncodeResidual(typed, cents, books, Some(rot))
-      .write.mode("overwrite").partitionBy("cent_id").parquet(path)
-    cents.toSeq.toDF("cent_id", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_pqcentroids")
-    (for { m <- 0 until PqM; k <- 0 until PqK }
-      yield (m, k, books(m)(k).toSeq))
-      .toDF("m", "k", "c")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebook")
-    rot.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
-      .toDF("i", "r")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_rotation")
-    Seq(true).toDF("opq")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_opq")
-  }
-
-  private def readOpqRotation(
-      s: SparkSession, path: String): Array[Array[Double]] = {
-    import s.implicits._
-    s.read.parquet(s"$path/_rotation")
-      .select(col("i").cast("int"), col("r"))
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
-  }
-
-  /** Incremental maintenance of an OPQ index — cost ∝ batch against
-    * the FROZEN centroids, rotation, and rotated-space codebook.
-    */
-  def appendIvfPqOpqBatch(s: SparkSession, path: String,
-      batch: DataFrame): Unit = {
-    import s.implicits._
-    requireIndexTier(s, path, "opq", "appendIvfPqOpqBatch")
-    assignEncodeResidual(
-      batch.select(col("vec_id"), col("e")).as[(Long, Array[Double])],
-      readPqCentroids(s, path), readPqCodebook(s, path),
-      Some(readOpqRotation(s, path)))
-      .write.mode("append").partitionBy("cent_id").parquet(path)
-  }
-
-  /** OPQ IVF-PQ ANN against a [[writeIvfPqOpqIndex]] layout — probed
-    * cells are partition filters, the per-query ADC table dots the
-    * ROTATED query against the stored rotated-space codebook, exact
-    * re-rank from the primary store. Reproduces the inline
-    * [[simIvfPqOpqANN]] EXACTLY (spec-pinned).
-    */
-  def searchIvfPqOpqIndex(s: SparkSession, dir: String, path: String,
-      nprobe: Int = NProbe): DataFrame = {
-    import s.implicits._
-    requireIndexTier(s, path, "opq", "searchIvfPqOpqIndex")
-    val books = readPqCodebook(s, path)
-    val cents = readPqCentroids(s, path)
-    val rot = readOpqRotation(s, path)
-    val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
-    val queries = all.as[(Long, Array[Double])]
-      .filter(_._1 < NumQueries).collect().sortBy(_._1)
-    val tables =
-      ivfPqResidualProbeTables(queries, cents, books, nprobe, Some(rot))
-    val probeIds = tables.keys.toSeq.sorted
-    val bcTables = s.sparkContext.broadcast(tables)
-    val idx = s.read.parquet(path)
-      .filter($"cent_id".isin(probeIds: _*))
-      .select($"vec_id", $"cent_id".cast("long").as("cent_id"), $"code")
-      .as[(Long, Long, Array[Byte])]
-    val approx = idx.mapPartitions { it =>
-      val tbs = bcTables.value
-      it.flatMap { case (id, cell, code) =>
-        tbs.getOrElse(cell, Array.empty[(Long, Double, Array[Array[Double]])])
-          .iterator.filter(_._1 != id).map { case (qid, coarse, tb) =>
-            var acc = 0.0
-            var m = 0
-            while (m < PqM) { acc += tb(m)(code(m) & 0xff); m += 1 }
-            (qid, id, coarse + acc)
-          }
-      }
-    }.toDF("query_id", "cand_id", "approx")
-    rerankPool(all, approx)
-  }
-
-  /** Build-once gate for the frozen OPQ index. */
-  private[graft] def ensureIvfPqOpqIndex(s: SparkSession,
-      dir: String): String =
-    ensureFrozenIndex(s, dir, "graft_ivfpqo_", "_opq/_SUCCESS",
-      writeIvfPqOpqIndex)
-
-  /** Registered form: the OPQ tier against its FROZEN on-disk index.
-    * Identical output to [[simIvfPqOpqANN]], so it shares the full
-    * [[ivfPqOpqOracleSql]] replay.
-    */
-  def simIvfPqOpqServe(s: SparkSession, dir: String): DataFrame =
-    searchIvfPqOpqIndex(s, dir, ensureIvfPqOpqIndex(s, dir))
+  def simIvfPqServe(s: SparkSession, dir: String,
+      enc: PqEncoding = PqEncoding.Plain): DataFrame =
+    searchIvfPqIndex(s, dir, ensureIvfPqIndex(s, dir, enc))
 
   /** Primitive left-to-right dot product — the same op order as the
     * Column-level fold and the DuckDB oracle, so results stay
@@ -2611,35 +2151,17 @@ object Similarity {
       knnNeighbors(s, path).select(col("src"), col("dst")),
       queriesIn, k, beam, rounds)
 
-  /** Graph-index cache location for the registered query form — the
-    * [[Curation.cachedQuantizerPath]] pattern: one frozen index per
-    * (corpus dir, fingerprint); a corpus rewrite shifts the
-    * fingerprint and forces a rebuild.
-    */
-  private[graft] def cachedGraphPath(dir: String, fp: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val tag = md.digest(s"$dir|$fp".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft_knngraph_$tag"
-  }
-
   /** Build-once gate for the frozen per-corpus-fingerprint graph index
     * — shared by [[simGraphSearch]] and [[simGraphCentrality]], so one
     * NN-Descent build serves both registered queries and every repeat
-    * call. Tmp-dir + rename keeps a concurrent loser from clobbering a
-    * completed index.
+    * call ([[ArtifactStore]]).
     */
   private[graft] def ensureGraphIndex(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val gpath = cachedGraphPath(dir, Curation.corpusFingerprint(s, dir))
-    if (!new java.io.File(s"$gpath/edges/_SUCCESS").exists()) {
-      val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
-      val tmp = gpath + "_w" + java.util.UUID.randomUUID().toString.take(8)
-      writeKnnGraphOf(all, tmp)
-      if (!new java.io.File(tmp).renameTo(new java.io.File(gpath)))
-        Curation.deleteRecursively(new java.io.File(tmp))
-    }
-    gpath
+    ArtifactStore.ensure("knngraph", "", dir,
+      ArtifactStore.fingerprint(s, dir, "embeddings"))(
+      writeKnnGraphOf(
+        emb(s, dir).select($"vec_id", asDouble($"embedding").as("e")), _))
   }
 
   /** Registered form: beam-search the query set against the corpus's
@@ -3234,16 +2756,18 @@ object Similarity {
     // inline and against the frozen on-disk index
     "sim_ivfpq_ann" -> ((s, d) => simIvfPqANN(s, d)),
     // r16: the by_residual=true tier (higher recall at equal bits)
-    "sim_ivfpq_residual" -> ((s, d) => simIvfPqResidualANN(s, d)),
-    "sim_ivfpq_residual_serve" -> simIvfPqResidualServe,
+    "sim_ivfpq_residual" -> ((s, d) => simIvfPqANN(s, d, enc = PqEncoding.Residual)),
+    "sim_ivfpq_residual_serve" -> ((s, d) => simIvfPqServe(s, d, PqEncoding.Residual)),
     // r17: the OPQ-rotated residual tier (VERDICT r16 ask #5)
-    "sim_ivfpq_opq" -> ((s, d) => simIvfPqOpqANN(s, d)),
-    "sim_ivfpq_opq_serve" -> simIvfPqOpqServe,
-    "sim_ivfpq_serve" -> simIvfPqServe,
-    "sim_ivfpq_recall_curve" -> simIvfPqRecallCurve,
-    "sim_ivfpq_residual_recall_curve" -> simIvfPqResidualRecallCurve,
+    "sim_ivfpq_opq" -> ((s, d) => simIvfPqANN(s, d, enc = PqEncoding.Opq)),
+    "sim_ivfpq_opq_serve" -> ((s, d) => simIvfPqServe(s, d, PqEncoding.Opq)),
+    "sim_ivfpq_serve" -> ((s, d) => simIvfPqServe(s, d)),
+    "sim_ivfpq_recall_curve" -> ((s, d) => simIvfPqRecallCurve(s, d)),
+    "sim_ivfpq_residual_recall_curve" ->
+      ((s, d) => simIvfPqRecallCurve(s, d, PqEncoding.Residual)),
     // r17: the rotated tier's tuning curve (shared curve kernel)
-    "sim_ivfpq_opq_recall_curve" -> simIvfPqOpqRecallCurve,
+    "sim_ivfpq_opq_recall_curve" ->
+      ((s, d) => simIvfPqRecallCurve(s, d, PqEncoding.Opq)),
     // oracle-gated since r11 via the frozen-pair replay (the pq
     // codebook pattern — see frozenPairsOracleSql); recall-gated by spec
     "sim_knn_graph" -> simKnnGraph,
@@ -4230,7 +3754,7 @@ object Similarity {
       .as[(Long, Array[Double])].collect().sortBy(_._1)
     val sample = typed.filter(_._1 < PqSampleIds).collect()
       .sortBy(_._1).map(_._2)
-    val books = pqTrainResidual(sample, cents)
+    val books = PqEncoding.Residual.train(sample, cents)
     def dl(x: Double): String = java.lang.Double.toString(x)
     val bookRows = (for {
       m <- 0 until PqM
@@ -4345,7 +3869,7 @@ object Similarity {
     val sample = typed.filter(_._1 < PqSampleIds).collect()
       .sortBy(_._1).map(_._2)
     val rot = opqRotation()
-    val books = pqTrainOpq(sample, cents, rot)
+    val books = PqEncoding(anchored = true, Some(rot)).train(sample, cents)
     def dl(x: Double): String = java.lang.Double.toString(x)
     val bookRows = (for {
       m <- 0 until PqM
@@ -4489,10 +4013,7 @@ object Similarity {
       .as[(Long, Array[Double])].collect().sortBy(_._1)
     val sample = typed.filter(_._1 < PqSampleIds).collect()
       .sortBy(_._1).map(_._2)
-    val books = rotOpt match {
-      case None => pqTrainResidual(sample, cents)
-      case Some(rot) => pqTrainOpq(sample, cents, rot)
-    }
+    val books = PqEncoding(anchored = true, rotOpt).train(sample, cents)
     def dl(x: Double): String = java.lang.Double.toString(x)
     val bookRows = (for {
       m <- 0 until PqM

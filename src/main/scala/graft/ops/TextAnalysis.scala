@@ -1299,33 +1299,6 @@ object TextAnalysis {
       .orderBy("budget")
   }
 
-  /** Cheap corpus identity for the merge-table cache: row count + an
-    * order-independent integer hash-sum over (doc_id, text) — an
-    * in-place rewrite of the corpus changes it, so a stale model can
-    * never be silently reused (the dedupSemanticKmeans quantizer-cache
-    * pattern, post its round-5 fingerprint fix).
-    */
-  private[ops] def docsFingerprint(s: SparkSession, dir: String): String = {
-    val r = t(s, dir, "documents")
-      .agg(count(lit(1)),
-        coalesce(sum(hash(col("doc_id"), col("text")).cast("long")), lit(0L)))
-      .head()
-    s"${r.getLong(0)}x${java.lang.Long.toHexString(r.getLong(1))}"
-  }
-
-  private def cachedMergesPath(dir: String, n: Int, fp: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val tag = md.digest(s"$dir|$fp".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    s"${System.getProperty("java.io.tmpdir")}/graft_bpemerges_${tag}_n$n"
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRec)
-    f.delete(): Unit
-  }
-
   /** Registered form: train on the corpus ONCE per (corpus fingerprint,
     * merge budget) and encode under the frozen table — the
     * train/freeze/apply split of dedupSemanticKmeans, with the same
@@ -1348,16 +1321,10 @@ object TextAnalysis {
     * sides of the Verify compare replay the IDENTICAL merge sequence.
     */
   def ensureBpeMerges(
-      s: SparkSession, dir: String, nMerges: Int = BpeMerges): String = {
-    val mpath = cachedMergesPath(dir, nMerges, docsFingerprint(s, dir))
-    if (!new java.io.File(s"$mpath/_SUCCESS").exists()) {
-      val tmp = mpath + "_w" + java.util.UUID.randomUUID().toString.take(8)
-      writeBpeMerges(bpeTrainOf(t(s, dir, "documents"), nMerges), tmp)
-      if (!new java.io.File(tmp).renameTo(new java.io.File(mpath)))
-        deleteRec(new java.io.File(tmp))
-    }
-    mpath
-  }
+      s: SparkSession, dir: String, nMerges: Int = BpeMerges): String =
+    ArtifactStore.ensure("bpemerges", s"_n$nMerges", dir,
+      ArtifactStore.fingerprint(s, dir, "documents"))(
+      writeBpeMerges(bpeTrainOf(t(s, dir, "documents"), nMerges), _))
 
   /** Cumulative n-gram novelty: the fraction of a doc's distinct
     * word-trigram shingles whose FIRST corpus occurrence (min doc_id)

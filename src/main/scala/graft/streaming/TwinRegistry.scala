@@ -186,21 +186,21 @@ object TwinRegistry {
       Seq(sc("mergeLmBandState")), "lmBandFromState",
       Seq("min_k_draw_lm_band", "min_k_counts_lm_band"),
       "incremental min-k band state: folded frozen-score bands == one-shot band-stratified draw"),
+    // the three IVF-PQ tiers share one writer/append/search; the
+    // index records its encoding, so the reader needs no tier argument
     Twin("ivfpq_index", "persisted-artifact", "Similarity.simIvfPqANN",
       Seq("writeIvfPqIndex", "appendIvfPqBatch"), "searchIvfPqIndex",
       Seq("cent_id-partitioned code table", "_pqcentroids", "_codebook"),
       "frozen IVF-PQ index: serve equals the inline hybrid exactly; appended batches assign against the frozen artifacts"),
     Twin("ivfpq_residual_index", "persisted-artifact",
-      "Similarity.simIvfPqResidualANN",
-      Seq("writeIvfPqResidualIndex", "appendIvfPqResidualBatch"),
-      "searchIvfPqResidualIndex",
+      "Similarity.simIvfPqANN(enc = PqEncoding.Residual)",
+      Seq("writeIvfPqIndex", "appendIvfPqBatch"), "searchIvfPqIndex",
       Seq("cent_id-partitioned code table", "_pqcentroids", "_codebook",
         "_residual marker"),
       "frozen residual IVF-PQ index: serve equals the inline residual tier exactly; marker blocks cross-tier decoding; appends assign against the frozen artifacts"),
     Twin("ivfpq_opq_index", "persisted-artifact",
-      "Similarity.simIvfPqOpqANN",
-      Seq("writeIvfPqOpqIndex", "appendIvfPqOpqBatch"),
-      "searchIvfPqOpqIndex",
+      "Similarity.simIvfPqANN(enc = PqEncoding.Opq)",
+      Seq("writeIvfPqIndex", "appendIvfPqBatch"), "searchIvfPqIndex",
       Seq("cent_id-partitioned code table", "_pqcentroids", "_codebook",
         "_rotation sidecar", "_opq marker"),
       "frozen OPQ IVF-PQ index: serve equals the inline OPQ tier exactly; tier markers refuse all six cross-tier directions; appends assign against the frozen artifacts"))

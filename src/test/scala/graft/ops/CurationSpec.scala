@@ -692,25 +692,25 @@ class CurationSpec extends SparkSpec {
       }.toDF("vec_id", "embedding")
         .write.mode("overwrite").parquet(s"$work/embeddings.parquet")
     writeCorpus(1)
-    val fp1 = Curation.corpusFingerprint(spark, work)
-    assert(Curation.corpusFingerprint(spark, work) == fp1,
+    val fp1 = ArtifactStore.fingerprint(spark, work, "embeddings")
+    assert(ArtifactStore.fingerprint(spark, work, "embeddings") == fp1,
       "fingerprint is deterministic over an unchanged corpus")
-    val p1 = Curation.cachedQuantizerPath(work, 4, fp1)
+    val p1 = ArtifactStore.pathOf("semquant", "_k4", work, fp1)
     Curation.dedupSemanticKmeans(spark, work, k = 4)
-    val success1 = new java.io.File(s"$p1/_SUCCESS")
+    val success1 = new java.io.File(s"$p1/${ArtifactStore.Marker}")
     assert(success1.exists(), "first invocation trains and publishes the quantizer")
     val mtime1 = success1.lastModified()
     Curation.dedupSemanticKmeans(spark, work, k = 4)
     assert(success1.lastModified() == mtime1,
       "unchanged corpus must hit the cache, not retrain")
     writeCorpus(2)
-    val fp2 = Curation.corpusFingerprint(spark, work)
+    val fp2 = ArtifactStore.fingerprint(spark, work, "embeddings")
     assert(fp2 != fp1,
       "a content rewrite shifts the fingerprint even with identical ids and row count")
-    val p2 = Curation.cachedQuantizerPath(work, 4, fp2)
+    val p2 = ArtifactStore.pathOf("semquant", "_k4", work, fp2)
     assert(p2 != p1)
     Curation.dedupSemanticKmeans(spark, work, k = 4)
-    assert(new java.io.File(s"$p2/_SUCCESS").exists(),
+    assert(new java.io.File(s"$p2/${ArtifactStore.Marker}").exists(),
       "rewritten corpus must retrain under the new fingerprint key")
   }
 
@@ -726,12 +726,24 @@ class CurationSpec extends SparkSpec {
         (i.toLong, (i % 4).toLong + labelShift, Array.fill(8)(r.nextFloat()))
       }.toDF("vec_id", "label", "embedding")
         .write.mode("overwrite").parquet(s"$work/embeddings.parquet")
+    // the documents table rides the same fingerprint (BPE merges, char
+    // LM): identical doc_id and text, only the source column changes
+    def writeDocs(source: String): Unit =
+      (0 until 20).map(i => (i.toLong, s"doc $i text", source))
+        .toDF("doc_id", "text", "source")
+        .write.mode("overwrite").parquet(s"$work/documents.parquet")
     writeCorpus(0)
-    val fp1 = Curation.corpusFingerprint(spark, work)
-    assert(Curation.corpusFingerprint(spark, work) == fp1)
+    writeDocs("a")
+    val fp1 = ArtifactStore.fingerprint(spark, work, "embeddings")
+    val dfp1 = ArtifactStore.fingerprint(spark, work, "documents")
+    assert(ArtifactStore.fingerprint(spark, work, "embeddings") == fp1)
+    assert(ArtifactStore.fingerprint(spark, work, "documents") == dfp1)
     writeCorpus(1)
-    assert(Curation.corpusFingerprint(spark, work) != fp1,
+    assert(ArtifactStore.fingerprint(spark, work, "embeddings") != fp1,
       "a label-only rewrite must shift the fingerprint")
+    writeDocs("b")
+    assert(ArtifactStore.fingerprint(spark, work, "documents") != dfp1,
+      "a source-only documents rewrite must shift the fingerprint")
   }
 
   // ---- ScalaCheck: broadcast-kernel and join removal paths agree ----

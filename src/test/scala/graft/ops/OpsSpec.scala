@@ -1181,40 +1181,46 @@ class SimilaritySpec extends SparkSpec {
           Similarity.TopK
       }.sum / brute.size
     }
-    val rRes = recallOf(Similarity.simIvfPqResidualANN(spark, sfDir))
+    val rRes = recallOf(Similarity.simIvfPqANN(spark, sfDir, enc = Similarity.PqEncoding.Residual))
     val rPlain = recallOf(Similarity.simIvfPqANN(spark, sfDir))
     assert(rRes >= rPlain,
       s"residual recall $rRes below non-residual $rPlain at equal nprobe")
     assert(rRes >= 0.5, s"residual recall $rRes below the family bound")
   }
 
-  test("frozen IVF-PQ index: serve equals the inline hybrid exactly; appended batches assign against the frozen artifacts") {
+  /** Writes the frozen index of `enc` and pins the lifecycle every
+    * encoding shares: serve equals the inline tier exactly, probes are
+    * partition filters, and appended twins are encoded with the index's
+    * OWN encoding against its frozen artifacts. Returns the index path.
+    */
+  private def frozenIvfPqLifecycle(enc: Similarity.PqEncoding): String = {
     import spark.implicits._
+    val base = graft.Tables.t(spark, sfDir, "embeddings")
     val work = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    Similarity.writeIvfPqIndex(spark, sfDir, work)
+    Similarity.writeIvfPqIndex(spark, sfDir, work, enc)
     // one code directory per coarse cell; the model sidecars coexist
     val dirs = new java.io.File(work).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cent_id="))
     assert(dirs.length > 2, s"expected several cell partitions: ${dirs.toSeq}")
-    // serve must equal the inline hybrid — rank, id, AND score (same
+    // serve must equal the inline tier — rank, id, AND score (same
     // model artifacts, same probe tables, same ADC, same re-rank)
     val served = Similarity.searchIvfPqIndex(spark, sfDir, work)
     val servedRows = served.collect().map(_.toSeq).toSeq
-    val inline = Similarity.simIvfPqANN(spark, sfDir).collect().map(_.toSeq).toSeq
-    assert(servedRows == inline, "frozen-index serve drifted from the inline hybrid")
+    val inline = Similarity.simIvfPqANN(spark, sfDir, enc = enc)
+      .collect().map(_.toSeq).toSeq
+    assert(servedRows == inline, "frozen-index serve drifted from its inline tier")
     // the probe is a PARTITION FILTER: unprobed cell directories are
     // never opened
     val scans = served.queryExecution.executedPlan.collectLeaves().map(_.toString)
-    val idxScan = scans.find(_.contains(work))
-    assert(idxScan.exists(p =>
+    assert(scans.find(_.contains(work)).exists(p =>
         "PartitionFilters: \\[[^\\]]*cent_id[^\\]]*\\]".r.findFirstIn(p).nonEmpty),
       s"code scan has no cent_id partition filter:\n${scans.mkString("\n")}")
     // append lifecycle: exact twins of served top candidates enter via
-    // appendIvfPqBatch (assigned + encoded against the FROZEN
-    // artifacts — identical vectors get identical cells and codes), a
+    // appendIvfPqBatch, encoded with the index's OWN encoding against
+    // its frozen artifacts — so each twin gets exactly its original's
+    // cell and code (the codes serve decodes as the inline tier), a
     // fixture dir carries them in the primary store, and the served
     // top-k must surface them right next to their originals
-    val base = graft.Tables.t(spark, sfDir, "embeddings")
     val twinIds = servedRows.filter(_(1) == 1L).map(_(2).asInstanceOf[Long]).take(5)
     val twins = base.filter($"vec_id".isInCollection(twinIds))
       .select(($"vec_id" + 100000L).as("vec_id"), $"label", $"embedding")
@@ -1222,65 +1228,67 @@ class SimilaritySpec extends SparkSpec {
     base.unionByName(twins).write.parquet(s"$fixDir/embeddings.parquet")
     Similarity.appendIvfPqBatch(spark, work, twins
       .select($"vec_id", $"embedding".cast("array<double>").as("e")))
+    val codes = spark.read.parquet(work)
+      .select($"vec_id", $"cent_id".cast("long"), $"code").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getAs[Array[Byte]](2).toSeq)))
+      .toMap
+    twinIds.foreach { id =>
+      assert(codes(id + 100000L) == codes(id),
+        s"appended twin of $id was not encoded as the index's own tier")
+    }
     val after = Similarity.searchIvfPqIndex(spark, fixDir, work).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(after.exists(_._3 >= 100000L),
       s"an appended twin must reach the served top-k: ${after.toSeq.take(10)}")
+    work
+  }
+
+  /** The tier search and append decode the index at `path` with:
+    * (anchored, rotation rows).
+    */
+  private def tierOf(path: String): (Boolean, Option[Seq[Seq[Double]]]) = {
+    val enc = Similarity.indexTier(spark, path)
+    (enc.anchored, enc.rotation.map(_.map(_.toSeq).toSeq))
+  }
+
+  private val plainTier = (false, None)
+  private val residualTier = (true, None)
+  private def opqTier = (true, Some(Similarity.opqRotation().map(_.toSeq).toSeq))
+
+  test("frozen IVF-PQ index: serve equals the inline hybrid exactly; appended batches assign against the frozen artifacts") {
+    val work = frozenIvfPqLifecycle(Similarity.PqEncoding.Plain)
+    assert(tierOf(work) == plainTier)
   }
 
   test("frozen residual IVF-PQ index: serve equals the inline residual tier exactly; marker blocks cross-tier decoding; appends assign against the frozen artifacts") {
-    import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-ivfpqr").toString
-    Similarity.writeIvfPqResidualIndex(spark, sfDir, work)
-    val served = Similarity.searchIvfPqResidualIndex(spark, sfDir, work)
-    val servedRows = served.collect().map(_.toSeq).toSeq
-    val inline = Similarity.simIvfPqResidualANN(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(servedRows == inline,
-      "frozen residual serve drifted from the inline residual tier")
-    // probes are partition filters here too
-    val scans = served.queryExecution.executedPlan.collectLeaves().map(_.toString)
-    assert(scans.find(_.contains(work)).exists(p =>
-        "PartitionFilters: \\[[^\\]]*cent_id[^\\]]*\\]".r.findFirstIn(p).nonEmpty),
-      s"code scan has no cent_id partition filter:\n${scans.mkString("\n")}")
-    // the marker is load-bearing: residual codes through the plain
-    // decoder (or vice versa) would serve silently wrong scores, so
-    // BOTH search paths must refuse the other tier's layout
-    intercept[IllegalArgumentException] {
-      Similarity.searchIvfPqIndex(spark, sfDir, work)
-    }
-    val plainWork = java.nio.file.Files.createTempDirectory("graft-ivfpqp").toString
+    val work = frozenIvfPqLifecycle(Similarity.PqEncoding.Residual)
+    // the marker is load-bearing: search and append take their decoder
+    // from it alone, so with it the residual codes decode as residual,
+    // and without it the same layout would decode as plain
+    assert(tierOf(work) == residualTier)
+    graft.streaming.StateFs.deleteRecursively(s"$work/_residual")
+    assert(tierOf(work) == plainTier)
+  }
+
+  test("frozen OPQ IVF-PQ index: serve equals the inline OPQ tier exactly; tier markers refuse all six cross-tier directions; appends assign against the frozen artifacts") {
+    val work = frozenIvfPqLifecycle(Similarity.PqEncoding.Opq)
+    // ALL SIX cross-tier directions (3 layouts × the 2 other tiers):
+    // search and append decode with the one tier the index records, so
+    // each layout resolves to its own tier and never to another —
+    // rotated codes through any other decoder would score silently wrong
+    val plainWork = java.nio.file.Files.createTempDirectory("graft-ivfpqo-p").toString
     Similarity.writeIvfPqIndex(spark, sfDir, plainWork)
-    intercept[IllegalArgumentException] {
-      Similarity.searchIvfPqResidualIndex(spark, sfDir, plainWork)
+    val resWork = java.nio.file.Files.createTempDirectory("graft-ivfpqo-r").toString
+    Similarity.writeIvfPqIndex(spark, sfDir, resWork, Similarity.PqEncoding.Residual)
+    val tiers = Seq(plainTier, residualTier, opqTier)
+    Seq(plainWork -> plainTier, resWork -> residualTier, work -> opqTier).foreach {
+      case (path, own) =>
+        val got = tierOf(path)
+        tiers.filterNot(_ == own).foreach { other =>
+          assert(got != other, s"$path decodes as another tier")
+        }
+        assert(got == own)
     }
-    intercept[IllegalArgumentException] {
-      Similarity.appendIvfPqResidualBatch(spark, plainWork,
-        graft.Tables.t(spark, sfDir, "embeddings").limit(1)
-          .select($"vec_id", $"embedding".cast("array<double>").as("e")))
-    }
-    // ...and the fourth direction (r16 review finding): the PLAIN
-    // append must refuse a residual index — plain-encoded codes in a
-    // residual layout would ADC-decode silently wrong
-    intercept[IllegalArgumentException] {
-      Similarity.appendIvfPqBatch(spark, work,
-        graft.Tables.t(spark, sfDir, "embeddings").limit(1)
-          .select($"vec_id", $"embedding".cast("array<double>").as("e")))
-    }
-    // append lifecycle: exact twins enter against the FROZEN residual
-    // artifacts and must surface in the served top-k beside originals
-    val base = graft.Tables.t(spark, sfDir, "embeddings")
-    val twinIds = servedRows.filter(_(1) == 1L).map(_(2).asInstanceOf[Long]).take(5)
-    val twins = base.filter($"vec_id".isInCollection(twinIds))
-      .select(($"vec_id" + 100000L).as("vec_id"), $"label", $"embedding")
-    val fixDir = java.nio.file.Files.createTempDirectory("graft-ivfpqr-fix").toString
-    base.unionByName(twins).write.parquet(s"$fixDir/embeddings.parquet")
-    Similarity.appendIvfPqResidualBatch(spark, work, twins
-      .select($"vec_id", $"embedding".cast("array<double>").as("e")))
-    val after = Similarity.searchIvfPqResidualIndex(spark, fixDir, work).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(after.exists(_._3 >= 100000L),
-      s"an appended twin must reach the served top-k: ${after.toSeq.take(10)}")
   }
 
   test("OPQ rotation: exactly orthogonal; rotation preserves dot products") {
@@ -1325,74 +1333,16 @@ class SimilaritySpec extends SparkSpec {
           Similarity.TopK
       }.sum / brute.size
     }
-    val rOpq = recallOf(Similarity.simIvfPqOpqANN(spark, sfDir))
-    val rRes = recallOf(Similarity.simIvfPqResidualANN(spark, sfDir))
+    val rOpq = recallOf(Similarity.simIvfPqANN(spark, sfDir, enc = Similarity.PqEncoding.Opq))
+    val rRes = recallOf(Similarity.simIvfPqANN(spark, sfDir, enc = Similarity.PqEncoding.Residual))
     assert(rOpq >= rRes,
       s"OPQ recall $rOpq below residual $rRes at equal nprobe")
     assert(rOpq >= 0.5, s"OPQ recall $rOpq below the family bound")
   }
 
-  test("frozen OPQ IVF-PQ index: serve equals the inline OPQ tier exactly; tier markers refuse all six cross-tier directions; appends assign against the frozen artifacts") {
-    import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-ivfpqo").toString
-    Similarity.writeIvfPqOpqIndex(spark, sfDir, work)
-    val served = Similarity.searchIvfPqOpqIndex(spark, sfDir, work)
-    val servedRows = served.collect().map(_.toSeq).toSeq
-    val inline = Similarity.simIvfPqOpqANN(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(servedRows == inline,
-      "frozen OPQ serve drifted from the inline OPQ tier")
-    // probes are partition filters here too
-    val scans = served.queryExecution.executedPlan.collectLeaves().map(_.toString)
-    assert(scans.find(_.contains(work)).exists(p =>
-        "PartitionFilters: \\[[^\\]]*cent_id[^\\]]*\\]".r.findFirstIn(p).nonEmpty),
-      s"code scan has no cent_id partition filter:\n${scans.mkString("\n")}")
-    // ALL SIX cross-tier directions (3 tiers × search/append guards,
-    // one indexTier definition): an OPQ index must refuse the plain
-    // and residual paths, and both other layouts must refuse the OPQ
-    // paths — rotated codes through any other decoder score silently
-    // wrong
-    val batch1 = graft.Tables.t(spark, sfDir, "embeddings").limit(1)
-      .select($"vec_id", $"embedding".cast("array<double>").as("e"))
-    intercept[IllegalArgumentException] {
-      Similarity.searchIvfPqIndex(spark, sfDir, work)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.searchIvfPqResidualIndex(spark, sfDir, work)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.appendIvfPqBatch(spark, work, batch1)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.appendIvfPqResidualBatch(spark, work, batch1)
-    }
-    val plainWork = java.nio.file.Files.createTempDirectory("graft-ivfpqo-p").toString
-    Similarity.writeIvfPqIndex(spark, sfDir, plainWork)
-    intercept[IllegalArgumentException] {
-      Similarity.searchIvfPqOpqIndex(spark, sfDir, plainWork)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.appendIvfPqOpqBatch(spark, plainWork, batch1)
-    }
-    // append lifecycle: exact twins enter against the FROZEN rotation,
-    // centroids and codebook, and must surface in the served top-k
-    val base = graft.Tables.t(spark, sfDir, "embeddings")
-    val twinIds = servedRows.filter(_(1) == 1L).map(_(2).asInstanceOf[Long]).take(5)
-    val twins = base.filter($"vec_id".isInCollection(twinIds))
-      .select(($"vec_id" + 100000L).as("vec_id"), $"label", $"embedding")
-    val fixDir = java.nio.file.Files.createTempDirectory("graft-ivfpqo-fix").toString
-    base.unionByName(twins).write.parquet(s"$fixDir/embeddings.parquet")
-    Similarity.appendIvfPqOpqBatch(spark, work, twins
-      .select($"vec_id", $"embedding".cast("array<double>").as("e")))
-    val after = Similarity.searchIvfPqOpqIndex(spark, fixDir, work).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(after.exists(_._3 >= 100000L),
-      s"an appended twin must reach the served top-k: ${after.toSeq.take(10)}")
-  }
-
   test("residual recall curve: coverage-monotone to the pool cliff; at the registered " +
       "nprobe it matches the residual query's own recall and rides at or above the plain curve") {
-    val got = Similarity.simIvfPqResidualRecallCurve(spark, sfDir).collect()
+    val got = Similarity.simIvfPqRecallCurve(spark, sfDir, Similarity.PqEncoding.Residual).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(_._1)
     assert(got.nonEmpty)
@@ -1417,7 +1367,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // consistency anchor: the curve's NProbe tier IS the registered
     // residual query's recall vs brute force
-    val res = topkSet(Similarity.simIvfPqResidualANN(spark, sfDir))
+    val res = topkSet(Similarity.simIvfPqANN(spark, sfDir, enc = Similarity.PqEncoding.Residual))
     val wantRecall = brute.keys.toSeq.map { q =>
       res.getOrElse(q, Set.empty).intersect(brute(q)).size.toDouble /
         Similarity.TopK
@@ -1443,7 +1393,7 @@ class SimilaritySpec extends SparkSpec {
     // structural pins: coverage dominates end-to-end (last ≥ first),
     // and every dip below the running max stays within the eviction
     // scale — single candidates, not a collapse (≤ 2 hits).
-    val got = Similarity.simIvfPqOpqRecallCurve(spark, sfDir).collect()
+    val got = Similarity.simIvfPqRecallCurve(spark, sfDir, Similarity.PqEncoding.Opq).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(_._1)
     assert(got.nonEmpty)
@@ -1458,7 +1408,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // consistency anchor: the NProbe tier IS the registered OPQ
     // query's recall vs brute force
-    val opq = topkSet(Similarity.simIvfPqOpqANN(spark, sfDir))
+    val opq = topkSet(Similarity.simIvfPqANN(spark, sfDir, enc = Similarity.PqEncoding.Opq))
     val wantRecall = brute.keys.toSeq.map { q =>
       opq.getOrElse(q, Set.empty).intersect(brute(q)).size.toDouble /
         Similarity.TopK

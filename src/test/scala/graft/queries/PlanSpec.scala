@@ -3,6 +3,7 @@ package graft.queries
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
+import graft.ops.Similarity.PqEncoding.{Opq, Residual}
 
 /** Physical-plan assertions: the properties that decide whether these
   * plans survive a 100× scale-up — filters and projections reaching the
@@ -696,7 +697,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sim_ivfpq_residual: bounded pool + query vectors broadcast into the re-rank; no SMJ, no cartesian") {
-    val p = plan(graft.ops.Similarity.simIvfPqResidualANN(spark, sfDir))
+    val p = plan(graft.ops.Similarity.simIvfPqANN(spark, sfDir, enc = Residual))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("SortMergeJoin"), p)
     assert("BroadcastHashJoin".r.findAllIn(p).length == 2,
@@ -708,8 +709,8 @@ class PlanSpec extends SparkSpec {
     // the rotation is a broadcast model artifact applied inside the
     // same fused scan, so nothing about the plan shape may change
     for (q <- Seq(
-        graft.ops.Similarity.simIvfPqOpqANN(spark, sfDir),
-        graft.ops.Similarity.simIvfPqOpqServe(spark, sfDir))) {
+        graft.ops.Similarity.simIvfPqANN(spark, sfDir, enc = Opq),
+        graft.ops.Similarity.simIvfPqServe(spark, sfDir, Opq))) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), p)
       assert(!p.contains("SortMergeJoin"), p)
@@ -721,8 +722,8 @@ class PlanSpec extends SparkSpec {
   test("sim_ivfpq_residual_recall_curve: tiers are filters over one scored pass; no SMJ, no cartesian") {
     // both curves ride the shared kernel — same gate for both
     for (q <- Seq(
-        graft.ops.Similarity.simIvfPqResidualRecallCurve(spark, sfDir),
-        graft.ops.Similarity.simIvfPqOpqRecallCurve(spark, sfDir))) {
+        graft.ops.Similarity.simIvfPqRecallCurve(spark, sfDir, Residual),
+        graft.ops.Similarity.simIvfPqRecallCurve(spark, sfDir, Opq))) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), p)
       // the only merge join allowed is the k-row tier table LEFT JOIN
@@ -735,7 +736,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sim_ivfpq_residual_serve: frozen-index scan feeds the pool; broadcast re-rank; no SMJ, no cartesian") {
-    val p = plan(graft.ops.Similarity.simIvfPqResidualServe(spark, sfDir))
+    val p = plan(graft.ops.Similarity.simIvfPqServe(spark, sfDir, Residual))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("SortMergeJoin"), p)
     assert("BroadcastHashJoin".r.findAllIn(p).length == 2,
