@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.config.SparkConfig
+import graft.runtime.SessionWrapper
 import graft.streaming._
 
 /** Benchmark main: runs every SparkEntry query against
@@ -23,17 +25,84 @@ import graft.streaming._
   * controls total sweeps.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One query's run to the `noop` sink: its wall seconds, or None
+    * (logged to stderr) when building or running it throws — a failed
+    * query has no time to report.
+    */
+  private def timeToNoop(spark: SparkSession, sfDir: String, name: String,
+      fn: Query): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      None
+    }
+  }
+
+  /** Per-query minimum seconds over the measured sweeps, and the
+    * queries that threw in any sweep (warm included) — those have no
+    * entry in `times` and add nothing to `total`.
+    */
+  final case class Result(times: Seq[(String, Double)], failed: Seq[String]) {
+    def total: Double = times.map(_._2).sum
+  }
+
+  /** `passes` sweeps over `queries` in sorted name order: one
+    * unmeasured warm sweep (skipped at passes=1), then the measured
+    * ones; a single measured sweep IS the min when passes=2.
+    */
+  def sweeps(spark: SparkSession, sfDir: String,
+      queries: Map[String, Query], passes: Int): Result = {
+    val names = queries.keys.toSeq.sorted
+    def sweep(): Map[String, Option[Double]] =
+      names.map(n => n -> timeToNoop(spark, sfDir, n, queries(n))).toMap
+    val warm = if (passes > 1) Seq(sweep()) else Nil
+    val measured = (1 until math.max(2, passes)).map(_ => sweep())
+    val failed = names.filter(n => (warm ++ measured).exists(_(n).isEmpty))
+    Result(
+      names.filterNot(failed.contains).map(n => n -> measured.map(_(n).get).min),
+      failed)
+  }
+
+  // Locale.ROOT: a comma-decimal default locale (de_DE) would render
+  // "1,234" and corrupt the machine-read JSON artifacts (r13 ADVICE)
+  private def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  private[graft] def jsonTimes(ts: Seq[(String, Double)]) =
+    ts.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+
+  /** The closing keys shared by the Bench and Canary lines, listing at
+    * most `cap` failed names. `value` stays the LAST key, because
+    * bench_diff's truncated-tail fallback reads the total from there.
+    */
+  private[graft] def failedAndValue(failed: Seq[String], total: Double,
+      cap: Int = Int.MaxValue): String = {
+    val shown = failed.take(cap).map("\"" + _ + "\"").mkString("[", ",", "]")
+    s""""n_failed":${failed.size},"failed":$shown,"value":${fmt(total)}}"""
+  }
+
+  /** (full line, stdout summary). The full line keeps its ASCENDING
+    * duration key order and every failed name, so any bounded tail of
+    * the FILE still ends with the headline entries and the suite total.
+    * The summary stays ≤1 KB: query count, the slowest 20 queries and
+    * at most 10 failed names.
+    */
+  def lines(r: Result, sfDir: String, streamRps: Long): (String, String) = {
+    val full = s"""{"metric":"total","unit":"sec","queries":${jsonTimes(r.times.sortBy(_._2))},"sf":"$sfDir","stream_rows_per_sec":$streamRps,""" +
+      failedAndValue(r.failed, r.total)
+    val summary = s"""{"metric":"total","unit":"sec","n_queries":${r.times.size},"queries":${jsonTimes(r.times.sortBy(-_._2).take(20))},"sf":"$sfDir","stream_rows_per_sec":$streamRps,""" +
+      failedAndValue(r.failed, r.total, cap = 10)
+    (full, summary)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = new SessionWrapper(SparkConfig.local()).session
     spark.sparkContext.setLogLevel("WARN")
 
     // local-iteration aid: SPARK_GRAFT_BENCH_FILTER=substr1,substr2
@@ -43,35 +112,15 @@ object Bench {
       .map(_.split(",").toSeq.filter(_.nonEmpty))
     val selected = SparkEntry.queries.filter { case (n, _) =>
       nameFilter.forall(_.exists(n.contains)) }
+    val result = sweeps(spark, sfDir, selected, passes)
 
-    def sweep(): Seq[(String, Double)] =
-      selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-
-    if (passes > 1) sweep() // warm sweep, unmeasured (skipped at passes=1)
-    // measured sweeps: per-query min — robust to one-off GC/page-cache
-    // spikes (a single sweep IS the min when passes=2)
-    val measured = (1 until math.max(2, passes)).map(_ => sweep())
-    val results = measured.head.indices.map { i =>
-      measured.head(i)._1 -> measured.map(_(i)._2).min
-    }
-    // The FULL per-query line (written to BENCH_full_local.json below,
-    // never to stdout — see the r7 post-mortem there) keeps its
-    // ASCENDING-duration key order and total-at-the-end layout so any
-    // bounded tail of the FILE still ends with the headline entries and
-    // the suite total. Millisecond precision.
     // streaming throughput row: a short SATURATED rate → transform →
     // parquet run (source faster than sink capacity, so the figure
-    // reflects capacity, not the source), measured through the same
-    // listener-backed hooks as graft.StreamBench's full protocol. One
-    // extra JSON key near the line's end — streaming regressions now
-    // gate per round exactly like batch ones.
+    // reflects capacity, not the source), counted through the
+    // listener-backed hooks; perfbench's `stream` workload times the
+    // same path closed- and open-loop. One extra JSON key near the
+    // line's end — streaming regressions gate per round exactly like
+    // batch ones.
     // Shutdown protocol (r5 post-mortem): stopping the saturated stream
     // mid-batch aborts in-flight FileFormatWriter tasks whose ERROR
     // stack traces — multi-KB, logged by THIS JVM in local mode — landed
@@ -86,18 +135,6 @@ object Bench {
     // (3) stop/awaitTermination failures are swallowed (rps is already
     // computed); (4) the JSON line prints AFTER spark.stop(), when no
     // executor or listener thread is left to interleave output.
-    // optional sf1 scaling smoke (never set by the driver): one
-    // unmeasured completion sweep of the slowest queries at ~10× sf0.1,
-    // stderr-only so the stdout JSON protocol is untouched
-    if (sys.env.get("SPARK_GRAFT_BENCH_SF1").contains("1"))
-      try ScaleSmoke.run(spark, sfDir)
-      catch { case e: Throwable => System.err.println(s"[sf1] FAILED: $e") }
-    if (sys.env.get("SPARK_GRAFT_BENCH_SF3").contains("1"))
-      try ScaleSmoke.runSf3(spark, sfDir)
-      catch { case e: Throwable => System.err.println(s"[sf3] FAILED: $e") }
-    if (sys.env.get("SPARK_GRAFT_BENCH_SF10").contains("1"))
-      try ScaleSmoke.runSf10(spark, sfDir)
-      catch { case e: Throwable => System.err.println(s"[sf10] FAILED: $e") }
     val streamSecs = sys.env.getOrElse("SPARK_GRAFT_BENCH_STREAM_SECS", "8").toInt
     val streamRps: Long =
       if (streamSecs <= 0) 0L
@@ -112,7 +149,8 @@ object Bench {
         val t0 = System.nanoTime()
         val q = new StreamingPipeline(
           source = RateStreamingSource(
-            rowsPerSecond = 5000000, numPartitions = cpus.toInt),
+            rowsPerSecond = 5000000,
+            numPartitions = spark.sparkContext.defaultParallelism),
           sink = FileStreamingSink(s"$out/data"),
           checkpointLocation = Some(s"$out/cp"),
           transform = df => df.select(
@@ -129,14 +167,7 @@ object Bench {
         try { q.stop(); q.awaitTermination() } catch { case _: Throwable => () }
         math.round(measuredRows / elapsed)
       } catch { case _: Throwable => 0L }
-    // Locale.ROOT: a comma-decimal default locale (de_DE) would render
-    // "1,234" and corrupt the machine-read JSON artifacts (r13 ADVICE)
-    def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.sortBy(_._2)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","unit":"sec","queries":$qs,"sf":"$sfDir","stream_rows_per_sec":$streamRps,"value":${fmt(total)}}"""
+    val (line, summary) = lines(result, sfDir, streamRps)
     // Driver-protocol fix (r7 post-mortem, 3rd iteration): the driver
     // stores only ~2KB of stdout tail and slices from the START of the
     // final output block, so ANY multi-KB stdout line — even one printed
@@ -147,20 +178,17 @@ object Bench {
     // window ahead of the summary): it is written ONLY to
     // BENCH_full_local.json (repo-tracked, diffable across rounds).
     // stdout carries exactly ONE JSON object — the <=1KB summary (suite
-    // total, query count, stream rate, slowest 20 queries) — printed
+    // total, query count, stream rate, slowest 20 queries, failed
+    // names) — printed
     // after spark.stop() so no executor or listener thread can
     // interleave output.
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_OUT",
-          "/root/repo/BENCH_full_local.json")),
+          "BENCH_full_local.json")),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] full-line write failed: $e") }
-    val slowest = results.sortBy(-_._2).take(20)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val summary = s"""{"metric":"total","unit":"sec","n_queries":${results.size},"queries":$slowest,"sf":"$sfDir","stream_rows_per_sec":$streamRps,"value":${fmt(total)}}"""
     spark.sparkContext.setLogLevel("OFF")
     spark.stop()
     println(summary)

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.config.SparkConfig
+import graft.runtime.SessionWrapper
 
 /** Isolated canary re-measure (VERDICT r12 ask #1a): the bench floor
   * artifact (`BENCH_floor_local.json`, r10) stopped being reproducible —
@@ -56,39 +57,23 @@ object Canary {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = new SessionWrapper(SparkConfig.local()).session
     spark.sparkContext.setLogLevel("WARN")
-    def runOne(name: String): Double = {
-      val fn = SparkEntry.queries(name)
-      def pass(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      pass() // warm (JIT, codegen cache, page cache) — unmeasured
-      (1 to MeasuredSweeps).map(_ => pass()).min
-    }
-    val results = measurementList.map(n => n -> runOne(n))
-    // Locale.ROOT: a comma-decimal default locale (de_DE) would render
-    // "1,234" and corrupt the machine-read JSON artifact (r13 ADVICE)
-    def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    // each query isolated: its own warm run (JIT, codegen cache, page
+    // cache — unmeasured) then MeasuredSweeps timed runs, per-query min
+    val runs = measurementList.map(n => Bench.sweeps(
+      spark, sfDir, Map(n -> SparkEntry.queries(n)), MeasuredSweeps + 1))
+    val results = runs.flatMap(_.times)
+    val failed = runs.flatMap(_.failed)
     val overridden = measurementList != Queries
     val metric = if (overridden) "canary_rearm" else "canary"
-    val line = s"""{"metric":"$metric","unit":"sec","sweeps":$MeasuredSweeps,"queries":$qs,"sf":"$sfDir","value":${fmt(results.map(_._2).sum)}}"""
+    val line = s"""{"metric":"$metric","unit":"sec","sweeps":$MeasuredSweeps,"queries":${Bench.jsonTimes(results)},"sf":"$sfDir",""" +
+      Bench.failedAndValue(failed, results.map(_._2).sum)
     // an overridden (re-arm) run must not clobber the real canary
     // artifact — default it to /tmp unless explicitly pointed elsewhere
     val defaultOut =
       if (overridden) s"${System.getProperty("java.io.tmpdir")}/CANARY_rearm.json"
-      else "/root/repo/CANARY_local.json"
+      else "CANARY_local.json"
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_CANARY_OUT", defaultOut)),

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * dup-density no real 10× corpus has); embeddings replicate id-shifted
   * (duplicate vectors are realistic near-dup mass for ANN/graph ops).
   *
-  * Gated by SPARK_GRAFT_BENCH_SF1=1 in [[Bench]] — never set by the
-  * driver, so round artifacts are unaffected; results print to stderr
-  * and are recorded in NOTES.md.
+  * Run by `sbt "runMain graft.ScaleSmoke"` — never by [[Bench]], so
+  * round artifacts are unaffected; results print to stderr and are
+  * recorded in NOTES.md.
   */
 object ScaleSmoke {
   val Reps = 10
@@ -137,9 +137,8 @@ object ScaleSmoke {
 
   /** sf3 probe of the top-3 heavies (VERDICT r7 ask #6): a single
     * completion sweep at 30× sf0.1 pushing the scale evidence a second
-    * order of magnitude. Gated by SPARK_GRAFT_BENCH_SF3=1 (never set by
-    * the driver); stderr-only like [[run]]; results recorded as a table
-    * in NOTES.md.
+    * order of magnitude. Run by `sbt "runMain graft.ScaleSmoke sf3"`;
+    * stderr-only like [[run]]; results recorded as a table in NOTES.md.
     */
   val Sf3Queries: Seq[String] =
     Seq("sim_triangles", "dedup_components_alt", "dedup_minhash_lsh",
@@ -163,8 +162,8 @@ object ScaleSmoke {
     * budget and exercises the declarative join FALLBACK — the probe
     * certifies the budget switch, not just the kernel). ~15 GB of
     * parquet in /tmp; same replication construction as sf1/sf3.
-    * Gated by SPARK_GRAFT_BENCH_SF10=1 (never set by the driver);
-    * stderr-only; results recorded as a table in NOTES.md.
+    * Run by `sbt "runMain graft.ScaleSmoke sf10"`; stderr-only;
+    * results recorded as a table in NOTES.md.
     */
   val Sf10Queries: Seq[String] = Seq("dedup_minhash_lsh", "sim_triangles")
 
@@ -872,18 +871,12 @@ object ScaleSmoke {
         .mergeLmKn4ModelState(spark, d, b, id))
   }
 
-  /** Standalone entry so the sf1/sf3/sf10 sweeps can run without the
-    * full bench: `sbt "runMain graft.ScaleSmoke sf10"` (or `sf1`/`sf3`).
+  /** Entry for every scale sweep: `sbt "runMain graft.ScaleSmoke sf10"`
+    * (or `sf3`, `sf10cd`, …; no argument runs the sf1 sweep).
     */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = new graft.runtime.SessionWrapper(
+      graft.core.config.SparkConfig.local()).session
     spark.sparkContext.setLogLevel("WARN")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if (args.contains("sf10cd")) runSf10ConstDup(spark, src)

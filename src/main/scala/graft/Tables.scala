@@ -17,7 +17,8 @@ object Tables {
     * so every downstream query sees one type:
     *  - INT64 TIMESTAMP(NANOS): Spark 4 only reads it as a long
     *    (spark.sql.legacy.parquet.nanosAsLong=true — set by
-    *    Verify/Bench/specs); floor-divide to micros and rebuild.
+    *    [[graft.core.config.SparkConfig.local]]); floor-divide to
+    *    micros and rebuild.
     *  - TIMESTAMP(MICROS) without timezone: Spark reads TIMESTAMP_NTZ,
     *    which unix_micros()/window() reject; cast to TimestampType —
     *    under the UTC session timezone the instant is unchanged, which

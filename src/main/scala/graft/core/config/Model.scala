@@ -131,6 +131,26 @@ final case class SparkConfig(
   }
 }
 
+object SparkConfig {
+
+  /** The in-process session every graft main and the spec suite open
+    * through [[graft.runtime.SessionWrapper]]: `local[cores]` with one
+    * shuffle partition per core, UI off, UTC session time (the DuckDB
+    * oracle's zone), and `nanosAsLong` — `events.parquet` carries INT64
+    * TIMESTAMP(NANOS), which Spark otherwise refuses
+    * (PARQUET_TYPE_ILLEGAL); [[graft.Tables.t]] converts it back.
+    * `cores` defaults to SPARK_GRAFT_CPUS (32 when unset).
+    */
+  def local(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkConfig =
+    SparkConfig(
+      master = Some(s"local[$cores]"),
+      sparkConf = Map(
+        "spark.sql.shuffle.partitions" -> cores.toString,
+        "spark.ui.enabled" -> "false",
+        "spark.sql.session.timeZone" -> "UTC",
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true"))
+}
+
 final case class ComponentConfig(
     name: String,
     componentType: Enums.ComponentType,

@@ -2,6 +2,8 @@ package graft.examples
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.config.SparkConfig
+import graft.runtime.SessionWrapper
 import graft.streaming._
 
 /** Runnable streaming demo pipelines (parity with the reference's
@@ -47,12 +49,8 @@ object StreamingExamples {
       .run(spark) // blocking: availableNow terminates after the backlog
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-examples")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = new SessionWrapper(
+      SparkConfig.local(4).copy(appName = "graft-streaming-examples")).session
     spark.sparkContext.setLogLevel("WARN")
     args.toList match {
       case "rate" :: _ => rateDemo(spark)

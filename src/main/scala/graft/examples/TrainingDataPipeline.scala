@@ -3,8 +3,10 @@ package graft.examples
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.core.config.SparkConfig
 import graft.ops.{Dedup, Sampling, TextAnalysis}
 import graft.ops.Scale.GatedCheckpoint
+import graft.runtime.SessionWrapper
 
 /** End-to-end training-data curation pipeline — the capstone composition
   * of the engine's operators, in the order a corpus pipeline actually
@@ -112,13 +114,7 @@ object TrainingDataPipeline {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = new SessionWrapper(SparkConfig.local()).session
     spark.sparkContext.setLogLevel("WARN")
     val s = run(spark, sfDir, outDir)
     val splits = s.bySplit.toSeq.sortBy(_._1)

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.config.SparkConfig
+import graft.runtime.SessionWrapper
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,14 +20,8 @@ object SparkSpec {
     * time otherwise.
     */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = new SessionWrapper(
+      SparkConfig.local(4).copy(appName = "graft-tests")).session
     s.sparkContext.setLogLevel("WARN")
     s
   }

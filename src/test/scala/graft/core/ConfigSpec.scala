@@ -195,6 +195,15 @@ class ConfigModelSpec extends AnyFunSuite {
     assert(m("spark.executor.memory") == "16g")
     assert(m("spark.app.name") == "x")
   }
+
+  test("SparkConfig.local: local[cores], one shuffle partition per core, UI off, UTC, nanosAsLong") {
+    val m = SparkConfig.local(3).toSparkConfMap
+    assert(m("spark.master") == "local[3]")
+    assert(m("spark.sql.shuffle.partitions") == "3")
+    assert(m("spark.ui.enabled") == "false")
+    assert(m("spark.sql.session.timeZone") == "UTC")
+    assert(m("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
 }
 
 class TopoSortSpec extends AnyFunSuite {

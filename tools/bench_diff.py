@@ -5,7 +5,10 @@ Usage: python3 tools/bench_diff.py OLD NEW [--threshold 1.3]
 
 Prints per-query ratios for queries slower than threshold x, new/removed
 queries, and the total delta. Exit 1 if any regression exceeds the
-threshold (useful as a pre-commit perf gate).
+threshold, or if NEW reports failed queries (`n_failed` > 0; they are
+named) — a failed query has no time, so it would otherwise just read
+as REMOVED. Artifacts older than the `n_failed` key read as 0 failures.
+(Useful as a pre-commit perf gate.)
 
 Which OLD to diff against (VERDICT r10 #3): use BENCH_floor_local.json —
 the best DEMONSTRATED full run, updated only when a run beats it —
@@ -91,7 +94,12 @@ def load(path):
         # front-truncation; prefer it over the partial sum when present
         mv = re.findall(r'"value":([0-9]+\.[0-9]+)\}', source)
         total = float(mv[-1]) if mv else sum(queries.values())
-        return {"value": total, "queries": queries, "partial": True}
+        rec = {"value": total, "queries": queries, "partial": True}
+        mf = re.findall(r'"n_failed":([0-9]+),"failed":\[([^\]]*)\]', source)
+        if mf:
+            rec["n_failed"] = int(mf[-1][0])
+            rec["failed"] = re.findall(r'"([^"]+)"', mf[-1][1])
+        return rec
     raise SystemExit(f"no bench JSON found in {path}")
 
 
@@ -183,7 +191,12 @@ def main(old_path, new_path, threshold=1.3, canary=True, canary_gate=True):
         print(f"REMOVED    {name:28s} (was {oq[name]:.2f}s)")
     print(f"total: {old['value']:.1f}s -> {new['value']:.1f}s "
           f"({len(oq)} -> {len(nq)} queries)")
-    return 1 if regressions or factor_regressed else 0
+    n_failed, failed = new.get("n_failed", 0), new.get("failed", [])
+    if n_failed:
+        more = (f" (+{n_failed - len(failed)} unnamed in this artifact)"
+                if n_failed > len(failed) else "")
+        print(f"FAILED {n_failed} queries in NEW: {', '.join(failed)}{more}")
+    return 1 if regressions or factor_regressed or n_failed else 0
 
 
 if __name__ == "__main__":
