@@ -4,10 +4,13 @@ import graft.core.component._
 
 /** Built-in batch components (reference: examples/batch.py — ReadCsv,
   * WriteCsv, ReadTable, SqlTransform, WriteTable) plus parquet variants.
-  * Components communicate exclusively through named temp views, so a
-  * Read→Transform→Write chain stays ONE lazy Catalyst plan until the
-  * sink action — predicate pushdown and column pruning act across
-  * component boundaries (SURVEY.md §4's key perf property).
+  * Components communicate exclusively through named temp views. The
+  * runner cuts a view (an eager `localCheckpoint` under the same name)
+  * after the component that made it, except a scan with only
+  * Project/Filter above it and a view only a sink reads: those stay
+  * lazy, so a Read→Transform→Write chain is still ONE Catalyst plan at
+  * the sink action, with predicate pushdown and column pruning across
+  * component boundaries (see [[graft.runner.SimplePipelineRunner]]).
   *
   * Each companion object is the ComponentFactory the loader resolves via
   * `class_path`.

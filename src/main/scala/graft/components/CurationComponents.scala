@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions._
 /** Curation operators exposed as pipeline components (the reference's
   * extension path: write a DataFlow, wire it in HOCON —
   * reference README.md:49-76). Like every component, these read and
-  * write NAMED TEMP VIEWS, so a read → curate → write chain stays one
-  * lazy Catalyst plan except where a kernel's frequency pass genuinely
-  * needs its own job.
+  * write NAMED TEMP VIEWS. Most of them join their input with an
+  * aggregate of that same input, so the runner cuts each output view
+  * once it is made (an eager `localCheckpoint`, see
+  * [[graft.runner.SimplePipelineRunner]]) and the next component reads
+  * it instead of re-running the lineage; a view only the sink reads
+  * fuses into the write.
   */
 
 /** CCNet-style boilerplate removal over a (doc_id, text, …) view: the

@@ -81,12 +81,12 @@ object ConfigLoader {
     appName = m.get("app_name").map(str(_, "spark.app_name")).getOrElse("graft-pipeline"),
     master = m.get("master").map(str(_, "spark.master")),
     deployMode = m.get("deploy_mode").map(str(_, "spark.deploy_mode")),
-    driverMemory = m.get("driver_memory").map(str(_, "spark.driver_memory")).getOrElse("2g"),
-    driverCores = m.get("driver_cores").map(int(_, "spark.driver_cores")).getOrElse(1),
-    executorMemory = m.get("executor_memory").map(str(_, "spark.executor_memory")).getOrElse("4g"),
-    executorCores = m.get("executor_cores").map(int(_, "spark.executor_cores")).getOrElse(2),
-    numExecutors = m.get("num_executors").map(int(_, "spark.num_executors")).getOrElse(2),
-    dynamicAllocation = m.get("dynamic_allocation").map(bool(_, "spark.dynamic_allocation")).getOrElse(false),
+    driverMemory = m.get("driver_memory").map(str(_, "spark.driver_memory")),
+    driverCores = m.get("driver_cores").map(int(_, "spark.driver_cores")),
+    executorMemory = m.get("executor_memory").map(str(_, "spark.executor_memory")),
+    executorCores = m.get("executor_cores").map(int(_, "spark.executor_cores")),
+    numExecutors = m.get("num_executors").map(int(_, "spark.num_executors")),
+    dynamicAllocation = m.get("dynamic_allocation").map(bool(_, "spark.dynamic_allocation")),
     sparkConf = m.get("spark_conf").map(strMap(_, "spark.spark_conf")).getOrElse(Map.empty),
     connectString = m.get("connect_string").map(str(_, "spark.connect_string")))
 

@@ -99,36 +99,37 @@ object Presets {
 }
 
 /** Spark session settings flattened to spark.* properties
-  * (core/config/spark.py:8-83).
+  * (core/config/spark.py:8-83). The resource settings are optional: one
+  * the config leaves unset is not emitted, so spark-submit's and
+  * spark-defaults' values stand on a cluster.
   */
 final case class SparkConfig(
     appName: String = "graft-pipeline",
     master: Option[String] = None,
     deployMode: Option[String] = None,
-    driverMemory: String = "2g",
-    driverCores: Int = 1,
-    executorMemory: String = "4g",
-    executorCores: Int = 2,
-    numExecutors: Int = 2,
-    dynamicAllocation: Boolean = false,
+    driverMemory: Option[String] = None,
+    driverCores: Option[Int] = None,
+    executorMemory: Option[String] = None,
+    executorCores: Option[Int] = None,
+    numExecutors: Option[Int] = None,
+    dynamicAllocation: Option[Boolean] = None,
     sparkConf: Map[String, String] = Map.empty,
     connectString: Option[String] = None) {
 
-  /** Flatten to spark.* properties (spark.py:59-83). Explicit sparkConf
-    * entries win over the derived ones.
+  /** Flatten to spark.* properties (spark.py:59-83): the app name, then
+    * only the settings that are set. Explicit sparkConf entries win over
+    * the derived ones.
     */
-  def toSparkConfMap: Map[String, String] = {
-    val base = Map(
-      "spark.app.name" -> appName,
+  def toSparkConfMap: Map[String, String] =
+    Map("spark.app.name" -> appName) ++ Seq(
+      "spark.master" -> master,
       "spark.driver.memory" -> driverMemory,
-      "spark.driver.cores" -> driverCores.toString,
+      "spark.driver.cores" -> driverCores,
       "spark.executor.memory" -> executorMemory,
-      "spark.executor.cores" -> executorCores.toString,
-      "spark.executor.instances" -> numExecutors.toString,
-      "spark.dynamicAllocation.enabled" -> dynamicAllocation.toString)
-    val withMaster = master.fold(base)(m => base + ("spark.master" -> m))
-    withMaster ++ sparkConf
-  }
+      "spark.executor.cores" -> executorCores,
+      "spark.executor.instances" -> numExecutors,
+      "spark.dynamicAllocation.enabled" -> dynamicAllocation)
+      .collect { case (k, Some(v)) => k -> v.toString } ++ sparkConf
 }
 
 object SparkConfig {

@@ -1,6 +1,7 @@
 package graft.runner
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import graft.core.component._
 import graft.core.config.ComponentConfig
 import graft.core.resilience.{CircuitBreaker, RetryExecutor}
@@ -8,9 +9,16 @@ import graft.runtime.ComponentLoader
 
 /** Per-component execution (reference: runner/component_executor.py:27-186):
   * circuit-breaker gate → reflective instantiation → session injection →
-  * Resource.open → retry-wrapped run() → Resource.close (finally) →
-  * hook callbacks; every failure is captured into a ComponentResult
-  * rather than thrown.
+  * Resource.open → retry-wrapped run() and cut → Resource.close
+  * (finally) → hook callbacks; every failure is captured into a
+  * ComponentResult rather than thrown.
+  *
+  * The cut (the `cut` view the runner names, see
+  * [[SimplePipelineRunner]]) runs inside the retry, after run() and
+  * before afterComponent: its jobs, time, errors and retries belong to
+  * the producing component, so hooks see them, the circuit breaker
+  * counts them, and a component whose plan fails when it runs is never
+  * journalled as completed.
   */
 final class ComponentExecutor(
     spark: () => SparkSession,
@@ -28,7 +36,7 @@ final class ComponentExecutor(
             hooks.onCircuitBreakerStateChange(cfg.name, from, to))))
     }
 
-  def execute(cfg: ComponentConfig): ComponentResult = {
+  def execute(cfg: ComponentConfig, cut: Option[String]): ComponentResult = {
     val start = clock()
     def ms = ((clock() - start) * 1000).toLong
     safely("beforeComponent")(hooks.beforeComponent(cfg.name))
@@ -61,7 +69,7 @@ final class ComponentExecutor(
               retries = attempt
               safely("onRetryAttempt")(hooks.onRetryAttempt(cfg.name, attempt, e, delay))
             })
-          retry.execute(() => component.run())
+          retry.execute { () => component.run(); cut.foreach(materialise) }
           cb.foreach(_.recordSuccess())
           ComponentResult(cfg.name, ComponentStatus.Success, ms, retries)
         } finally {
@@ -78,5 +86,29 @@ final class ComponentExecutor(
       }
     safely("afterComponent")(hooks.afterComponent(cfg.name, result))
     result
+  }
+
+  /** Replace `view` with an eager `localCheckpoint` of itself, under the
+    * same name, unless its optimised plan is a scan with only
+    * Project/Filter above it: re-reading such a view costs what reading
+    * a checkpoint does, and leaving it lazy keeps filter pushdown and
+    * column pruning into the scan.
+    *
+    * Plain `localCheckpoint`, not `Scale.gatedCheckpoint`: a global
+    * window in the view (e.g. `Sampling.neymanOf`'s) runs single-task
+    * wherever the view executes, so the cut adds no funnel the gate
+    * could prevent, and gating it would refuse NeymanSample views.
+    */
+  private def materialise(view: String): Unit = {
+    val df = spark().table(view)
+    if (!scanOnly(df.queryExecution.optimizedPlan))
+      df.localCheckpoint().createOrReplaceTempView(view)
+  }
+
+  /** A leaf with only Project/Filter above it. */
+  private def scanOnly(plan: LogicalPlan): Boolean = plan match {
+    case Project(_, child) => scanOnly(child)
+    case Filter(_, child) => scanOnly(child)
+    case p => p.children.isEmpty
   }
 }

@@ -1,7 +1,8 @@
 package graft.runner
 
 import org.apache.spark.sql.SparkSession
-import graft.core.config.{ConfigLoader, PipelineConfig}
+import graft.core.component.Cfg
+import graft.core.config.{ComponentConfig, ConfigLoader, Enums, PipelineConfig}
 import graft.core.resilience.CircuitBreaker
 import graft.runtime.SessionWrapper
 
@@ -12,6 +13,18 @@ import graft.runtime.SessionWrapper
   * component across the cluster; running components serially keeps
   * ordering predictable and resume semantics simple. `depends_on`
   * controls ordering, not parallelism.
+  *
+  * Components hand each other lazy temp views, and most curation
+  * components join their input with an aggregate of that same input, so
+  * a fully lazy pipeline repeats its lineage in every downstream plan.
+  * The runner therefore places the cuts: after a component succeeds,
+  * its `output_view` is replaced by an eager `localCheckpoint` of
+  * itself ([[ComponentExecutor]]), except where fusing costs nothing —
+  * a view whose optimised plan is a scan with only Project/Filter above
+  * it, and a view whose only dependent component is a sink, which fuses
+  * into the write. A cut view holds executor storage until it is
+  * replaced or dropped and its RDD is garbage-collected, and it is
+  * session-scoped: resume in a new session does not find it.
   */
 final class SimplePipelineRunner(
     config: PipelineConfig,
@@ -51,7 +64,7 @@ final class SimplePipelineRunner(
       else if (failed && failFast)
         results += ComponentResult(name, ComponentStatus.Skipped)
       else {
-        val r = executor.execute(cfg)
+        val r = executor.execute(cfg, cutOf(cfg))
         results += r
         if (r.status == ComponentStatus.Failed) failed = true
       }
@@ -66,6 +79,15 @@ final class SimplePipelineRunner(
       errors = results.flatMap(_.error).map(_.getMessage).toSeq)
     safely("afterPipeline")(allHooks.afterPipeline(config.name, result))
     result
+  }
+
+  /** The view to cut after `cfg` succeeds: its `output_view`, unless
+    * the only component depending on `cfg` is a sink.
+    */
+  private def cutOf(cfg: ComponentConfig): Option[String] = {
+    val readers = config.components.filter(_.dependsOn.contains(cfg.name))
+    val sinkOnly = readers.map(_.componentType) == Seq(Enums.ComponentType.Sink)
+    Cfg.strOpt(cfg.config, "output_view").filterNot(_ => sinkOnly)
   }
 
   /** Stop the session if this runner created it. */

@@ -196,6 +196,18 @@ class ConfigModelSpec extends AnyFunSuite {
     assert(m("spark.app.name") == "x")
   }
 
+  test("spark block: only the resource settings it sets are emitted") {
+    val resources = Set("spark.driver.memory", "spark.driver.cores",
+      "spark.executor.memory", "spark.executor.cores",
+      "spark.executor.instances", "spark.dynamicAllocation.enabled")
+    def bound(block: String) = ConfigLoader.loadString(
+      s"name = p\nspark { app_name = x\n$block }").spark.toSparkConfMap
+    assert(bound("").keySet.intersect(resources).isEmpty)
+    val one = bound("executor_memory = 8g")
+    assert(one.keySet.intersect(resources) == Set("spark.executor.memory"))
+    assert(one("spark.executor.memory") == "8g")
+  }
+
   test("SparkConfig.local: local[cores], one shuffle partition per core, UI off, UTC, nanosAsLong") {
     val m = SparkConfig.local(3).toSparkConfMap
     assert(m("spark.master") == "local[3]")

@@ -133,6 +133,42 @@ class RunnerSpec extends SparkSpec {
       store.completedFor("p", changed))
   }
 
+  test("a view whose plan fails is reported on its producer, not on the sink") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-cut-fail")
+    val in = work.resolve("in").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "k").write.parquet(in)
+    val cfg = ConfigLoader.loadString(s"""
+      name = cut-fail
+      components = [
+        { name = read, component_type = source
+          class_path = "graft.components.ReadFormat"
+          config { format = parquet, path = "$in", output_view = cf_raw } },
+        { name = bad, component_type = transformation
+          class_path = "graft.components.SqlTransform"
+          depends_on = [read]
+          config { output_view = cf_bad,
+            sql = "SELECT k, coalesce(raise_error(concat('bad key ', k)), k) AS e FROM cf_raw GROUP BY k" } },
+        { name = next, component_type = transformation
+          class_path = "graft.components.SqlTransform"
+          depends_on = [bad]
+          config { output_view = cf_next, sql = "SELECT k, e FROM cf_bad" } },
+        { name = write, component_type = sink
+          class_path = "graft.components.WriteFormat"
+          depends_on = [next]
+          config { format = parquet, input_view = cf_next,
+            path = "${work.resolve("out")}" } }
+      ]
+    """)
+    val store = new CheckpointStore(work.resolve("cp").toString)
+    val r = runPipeline(cfg, Some(store))
+    assert(r.components.map(c => c.name -> c.status) == Seq(
+      "read" -> ComponentStatus.Success, "bad" -> ComponentStatus.Failed,
+      "next" -> ComponentStatus.Skipped, "write" -> ComponentStatus.Skipped))
+    assert(r.failed.head.error.get.getMessage.contains("bad key"))
+    assert(store.completedFor("cut-fail", cfg) == Set("read"))
+  }
+
   test("checkpoint cleared after a fully successful run") {
     reset()
     val store = new CheckpointStore(Files.createTempDirectory("graft-cp2").toString)
@@ -211,6 +247,76 @@ class LocalDemoSpec extends SparkSpec {
     assert(rows.head == "1,ALICE,alice@x.com,us-east")
   }
 
+  test("read -> SQL WHERE -> parquet write cuts nothing and keeps the pushed filter") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val work = Files.createTempDirectory("graft-fuse")
+    val in = work.resolve("in").toString
+    Seq((1L, 5L), (2L, 15L), (3L, 25L)).toDF("id", "v").write.parquet(in)
+    val cfg = ConfigLoader.loadString(s"""
+      name = fuse-demo
+      components = [
+        { name = read, component_type = source
+          class_path = "graft.components.ReadFormat"
+          config { format = parquet, path = "$in", output_view = fuse_raw } },
+        { name = keep, component_type = transformation
+          class_path = "graft.components.SqlTransform"
+          depends_on = [read]
+          config { output_view = fuse_kept,
+            sql = "SELECT id, v FROM fuse_raw WHERE v > 10" } },
+        { name = write, component_type = sink
+          class_path = "graft.components.WriteFormat"
+          depends_on = [keep]
+          config { format = parquet, input_view = fuse_kept,
+            path = "${work.resolve("out")}" } }
+      ]
+    """)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val plans = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val qeListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.graft.ListenerBusFlush.drain(sc)
+      jobs.set(0)
+      body
+      org.apache.spark.graft.ListenerBusFlush.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      val viaRunner = jobsOf(assert(
+        new SimplePipelineRunner(cfg, NoOpHooks, Some(spark)).run().status ==
+          PipelineStatus.Success))
+      // both views stay lazy plans over the parquet scan
+      for (v <- Seq("fuse_raw", "fuse_kept"))
+        assert(spark.table(v).queryExecution.analyzed.collectFirst {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r }.isEmpty, v)
+      val sink = plans.toArray.map(_.toString)
+        .filter(_.contains("InsertIntoHadoopFsRelationCommand"))
+      assert(sink.length == 1 &&
+        sink.head.contains("PushedFilters: [IsNotNull(v), GreaterThan(v,10)]"),
+        sink.mkString("\n"))
+      // the same chain run by hand, with no runner: as many jobs
+      val byHand = jobsOf(
+        spark.read.format("parquet").load(in).where("v > 10").select("id", "v")
+          .write.format("parquet").mode("overwrite").save(work.resolve("out2").toString))
+      assert(viaRunner == byHand, s"runner $viaRunner jobs, by hand $byHand")
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+  }
+
   test("curation pipeline e2e: boilerplate -> familiarity -> importance -> filter -> gate -> budget -> cap -> parquet") {
     val work = Files.createTempDirectory("graft-curation-e2e")
     val out = work.resolve("snapshot").toString
@@ -242,6 +348,20 @@ class LocalDemoSpec extends SparkSpec {
     val overCap = snap.groupBy(col("source"))
       .agg(count(lit(1)).as("n")).filter(col("n") > 10L).count()
     assert(overCap == 0L, "no source exceeds its document cap")
+    // the runner cut every view a later component re-reads; the scan,
+    // the scan-only filter and the view only the sink reads stay lazy
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, View}
+    def body(p: LogicalPlan): LogicalPlan = p match {
+      case SubqueryAlias(_, c) => body(c)
+      case v: View => body(v.child)
+      case o => o
+    }
+    def isCut(v: String) = body(spark.table(v).queryExecution.analyzed)
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    for (v <- Seq("deboilered", "scored", "imp_scored", "gated", "mixed"))
+      assert(isCut(v), s"$v must be cut")
+    for (v <- Seq("raw_docs", "curated", "capped"))
+      assert(!isCut(v), s"$v must stay lazy")
   }
 
   test("sampling pipeline e2e: neyman draw -> waste report -> parquet outputs") {
