@@ -929,7 +929,7 @@ object StreamingCuration {
       }
     }
     if (!VersionedState.alreadyFolded(spark, stateDir, "lm_big", batchId)) {
-      val bc = graft.ops.TextAnalysis.lmBigramsOf(batch)
+      val bc = graft.ops.TextAnalysis.lmNgramsOf(batch, "prev", "w")
         .groupBy($"prev", $"w").agg(count(lit(1)).as("c_bw"))
       val merged = VersionedState.readTable(spark, stateDir, "lm_big") match {
         case None => bc
@@ -972,7 +972,7 @@ object StreamingCuration {
     import spark.implicits._
     mergeLmModelState(spark, stateDir, batch, batchId)
     if (!VersionedState.alreadyFolded(spark, stateDir, "lm_tri", batchId)) {
-      val bc = graft.ops.TextAnalysis.lmTrigramsOf(batch)
+      val bc = graft.ops.TextAnalysis.lmNgramsOf(batch, "a", "b", "c")
         .groupBy($"a", $"b", $"c").agg(count(lit(1)).as("c_t"))
       val merged = VersionedState.readTable(spark, stateDir, "lm_tri") match {
         case None => bc
@@ -1021,7 +1021,7 @@ object StreamingCuration {
     import spark.implicits._
     mergeLmTrigramModelState(spark, stateDir, batch, batchId)
     if (!VersionedState.alreadyFolded(spark, stateDir, "lm_quad", batchId)) {
-      val bc = graft.ops.TextAnalysis.lmQuadgramsOf(batch)
+      val bc = graft.ops.TextAnalysis.lmNgramsOf(batch, "a", "b", "c", "d")
         .groupBy($"a", $"b", $"c", $"d").agg(count(lit(1)).as("c4"))
       val merged = VersionedState.readTable(spark, stateDir, "lm_quad") match {
         case None => bc
@@ -2105,8 +2105,9 @@ object StreamingCuration {
     // now an engineered guarantee (spec: folding the same batchId
     // twice equals folding it once).
     if (VersionedState.alreadyFolded(spark, stateDir, "bm25", batchId)) return
-    val toks = batch
-      .select(col("doc_id"), explode(TextAnalysis.tokens(lower(col("text")))).as("token"))
+    val toks = batch.select(col("doc_id"), col("text")).as[(Long, String)]
+      .flatMap { case (id, text) => TextAnalysis.bm25Words(text).iterator.map(w => (id, w)) }
+      .toDF("doc_id", "token")
     val batchDf = toks.distinct().groupBy($"token").agg(count(lit(1)).as("df"))
     val row = toks.agg(countDistinct($"doc_id"), count(lit(1))).head()
     val (batchNd, batchTt) = (row.getLong(0), row.getLong(1))
@@ -2144,8 +2145,7 @@ object StreamingCuration {
   def bm25FromState(spark: SparkSession, stateDir: String, docs: DataFrame,
       query: String, n: Int): DataFrame = {
     import spark.implicits._
-    val terms: Array[String] =
-      query.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty).distinct
+    val terms = TextAnalysis.bm25Terms(query)
     val k = terms.length
     require(k > 0, "bm25 needs at least one query term")
     val (nd, tt) = readBm25Scalars(spark, stateDir)
@@ -2156,27 +2156,11 @@ object StreamingCuration {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
     val dfs = terms.map(t => dfMap.getOrElse(t, 0L))
+    val all = Array.range(0, k)
     docs.select($"doc_id", $"text").as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val toks = text.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
-          val tfs = new Array[Long](k)
-          toks.foreach { tk =>
-            var i = 0
-            while (i < k) { if (terms(i) == tk) tfs(i) += 1L; i += 1 }
-          }
-          var score = 0.0
-          var i = 0
-          while (i < k) {
-            val tf = tfs(i)
-            val num = (2L * nd - 2L * dfs(i) + 1L) * 44L * tf * tt
-            val den = (2L * dfs(i) + 1L) *
-              (20L * tf * tt + 6L * tt + 18L * toks.length.toLong * nd)
-            score += num.toDouble / den.toDouble
-            i += 1
-          }
-          (id, toks.length.toLong, score)
-        }
+      .map { case (id, text) =>
+        val (dl, tfs) = TextAnalysis.bm25Tf(text, terms)
+        (id, dl, TextAnalysis.bm25Score(nd, tt, dl, tfs, dfs, all))
       }
       .filter(_._2 > 0L)
       .toDF("doc_id", "n_tokens", "score")

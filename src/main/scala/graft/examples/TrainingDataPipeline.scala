@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.core.config.SparkConfig
-import graft.ops.{Dedup, Sampling, TextAnalysis}
+import graft.ops.{Dedup, Sampling}
 import graft.ops.Scale.GatedCheckpoint
 import graft.runtime.SessionWrapper
 
@@ -50,11 +50,7 @@ object TrainingDataPipeline {
     val input = docs.count()
 
     // 1. quality gate (same thresholds the ta_quality query reports)
-    val nTok = TextAnalysis.tokenCount(col("text"))
-    val nonAlpha = length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long")
-    val quality = docs.filter(
-      nTok >= 5L && nTok <= 10000L &&
-        (nonAlpha.cast("double") / greatest(length(col("text")).cast("long"), lit(1L))) < 0.3)
+    val quality = StreamingCuration.qualityGate(docs)
     val nQuality = quality.count()
 
     // 2. exact dedup: canonical = min doc_id per identical text

@@ -304,19 +304,7 @@ object CorpusFilters {
     val sh = docs
       .select($"source", $"text").as[(String, String)]
       .flatMap { case (src, text) =>
-        val ws = text.trim.split("\\s+").filter(_.nonEmpty)
-        if (ws.length < 3) Iterator.empty
-        else {
-          val seen = scala.collection.mutable.HashSet.empty[Long]
-          val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-          var i = 0
-          while (i + 3 <= ws.length) {
-            val h = Dedup.fnv64Shingle(ws, i, 3)
-            if (seen.add(h)) out += ((src, h))
-            i += 1
-          }
-          out.iterator
-        }
+        Dedup.distinctShingles(TextAnalysis.words(text), 3).iterator.map(h => (src, h))
       }
       .toDF("source", "k")
       .distinct()
@@ -443,8 +431,7 @@ object CorpusFilters {
       (conv(substring(md5(concat(lit("w:"), $"id".cast("string"))), 1, 4),
         16, 10).cast("long") % 1999 - 999).as("w")))
     docs
-      .select($"doc_id", explode(filter(
-        split(trim(lower($"text")), "\\s+"), tk => length(tk) > 0)).as("term"))
+      .select($"doc_id", explode(TextAnalysis.lowerTokens($"text")).as("term"))
       .select($"doc_id",
         (conv(substring(md5($"term"), 1, 3), 16, 10).cast("long")
           % QcBuckets).as("bucket"))
@@ -487,7 +474,7 @@ object CorpusFilters {
       sum(size($"tk")).cast("long").as("n_tokens"))
     val uni = tk.select($"source", explode($"tk").as("g"))
       .groupBy($"source").agg(countDistinct($"g").as("uni_types"))
-    // r18: compiled bigram kernel (the lmBigramsOf lesson) — the old
+    // r18: compiled bigram kernel (the lmNgramsOf lesson) — the old
     // zip_with-over-equal-length-slices chain evaluated its lambda
     // interpreted per element over corpus mass. Emission order and
     // values are identical: adjacent-token pairs joined by one space,

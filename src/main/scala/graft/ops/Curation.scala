@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
 import graft.ops.Scale.GatedCheckpoint
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Corpus-curation operators layered on the dedup/similarity stack:
   * boilerplate segment removal (CCNet-style), clustered semantic
@@ -132,8 +133,7 @@ object Curation {
         it.flatMap { case (id, text) =>
           val seen = new java.util.LinkedHashSet[String]()
           chunkStrings(text, width).foreach { chunk =>
-            md.reset()
-            seen.add(md5Hex(md, chunk))
+            seen.add(TextAnalysis.md5Hex(md, chunk.getBytes(UTF_8)))
           }
           scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator()).asScala
             .map(h => (id, h))
@@ -170,26 +170,15 @@ object Curation {
     val s = docsIn.sparkSession
     import s.implicits._
     val frequentBc = s.sparkContext.broadcast(frequent)
-    docsIn.select($"doc_id", $"text").as[(Long, String)].mapPartitions { it =>
+    cleanTextOf(docsIn.select($"doc_id", $"text").as[(Long, String)].mapPartitions { it =>
       val freq = frequentBc.value
       val md = java.security.MessageDigest.getInstance("MD5")
       it.map { case (id, text) =>
-        var removed = 0L
-        var nChunks = 0L
-        val kept = new java.lang.StringBuilder
-        chunkStrings(text, width).foreach { chunk =>
-          nChunks += 1L
-          md.reset()
-          if (freq.contains(md5Hex(md, chunk))) removed += 1L
-          else {
-            if (kept.length > 0) kept.append(' ')
-            kept.append(chunk)
-          }
+        keepChunks(id, text, width) { (chunk, _) =>
+          freq.contains(TextAnalysis.md5Hex(md, chunk.getBytes(UTF_8)))
         }
-        (id, nChunks, removed, kept.toString)
       }
-    }.toDF("doc_id", "n_chunks", "n_removed", "clean_text")
-      .filter(col("n_chunks") > 0L)
+    })
   }
 
   /** Distributed removal for a frequent set too large to broadcast.
@@ -211,32 +200,45 @@ object Curation {
     val removed = chunkHashesIndexed(docsIn, width)
       .join(frequentDf.select($"h"), Seq("h"), "left_semi")
       .groupBy($"doc_id").agg(collect_list($"chunk_idx").as("removed_idx"))
-    docsIn.select($"doc_id", $"text")
+    cleanTextOf(docsIn.select($"doc_id", $"text")
       .join(removed, Seq("doc_id"), "left")
       .select($"doc_id", $"text",
         coalesce($"removed_idx", typedLit(Seq.empty[Int])).as("removed_idx"))
       .as[(Long, String, Seq[Int])]
-      .mapPartitions { it =>
-        it.map { case (id, text, removedIdx) =>
-          val rem = removedIdx.toSet
-          var nChunks = 0L
-          var nRemoved = 0L
-          val kept = new java.lang.StringBuilder
-          var ci = 0
-          chunkStrings(text, width).foreach { chunk =>
-            nChunks += 1L
-            if (rem.contains(ci)) nRemoved += 1L
-            else {
-              if (kept.length > 0) kept.append(' ')
-              kept.append(chunk)
-            }
-            ci += 1
-          }
-          (id, nChunks, nRemoved, kept.toString)
-        }
-      }.toDF("doc_id", "n_chunks", "n_removed", "clean_text")
-      .filter(col("n_chunks") > 0L)
+      .map { case (id, text, removedIdx) =>
+        val rem = removedIdx.toSet
+        keepChunks(id, text, width)((_, ci) => rem.contains(ci))
+      })
   }
+
+  /** One document re-assembled from its chunks minus those `drop`
+    * rejects — `drop(chunk, chunk_idx)` is called once per chunk, in
+    * order: (doc_id, n_chunks, n_removed, kept chunks space-joined). The
+    * keep/drop loop of [[cleanChunks]], [[cleanChunksJoin]] and
+    * [[intraDocDedupOf]].
+    */
+  private def keepChunks(id: Long, text: String, width: Int)(
+      drop: (String, Int) => Boolean): (Long, Long, Long, String) = {
+    var nChunks = 0
+    var nRemoved = 0L
+    val kept = new java.lang.StringBuilder
+    chunkStrings(text, width).foreach { chunk =>
+      if (drop(chunk, nChunks)) nRemoved += 1L
+      else {
+        if (kept.length > 0) kept.append(' ')
+        kept.append(chunk)
+      }
+      nChunks += 1
+    }
+    (id, nChunks.toLong, nRemoved, kept.toString)
+  }
+
+  /** [[keepChunks]] rows as the clean-text frame; a document with no
+    * chunks has no row.
+    */
+  private def cleanTextOf(rows: Dataset[(Long, Long, Long, String)]): DataFrame =
+    rows.toDF("doc_id", "n_chunks", "n_removed", "clean_text")
+      .filter(col("n_chunks") > 0L)
 
   /** Every chunk occurrence with its position, (doc_id, chunk_idx, h) —
     * the join path's left side. Unlike [[distinctChunkHashes]] repeats
@@ -251,8 +253,7 @@ object Curation {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, text) =>
           chunkStrings(text, width).zipWithIndex.map { case (chunk, i) =>
-            md.reset()
-            (id, i, md5Hex(md, chunk))
+            (id, i, TextAnalysis.md5Hex(md, chunk.getBytes(UTF_8)))
           }
         }
       }
@@ -275,52 +276,20 @@ object Curation {
   def intraDocDedupOf(docsIn: DataFrame, width: Int = ChunkTokens): DataFrame = {
     val s = docsIn.sparkSession
     import s.implicits._
-    val clean = docsIn.select($"doc_id", $"text").as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val seen = new java.util.HashSet[String]()
-          var nChunks = 0L
-          var dropped = 0L
-          val kept = new java.lang.StringBuilder
-          chunkStrings(text, width).foreach { chunk =>
-            nChunks += 1L
-            if (!seen.add(chunk)) dropped += 1L
-            else {
-              if (kept.length > 0) kept.append(' ')
-              kept.append(chunk)
-            }
-          }
-          (id, nChunks, dropped, kept.toString)
-        }
-      }.toDF("doc_id", "n_chunks", "n_removed", "clean_text")
-      .filter(col("n_chunks") > 0L)
+    val clean = cleanTextOf(docsIn.select($"doc_id", $"text").as[(Long, String)]
+      .map { case (id, text) =>
+        val seen = new java.util.HashSet[String]()
+        keepChunks(id, text, width)((chunk, _) => !seen.add(chunk))
+      })
     reportOf(clean)
   }
 
-  /** The document's fixed-width token chunks — same tokenization as
-    * [[chunksOf]]/TextAnalysis.tokens (trim, split \s+, drop empties;
-    * Java and Spark share the regex engine, so token streams are
-    * identical).
+  /** The document's fixed-width token chunks: [[TextAnalysis.words]]
+    * in runs of `width`, space-joined — [[chunksOf]] element-wise, as
+    * `words` is `TextAnalysis.tokens` element-wise (TokenIdiomSpec).
     */
-  private def chunkStrings(text: String, width: Int): Iterator[String] = {
-    val toks = text.trim.split("\\s+").filter(_.nonEmpty)
-    val nChunks = (toks.length + width - 1) / width
-    (0 until nChunks).iterator.map { c =>
-      toks.slice(c * width, math.min(toks.length, (c + 1) * width)).mkString(" ")
-    }
-  }
-
-  private def md5Hex(md: java.security.MessageDigest, s: String): String = {
-    val bytes = md.digest(s.getBytes("UTF-8"))
-    val sb = new java.lang.StringBuilder(32)
-    var i = 0
-    while (i < bytes.length) {
-      sb.append(Character.forDigit((bytes(i) >> 4) & 0xf, 16))
-      sb.append(Character.forDigit(bytes(i) & 0xf, 16))
-      i += 1
-    }
-    sb.toString
-  }
+  private def chunkStrings(text: String, width: Int): Iterator[String] =
+    TextAnalysis.words(text).grouped(width).map(_.mkString(" "))
 
   // ---- exact repeated-substring removal (ExactSubstr-style) ----
 
@@ -659,9 +628,8 @@ object Curation {
     // past ~10⁹ windows).
     docsIn.select($"doc_id", $"text").as[(Long, String)]
       .flatMap { case (id, text) =>
-        val toks = text.trim.split("\\s+").filter(_.nonEmpty)
-        if (toks.length < k) Iterator.empty
-        else (0 to toks.length - k).iterator.map { p0 =>
+        val toks = TextAnalysis.words(text)
+        (0 to toks.length - k).iterator.map { p0 =>
           (id, (p0 + 1).toLong, graft.ops.Dedup.fnv64Shingle(toks, p0, k))
         }
       }.toDF("doc_id", "p", "h")
@@ -689,7 +657,7 @@ object Curation {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, text, ps) =>
-          val toks = text.trim.split("\\s+").filter(_.nonEmpty)
+          val toks = TextAnalysis.words(text)
           val n = toks.length
           val covered = new Array[Boolean](n)
           ps.foreach { p =>
@@ -711,7 +679,8 @@ object Curation {
             }
             i += 1
           }
-          (id, n.toLong, nSpans, nRemoved, md5Hex(md, kept.toString))
+          (id, n.toLong, nSpans, nRemoved,
+            TextAnalysis.md5Hex(md, kept.toString.getBytes(UTF_8)))
         }
       }
       .toDF("doc_id", "n_tokens", "n_spans", "n_removed", "clean_md5")
@@ -952,19 +921,14 @@ object Curation {
     import s.implicits._
     // r17: compiled flatMap kernel replaces the transform(sequence)/
     // try_element_at chain — Catalyst HOF lambdas evaluate interpreted
-    // per element (the lmBigramsOf r17 rewrite, same measured class);
-    // token semantics identical (trim+split+non-empty == tokens()).
+    // per element (the lmNgramsOf r17 rewrite, same measured class);
+    // TextAnalysis.words is tokens() element-wise, and null text gives
+    // no bigrams (the old tokens(NULL) → size −1 path).
     val bigrams = t(s, dir, "documents")
       .select($"lang", $"text").as[(String, String)]
       .flatMap { case (lang, text) =>
-        // null text ⇒ no bigrams (the old tokens(NULL) → size −1 path)
-        if (text == null) Iterator.empty
-        else {
-          val ws = text.trim.split("\\s+").filter(_.nonEmpty)
-          if (ws.length < 2) Iterator.empty
-          else (0 to ws.length - 2).iterator
-            .map(i => (lang, ws(i) + " " + ws(i + 1)))
-        }
+        val ws = TextAnalysis.words(text)
+        (0 to ws.length - 2).iterator.map(i => (lang, ws(i) + " " + ws(i + 1)))
       }
       .toDF("lang", "bigram")
     bigrams.groupBy($"lang", $"bigram")

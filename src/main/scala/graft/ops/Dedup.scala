@@ -104,21 +104,26 @@ object Dedup {
     docs
       .select($"doc_id", $"text").as[(Long, String)]
       .flatMap { case (id, text) =>
-        val ws = text.trim.split("\\s+").filter(_.nonEmpty)
-        if (ws.length < n) Iterator.empty
-        else {
-          val seen = new scala.collection.mutable.HashSet[Long]
-          val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]
-          var i = 0
-          while (i + n <= ws.length) {
-            val h = fnv64Shingle(ws, i, n)
-            if (seen.add(h)) out += ((id, h))
-            i += 1
-          }
-          out.iterator
-        }
+        distinctShingles(TextAnalysis.words(text), n).iterator.map(h => (id, h))
       }
       .toDF("doc_id", "sh")
+  }
+
+  /** The DISTINCT fnv64 hashes of the `n`-word windows of `ws`, in
+    * first-occurrence order — the shingle walk of [[shingledOf]],
+    * [[widthShingleHashes]], [[shingleSetsOf]] and
+    * [[CorpusFilters.sourceOverlapOf]].
+    */
+  private[graft] def distinctShingles(ws: Array[String], n: Int): Array[Long] = {
+    val seen = new scala.collection.mutable.HashSet[Long]
+    val out = Array.newBuilder[Long]
+    var i = 0
+    while (i + n <= ws.length) {
+      val h = fnv64Shingle(ws, i, n)
+      if (seen.add(h)) out += h
+      i += 1
+    }
+    out.result()
   }
 
   /** Multi-width shingling in ONE corpus scan: (doc_id, n, sh) rows for
@@ -151,20 +156,8 @@ object Dedup {
     */
   private[graft] def widthShingleHashes(
       text: String, widths: Seq[Int]): Iterator[(Int, Long)] = {
-    val ws = text.trim.split("\\s+").filter(_.nonEmpty)
-    val out = new scala.collection.mutable.ArrayBuffer[(Int, Long)]
-    widths.foreach { n =>
-      if (ws.length >= n) {
-        val seen = new scala.collection.mutable.HashSet[Long]
-        var i = 0
-        while (i + n <= ws.length) {
-          val h = fnv64Shingle(ws, i, n)
-          if (seen.add(h)) out += ((n, h))
-          i += 1
-        }
-      }
-    }
-    out.iterator
+    val ws = TextAnalysis.words(text)
+    widths.iterator.flatMap(n => distinctShingles(ws, n).iterator.map(h => (n, h)))
   }
 
   /** Exact dedup: group identical texts, keep the smallest doc_id as the
@@ -411,14 +404,9 @@ object Dedup {
     docs
       .select($"doc_id", $"text").as[(Long, String)]
       .map { case (id, text) =>
-        val ws = text.trim.split("\\s+").filter(_.nonEmpty)
-        val seen = new scala.collection.mutable.TreeSet[Long]
-        var i = 0
-        while (i + ShingleN <= ws.length) {
-          seen += fnv64Shingle(ws, i, ShingleN)
-          i += 1
-        }
-        (id, seen.toArray)
+        val set = distinctShingles(TextAnalysis.words(text), ShingleN)
+        java.util.Arrays.sort(set)
+        (id, set)
       }
       .toDF("doc_id", "set")
   }
@@ -955,7 +943,7 @@ object Dedup {
       .mapPartitions { it =>
         val memo = new TextAnalysis.Md5Memo()
         it.flatMap { case (id, text) =>
-          val ws = text.trim.split("\\s+").filter(_.nonEmpty)
+          val ws = TextAnalysis.words(text)
           if (ws.length < ShingleN) Iterator.empty
           else {
             val votes = new Array[Int](64)

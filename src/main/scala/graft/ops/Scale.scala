@@ -126,15 +126,14 @@ object Scale {
     * whitelist.
     */
   implicit class GatedCheckpoint[T](private val ds: Dataset[T]) {
-    def gatedCheckpoint(eager: Boolean = true,
-        boundedWindowOk: String = null): Dataset[T] = {
+    def gatedCheckpoint(boundedWindowOk: String = null): Dataset[T] = {
       if (boundedWindowOk == null) {
         val bad = serialWindows(ds.queryExecution.optimizedPlan)
         require(bad.isEmpty,
           s"unpartitioned unbounded window inside a checkpointed segment " +
             s"— a 100 TB single-task funnel: ${bad.head.simpleString(120)}")
       }
-      ds.localCheckpoint(eager)
+      ds.localCheckpoint()
     }
   }
 

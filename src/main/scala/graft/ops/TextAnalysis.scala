@@ -30,6 +30,20 @@ object TextAnalysis {
   def tokens(text: Column): Column =
     array_remove(split(text, "\\s+"), "")
 
+  private val WordSep = java.util.regex.Pattern.compile("\\s+")
+
+  /** [[tokens]] for the compiled per-document kernels: exactly
+    * `array_remove(split(text, "\\s+"), "")` (Spark's `split` runs the
+    * same java.util.regex `\s+`), and `null` reads as no words. No
+    * `trim` first: Java's `trim` strips every char ≤ U+0020, which `\s`
+    * does not all match, so a trimmed split disagrees with [[tokens]]
+    * on text that starts or ends with a control char (TokenIdiomSpec
+    * pins the two forms element-wise equal).
+    */
+  def words(text: String): Array[String] =
+    if (text == null) Array.empty[String]
+    else WordSep.split(text).filter(_.nonEmpty)
+
   /** Lowercased whitespace tokens — the compiled idiom for the five
     * case-folded text-analysis streams (coverage / RAKE / Heaps /
     * divergence / Simpson) whose legacy form was the interpreted
@@ -681,7 +695,7 @@ object TextAnalysis {
     import s.implicits._
     docs.select($"doc_id", $"text").as[(Long, String)]
       .map { case (id, text) =>
-        val ws = text.trim.split("\\s+").filter(_.nonEmpty)
+        val ws = words(text)
         val counts = new java.util.HashMap[String, Int]()
         var i = 0
         while (i < ws.length) {
@@ -691,7 +705,8 @@ object TextAnalysis {
         var maxC = 0
         val it = counts.values().iterator()
         while (it.hasNext) { val c = it.next(); if (c > maxC) maxC = c }
-        val sents = text.split("\\. ").filter(_.nonEmpty)
+        val sents =
+          if (text == null) Array.empty[String] else text.split("\\. ").filter(_.nonEmpty)
         val distinctSents = sents.toSet.size
         (id, ws.length.toLong, counts.size.toLong,
           if (ws.length == 0) 0.0 else counts.size.toDouble / ws.length,
@@ -784,25 +799,63 @@ object TextAnalysis {
       n: Int = Bm25TopN): DataFrame =
     bm25Of(t(s, dir, "documents"), query, n)
 
+  /** The BM25 term stream of a text: [[words]] of its `Locale.ROOT`
+    * lower case. Query terms, the tf loop and the streaming df fold
+    * ([[graft.examples.StreamingCuration.mergeBm25State]]) all read
+    * terms through it, so batch and incremental dfs count the same
+    * terms.
+    */
+  private[graft] def bm25Words(text: String): Array[String] =
+    if (text == null) Array.empty[String]
+    else words(text.toLowerCase(java.util.Locale.ROOT))
+
+  /** A query's distinct terms in first-occurrence order — the order
+    * [[bm25Score]] folds them in.
+    */
+  private[graft] def bm25Terms(query: String): Array[String] =
+    bm25Words(query).distinct
+
+  /** (dl, tf of each of `terms`) for one document. */
+  private[graft] def bm25Tf(text: String, terms: Array[String]): (Long, Array[Long]) = {
+    val toks = bm25Words(text)
+    val tfs = new Array[Long](terms.length)
+    toks.foreach { tk =>
+      var i = 0
+      while (i < terms.length) { if (terms(i) == tk) tfs(i) += 1L; i += 1 }
+    }
+    (toks.length.toLong, tfs)
+  }
+
+  /** The exact-rational BM25 score of one document: the closed form of
+    * [[taBm25]] per term index in `idxs`, folded left to right.
+    */
+  private[graft] def bm25Score(nd: Long, tt: Long, dl: Long,
+      tfs: Array[Long], dfs: Array[Long], idxs: Array[Int]): Double = {
+    var score = 0.0
+    var j = 0
+    while (j < idxs.length) {
+      val i = idxs(j)
+      val tf = tfs(i)
+      val num = (2L * nd - 2L * dfs(i) + 1L) * 44L * tf * tt
+      val den = (2L * dfs(i) + 1L) *
+        (20L * tf * tt + 6L * tt + 18L * dl * nd)
+      score += num.toDouble / den.toDouble
+      j += 1
+    }
+    score
+  }
+
   /** [[taBm25]] over an arbitrary (doc_id, text, …) frame. */
   def bm25Of(docsIn: DataFrame, query: String, n: Int): DataFrame = {
     val s = docsIn.sparkSession
     import s.implicits._
-    val terms: Array[String] =
-      query.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty).distinct
+    val terms = bm25Terms(query)
     val k = terms.length
     require(k > 0, "bm25 needs at least one query term")
     val base = docsIn.select($"doc_id", $"text").as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val toks = text.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
-          val tfs = new Array[Long](k)
-          toks.foreach { tk =>
-            var i = 0
-            while (i < k) { if (terms(i) == tk) tfs(i) += 1L; i += 1 }
-          }
-          (id, toks.length.toLong, tfs.toSeq)
-        }
+      .map { case (id, text) =>
+        val (dl, tfs) = bm25Tf(text, terms)
+        (id, dl, tfs)
       }
       .toDF("doc_id", "dl", "tfs")
       .filter($"dl" > 0L)
@@ -815,20 +868,9 @@ object TextAnalysis {
     val nd = statsRow.getLong(0)
     val tt = statsRow.getLong(1)
     val dfs = statsRow.getSeq[Long](2).toArray
-    base.as[(Long, Long, Seq[Long])]
-      .map { case (id, dl, tfs) =>
-        var score = 0.0
-        var i = 0
-        while (i < k) {
-          val tf = tfs(i)
-          val num = (2L * nd - 2L * dfs(i) + 1L) * 44L * tf * tt
-          val den = (2L * dfs(i) + 1L) *
-            (20L * tf * tt + 6L * tt + 18L * dl * nd)
-          score += num.toDouble / den.toDouble
-          i += 1
-        }
-        (id, dl, score)
-      }
+    val all = Array.range(0, k)
+    base.as[(Long, Long, Array[Long])]
+      .map { case (id, dl, tfs) => (id, dl, bm25Score(nd, tt, dl, tfs, dfs, all)) }
       .toDF("doc_id", "n_tokens", "score")
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(n)
@@ -864,22 +906,15 @@ object TextAnalysis {
     val s = docsIn.sparkSession
     import s.implicits._
     val qTerms: Seq[(String, Array[String])] = queries.map { case (qid, q) =>
-      qid -> q.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty).distinct
+      qid -> bm25Terms(q)
     }
     val union: Array[String] = qTerms.flatMap(_._2).distinct.toArray
     val nu = union.length
     require(nu > 0, "bm25 multi needs at least one term")
     val base = docsIn.select($"doc_id", $"text").as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val toks = text.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
-          val tfs = new Array[Long](nu)
-          toks.foreach { tk =>
-            var i = 0
-            while (i < nu) { if (union(i) == tk) tfs(i) += 1L; i += 1 }
-          }
-          (id, toks.length.toLong, tfs.toSeq)
-        }
+      .map { case (id, text) =>
+        val (dl, tfs) = bm25Tf(text, union)
+        (id, dl, tfs)
       }
       .toDF("doc_id", "dl", "tfs")
       .filter($"dl" > 0L)
@@ -895,21 +930,10 @@ object TextAnalysis {
     val unionIdx = union.zipWithIndex.toMap
     val plans: Seq[(String, Array[Int])] =
       qTerms.map { case (qid, ts) => qid -> ts.map(unionIdx) }
-    val scored = base.as[(Long, Long, Seq[Long])]
+    val scored = base.as[(Long, Long, Array[Long])]
       .flatMap { case (id, dl, tfs) =>
         plans.iterator.map { case (qid, idxs) =>
-          var score = 0.0
-          var j = 0
-          while (j < idxs.length) {
-            val i = idxs(j)
-            val tf = tfs(i)
-            val num = (2L * nd - 2L * dfs(i) + 1L) * 44L * tf * tt
-            val den = (2L * dfs(i) + 1L) *
-              (20L * tf * tt + 6L * tt + 18L * dl * nd)
-            score += num.toDouble / den.toDouble
-            j += 1
-          }
-          (qid, id, score)
+          (qid, id, bm25Score(nd, tt, dl, tfs, dfs, idxs))
         }
       }
       .toDF("query_id", "doc_id", "score")
@@ -1195,14 +1219,12 @@ object TextAnalysis {
         val ms = bc.value
         val memo = scala.collection.mutable.HashMap.empty[String, Array[String]]
         it.map { case (id, text) =>
-          // null text ≡ no words (r11 null-kernel convention; the
-          // replay oracle's LEFT JOIN emits the same (0, 0, '', 0) row)
-          val words =
-            if (text == null) Array.empty[String]
-            else text.trim.split("\\s+").filter(_.nonEmpty)
+          // null text ≡ no words (the replay oracle's LEFT JOIN emits
+          // the same (0, 0, '', 0) row)
+          val ws = words(text)
           val freq = scala.collection.mutable.HashMap.empty[String, Long]
           var nSyms = 0L
-          words.foreach { w =>
+          ws.foreach { w =>
             val syms =
               if (memo.contains(w)) memo(w)
               else {
@@ -1216,7 +1238,7 @@ object TextAnalysis {
           val (topSym, topFreq) =
             if (freq.isEmpty) ("", 0L)
             else freq.toSeq.minBy { case (sy, c) => (-c, sy) }
-          (id, words.length.toLong, nSyms, topSym, topFreq)
+          (id, ws.length.toLong, nSyms, topSym, topFreq)
         }
       }
       .toDF("doc_id", "n_words", "n_syms", "top_sym", "top_freq")
@@ -1538,38 +1560,35 @@ object TextAnalysis {
   def taLmSurprisal(s: SparkSession, dir: String): DataFrame =
     lmSurprisalOf(t(s, dir, "documents"))
 
-  /** Per-doc bigram stream of a (doc_id, text) frame — a compiled
-    * flatMap kernel (no window, no shuffle). Shared by the one-shot
-    * model builder and the incremental model twin's fold.
+  /** Per-doc word n-gram stream (doc_id, cols…) of a (doc_id, text)
+    * frame, n = `cols.length` consecutive [[words]] per row, none for a
+    * document under n words or with null text — a compiled flatMap
+    * kernel (no window, no shuffle). The bigram (prev, w), trigram
+    * (a, b, c) and 4-gram (a, b, c, d) streams of the LM family, shared
+    * by the one-shot model builders and the incremental twins' folds.
     *
     * r17 optimization (guide §1.2 step 2 — per-task work): the
     * previous form built the stream with nested `zip_with`/`slice`
     * higher-order functions; Catalyst HOF lambdas are evaluated
-    * INTERPRETED per element (the repo's own r1 perf lesson, applied
-    * everywhere else but here), and each zip level allocated an
-    * intermediate struct array per document. The compiled kernel emits
-    * the same (doc_id, prev, w) rows straight off the token array:
-    * measured 2.2–2.8× on the (tri/quad)-gram trunks at sf0.1
-    * (tocc 1.16→0.53 s, qocc 1.58→0.56 s, min-of-4 isolated) with
-    * byte-identical token semantics — `text.trim.split("\\s+")` with
-    * empties filtered is exactly `tokens()`'s whitespace contract (the
-    * established [[graft.ops.Dedup.shingleSetsOf]] kernel idiom, whose
-    * oracle parity has been pinned since r1).
+    * INTERPRETED per element, and each zip level allocated an
+    * intermediate struct array per document. Emitting the rows straight
+    * off the token array measured 2.2–2.8× on the (tri/quad)-gram trunks
+    * at sf0.1 (tocc 1.16→0.53 s, qocc 1.58→0.56 s, min-of-4 isolated),
+    * with the token semantics of `tokens()`.
     */
-  private[graft] def lmBigramsOf(docs: DataFrame): DataFrame = {
+  private[graft] def lmNgramsOf(docs: DataFrame, cols: String*): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val n = cols.length
+    val schema = StructType(StructField("doc_id", LongType, nullable = false) +:
+      cols.map(StructField(_, StringType)))
     docs.select($"doc_id", $"text").as[(Long, String)]
       .flatMap { case (id, text) =>
-        // null text ⇒ no rows (the old zip_with-on-NULL drop semantics)
-        if (text == null) Iterator.empty
-        else {
-          val ws = text.trim.split("\\s+").filter(_.nonEmpty)
-          if (ws.length < 2) Iterator.empty
-          else (0 to ws.length - 2).iterator.map(i => (id, ws(i), ws(i + 1)))
-        }
-      }
-      .toDF("doc_id", "prev", "w")
+        val ws = words(text)
+        (0 to ws.length - n).iterator.map(i =>
+          org.apache.spark.sql.Row.fromSeq(id +: ws.slice(i, i + n).toSeq))
+      }(org.apache.spark.sql.Encoders.row(schema))
   }
 
   /** Per-doc token stream (doc_id, w) — the unigram half of the model. */
@@ -1594,7 +1613,7 @@ object TextAnalysis {
     val s = scored.sparkSession
     import s.implicits._
     val vdf = uni.agg(count(lit(1)).as("v"))
-    lmBigramsOf(scored)
+    lmNgramsOf(scored, "prev", "w")
       .join(bcnt, Seq("prev", "w"))
       .join(uni.select($"w".as("prev"), $"c_w".as("c_prev")), Seq("prev"))
       .crossJoin(broadcast(vdf))
@@ -1617,7 +1636,7 @@ object TextAnalysis {
     val s = docs.sparkSession
     import s.implicits._
     val uni = lmTokensOf(docs).groupBy($"w").agg(count(lit(1)).as("c_w"))
-    val bcnt = lmBigramsOf(docs)
+    val bcnt = lmNgramsOf(docs, "prev", "w")
       .groupBy($"prev", $"w").agg(count(lit(1)).as("c_bw"))
     lmScoreWith(docs, uni, bcnt)
   }
@@ -1635,27 +1654,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_bigrams").as("n_bigrams"))
       .orderBy("bpb_band")
-  }
-
-  /** Per-doc trigram stream (doc_id, a, b, c) — the [[lmBigramsOf]]
-    * compiled kernel one order up: still no window, no per-doc shuffle
-    * (r17: rewritten off the interpreted zip_with chain, measured
-    * 1.16→0.53 s isolated at sf0.1; see [[lmBigramsOf]]).
-    */
-  private[graft] def lmTrigramsOf(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select($"doc_id", $"text").as[(Long, String)]
-      .flatMap { case (id, text) =>
-        if (text == null) Iterator.empty
-        else {
-          val ws = text.trim.split("\\s+").filter(_.nonEmpty)
-          if (ws.length < 3) Iterator.empty
-          else (0 to ws.length - 3).iterator.map(i =>
-            (id, ws(i), ws(i + 1), ws(i + 2)))
-        }
-      }
-      .toDF("doc_id", "a", "b", "c")
   }
 
   /** ta_lm_trigram: Katz-STYLE trigram-backoff LM scoring (VERDICT r15
@@ -1691,7 +1689,7 @@ object TextAnalysis {
     val s = docs.sparkSession
     import s.implicits._
     val uni = lmTokensOf(docs).groupBy($"w").agg(count(lit(1)).as("c_w"))
-    val bcnt = lmBigramsOf(docs)
+    val bcnt = lmNgramsOf(docs, "prev", "w")
       .groupBy($"prev", $"w").agg(count(lit(1)).as("c_bw"))
     // tcnt = None: the tail derives the trigram table from its own
     // occurrence aggregate, reusing that shuffle instead of extracting
@@ -1717,7 +1715,7 @@ object TextAnalysis {
       bcnt: DataFrame, tcntOpt: Option[DataFrame]): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val tocc = lmTrigramsOf(docs)
+    val tocc = lmNgramsOf(docs, "a", "b", "c")
       .groupBy($"doc_id", $"a", $"b", $"c").agg(count(lit(1)).as("n_occ"))
     // self-trained (None): the model's trigram table IS the scored
     // frame's, re-aggregated from the same occurrence shuffle
@@ -1794,28 +1792,6 @@ object TextAnalysis {
         ($"total_bits".cast("double") / $"n_trigrams".cast("double"))
           .as("bits_per_trigram"))
       .orderBy("source")
-  }
-
-  /** Per-doc 4-gram stream (doc_id, a, b, c, d) — the [[lmBigramsOf]]
-    * compiled kernel two orders up: still no window, no per-doc
-    * shuffle (r17: rewritten off the interpreted three-level zip_with
-    * chain, measured 1.58→0.56 s isolated at sf0.1; see
-    * [[lmBigramsOf]]).
-    */
-  private[graft] def lmQuadgramsOf(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select($"doc_id", $"text").as[(Long, String)]
-      .flatMap { case (id, text) =>
-        if (text == null) Iterator.empty
-        else {
-          val ws = text.trim.split("\\s+").filter(_.nonEmpty)
-          if (ws.length < 4) Iterator.empty
-          else (0 to ws.length - 4).iterator.map(i =>
-            (id, ws(i), ws(i + 1), ws(i + 2), ws(i + 3)))
-        }
-      }
-      .toDF("doc_id", "a", "b", "c", "d")
   }
 
   /** ta_lm_kn4: Kneser–Ney-STYLE 4-gram LM scoring (VERDICT r16 ask
@@ -1898,7 +1874,7 @@ object TextAnalysis {
     // and the occurrence table is the one table here that grows with
     // the CORPUS, not the lexicon — at 100 TB block-manager-
     // materializing it is the riskier side of a tie, while the
-    // recomputed trunk is the compiled [[lmBigramsOf]]-family kernel.
+    // recomputed trunk is the compiled [[lmNgramsOf]] kernel.
     // Do not re-add the checkpoint without a clean-window `ScaleSmoke
     // sf10cd` comparison for ta_lm_kn4.
     //
@@ -1915,7 +1891,7 @@ object TextAnalysis {
     // (doc,abcd) occurrence aggregation + the abcd re-shuffle).
     // Isolated min-of-4 at sf0.1: 2.852 → 2.696 s; ×100 sf10cd
     // numbers in OPTIMIZATION_r18.md.
-    val qstream = lmQuadgramsOf(docs)
+    val qstream = lmNgramsOf(docs, "a", "b", "c", "d")
     val qocc = qstream
       .groupBy($"doc_id", $"a", $"b", $"c", $"d")
       .agg(count(lit(1)).as("n_occ"))
@@ -2424,14 +2400,12 @@ $chainSql      curve AS ($budgetSelects)
     * the kernel.
     */
   private def bm25TermValues: String =
-    Bm25Query.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty).distinct
-      .zipWithIndex.map { case (t, i) => s"(${i + 1}, '$t')" }.mkString(", ")
+    bm25Terms(Bm25Query).zipWithIndex.map { case (t, i) => s"(${i + 1}, '$t')" }.mkString(", ")
 
   /** (qid, fold-order i, term) VALUES for the multi-query oracle. */
   private def bm25MultiTermValues: String =
     Bm25MultiQueries.flatMap { case (qid, q) =>
-      q.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty).distinct
-        .zipWithIndex.map { case (t, i) => s"('$qid', ${i + 1}, '$t')" }
+      bm25Terms(q).zipWithIndex.map { case (t, i) => s"('$qid', ${i + 1}, '$t')" }
     }.mkString(", ")
 
   /** Shared CTEs of the two LM-surprisal oracles: the add-one bigram

@@ -785,6 +785,20 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("chunk kernels chunk exactly as chunksOf, also around control chars") {
+    // chars ≤ U+0020 that are not \s stay inside a token in chunksOf;
+    // Java's trim would strip them at the ends of a document
+    val docs = Seq(
+      (1L, "\u0001a b c"), (2L, "a b c\u001f"), (3L, " \u0001 "),
+      (4L, "\u001fa\u0001 b\tc d"), (5L, "x y z w")).toDF("doc_id", "text")
+    val want = docs.select($"doc_id", Curation.chunksOf($"text", 2).as("cs"))
+      .select($"doc_id", size($"cs").cast("long"), concat_ws(" ", $"cs"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    val got = Curation.cleanChunks(docs, Set.empty, 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(3))).toSet
+    assert(got == want)
+  }
+
   test("dsir top-k: per-source argmax of the exact importance score, ties to low id") {
     val got = Curation.sampleDsirTopK(spark, sfDir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))

@@ -2782,6 +2782,22 @@ class SubstrSpansSpec extends SparkSpec {
       .toMap
     assert(enc(2L) == ((0L, 0L, "")),
       "null text encodes as the zero-word row (no NPE; oracle LEFT-JOIN parity)")
+    // the word kernels read null text as no words (TextAnalysis.words)
+    def idsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getLong(0)).toSet
+    assert(!idsOf(Dedup.shingledOf(docs, n = 1)).contains(2L))
+    val sets = Dedup.shingleSetsOf(docs).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(sets(2L).isEmpty, "null text has the empty shingle set")
+    assert(idsOf(Curation.distinctChunkHashes(docs)) == Set(1L))
+    assert(idsOf(Curation.cleanChunks(docs, Set.empty)) == Set(1L),
+      "null text has no chunks, so no clean row (the boilerplate path)")
+    assert(idsOf(Curation.intraDocDedupOf(docs)) == Set(1L))
+    val rep = TextAnalysis.repetitionOf(docs).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(5)))).toMap
+    assert(rep(2L) == ((0L, 0L)), "null text: no tokens, no sentences")
+    assert(idsOf(TextAnalysis.lmNgramsOf(docs, "w")) == Set(1L))
+    assert(idsOf(TextAnalysis.bm25Of(docs, "abcdefghixxxx", 10)) == Set(1L))
   }
 
   test("span length hist: bands are dyadic, mass reconciles with the per-doc audit") {

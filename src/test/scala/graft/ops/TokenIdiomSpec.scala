@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * drops exactly like the filter did. The idiom feeds tokenCount (the
   * whole pack family, sampling caps, curation rollups, the funnel) and
   * every explode(tokens(…)) stream, so a drift here would silently
-  * shift dozens of oracle hashes.
+  * shift dozens of oracle hashes. `TextAnalysis.words`, the same rule
+  * for the JVM kernels, is pinned to `tokens` here too.
   */
 class TokenIdiomSpec extends SparkSpec {
 
@@ -99,5 +100,49 @@ class TokenIdiomSpec extends SparkSpec {
       assert(now == legacy,
         s"lowerTokens drift on ${Option(r.getAs[String]("text")).map(_.replace("\n", "\\n"))}: now=$now legacy=$legacy")
     }
+  }
+
+  test("words(): the JVM form == tokens() element-wise; null reads as no words") {
+    import spark.implicits._
+    // chars ≤ U+0020 that are not \s: the \s+ split keeps them inside a
+    // token, while Java's trim would strip them at either end
+    val edges = cases ++ Seq(
+      "\u0001a b", "a b\u0001", "\u001fa\u001f", " \u0001 ", "\u001f",
+      "\u0001", "a\u0001 \u001fb", "\u0001\t\u001f")
+    val rows = edges.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text")
+      .select($"text", TextAnalysis.tokens($"text").as("tk"))
+      .collect()
+    assert(rows.length == edges.length)
+    rows.foreach { r =>
+      val text = r.getAs[String]("text")
+      val tk = Option(r.getAs[scala.collection.Seq[String]]("tk"))
+        .map(_.toList).getOrElse(Nil)
+      assert(TextAnalysis.words(text).toList == tk,
+        s"words drift on ${Option(text).map(_.map(_.toInt))}: " +
+          s"words=${TextAnalysis.words(text).toList} tokens=$tk")
+    }
+    assert(TextAnalysis.words(null).isEmpty)
+    assert(TextAnalysis.words("\u0001a b").toList == List("\u0001a", "b"))
+  }
+
+  test("the JVM whitespace split lives only in TextAnalysis.words") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"expected to run from the repo root; missing $root")
+    val lines = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .flatMap { f =>
+        Files.readAllLines(f, java.nio.charset.StandardCharsets.UTF_8).asScala
+          .zipWithIndex.map { case (l, i) => (s"$f:${i + 1}", l) }
+      }
+    val splits = lines.filter(_._2.contains(""".split("\\s+")"""))
+    assert(splits.isEmpty,
+      s"inline whitespace splits (use TextAnalysis.words): ${splits.map(_._1)}")
+    val patterns = lines.filter(_._2.contains("""compile("\\s+")"""))
+    assert(patterns.map(_._1.takeWhile(_ != ':')) ==
+      List("src/main/scala/graft/ops/TextAnalysis.scala"),
+      s"the \\s+ word pattern must be compiled once, for words: ${patterns.map(_._1)}")
   }
 }
