@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Sampling, TextAnalysis}
 import graft.streaming.{FileStreamingSource, ForeachBatchSink, StreamingPipeline, TriggerConfig, VersionedState}
@@ -44,6 +44,22 @@ object StreamingCuration {
       name: String, table: String = "data"): DataFrame =
     VersionedState.readTable(spark, stateDir, name, table).getOrElse(
       sys.error(s"no committed '$name' state under $stateDir"))
+
+  /** The additive fold most states share: `batchRows` (built only when
+    * the fold applies) alone on the first fold, else unioned with the
+    * prior version's `table` and re-aggregated by `keys` through
+    * `merges`. `single` writes the payload as one file.
+    */
+  private def foldAdditive(spark: SparkSession, stateDir: String,
+      name: String, batchId: Long, table: String = "data",
+      single: Boolean = false)(batchRows: => DataFrame)(keys: String*)(
+      merges: Column*): Unit = {
+    VersionedState.fold(spark, stateDir, name, batchId) { v =>
+      val merged = v.merged(batchRows, table)(
+        _.groupBy(keys.map(col): _*).agg(merges.head, merges.tail: _*))
+      v.write(if (single) merged.coalesce(1) else merged, table)
+    }
+  }
 
   /** Quality gate shared with the batch pipeline. */
   def qualityGate(df: DataFrame): DataFrame = {
@@ -436,16 +452,9 @@ object StreamingCuration {
   def mergeChunkFreq(spark: SparkSession, stateDir: String,
       newChunks: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "chunk_freq", batchId)) return
-    val batchCounts = newChunks.groupBy($"h").agg(count(lit(1)).as("nd"))
-    val merged = VersionedState.readTable(spark, stateDir, "chunk_freq") match {
-      case None => batchCounts
-      case Some(prior) => prior.unionByName(batchCounts)
-        .groupBy($"h").agg(sum($"nd").as("nd"))
-    }
-    VersionedState.commit(spark, stateDir, "chunk_freq", batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/data")
-    }
+    foldAdditive(spark, stateDir, "chunk_freq", batchId)(
+      newChunks.groupBy($"h").agg(count(lit(1)).as("nd")))("h")(
+      sum($"nd").as("nd"))
   }
 
   /** Fold a batch into the persistent per-source profile state
@@ -462,25 +471,16 @@ object StreamingCuration {
   def mergeProfileState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "profile_texts", batchId)) return
     val src =
       if (batch.columns.contains("source")) col("source") else lit("stream")
-    val rows = batch
+    foldAdditive(spark, stateDir, "profile_texts", batchId)(batch
       .select(src.as("source"), md5(col("text")).as("m"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"))
       .groupBy($"source", $"m")
       .agg(count(lit(1)).as("n"), sum($"n_tokens").as("tokens"),
-        sum(when($"n_tokens" < 5L, 1L).otherwise(0L)).as("short"))
-    val merged = VersionedState.readTable(spark, stateDir, "profile_texts") match {
-      case None => rows
-      case Some(prior) => prior.unionByName(rows)
-        .groupBy($"source", $"m")
-        .agg(sum($"n").as("n"), sum($"tokens").as("tokens"),
-          sum($"short").as("short"))
-    }
-    VersionedState.commit(spark, stateDir, "profile_texts", batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/data")
-    }
+        sum(when($"n_tokens" < 5L, 1L).otherwise(0L)).as("short")))(
+      "source", "m")(
+      sum($"n").as("n"), sum($"tokens").as("tokens"), sum($"short").as("short"))
   }
 
   /** The accumulated profile, shaped exactly like
@@ -537,36 +537,26 @@ object StreamingCuration {
       budget: Long = graft.ops.Curation.MixBudget,
       batchId: Long = -1L, stateName: String = "mix"): DataFrame = {
     import spark.implicits._
-    val selOf = (df: DataFrame) => df.drop("__batch_id")
-    if (VersionedState.alreadyFolded(spark, stateDir, stateName, batchId))
-      return selOf(stateTable(spark, stateDir, stateName, "selected")
-        .filter($"__batch_id" === batchId))
-    val prior: Map[String, Long] =
-      VersionedState.readTable(spark, stateDir, stateName, "runs") match {
-        case None => Map.empty
-        case Some(r) => r.collect()
-          .map(x => x.getString(0) -> x.getLong(1)).toMap
-      }
-    val sel = graft.ops.Curation
-      .mixBudgetOf(batch, budget, initialRuns = prior)
-      .withColumn("__batch_id", lit(batchId))
-      .gatedCheckpoint()
-    val allSel = VersionedState.readTable(spark, stateDir, stateName, "selected") match {
-      case None => sel
-      case Some(p) => p.unionByName(sel)
-    }
-    val batchTotals = batch
-      .groupBy($"source")
-      .agg(sum(graft.ops.TextAnalysis.tokenCount($"text")).as("t"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val runs = (prior.keySet ++ batchTotals.keySet).toSeq.sorted
-      .map(src => (src, prior.getOrElse(src, 0L) + batchTotals.getOrElse(src, 0L)))
-    VersionedState.commit(spark, stateDir, stateName, batchId) { dir =>
-      allSel.write.mode("overwrite").parquet(s"$dir/selected")
-      runs.toDF("source", "run").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/runs")
-    }
-    selOf(sel)
+    val selected = VersionedState.fold(spark, stateDir, stateName, batchId) { v =>
+      val prior: Map[String, Long] = v.priorTable("runs")
+        .fold(Map.empty[String, Long])(
+          _.collect().map(x => x.getString(0) -> x.getLong(1)).toMap)
+      val sel = graft.ops.Curation
+        .mixBudgetOf(batch, budget, initialRuns = prior)
+        .withColumn("__batch_id", lit(batchId))
+        .gatedCheckpoint()
+      val batchTotals = batch
+        .groupBy($"source")
+        .agg(sum(graft.ops.TextAnalysis.tokenCount($"text")).as("t"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val runs = (prior.keySet ++ batchTotals.keySet).toSeq.sorted
+        .map(src => (src, prior.getOrElse(src, 0L) + batchTotals.getOrElse(src, 0L)))
+      v.write(v.priorTable("selected").fold(sel)(_.unionByName(sel)), "selected")
+      v.write(runs.toDF("source", "run").coalesce(1), "runs")
+      sel
+    }.getOrElse(stateTable(spark, stateDir, stateName, "selected")
+      .filter($"__batch_id" === batchId))
+    selected.drop("__batch_id")
   }
 
   /** The accumulated mix selection, shaped exactly like the batch
@@ -621,17 +611,10 @@ object StreamingCuration {
   def mergeWindowFreq(spark: SparkSession, stateDir: String, batch: DataFrame,
       k: Int = graft.ops.Curation.SubstrWindow, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "window_freq", batchId)) return
-    val batchCounts = graft.ops.Curation.windowHashes(batch, k)
-      .groupBy($"h").agg(countDistinct($"doc_id").as("nd"))
-    val merged = VersionedState.readTable(spark, stateDir, "window_freq") match {
-      case None => batchCounts
-      case Some(prior) => prior.unionByName(batchCounts)
-        .groupBy($"h").agg(sum($"nd").as("nd"))
-    }
-    VersionedState.commit(spark, stateDir, "window_freq", batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/data")
-    }
+    foldAdditive(spark, stateDir, "window_freq", batchId)(
+      graft.ops.Curation.windowHashes(batch, k)
+        .groupBy($"h").agg(countDistinct($"doc_id").as("nd")))("h")(
+      sum($"nd").as("nd"))
   }
 
   /** Strip repeated spans from documents against the ACCUMULATED
@@ -664,18 +647,14 @@ object StreamingCuration {
     // register max is idempotent — a replay couldn't corrupt it — but
     // the watermark skip still saves the fold, and the versioned
     // commit (vs the former overwrite-in-place) survives a crash
-    if (VersionedState.alreadyFolded(spark, stateDir, "hll_regs", batchId)) return
-    val agg = new graft.functions.HllAggregator()
-    val hll = udaf(agg)
-    val batchRegs = batch.select(xxhash64(col("text")).as("h"))
-      .agg(hll($"h")).head().getAs[Array[Byte]](0)
-    val merged = VersionedState.readTable(spark, stateDir, "hll_regs") match {
-      case None => batchRegs
-      case Some(prior) => agg.merge(prior.head().getAs[Array[Byte]](0), batchRegs)
-    }
-    VersionedState.commit(spark, stateDir, "hll_regs", batchId) { dir =>
-      Seq(merged).toDF("regs").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/data")
+    VersionedState.fold(spark, stateDir, "hll_regs", batchId) { v =>
+      val agg = new graft.functions.HllAggregator()
+      val hll = udaf(agg)
+      val batchRegs = batch.select(xxhash64(col("text")).as("h"))
+        .agg(hll($"h")).head().getAs[Array[Byte]](0)
+      val merged = v.priorTable().fold(batchRegs)(prior =>
+        agg.merge(prior.head().getAs[Array[Byte]](0), batchRegs))
+      v.write(Seq(merged).toDF("regs").coalesce(1))
     }
   }
 
@@ -698,33 +677,34 @@ object StreamingCuration {
     // count-based (MG counters + token total add) → watermark-gated;
     // the sketch and total also commit in ONE version now, so a crash
     // can no longer leave the pair torn (formerly two separate writes)
-    if (VersionedState.alreadyFolded(spark, stateDir, "hh", batchId)) return
-    val agg = new graft.functions.MisraGriesAggregator(TextAnalysis.HhSketchK)
-    val mg = udaf(agg)
-    val row = batch
-      .select(explode(TextAnalysis.tokens(lower(col("text")))).as("token"))
-      .agg(count(lit(1)), mg(col("token")))
-      .head()
-    val batchN = row.getLong(0)
-    val batchSketch = row.getMap[String, Long](1).toMap
-    val (priorN, priorSketch) = readHeavyHitterState(spark, stateDir)
-    VersionedState.commit(spark, stateDir, "hh", batchId) { dir =>
-      agg.merge(priorSketch, batchSketch).toSeq.toDF("token", "est")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/sketch")
-      Seq(priorN + batchN).toDF("n")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/n")
+    VersionedState.fold(spark, stateDir, "hh", batchId) { v =>
+      val agg = new graft.functions.MisraGriesAggregator(TextAnalysis.HhSketchK)
+      val mg = udaf(agg)
+      val row = batch
+        .select(explode(TextAnalysis.tokens(lower(col("text")))).as("token"))
+        .agg(count(lit(1)), mg(col("token")))
+        .head()
+      val batchN = row.getLong(0)
+      val batchSketch = row.getMap[String, Long](1).toMap
+      val (priorN, priorSketch) = heavyHitterIn(spark, v.prior)
+      v.write(agg.merge(priorSketch, batchSketch).toSeq.toDF("token", "est")
+        .coalesce(1), "sketch")
+      v.write(Seq(priorN + batchN).toDF("n").coalesce(1), "n")
     }
   }
 
   /** (total tokens seen, sketch) — bounded: 1 + <= k rows. */
   def readHeavyHitterState(spark: SparkSession, stateDir: String): (Long, Map[String, Long]) =
-    VersionedState.latest(stateDir, "hh") match {
-      case None => (0L, Map.empty)
-      case Some((_, dir)) => (
-        spark.read.parquet(s"$dir/n").head().getLong(0),
-        spark.read.parquet(s"$dir/sketch").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    }
+    heavyHitterIn(spark, VersionedState.latest(stateDir, "hh").map(_._2))
+
+  private def heavyHitterIn(spark: SparkSession,
+      dir: Option[String]): (Long, Map[String, Long]) = dir match {
+    case None => (0L, Map.empty)
+    case Some(d) => (
+      spark.read.parquet(s"$d/n").head().getLong(0),
+      spark.read.parquet(s"$d/sketch").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+  }
 
   /** The on-demand verify half over an accumulated corpus: exact
     * recount RESTRICTED to the <= k sketch candidates (a filtered scan
@@ -764,27 +744,28 @@ object StreamingCuration {
     import spark.implicits._
     // register SUMS add — NOT idempotent — so the watermark gate is
     // what keeps a replayed micro-batch from inflating every estimate
-    if (VersionedState.alreadyFolded(spark, stateDir, "cms_sketch", batchId)) return
-    val depth = graft.functions.CountMinAggregator.DefaultDepth
-    val width = graft.functions.CountMinAggregator.DefaultWidth
-    val agg = new graft.functions.CountMinAggregator(depth, width)
-    val cm = udaf(agg)
-    val cells = (0 until depth).map(r =>
-      conv(substring(md5(col("token")), 8 * r + 1, 3), 16, 10).cast("int"))
-    val batchSketch = batch
-      .select(explode(TextAnalysis.tokens(lower(col("text")))).as("token"))
-      .select(array(cells: _*).as("cells"))
-      .agg(cm(col("cells"))).head().getSeq[Long](0).toArray
-    val merged = agg.merge(readCmsState(spark, stateDir), batchSketch)
-    VersionedState.commit(spark, stateDir, "cms_sketch", batchId) { dir =>
-      Seq(merged).toDF("sketch").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/data")
+    VersionedState.fold(spark, stateDir, "cms_sketch", batchId) { v =>
+      val depth = graft.functions.CountMinAggregator.DefaultDepth
+      val width = graft.functions.CountMinAggregator.DefaultWidth
+      val agg = new graft.functions.CountMinAggregator(depth, width)
+      val cm = udaf(agg)
+      val cells = (0 until depth).map(r =>
+        conv(substring(md5(col("token")), 8 * r + 1, 3), 16, 10).cast("int"))
+      val batchSketch = batch
+        .select(explode(TextAnalysis.tokens(lower(col("text")))).as("token"))
+        .select(array(cells: _*).as("cells"))
+        .agg(cm(col("cells"))).head().getSeq[Long](0).toArray
+      val merged = agg.merge(cmsRegisters(v.priorTable()), batchSketch)
+      v.write(Seq(merged).toDF("sketch").coalesce(1))
     }
   }
 
   /** The accumulated register file (zeros when no state exists). */
   def readCmsState(spark: SparkSession, stateDir: String): Array[Long] =
-    VersionedState.readTable(spark, stateDir, "cms_sketch") match {
+    cmsRegisters(VersionedState.readTable(spark, stateDir, "cms_sketch"))
+
+  private def cmsRegisters(state: Option[DataFrame]): Array[Long] =
+    state match {
       case None =>
         new Array[Long](graft.functions.CountMinAggregator.DefaultDepth *
           graft.functions.CountMinAggregator.DefaultWidth)
@@ -813,16 +794,9 @@ object StreamingCuration {
   def mergeQuantileState(spark: SparkSession, stateDir: String,
       values: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "quantile_buckets", batchId)) return
-    val batchB = graft.queries.QualityQueries.sketchBuckets(values)
-    val merged = VersionedState.readTable(spark, stateDir, "quantile_buckets") match {
-      case None => batchB
-      case Some(prior) => prior.unionByName(batchB)
-        .groupBy($"lo", $"width").agg(sum($"cnt").as("cnt"))
-    }
-    VersionedState.commit(spark, stateDir, "quantile_buckets", batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/data")
-    }
+    foldAdditive(spark, stateDir, "quantile_buckets", batchId)(
+      graft.queries.QualityQueries.sketchBuckets(values))("lo", "width")(
+      sum($"cnt").as("cnt"))
   }
 
   /** Quantile estimates from the accumulated sketch state — the same
@@ -842,17 +816,9 @@ object StreamingCuration {
   def mergeKeyCountState(spark: SparkSession, stateDir: String,
       batch: DataFrame, keyCol: String, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    val name = s"key_counts_$keyCol"
-    if (VersionedState.alreadyFolded(spark, stateDir, name, batchId)) return
-    val bc = batch.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("cnt"))
-    val merged = VersionedState.readTable(spark, stateDir, name) match {
-      case None => bc
-      case Some(prior) => prior.unionByName(bc)
-        .groupBy($"k").agg(sum($"cnt").as("cnt"))
-    }
-    VersionedState.commit(spark, stateDir, name, batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/data")
-    }
+    foldAdditive(spark, stateDir, s"key_counts_$keyCol", batchId)(
+      batch.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("cnt")))("k")(
+      sum($"cnt").as("cnt"))
   }
 
   /** Fold a batch's whitespace-token frequencies into persistent
@@ -910,36 +876,20 @@ object StreamingCuration {
     * against yesterday's frozen model is exactly the production
     * perplexity-filter deployment. Two VersionedState commits
     * (`lm_uni`, `lm_big`) under the same batchId: a crash between them
-    * replays into the per-table alreadyFolded gate, so each folds
+    * replays into the per-table replay gate, so each folds
     * exactly once.
     */
   def mergeLmModelState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (!VersionedState.alreadyFolded(spark, stateDir, "lm_uni", batchId)) {
-      val bc = graft.ops.TextAnalysis.lmTokensOf(batch)
-        .groupBy($"w").agg(count(lit(1)).as("c_w"))
-      val merged = VersionedState.readTable(spark, stateDir, "lm_uni") match {
-        case None => bc
-        case Some(prior) => prior.unionByName(bc)
-          .groupBy($"w").agg(sum($"c_w").as("c_w"))
-      }
-      VersionedState.commit(spark, stateDir, "lm_uni", batchId) { dir =>
-        merged.write.mode("overwrite").parquet(s"$dir/data")
-      }
-    }
-    if (!VersionedState.alreadyFolded(spark, stateDir, "lm_big", batchId)) {
-      val bc = graft.ops.TextAnalysis.lmNgramsOf(batch, "prev", "w")
-        .groupBy($"prev", $"w").agg(count(lit(1)).as("c_bw"))
-      val merged = VersionedState.readTable(spark, stateDir, "lm_big") match {
-        case None => bc
-        case Some(prior) => prior.unionByName(bc)
-          .groupBy($"prev", $"w").agg(sum($"c_bw").as("c_bw"))
-      }
-      VersionedState.commit(spark, stateDir, "lm_big", batchId) { dir =>
-        merged.write.mode("overwrite").parquet(s"$dir/data")
-      }
-    }
+    foldAdditive(spark, stateDir, "lm_uni", batchId)(
+      graft.ops.TextAnalysis.lmTokensOf(batch)
+        .groupBy($"w").agg(count(lit(1)).as("c_w")))("w")(
+      sum($"c_w").as("c_w"))
+    foldAdditive(spark, stateDir, "lm_big", batchId)(
+      graft.ops.TextAnalysis.lmNgramsOf(batch, "prev", "w")
+        .groupBy($"prev", $"w").agg(count(lit(1)).as("c_bw")))("prev", "w")(
+      sum($"c_bw").as("c_bw"))
   }
 
   /** Score a (doc_id, text) frame against the ACCUMULATED bigram model
@@ -965,24 +915,16 @@ object StreamingCuration {
     * the unigram+bigram halves to [[mergeLmModelState]] (one combined
     * state serves BOTH the bigram scorer and the trigram-backoff
     * scorer — they are the same counts) and commits `lm_tri` under the
-    * same batchId with its own alreadyFolded gate.
+    * same batchId with its own replay gate.
     */
   def mergeLmTrigramModelState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
     mergeLmModelState(spark, stateDir, batch, batchId)
-    if (!VersionedState.alreadyFolded(spark, stateDir, "lm_tri", batchId)) {
-      val bc = graft.ops.TextAnalysis.lmNgramsOf(batch, "a", "b", "c")
-        .groupBy($"a", $"b", $"c").agg(count(lit(1)).as("c_t"))
-      val merged = VersionedState.readTable(spark, stateDir, "lm_tri") match {
-        case None => bc
-        case Some(prior) => prior.unionByName(bc)
-          .groupBy($"a", $"b", $"c").agg(sum($"c_t").as("c_t"))
-      }
-      VersionedState.commit(spark, stateDir, "lm_tri", batchId) { dir =>
-        merged.write.mode("overwrite").parquet(s"$dir/data")
-      }
-    }
+    foldAdditive(spark, stateDir, "lm_tri", batchId)(
+      graft.ops.TextAnalysis.lmNgramsOf(batch, "a", "b", "c")
+        .groupBy($"a", $"b", $"c").agg(count(lit(1)).as("c_t")))(
+      "a", "b", "c")(sum($"c_t").as("c_t"))
   }
 
   /** Score a (doc_id, text) frame against the ACCUMULATED trigram
@@ -1020,18 +962,10 @@ object StreamingCuration {
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
     mergeLmTrigramModelState(spark, stateDir, batch, batchId)
-    if (!VersionedState.alreadyFolded(spark, stateDir, "lm_quad", batchId)) {
-      val bc = graft.ops.TextAnalysis.lmNgramsOf(batch, "a", "b", "c", "d")
-        .groupBy($"a", $"b", $"c", $"d").agg(count(lit(1)).as("c4"))
-      val merged = VersionedState.readTable(spark, stateDir, "lm_quad") match {
-        case None => bc
-        case Some(prior) => prior.unionByName(bc)
-          .groupBy($"a", $"b", $"c", $"d").agg(sum($"c4").as("c4"))
-      }
-      VersionedState.commit(spark, stateDir, "lm_quad", batchId) { dir =>
-        merged.write.mode("overwrite").parquet(s"$dir/data")
-      }
-    }
+    foldAdditive(spark, stateDir, "lm_quad", batchId)(
+      graft.ops.TextAnalysis.lmNgramsOf(batch, "a", "b", "c", "d")
+        .groupBy($"a", $"b", $"c", $"d").agg(count(lit(1)).as("c4")))(
+      "a", "b", "c", "d")(sum($"c4").as("c4"))
   }
 
   /** Score a (doc_id, text) frame against the ACCUMULATED 4-gram
@@ -1066,7 +1000,7 @@ object StreamingCuration {
     * (h, doc_id) rows per key no matter how many batches fold, so
     * fold cost is batch-mass + (cap × keys), never corpus mass.
     * Two tables per named draw, committed under the same batchId with
-    * per-table alreadyFolded gates (the lm-model crash contract):
+    * per-table replay gates (the lm-model crash contract):
     * `min_k_draw_<name>(k, h, doc_id)` — the surviving buffers — and
     * `min_k_counts_<name>(k, n_docs)` — the additive per-key totals
     * the cap-summary reader reports alongside the draw.
@@ -1089,37 +1023,23 @@ object StreamingCuration {
       .select(col("k").cast("string").as("k"),
         md5(col("doc_id").cast("string")).as("h"),
         col("doc_id").cast("long").as("doc_id"))
-    if (!VersionedState.alreadyFolded(spark, stateDir, drawT, batchId)) {
-      val pool = VersionedState.readTable(spark, stateDir, drawT) match {
-        case None => batchRows
-        case Some(prior) => prior.unionByName(batchRows)
-      }
+    VersionedState.fold(spark, stateDir, drawT, batchId) { v =>
+      val pool = v.priorTable().fold(batchRows)(_.unionByName(batchRows))
       // re-select min-k over prior-buffer ∪ batch: ≤ cap + batch rows
       // per key reach the aggregation, and ≤ cap survive it
-      val merged = pool.as[(String, String, Long)]
+      v.write(pool.as[(String, String, Long)]
         .groupByKey(_._1)
         .mapValues(t => (t._2, t._3))
         .agg(new graft.functions.MinKPairsAggregator(cap)
           .toColumn.name("top"))
         .toDF("k", "top")
         .select($"k", explode($"top").as("p"))
-        .select($"k", $"p._1".as("h"), $"p._2".as("doc_id"))
-      VersionedState.commit(spark, stateDir, drawT, batchId) { dir =>
-        merged.write.mode("overwrite").parquet(s"$dir/data")
-      }
+        .select($"k", $"p._1".as("h"), $"p._2".as("doc_id")))
     }
-    if (!VersionedState.alreadyFolded(spark, stateDir, cntT, batchId)) {
-      val bc = keyed.select(col("k").cast("string").as("k"))
-        .groupBy($"k").agg(count(lit(1)).as("n_docs"))
-      val merged = VersionedState.readTable(spark, stateDir, cntT) match {
-        case None => bc
-        case Some(prior) => prior.unionByName(bc)
-          .groupBy($"k").agg(sum($"n_docs").as("n_docs"))
-      }
-      VersionedState.commit(spark, stateDir, cntT, batchId) { dir =>
-        merged.write.mode("overwrite").parquet(s"$dir/data")
-      }
-    }
+    foldAdditive(spark, stateDir, cntT, batchId)(
+      keyed.select(col("k").cast("string").as("k"))
+        .groupBy($"k").agg(count(lit(1)).as("n_docs")))("k")(
+      sum($"n_docs").as("n_docs"))
   }
 
   /** Fold a batch of raw documents into the per-SOURCE cap draw —
@@ -1222,10 +1142,8 @@ object StreamingCuration {
     */
   def rotateDailyVolumeEpoch(spark: SparkSession, stateDir: String): Unit = {
     import spark.implicits._
-    VersionedState.commit(spark, stateDir, "key_counts_day", -1L) { dir =>
-      Seq.empty[(java.sql.Date, Long)].toDF("k", "cnt")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
-    }
+    VersionedState.fold(spark, stateDir, "key_counts_day", -1L)(
+      _.write(Seq.empty[(java.sql.Date, Long)].toDF("k", "cnt").coalesce(1)))
   }
 
   /** Fold a batch's documents into the persistent ExactSubstr state —
@@ -1263,27 +1181,25 @@ object StreamingCuration {
   def mergeSubstrSpanState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    val name = "substr_spans"
-    if (VersionedState.alreadyFolded(spark, stateDir, name, batchId)) return
-    val docs = batch.select($"doc_id", $"text")
-    // the gram projection materializes exactly ONCE — into the index
-    // append; the audit's gram count is a pure function of n_chars
-    // (grams per doc = max(n_chars − L + 1, 0)), so it rides the cheap
-    // checkpointed lens table instead of a second gram pass (r11
-    // review finding #6)
-    val lens = docs.select($"doc_id",
-      length($"text").cast("long").as("n_chars")).gatedCheckpoint()
-    graft.ops.Curation.substrGramsOf(docs)
-      .write.mode("append").parquet(s"$stateDir/substr_gram_index")
-    lens.write.mode("append").parquet(s"$stateDir/substr_doc_lens")
-    VersionedState.commit(spark, stateDir, name, batchId) { dir =>
+    VersionedState.fold(spark, stateDir, "substr_spans", batchId) { v =>
+      val docs = batch.select($"doc_id", $"text")
+      // the gram projection materializes exactly ONCE — into the index
+      // append; the audit's gram count is a pure function of n_chars
+      // (grams per doc = max(n_chars − L + 1, 0)), so it rides the cheap
+      // checkpointed lens table instead of a second gram pass (r11
+      // review finding #6)
+      val lens = docs.select($"doc_id",
+        length($"text").cast("long").as("n_chars")).gatedCheckpoint()
+      graft.ops.Curation.substrGramsOf(docs)
+        .write.mode("append").parquet(s"$stateDir/substr_gram_index")
+      lens.write.mode("append").parquet(s"$stateDir/substr_doc_lens")
       // audit payload: what this fold contributed (the appends above
       // become durable exactly when this meta row commits)
-      lens.agg(count(lit(1)).as("n_docs"),
+      v.write(lens.agg(count(lit(1)).as("n_docs"),
           coalesce(sum(greatest(
             $"n_chars" - (graft.ops.Curation.SubstrSpanL - 1), lit(0L))),
             lit(0L)).as("n_grams"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
+        .coalesce(1))
     }
   }
 
@@ -1323,9 +1239,8 @@ object StreamingCuration {
         // materialize before the commit: the new eval_shingles commit
         // below deletes the version dir this plan reads
         val snap = cur.localCheckpoint(true)
-        VersionedState.commit(spark, stateDir, "eval_shingles_prev", -1L) {
-          dir => snap.write.mode("overwrite").parquet(s"$dir/data")
-        }
+        VersionedState.fold(spark, stateDir, "eval_shingles_prev", -1L)(
+          _.write(snap))
       }
     // a rotation starts a NEW audit EPOCH: hit rows folded under the
     // outgoing pair must not mix with the incoming pair's, and the
@@ -1383,26 +1298,23 @@ object StreamingCuration {
       batch: DataFrame, batchId: Long = -1L): Unit =
     rotationLock.synchronized {
     import spark.implicits._
-    val name = "cross_snapshot"
-    if (VersionedState.alreadyFolded(spark, stateDir, name, batchId)) return
     val prev = VersionedState.readTable(spark, stateDir, "eval_shingles_prev")
     val cur = graft.ops.Decontamination.latestEvalShingles(spark, stateDir)
     (prev, cur) match {
       case (Some(v1), Some(v2)) =>
-        val tagged = v1.select($"eval_id", $"sh", lit(1).as("snap"))
-          .unionByName(v2.select($"eval_id", $"sh", lit(2).as("snap")))
-        // the audit universe excludes benchmark members themselves —
-        // the batch query's "docs in NEITHER snapshot" filter
-        val train = batch.select($"doc_id", $"text")
-          .join(broadcast(tagged.select($"eval_id".as("doc_id")).distinct()),
-            Seq("doc_id"), "left_anti")
-        val hits = graft.ops.Decontamination
-          .crossSnapshotHitsOf(train, tagged)
-          .gatedCheckpoint()
-        hits.write.mode("append").parquet(s"$stateDir/cross_snapshot_hits")
-        VersionedState.commit(spark, stateDir, name, batchId) { dir =>
-          hits.agg(count(lit(1)).as("n_hit_docs"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
+        VersionedState.fold(spark, stateDir, "cross_snapshot", batchId) { v =>
+          val tagged = v1.select($"eval_id", $"sh", lit(1).as("snap"))
+            .unionByName(v2.select($"eval_id", $"sh", lit(2).as("snap")))
+          // the audit universe excludes benchmark members themselves —
+          // the batch query's "docs in NEITHER snapshot" filter
+          val train = batch.select($"doc_id", $"text")
+            .join(broadcast(tagged.select($"eval_id".as("doc_id")).distinct()),
+              Seq("doc_id"), "left_anti")
+          val hits = graft.ops.Decontamination
+            .crossSnapshotHitsOf(train, tagged)
+            .gatedCheckpoint()
+          hits.write.mode("append").parquet(s"$stateDir/cross_snapshot_hits")
+          v.write(hits.agg(count(lit(1)).as("n_hit_docs")).coalesce(1))
         }
       case _ => ()
     }
@@ -1426,21 +1338,18 @@ object StreamingCuration {
       batch: DataFrame, batchId: Long = -1L): Unit =
     rotationLock.synchronized {
     import spark.implicits._
-    val name = "tier_evidence"
-    if (VersionedState.alreadyFolded(spark, stateDir, name, batchId)) return
     graft.ops.Decontamination.latestEvalShingles(spark, stateDir) match {
       case None => ()
       case Some(evalSh) =>
-        val train = batch.select($"doc_id", $"text")
-          .join(broadcast(evalSh.select($"eval_id".as("doc_id")).distinct()),
-            Seq("doc_id"), "left_anti")
-        val pairs = graft.ops.Decontamination
-          .contaminationAgainst(train, evalSh, minShared = 1L)
-          .gatedCheckpoint()
-        pairs.write.mode("append").parquet(s"$stateDir/tier_evidence")
-        VersionedState.commit(spark, stateDir, name, batchId) { dir =>
-          pairs.agg(count(lit(1)).as("n_pairs"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
+        VersionedState.fold(spark, stateDir, "tier_evidence", batchId) { v =>
+          val train = batch.select($"doc_id", $"text")
+            .join(broadcast(evalSh.select($"eval_id".as("doc_id")).distinct()),
+              Seq("doc_id"), "left_anti")
+          val pairs = graft.ops.Decontamination
+            .contaminationAgainst(train, evalSh, minShared = 1L)
+            .gatedCheckpoint()
+          pairs.write.mode("append").parquet(s"$stateDir/tier_evidence")
+          v.write(pairs.agg(count(lit(1)).as("n_pairs")).coalesce(1))
         }
     }
   }
@@ -1477,17 +1386,14 @@ object StreamingCuration {
   def mergeSmearEvidenceState(spark: SparkSession, stateDir: String,
       batch: DataFrame, evalDocs: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    val name = "smear_evidence"
-    if (VersionedState.alreadyFolded(spark, stateDir, name, batchId)) return
-    val train = batch.select($"doc_id", $"text")
-      .join(broadcast(evalDocs.select($"doc_id").distinct()),
-        Seq("doc_id"), "left_anti")
-    val pairs = graft.ops.Decontamination.smearPairsOf(train, evalDocs)
-      .gatedCheckpoint()
-    pairs.write.mode("append").parquet(s"$stateDir/smear_evidence")
-    VersionedState.commit(spark, stateDir, name, batchId) { dir =>
-      pairs.agg(count(lit(1)).as("n_pairs"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
+    VersionedState.fold(spark, stateDir, "smear_evidence", batchId) { v =>
+      val train = batch.select($"doc_id", $"text")
+        .join(broadcast(evalDocs.select($"doc_id").distinct()),
+          Seq("doc_id"), "left_anti")
+      val pairs = graft.ops.Decontamination.smearPairsOf(train, evalDocs)
+        .gatedCheckpoint()
+      pairs.write.mode("append").parquet(s"$stateDir/smear_evidence")
+      v.write(pairs.agg(count(lit(1)).as("n_pairs")).coalesce(1))
     }
   }
 
@@ -1517,19 +1423,16 @@ object StreamingCuration {
   def mergeWinnowEvidenceState(spark: SparkSession, stateDir: String,
       batch: DataFrame, evalDocs: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    val name = "winnow_evidence"
-    if (VersionedState.alreadyFolded(spark, stateDir, name, batchId)) return
-    val train = batch.select($"doc_id", $"text")
-      .join(broadcast(evalDocs.select($"doc_id").distinct()),
-        Seq("doc_id"), "left_anti")
-    val pairs = graft.ops.Decontamination
-      .winnowProbeOf(train,
-        graft.ops.Decontamination.cappedEvalWinnowFps(evalDocs))
-      .gatedCheckpoint()
-    pairs.write.mode("append").parquet(s"$stateDir/winnow_evidence")
-    VersionedState.commit(spark, stateDir, name, batchId) { dir =>
-      pairs.agg(count(lit(1)).as("n_pairs"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
+    VersionedState.fold(spark, stateDir, "winnow_evidence", batchId) { v =>
+      val train = batch.select($"doc_id", $"text")
+        .join(broadcast(evalDocs.select($"doc_id").distinct()),
+          Seq("doc_id"), "left_anti")
+      val pairs = graft.ops.Decontamination
+        .winnowProbeOf(train,
+          graft.ops.Decontamination.cappedEvalWinnowFps(evalDocs))
+        .gatedCheckpoint()
+      pairs.write.mode("append").parquet(s"$stateDir/winnow_evidence")
+      v.write(pairs.agg(count(lit(1)).as("n_pairs")).coalesce(1))
     }
   }
 
@@ -1660,21 +1563,14 @@ object StreamingCuration {
   def mergeBucketWasteState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "bucket_waste", batchId)) return
-    val bs = graft.ops.Packing.packBucketWasteOf(batch)
-      .select($"bucket", $"n_docs", $"n_windows", $"n_tokens", $"n_padded")
-    val merged = VersionedState.readTable(spark, stateDir, "bucket_waste") match {
-      case None => bs
-      case Some(prior) => prior.unionByName(bs)
-        .groupBy($"bucket").agg(
-          sum($"n_docs").as("n_docs"),
-          sum($"n_windows").as("n_windows"),
-          sum($"n_tokens").as("n_tokens"),
-          sum($"n_padded").as("n_padded"))
-    }
-    VersionedState.commit(spark, stateDir, "bucket_waste", batchId) { dir =>
-      merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
-    }
+    foldAdditive(spark, stateDir, "bucket_waste", batchId, single = true)(
+      graft.ops.Packing.packBucketWasteOf(batch)
+        .select($"bucket", $"n_docs", $"n_windows", $"n_tokens", $"n_padded"))(
+      "bucket")(
+      sum($"n_docs").as("n_docs"),
+      sum($"n_windows").as("n_windows"),
+      sum($"n_tokens").as("n_tokens"),
+      sum($"n_padded").as("n_padded"))
   }
 
   /** The accumulated batching-waste report — identical columns to the
@@ -1701,20 +1597,13 @@ object StreamingCuration {
   def mergeNormHistState(spark: SparkSession, stateDir: String,
       vecs: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "norm_hist", batchId)) return
-    val bs = vecs.select(
-        floor(graft.ops.Similarity.norm(
-          col("embedding").cast("array<double>")) * 10)
-          .cast("long").as("norm_band"))
-      .groupBy($"norm_band").agg(count(lit(1)).as("n_vecs"))
-    val merged = VersionedState.readTable(spark, stateDir, "norm_hist") match {
-      case None => bs
-      case Some(prior) => prior.unionByName(bs)
-        .groupBy($"norm_band").agg(sum($"n_vecs").as("n_vecs"))
-    }
-    VersionedState.commit(spark, stateDir, "norm_hist", batchId) { dir =>
-      merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
-    }
+    foldAdditive(spark, stateDir, "norm_hist", batchId, single = true)(
+      vecs.select(
+          floor(graft.ops.Similarity.norm(
+            col("embedding").cast("array<double>")) * 10)
+            .cast("long").as("norm_band"))
+        .groupBy($"norm_band").agg(count(lit(1)).as("n_vecs")))("norm_band")(
+      sum($"n_vecs").as("n_vecs"))
   }
 
   /** The accumulated norm histogram — identical columns to the batch
@@ -1762,18 +1651,10 @@ object StreamingCuration {
   def mergeLenProfileState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "len_profile", batchId)) return
-    val b = batch
+    foldAdditive(spark, stateDir, "len_profile", batchId, single = true)(batch
       .select($"source", graft.ops.TextAnalysis.tokenCount($"text").as("len"))
-      .groupBy($"source", $"len").agg(count(lit(1)).as("c"))
-    val merged = VersionedState.readTable(spark, stateDir, "len_profile") match {
-      case None => b
-      case Some(prior) => prior.unionByName(b)
-        .groupBy($"source", $"len").agg(sum($"c").as("c"))
-    }
-    VersionedState.commit(spark, stateDir, "len_profile", batchId) { dir =>
-      merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
-    }
+      .groupBy($"source", $"len").agg(count(lit(1)).as("c")))("source", "len")(
+      sum($"c").as("c"))
   }
 
   /** The accumulated-stream length profile — identical columns to the
@@ -1812,25 +1693,18 @@ object StreamingCuration {
     import spark.implicits._
     // xor is SELF-INVERSE: a double-folded batch would silently CANCEL
     // its own signature — the watermark gate is load-bearing here
-    if (VersionedState.alreadyFolded(spark, stateDir, "manifest", batchId)) return
-    val b = batch.select($"source",
-        graft.ops.TextAnalysis.tokenCount($"text").as("nt"),
-        $"n_chars",
-        conv(substring(md5($"text"), 1, 15), 16, 10).cast("long").as("sig"))
-      .groupBy($"source")
-      .agg(count(lit(1)).as("n_docs"), sum($"nt").as("n_tokens"),
-        sum($"n_chars").as("n_chars"), expr("bit_xor(sig)").as("content_sig"))
-    val merged = VersionedState.readTable(spark, stateDir, "manifest") match {
-      case None => b
-      case Some(prior) => prior.unionByName(b)
+    foldAdditive(spark, stateDir, "manifest", batchId, single = true)(
+      batch.select($"source",
+          graft.ops.TextAnalysis.tokenCount($"text").as("nt"),
+          $"n_chars",
+          conv(substring(md5($"text"), 1, 15), 16, 10).cast("long").as("sig"))
         .groupBy($"source")
-        .agg(sum($"n_docs").as("n_docs"), sum($"n_tokens").as("n_tokens"),
-          sum($"n_chars").as("n_chars"),
-          expr("bit_xor(content_sig)").as("content_sig"))
-    }
-    VersionedState.commit(spark, stateDir, "manifest", batchId) { dir =>
-      merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
-    }
+        .agg(count(lit(1)).as("n_docs"), sum($"nt").as("n_tokens"),
+          sum($"n_chars").as("n_chars"), expr("bit_xor(sig)").as("content_sig")))(
+      "source")(
+      sum($"n_docs").as("n_docs"), sum($"n_tokens").as("n_tokens"),
+      sum($"n_chars").as("n_chars"),
+      expr("bit_xor(content_sig)").as("content_sig"))
   }
 
   /** The accumulated manifest — identical columns to the batch
@@ -1854,19 +1728,11 @@ object StreamingCuration {
   def mergeFilterAblationState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "filter_ablation", batchId)) return
-    val b = graft.ops.TextAnalysis.filterAblationOf(batch)
-    val merged = VersionedState.readTable(spark, stateDir, "filter_ablation") match {
-      case None => b
-      case Some(prior) => prior.unionByName(b)
-        .groupBy($"rule_id", $"rule")
-        .agg(sum($"n_fail").as("n_fail"),
-          sum($"n_unique_fail").as("n_unique_fail"),
-          sum($"words_unique_fail").as("words_unique_fail"))
-    }
-    VersionedState.commit(spark, stateDir, "filter_ablation", batchId) { dir =>
-      merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
-    }
+    foldAdditive(spark, stateDir, "filter_ablation", batchId, single = true)(
+      graft.ops.TextAnalysis.filterAblationOf(batch))("rule_id", "rule")(
+      sum($"n_fail").as("n_fail"),
+      sum($"n_unique_fail").as("n_unique_fail"),
+      sum($"words_unique_fail").as("words_unique_fail"))
   }
 
   /** The accumulated ablation table — identical columns to the batch
@@ -1896,45 +1762,43 @@ object StreamingCuration {
     // The min-merged first positions are idempotent, but the running
     // token total ADDS — the watermark gate keeps a replayed batch
     // from shifting every later batch's global positions
-    if (VersionedState.alreadyFolded(spark, stateDir, "vocab_first", batchId)) return
-    // State is ONE parquet table: token rows (w, first_gpos) plus a
-    // reserved row w = "" whose f carries the running token total —
-    // "" can never be a token (whitespace split + length>0 filter), so
-    // a single versioned commit carries positions AND total together.
-    // The former two-file layout (parquet + vocab_total.txt) could
-    // crash between the writes and leave positions computed against a
-    // stale total, corrupting every later batch's global positions
-    // (ADVICE r8 #3); the versioned commit also survives a crash
-    // MID-write, which the overwrite-in-place form did not
-    // (ADVICE r9 #4).
-    val priorState = VersionedState.readTable(spark, stateDir, "vocab_first")
-    val prevTotal = priorState match {
-      case None => 0L
-      case Some(st) => st.filter($"w" === "")
-        .agg(coalesce(max($"f"), lit(0L))).as[Long].head()
-    }
-    val tk = batch.select($"doc_id",
-      posexplode(graft.ops.TextAnalysis.lowerTokens($"text"))
-        .as(Seq("pos", "w")))
-    val cnts = tk.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-      .gatedCheckpoint()
-    val wDoc = org.apache.spark.sql.expressions.Window.orderBy($"doc_id")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offs = cnts.select($"doc_id",
-      coalesce(sum($"n").over(wDoc), lit(0L)).as("off"))
-    val firstB = tk.join(offs, "doc_id")
-      .select($"w", (lit(prevTotal) + $"off" + $"pos" + 1L).as("f"))
-      .groupBy($"w").agg(min($"f").as("f"))
-    val batchTokens = cnts.agg(coalesce(sum($"n"), lit(0L))).as[Long].head()
-    val tokens = priorState match {
-      case None => firstB
-      case Some(st) => st.filter($"w" =!= "").unionByName(firstB)
+    VersionedState.fold(spark, stateDir, "vocab_first", batchId) { v =>
+      // State is ONE parquet table: token rows (w, first_gpos) plus a
+      // reserved row w = "" whose f carries the running token total —
+      // "" can never be a token (whitespace split + length>0 filter), so
+      // a single versioned commit carries positions AND total together.
+      // The former two-file layout (parquet + vocab_total.txt) could
+      // crash between the writes and leave positions computed against a
+      // stale total, corrupting every later batch's global positions
+      // (ADVICE r8 #3); the versioned commit also survives a crash
+      // MID-write, which the overwrite-in-place form did not
+      // (ADVICE r9 #4).
+      val priorState = v.priorTable()
+      val prevTotal = priorState match {
+        case None => 0L
+        case Some(st) => st.filter($"w" === "")
+          .agg(coalesce(max($"f"), lit(0L))).as[Long].head()
+      }
+      val tk = batch.select($"doc_id",
+        posexplode(graft.ops.TextAnalysis.lowerTokens($"text"))
+          .as(Seq("pos", "w")))
+      val cnts = tk.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+        .gatedCheckpoint()
+      val wDoc = org.apache.spark.sql.expressions.Window.orderBy($"doc_id")
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+      val offs = cnts.select($"doc_id",
+        coalesce(sum($"n").over(wDoc), lit(0L)).as("off"))
+      val firstB = tk.join(offs, "doc_id")
+        .select($"w", (lit(prevTotal) + $"off" + $"pos" + 1L).as("f"))
         .groupBy($"w").agg(min($"f").as("f"))
-    }
-    val merged = tokens.unionByName(
-      Seq(("", prevTotal + batchTokens)).toDF("w", "f"))
-    VersionedState.commit(spark, stateDir, "vocab_first", batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/data")
+      val batchTokens = cnts.agg(coalesce(sum($"n"), lit(0L))).as[Long].head()
+      val tokens = priorState match {
+        case None => firstB
+        case Some(st) => st.filter($"w" =!= "").unionByName(firstB)
+          .groupBy($"w").agg(min($"f").as("f"))
+      }
+      v.write(tokens.unionByName(
+        Seq(("", prevTotal + batchTokens)).toDF("w", "f")))
     }
   }
 
@@ -1972,21 +1836,13 @@ object StreamingCuration {
   def mergeTokenCountState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "token_counts", batchId)) return
     val src = if (batch.columns.contains("source")) batch
       else batch.withColumn("source", lit("stream"))
-    val bc = src
+    foldAdditive(spark, stateDir, "token_counts", batchId)(src
       .select($"source",
         explode(graft.ops.TextAnalysis.lowerTokens($"text")).as("w"))
-      .groupBy($"source", $"w").agg(count(lit(1)).as("c"))
-    val merged = VersionedState.readTable(spark, stateDir, "token_counts") match {
-      case None => bc
-      case Some(prior) => prior.unionByName(bc)
-        .groupBy($"source", $"w").agg(sum($"c").as("c"))
-    }
-    VersionedState.commit(spark, stateDir, "token_counts", batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/data")
-    }
+      .groupBy($"source", $"w").agg(count(lit(1)).as("c")))("source", "w")(
+      sum($"c").as("c"))
   }
 
   /** Simpson diversity over the accumulated stream — identical columns
@@ -2050,18 +1906,11 @@ object StreamingCuration {
       batch: DataFrame, keyCol: String, batchId: Long = -1L): Unit = {
     import spark.implicits._
     val k = graft.queries.QualityQueries.KmvK
-    val name = s"kmv_$keyCol"
-    if (VersionedState.alreadyFolded(spark, stateDir, name, batchId)) return
-    val bs = batch
-      .select(md5(concat(lit("kmv:"), col(keyCol).cast("string"))).as("h"))
-      .distinct().orderBy($"h").limit(k)
-    val merged = VersionedState.readTable(spark, stateDir, name) match {
-      case None => bs
-      case Some(prior) => prior.unionByName(bs)
+    VersionedState.fold(spark, stateDir, s"kmv_$keyCol", batchId) { v =>
+      val bs = batch
+        .select(md5(concat(lit("kmv:"), col(keyCol).cast("string"))).as("h"))
         .distinct().orderBy($"h").limit(k)
-    }
-    VersionedState.commit(spark, stateDir, name, batchId) { dir =>
-      merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
+      v.write(v.merged(bs)(_.distinct().orderBy($"h").limit(k)).coalesce(1))
     }
   }
 
@@ -2104,33 +1953,29 @@ object StreamingCuration {
     // df/n_docs, so the former "dedupe upstream" scaladoc caveat is
     // now an engineered guarantee (spec: folding the same batchId
     // twice equals folding it once).
-    if (VersionedState.alreadyFolded(spark, stateDir, "bm25", batchId)) return
-    val toks = batch.select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) => TextAnalysis.bm25Words(text).iterator.map(w => (id, w)) }
-      .toDF("doc_id", "token")
-    val batchDf = toks.distinct().groupBy($"token").agg(count(lit(1)).as("df"))
-    val row = toks.agg(countDistinct($"doc_id"), count(lit(1))).head()
-    val (batchNd, batchTt) = (row.getLong(0), row.getLong(1))
-    val (priorNd, priorTt) = readBm25Scalars(spark, stateDir)
-    val merged = VersionedState.readTable(spark, stateDir, "bm25", "df") match {
-      case None => batchDf
-      case Some(prior) => prior.unionByName(batchDf)
-        .groupBy($"token").agg(sum($"df").as("df"))
-    }
-    VersionedState.commit(spark, stateDir, "bm25", batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/df")
-      Seq((priorNd + batchNd, priorTt + batchTt)).toDF("n_docs", "total_tokens")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/scalars")
+    VersionedState.fold(spark, stateDir, "bm25", batchId) { v =>
+      val toks = batch.select(col("doc_id"), col("text")).as[(Long, String)]
+        .flatMap { case (id, text) => TextAnalysis.bm25Words(text).iterator.map(w => (id, w)) }
+        .toDF("doc_id", "token")
+      val batchDf = toks.distinct().groupBy($"token").agg(count(lit(1)).as("df"))
+      val row = toks.agg(countDistinct($"doc_id"), count(lit(1))).head()
+      val (batchNd, batchTt) = (row.getLong(0), row.getLong(1))
+      val (priorNd, priorTt) = bm25Scalars(v.priorTable("scalars"))
+      v.write(v.merged(batchDf, "df")(
+        _.groupBy($"token").agg(sum($"df").as("df"))), "df")
+      v.write(Seq((priorNd + batchNd, priorTt + batchTt))
+        .toDF("n_docs", "total_tokens").coalesce(1), "scalars")
     }
   }
 
   /** (docs seen, tokens seen) — the BM25 scalars (zeros when absent). */
   def readBm25Scalars(spark: SparkSession, stateDir: String): (Long, Long) =
-    VersionedState.readTable(spark, stateDir, "bm25", "scalars") match {
-      case None => (0L, 0L)
-      case Some(st) =>
-        val r = st.head()
-        (r.getLong(0), r.getLong(1))
+    bm25Scalars(VersionedState.readTable(spark, stateDir, "bm25", "scalars"))
+
+  private def bm25Scalars(state: Option[DataFrame]): (Long, Long) =
+    state.fold((0L, 0L)) { st =>
+      val r = st.head()
+      (r.getLong(0), r.getLong(1))
     }
 
   /** BM25 top-n of `docs` against the ACCUMULATED corpus statistics:
@@ -2181,17 +2026,10 @@ object StreamingCuration {
   def mergeNoveltyState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "novelty", batchId)) return
-    val batchFirst = Dedup.shingledOf(batch.select(col("doc_id"), col("text")))
-      .groupBy($"sh").agg(min($"doc_id").as("first_id"))
-    val merged = VersionedState.readTable(spark, stateDir, "novelty", "first") match {
-      case None => batchFirst
-      case Some(prior) => prior.unionByName(batchFirst)
-        .groupBy($"sh").agg(min($"first_id").as("first_id"))
-    }
-    VersionedState.commit(spark, stateDir, "novelty", batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/first")
-    }
+    foldAdditive(spark, stateDir, "novelty", batchId, table = "first")(
+      Dedup.shingledOf(batch.select(col("doc_id"), col("text")))
+        .groupBy($"sh").agg(min($"doc_id").as("first_id")))("sh")(
+      min($"first_id").as("first_id"))
   }
 
   /** Score a batch's novelty against the ACCUMULATED first-occurrence
@@ -2236,20 +2074,15 @@ object StreamingCuration {
   def mergeParaState(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long = -1L): Unit = {
     import spark.implicits._
-    if (VersionedState.alreadyFolded(spark, stateDir, "paradedup", batchId)) return
-    val batchFirst = graft.ops.CorpusFilters
-      .lines(batch.select(col("doc_id"), col("text")))
-      .withColumn("key", md5(lower(trim($"line"))))
-      .groupBy($"key").agg(min(struct($"doc_id", $"idx")).as("f"))
-      .select($"key", $"f.doc_id".as("fdoc"), $"f.idx".as("fidx"))
-    val merged = VersionedState.readTable(spark, stateDir, "paradedup", "first") match {
-      case None => batchFirst
-      case Some(prior) => prior.unionByName(batchFirst)
-        .groupBy($"key").agg(min(struct($"fdoc", $"fidx")).as("f"))
-        .select($"key", $"f.fdoc".as("fdoc"), $"f.fidx".as("fidx"))
-    }
-    VersionedState.commit(spark, stateDir, "paradedup", batchId) { dir =>
-      merged.write.mode("overwrite").parquet(s"$dir/first")
+    VersionedState.fold(spark, stateDir, "paradedup", batchId) { v =>
+      val batchFirst = graft.ops.CorpusFilters
+        .lines(batch.select(col("doc_id"), col("text")))
+        .withColumn("key", md5(lower(trim($"line"))))
+        .groupBy($"key").agg(min(struct($"doc_id", $"idx")).as("f"))
+        .select($"key", $"f.doc_id".as("fdoc"), $"f.idx".as("fidx"))
+      v.write(v.merged(batchFirst, "first")(
+        _.groupBy($"key").agg(min(struct($"fdoc", $"fidx")).as("f"))
+          .select($"key", $"f.fdoc".as("fdoc"), $"f.fidx".as("fidx"))), "first")
     }
   }
 

@@ -32,9 +32,12 @@ object Curation {
     */
   def chunksOf(text: Column, width: Int = ChunkTokens): Column = {
     val tk = TextAnalysis.tokens(text)
-    transform(
-      sequence(lit(0), (ceil(size(tk) / lit(width.toDouble)) - 1).cast("int")),
-      i => concat_ws(" ", slice(tk, i * width + 1, lit(width))))
+    // sequence(0, -1) counts DOWN to [0, -1]: a tokenless text must
+    // take the empty branch, not chunk the empty range
+    when(size(tk) > 0, transform(
+        sequence(lit(0), (ceil(size(tk) / lit(width.toDouble)) - 1).cast("int")),
+        i => concat_ws(" ", slice(tk, i * width + 1, lit(width)))))
+      .otherwise(array().cast("array<string>"))
   }
 
   /** Max frequent-hash rows the removal pass will collect and broadcast

@@ -425,7 +425,7 @@ object Decontamination {
     * [[TextAnalysis.winnow]] kernel (tag = [[WinnowChannel]]) — the
     * widened form of the r13 both-widths-from-one-tokenize shape.
     */
-  private def smearChannelsOf(train: DataFrame, widths: Seq[Int]): DataFrame = {
+  private[ops] def smearChannelsOf(train: DataFrame, widths: Seq[Int]): DataFrame = {
     val s = train.sparkSession
     import s.implicits._
     val ws = widths.distinct.sorted
@@ -631,7 +631,7 @@ object Decontamination {
     * signed-Long kernel; per-doc sets arrive already deduplicated, so
     * downstream pair counts are distinct-fingerprint counts.
     */
-  private def winnowFpsOf(docs: DataFrame): DataFrame = {
+  private[ops] def winnowFpsOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     docs.select($"doc_id", $"text").as[(Long, String)]
@@ -655,10 +655,8 @@ object Decontamination {
     import spark.implicits._
     val sh = Dedup.shingledOf(evalDocs, n)
       .select($"doc_id".as("eval_id"), $"sh")
-    graft.streaming.VersionedState.commit(spark, stateDir,
-      "eval_shingles", -1L) { dir =>
-      sh.write.mode("overwrite").parquet(s"$dir/data")
-    }
+    graft.streaming.VersionedState.fold(spark, stateDir,
+      "eval_shingles", -1L)(_.write(sh))
   }
 
   /** The latest committed eval-shingle snapshot (None before the first

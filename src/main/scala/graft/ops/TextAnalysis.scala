@@ -105,9 +105,11 @@ object TextAnalysis {
     * tie-break, deduplicated. Guarantees any substring match of length
     * ≥ k+w-1 shares a fingerprint — the property plagiarism/near-dup
     * detection relies on. Runs compiled (no Catalyst expressions) —
-    * same rationale as the shingling path in [[Dedup]].
+    * same rationale as the shingling path in [[Dedup]]. A null text
+    * has no fingerprints.
     */
   def winnow(text: String, k: Int = 8, w: Int = 4): Array[Long] = {
+    if (text == null) return Array.empty
     val s = text.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ").trim
     if (s.length < k) return Array.empty
     val B = 1000003L
@@ -402,6 +404,7 @@ object TextAnalysis {
 
   def winnowPortable(text: String, memo: Md5Memo,
       k: Int = 8, w: Int = 4): Array[String] = {
+    if (text == null) return Array.empty
     val s = text.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ").trim
     if (s.length < k) return Array.empty
     val n = s.length - k + 1

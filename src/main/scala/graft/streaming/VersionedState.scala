@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe, replay-idempotent commit protocol for the foreachBatch
-  * streaming states ([[graft.examples.StreamingCuration]]).
+  * streaming states ([[graft.examples.StreamingCuration]]). Every state
+  * commits through ONE call, [[fold]]; readers use [[latest]],
+  * [[readTable]], [[meta]] and [[watermark]].
   *
   * Two hazards of the naive read→overwrite-in-place fold, both closed
   * here with ONE mechanism (VERDICT r9 ask #1, ADVICE r9 #4):
@@ -22,7 +24,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     managed batchIds have folded so far inside the committed
   *     version — compactly, as a watermark below which EVERY id has
   *     folded plus the (normally empty) sorted set of folded ids above
-  *     it — and [[alreadyFolded]] makes a replayed batch a no-op.
+  *     it — and [[fold]] makes a replayed batch a no-op.
+  *
+  * The fold's ordering contract: list the root once and locate the
+  * latest committed version; read its meta once and return without
+  * effect if the batch already folded; hand the caller's `write` the
+  * prior version directory (or None) and the fresh one, so every plan
+  * that reads the prior version runs while it still exists; commit the
+  * meta row; then delete the older versions from the same listing. A
+  * fold therefore costs one root listing and one meta read, and a
+  * replay costs only those two.
   *
   * Why a watermark + set rather than the r10 watermark alone (VERDICT
   * r10 "What's wrong" #1): a bare high-watermark conflates "id ≤ W was
@@ -98,20 +109,27 @@ object VersionedState {
 
   val EmptyMeta: Meta = Meta(-1L, Seq.empty)
 
+  /** Every `<name>_v<N>` directory under `root`, newest first, from
+    * ONE listing — committed or not.
+    */
+  private def versions(root: String, name: String): Seq[(Int, String)] =
+    StateFs.list(root)
+      .flatMap { p =>
+        val n = p.getName
+        if (!n.startsWith(name + "_v")) None
+        else scala.util.Try(n.stripPrefix(name + "_v").toInt).toOption
+          .map(v => (v, p.toString))
+      }
+      .sortBy(-_._1)
+
+  private def newestCommitted(vs: Seq[(Int, String)]): Option[(Int, String)] =
+    vs.find { case (_, dir) => StateFs.exists(s"$dir/$MetaTable/_SUCCESS") }
+
   /** Latest COMMITTED (version, path) of state `name` under `root`:
     * the highest `<name>_v<N>` whose `state_meta/_SUCCESS` exists.
     */
   def latest(root: String, name: String): Option[(Int, String)] =
-    StateFs.list(root)
-      .flatMap { p =>
-        val n = p.getName
-        if (n.startsWith(name + "_v") &&
-            StateFs.exists(s"${p.toString}/$MetaTable/_SUCCESS"))
-          scala.util.Try(n.stripPrefix(name + "_v").toInt).toOption
-            .map(v => (v, p.toString))
-        else None
-      }
-      .sortBy(-_._1).headOption
+    newestCommitted(versions(root, name))
 
   private def readMeta(spark: SparkSession, dir: String): Meta = {
     val df = spark.read.parquet(s"$dir/$MetaTable")
@@ -128,10 +146,7 @@ object VersionedState {
     * not exist yet or only unmanaged folds were applied).
     */
   def meta(spark: SparkSession, root: String, name: String): Meta =
-    latest(root, name) match {
-      case None            => EmptyMeta
-      case Some((_, dir))  => readMeta(spark, dir)
-    }
+    latest(root, name).fold(EmptyMeta)(v => readMeta(spark, v._2))
 
   /** Highest batchId below-or-at which EVERY managed id has been
     * folded into `name` (−1 when the state does not exist yet or only
@@ -140,14 +155,6 @@ object VersionedState {
     */
   def watermark(spark: SparkSession, root: String, name: String): Long =
     meta(spark, root, name).watermark
-
-  /** True iff `batchId` is a managed id (≥ 0) the state has already
-    * folded — the caller must skip the fold (replay no-op). Unmanaged
-    * folds (batchId = −1, e.g. direct spec calls) always apply.
-    */
-  def alreadyFolded(spark: SparkSession, root: String, name: String,
-      batchId: Long): Boolean =
-    meta(spark, root, name).folded(batchId)
 
   /** Payload table `table` of the latest committed version (None when
     * the state has never been committed).
@@ -158,44 +165,66 @@ object VersionedState {
       spark.read.parquet(s"$dir/$table")
     }
 
-  /** Commit one fold: `write` persists the payload table(s) under the
-    * fresh version directory it is handed (use `mode("overwrite")` so
-    * a crashed prior attempt's partial files are replaced); then the
-    * meta row — the previous folded-id record with `batchId` folded in
-    * — commits the version, and older versions are deleted
-    * best-effort.
-    *
-    * IMPORTANT ordering contract for callers: any plan that READS the
-    * previous version (the usual `prior.unionByName(batch)` merge) is
-    * executed by `write` while the previous version still exists; only
-    * after the meta commit does cleanup run.
+  /** One fold's view of its state: the `prior` committed version
+    * directory (None on the first fold) and the fresh version `dir`
+    * the fold writes its payload tables into.
     */
-  def commit(spark: SparkSession, root: String, name: String,
-      batchId: Long)(write: String => Unit): Unit = {
+  final case class Version(spark: SparkSession, prior: Option[String],
+      dir: String) {
+
+    /** Payload table `table` of the prior version. */
+    def priorTable(table: String = "data"): Option[DataFrame] =
+      prior.map(p => spark.read.parquet(s"$p/$table"))
+
+    /** `batch` alone on the first fold; else the prior version's
+      * `table` unioned with it and passed through `merge` (the
+      * re-aggregation by key).
+      */
+    def merged(batch: DataFrame, table: String = "data")(
+        merge: DataFrame => DataFrame): DataFrame =
+      priorTable(table).fold(batch)(p => merge(p.unionByName(batch)))
+
+    /** Write payload table `table` of the fresh version; `overwrite`
+      * replaces a crashed earlier attempt's partial files.
+      */
+    def write(df: DataFrame, table: String = "data"): Unit =
+      df.write.mode("overwrite").parquet(s"$dir/$table")
+  }
+
+  /** Fold batch `batchId` into state `name` — the only way a version
+    * is committed. In order:
+    *
+    *  1. list `root` once and locate the latest committed version;
+    *  2. read its meta once, and return None without effect when
+    *     `batchId` is a managed id (≥ 0) that has already folded (the
+    *     replay no-op; unmanaged folds, id −1, always apply);
+    *  3. run `write` on the prior version (or None) and the fresh
+    *     version directory — any plan that reads the prior version
+    *     runs here, while it still exists;
+    *  4. commit the meta row: the prior folded-id record with
+    *     `batchId` folded in;
+    *  5. delete the older versions found by the same listing,
+    *     best-effort.
+    *
+    * Returns `write`'s result when the fold applied.
+    */
+  def fold[T](spark: SparkSession, root: String, name: String,
+      batchId: Long)(write: Version => T): Option[T] = {
     import spark.implicits._
-    val prior = latest(root, name)
-    // read the meta from the already-located prior version rather
-    // than re-listing the root (one listing + one 1-row read per commit)
-    val prevMeta = prior match {
-      case None           => EmptyMeta
-      case Some((_, dir)) => readMeta(spark, dir)
-    }
-    val nextMeta = prevMeta.fold(batchId)
-    val nextV = prior.map(_._1 + 1).getOrElse(1)
-    val dir = s"$root/${name}_v$nextV"
-    write(dir)
-    Seq((nextMeta.watermark, nextMeta.foldedAbove))
-      .toDF("folded_watermark", "folded_above")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$MetaTable")
-    // delete the version dirs that actually EXIST below the new commit
-    // (one listing), not a 1..v probe walk — that walk was O(v) stat
-    // calls per commit, O(v²) over a stream's life
-    StateFs.list(root).foreach { p =>
-      val n = p.getName
-      if (n.startsWith(name + "_v"))
-        scala.util.Try(n.stripPrefix(name + "_v").toInt).toOption
-          .filter(_ < nextV)
-          .foreach(_ => StateFs.deleteRecursively(p.toString))
+    val vs = versions(root, name)
+    val prior = newestCommitted(vs)
+    val prevMeta = prior.fold(EmptyMeta)(v => readMeta(spark, v._2))
+    if (prevMeta.folded(batchId)) None
+    else {
+      val nextV = prior.fold(1)(_._1 + 1)
+      val dir = s"$root/${name}_v$nextV"
+      val out = write(Version(spark, prior.map(_._2), dir))
+      val nextMeta = prevMeta.fold(batchId)
+      Seq((nextMeta.watermark, nextMeta.foldedAbove))
+        .toDF("folded_watermark", "folded_above")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$MetaTable")
+      vs.foreach { case (v, p) => if (v < nextV) StateFs.deleteRecursively(p) }
+      Some(out)
     }
   }
 }

@@ -790,13 +790,17 @@ class CurationSpec extends SparkSpec {
     // Java's trim would strip them at the ends of a document
     val docs = Seq(
       (1L, "\u0001a b c"), (2L, "a b c\u001f"), (3L, " \u0001 "),
-      (4L, "\u001fa\u0001 b\tc d"), (5L, "x y z w")).toDF("doc_id", "text")
+      (4L, "\u001fa\u0001 b\tc d"), (5L, "x y z w"), (6L, ""), (7L, "   "))
+      .toDF("doc_id", "text")
     val want = docs.select($"doc_id", Curation.chunksOf($"text", 2).as("cs"))
       .select($"doc_id", size($"cs").cast("long"), concat_ws(" ", $"cs"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(want.filter(_._1 >= 6L) == Set((6L, 0L, ""), (7L, 0L, "")),
+      "a document with no tokens has no chunks")
     val got = Curation.cleanChunks(docs, Set.empty, 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(3))).toSet
-    assert(got == want)
+    // a chunkless document has no clean row
+    assert(got == want.filter(_._2 > 0L))
   }
 
   test("dsir top-k: per-source argmax of the exact importance score, ties to low id") {

@@ -2798,6 +2798,19 @@ class SubstrSpansSpec extends SparkSpec {
     assert(rep(2L) == ((0L, 0L)), "null text: no tokens, no sentences")
     assert(idsOf(TextAnalysis.lmNgramsOf(docs, "w")) == Set(1L))
     assert(idsOf(TextAnalysis.bm25Of(docs, "abcdefghixxxx", 10)) == Set(1L))
+    // the winnow kernels read null text as no fingerprints
+    assert(TextAnalysis.winnow(null).isEmpty)
+    assert(TextAnalysis.winnowPortable(null, new TextAnalysis.Md5Memo()).isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nulltext").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    val tw = TextAnalysis.taWinnow(spark, dir).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(tw(2L) == ((0L, 0L)), "null text: no fingerprints")
+    val twp = TextAnalysis.taWinnowPortable(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(twp == Map(1L -> twp(1L), 2L -> 0L) && twp(1L) > 0L)
+    assert(idsOf(Decontamination.winnowFpsOf(docs)) == Set(1L))
+    assert(idsOf(Decontamination.smearChannelsOf(docs, Seq(1, 3))) == Set(1L))
   }
 
   test("span length hist: bands are dyadic, mass reconciles with the per-doc audit") {

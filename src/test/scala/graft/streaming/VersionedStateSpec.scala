@@ -14,7 +14,8 @@ import org.scalacheck.rng.Seed
   * operation the on-disk state and watermark must equal a trivial
   * in-memory model (apply iff the id is new; crashes change nothing).
   * This is the whole replay/crash contract in one property, rather
-  * than the three example-based specs alone.
+  * than the three example-based specs alone. The same traces also run
+  * through `mergeMixState`, whose version holds two payload tables.
   */
 class VersionedStateSpec extends SparkSpec {
 
@@ -79,6 +80,128 @@ class VersionedStateSpec extends SparkSpec {
           s"seed $i: watermark diverged ($trace)")
       }
     }
+  }
+
+  test("the same traces through the two-table mix fold: state, watermark and replayed selection match the model") {
+    import spark.implicits._
+    val mix = "mix"
+    val budget = 6L
+    // (source, doc_id, n_tokens, cum_tokens, __batch_id) rows and the
+    // per-source runs — the greedy fill of mixBudgetOf, continued
+    type Sel = (String, Long, Long, Long, Long)
+    (1 to 8).foreach { i =>
+      genTrace(Gen.Parameters.default, Seed(i.toLong)).foreach { trace =>
+        val dir = Files.createTempDirectory(s"graft-vsmix$i").toString
+        var selected = Set.empty[Sel]
+        var runs = Map.empty[String, Long]
+        var firstDelivery = Map.empty[Long, Set[Sel]]
+        var wm = -1L
+        var nextId = 0L
+        var nextDoc = 0L
+        def fold(rows: List[String], id: Long): Unit = {
+          val docs = rows.map { src =>
+            nextDoc += 1L
+            (nextDoc, src, (nextDoc * 7L) % 5L,
+              Seq.fill(1 + (nextDoc % 3).toInt)("w").mkString(" "))
+          }
+          val got = StreamingCuration.mergeMixState(spark, dir,
+              docs.toDF("doc_id", "source", "n_chars", "text"), budget, id)
+            .collect().map(r => (r.getAs[String]("source"),
+              r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
+              r.getAs[Long]("cum_tokens"), id)).toSet
+          if (id >= 0L && firstDelivery.contains(id))
+            assert(got == firstDelivery(id),
+              s"seed $i: replay of $id must return its first selection ($trace)")
+          else {
+            // the model's fill: per source, n_chars desc then doc_id,
+            // continuing the source's run; a row is kept while the run
+            // including it stays within budget
+            val kept = docs.groupBy(_._2).toSeq.flatMap { case (src, ds) =>
+              var run = runs.getOrElse(src, 0L)
+              val out = ds.sortBy(d => (-d._3, d._1)).flatMap { d =>
+                val n = d._4.split(" ").length.toLong
+                run += n
+                if (run <= budget) Some((src, d._1, n, run, id)) else None
+              }
+              runs += src -> run
+              out
+            }.toSet
+            assert(got == kept, s"seed $i: fold $id selection diverged ($trace)")
+            selected ++= kept
+            if (id >= 0L) {
+              firstDelivery += id -> kept
+              wm = math.max(wm, id)
+            }
+          }
+        }
+        trace.foreach { op =>
+          op match {
+            case Fold(replay, rows) =>
+              val id = if (replay && wm >= 0L) wm else nextId
+              fold(rows, id)
+              nextId = math.max(nextId, id + 1L)
+            case Manual(rows) => fold(rows, -1L)
+            case CrashPartial =>
+              val v = VersionedState.latest(dir, mix).map(_._1).getOrElse(0) + 1
+              Seq(("junk", 999L, 9L, 9L, 0L))
+                .toDF("source", "doc_id", "n_tokens", "cum_tokens", "__batch_id")
+                .write.mode("overwrite").parquet(s"$dir/${mix}_v$v/selected")
+              Seq(("junk", 999L)).toDF("source", "run")
+                .write.mode("overwrite").parquet(s"$dir/${mix}_v$v/runs")
+          }
+          val gotSel = VersionedState.readTable(spark, dir, mix, "selected")
+            .fold(Set.empty[Sel])(_.collect().map(r => (r.getAs[String]("source"),
+              r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
+              r.getAs[Long]("cum_tokens"), r.getAs[Long]("__batch_id"))).toSet)
+          val gotRuns = VersionedState.readTable(spark, dir, mix, "runs")
+            .fold(Map.empty[String, Long])(
+              _.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+          assert(gotSel == selected, s"seed $i: selected diverged after $op ($trace)")
+          assert(gotRuns == runs, s"seed $i: runs diverged after $op ($trace)")
+          assert(VersionedState.watermark(spark, dir, mix) == wm,
+            s"seed $i: watermark diverged after $op ($trace)")
+        }
+      }
+    }
+  }
+
+  test("a steady managed fold launches 7 jobs and a replay 2: one listing, one meta read") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-vsjobs").toString
+    val rows = Seq("a", "b", "a").toDF("source")
+    StreamingCuration.mergeKeyCountState(spark, dir, rows, "source", 0L)
+    val group = s"vs-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      jobs.set(0)
+      sc.setJobGroup(group, "fold job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBusFlush.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      // prior state exists: the meta read is 2 jobs (schema inference +
+      // the 1-row head), the prior payload's schema inference 1, the
+      // merged write and the meta write the rest
+      val steady = jobsOf(
+        StreamingCuration.mergeKeyCountState(spark, dir, rows, "source", 1L))
+      assert(steady == 7, s"a steady fold launched $steady jobs")
+      val replay = jobsOf(
+        StreamingCuration.mergeKeyCountState(spark, dir, rows, "source", 1L))
+      assert(replay == 2, s"a replayed fold launched $replay jobs")
+    } finally sc.removeSparkListener(listener)
+    assert(VersionedState.readTable(spark, dir, name).get
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("a" -> 4L, "b" -> 2L))
   }
 
   test("out-of-order managed folds apply exactly once and compact (VERDICT r10 #1)") {
