@@ -573,10 +573,8 @@ object CorpusFilters {
     * below 2^53 — ADVICE r8 #4); vocab counts are exact. One IEEE
     * division per output row (ttr).
     *
-    * 100 TB shape: the per-doc offset IS the [[Packing]] two-pass
-    * distributed prefix sum (range-partition by doc_id, per-partition
-    * totals — #partitions rows to the driver — then each partition
-    * emits offsets knowing only its base); the former
+    * 100 TB shape: the per-doc offset is a [[Scale.runningSum]] over
+    * doc_id, which also yields the corpus total; the former
     * `Window.orderBy(doc_id)` serialized one row per DOC through a
     * single task, a genuine 100× killer at 10⁹ docs (VERDICT r8 #2).
     * First-occurrence is one min per token; the decile probe is a
@@ -591,35 +589,10 @@ object CorpusFilters {
     import s.implicits._
     val tk = docs.select($"doc_id",
       posexplode(TextAnalysis.lowerTokens($"text")).as(Seq("pos", "w")))
-    // pass 0: per-doc token counts, range-partitioned + sorted so
-    // partition p holds a contiguous ascending doc_id range.
-    // localCheckpoint freezes the sampled range boundaries — the
-    // totals job and the emit job MUST see identical partitions.
-    val ranged = tk.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-      .repartitionByRange(partitions, $"doc_id")
-      .sortWithinPartitions($"doc_id")
-      .as[(Long, Long)]
-      .gatedCheckpoint()
-    // pass 1: per-partition token totals -> base offset per partition
-    // (and the corpus total, free — no separate aggregation job)
-    val partials = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var tot = 0L
-      it.foreach(tot += _._2)
-      Iterator.single((pid, tot))
-    }.collect().sortBy(_._1)
-    val total = partials.map(_._2).sum
-    val base = new Array[Long](partials.length + 1)
-    partials.foreach { case (pid, tot) => base(pid + 1) = tot }
-    var i = 1
-    while (i < base.length) { base(i) += base(i - 1); i += 1 }
-    val baseBc = s.sparkContext.broadcast(base)
-    // pass 2: each partition emits its docs' global offsets from its
-    // broadcast base — no total-order shuffle of anything
-    val offs = s.createDataFrame(
-      ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var off = baseBc.value(pid)
-        it.map { case (id, n) => val o = off; off += n; (id, o) }
-      }).toDF("doc_id", "off")
+    val rs = Scale.runningSum(tk.groupBy($"doc_id").agg(count(lit(1)).as("n")),
+      None, Seq($"doc_id".asc), Some("n"), partitions)
+    val total = rs.total
+    val offs = rs.rows.select($"doc_id", ($"cum" - $"n").as("off"))
     val firstOcc = tk.join(offs, "doc_id")
       .select($"w", ($"off" + $"pos" + 1L).as("gpos"))
       .groupBy($"w").agg(min($"gpos").as("f"))

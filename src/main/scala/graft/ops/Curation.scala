@@ -1569,17 +1569,11 @@ object Curation {
     * token budget" selection step. Inclusive greedy: a document is kept
     * while the running total INCLUDING it stays within budget.
     *
-    * Scale shape: the per-source running sum is a prefix sum over the
-    * (source, n_chars desc, doc_id) total order, computed as the
-    * two-pass distributed prefix sum ([[Packing.packSequences]]'s
-    * pattern) instead of a `Window.partitionBy(source)` running sum —
-    * the window form serializes each source through ONE reducer, so a
-    * mega-source (the realistic mix case: few sources, one huge) stalls
-    * the stage. Here the corpus range-partitions on the full sort key,
-    * so a mega-source PARALLELIZES across partitions; pass 1 ships one
-    * (partition, source) partial per boundary to the driver (≤
-    * partitions + sources rows), pass 2 emits each partition's rows
-    * knowing only its per-source base offsets.
+    * Scale shape: the per-source running sum over the (n_chars desc,
+    * doc_id) order is a [[Scale.runningSum]], not a
+    * `Window.partitionBy(source)` running sum — the window form
+    * serializes each source through ONE reducer, so a mega-source (the
+    * realistic mix case: few sources, one huge) stalls the stage.
     */
   def mixBudget(s: SparkSession, dir: String, budget: Long = MixBudget): DataFrame =
     mixBudgetOf(t(s, dir, "documents"), budget)
@@ -1594,7 +1588,7 @@ object Curation {
     mixRunsOf(docs, budget, partitions, initialRuns)
       .orderBy("source", "cum_tokens")
 
-  /** The greedy-fill kernel shared by [[mixBudgetOf]] and
+  /** The greedy fill shared by [[mixBudgetOf]] and
     * [[mixBudgetCurveOf]]: per-source inclusive prefix sums over the
     * (n_chars desc, doc_id) order, emitting only rows whose running
     * total stays within `cap` — the single-budget fill caps at its
@@ -1607,53 +1601,16 @@ object Curation {
       initialRuns: Map[String, Long] = Map.empty): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val budget = cap
-    // range-partition + sort on the FULL greedy order (source, n_chars
-    // desc, doc_id): partition p holds a contiguous slice, sources may
-    // span partitions. localCheckpoint freezes the sampled range
-    // boundaries so both passes see identical partitions.
-    val sized = docs
-      .select($"doc_id", $"source", $"n_chars".cast("long").as("n_chars"),
-        TextAnalysis.tokenCount($"text").as("n_tokens"))
-      .repartitionByRange(partitions, $"source".asc, $"n_chars".desc, $"doc_id".asc)
-      .sortWithinPartitions($"source".asc, $"n_chars".desc, $"doc_id".asc)
-      .as[(Long, String, Long, Long)]
-      .gatedCheckpoint()
-    // pass 1: per-(partition, source) token totals — bounded by
-    // #partitions + #sources rows, never corpus-sized
-    val partials = sized.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { case (_, src, _, n) =>
-        m.update(src, m.getOrElse(src, 0L) + n)
-      }
-      m.iterator.map { case (src, tot) => (pid, src, tot) }
-    }.collect()
-    // base(pid, src) = src's tokens in partitions before pid, seeded
-    // with the caller's prior per-source run (the incremental streaming
-    // form continues a source's greedy fill across batches this way)
-    val base: Map[(Int, String), Long] =
-      partials.groupBy(_._2).flatMap { case (src, rows) =>
-        var acc = initialRuns.getOrElse(src, 0L)
-        rows.sortBy(_._1).map { case (pid, _, tot) =>
-          val entry = ((pid, src), acc)
-          acc += tot
-          entry
-        }
-      }
-    val baseBc = s.sparkContext.broadcast(base)
-    // pass 2: sequential scan per partition; rows arrive in greedy order
-    val rows = sized.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val bases = baseBc.value
-      var cur: String = null
-      var run = 0L
-      it.flatMap { case (id, src, _, n) =>
-        if (src != cur) { cur = src; run = bases.getOrElse((pid, src), 0L) }
-        run += n
-        if (run <= budget) Iterator.single((src, id, n, run))
-        else Iterator.empty
-      }
-    }
-    s.createDataFrame(rows).toDF("source", "doc_id", "n_tokens", "cum_tokens")
+    val sized = docs.select($"doc_id", $"source",
+      $"n_chars".cast("long").as("n_chars"),
+      TextAnalysis.tokenCount($"text").as("n_tokens"))
+    // the caller's prior per-source run seeds the fill (the incremental
+    // streaming form continues a source's greedy fill across batches)
+    val run = $"cum" + coalesce(Scale.groupValue($"source", initialRuns), lit(0L))
+    Scale.runningSum(sized, Some("source"),
+      Seq($"n_chars".desc, $"doc_id".asc), Some("n_tokens"), partitions)
+      .rows.select($"source", $"doc_id", $"n_tokens", run.as("cum_tokens"))
+      .filter($"cum_tokens" <= cap)
   }
 
   /** Budgets for [[mixBudgetCurve]] — dyadic around [[MixBudget]]. */
@@ -1668,16 +1625,15 @@ object Curation {
     * so one prefix-sum pass capped at the largest candidate answers
     * every budget via conditional aggregates + `stack`.
     *
-    * 100 TB shape: the capped [[mixRunsOf]] kernel (two-pass
-    * distributed prefix sum — a mega-source parallelizes across range
-    * partitions, only per-(partition, source) totals reach the driver)
-    * emits at most sources × maxBudget tokens' worth of rows; then TWO
-    * map-side-combinable aggregations (doc/token mass conditionals, and
-    * a per-source min-run rollup for the active-source counts — a
-    * source is active at B iff its FIRST kept run ≤ B, which avoids the
-    * Expand-style multi-countDistinct that would replicate the rows
-    * |budgets|+1 times) joined as a broadcast 1-row cross. Cost
-    * independent of the budget count; plan-gated.
+    * 100 TB shape: the capped [[mixRunsOf]] fill (a per-source
+    * [[Scale.runningSum]]) emits at most sources × maxBudget tokens'
+    * worth of rows; then TWO map-side-combinable aggregations
+    * (doc/token mass conditionals, and a per-source min-run rollup for
+    * the active-source counts — a source is active at B iff its FIRST
+    * kept run ≤ B, which avoids the Expand-style multi-countDistinct
+    * that would replicate the rows |budgets|+1 times) joined as a
+    * broadcast 1-row cross. Cost independent of the budget count;
+    * plan-gated.
     */
   def mixBudgetCurve(s: SparkSession, dir: String): DataFrame =
     mixBudgetCurveOf(t(s, dir, "documents"))
@@ -1767,45 +1723,15 @@ object Curation {
       maxEpochs: Int = MixEpochs, partitions: Int = 32): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val sized = docs
-      .select($"doc_id", $"source", $"n_chars".cast("long").as("n_chars"),
-        TextAnalysis.tokenCount($"text").as("n_tokens"))
-      .withColumn("epoch", explode(sequence(lit(1L), lit(maxEpochs.toLong))))
-      .repartitionByRange(partitions,
-        $"source".asc, $"epoch".asc, $"n_chars".desc, $"doc_id".asc)
-      .sortWithinPartitions(
-        $"source".asc, $"epoch".asc, $"n_chars".desc, $"doc_id".asc)
-      .select($"doc_id", $"source", $"epoch", $"n_chars", $"n_tokens")
-      .as[(Long, String, Long, Long, Long)]
-      .gatedCheckpoint() // freeze sampled range boundaries
-    val partials = sized.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { case (_, src, _, _, n) =>
-        m.update(src, m.getOrElse(src, 0L) + n)
-      }
-      m.iterator.map { case (src, tot) => (pid, src, tot) }
-    }.collect() // bounded: <= partitions + sources rows
-    val base: Map[(Int, String), Long] =
-      partials.groupBy(_._2).flatMap { case (src, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, _, tot) =>
-          val e = ((pid, src), acc); acc += tot; e
-        }
-      }
-    val baseBc = s.sparkContext.broadcast(base)
-    val rows = sized.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val bases = baseBc.value
-      var cur: String = null
-      var run = 0L
-      it.flatMap { case (id, src, epoch, _, n) =>
-        if (src != cur) { cur = src; run = bases.getOrElse((pid, src), 0L) }
-        run += n
-        if (run <= budget) Iterator.single((src, epoch, id, n, run))
-        else Iterator.empty
-      }
-    }
-    s.createDataFrame(rows)
-      .toDF("source", "epoch", "doc_id", "n_tokens", "cum_tokens")
+    val sized = docs.select($"doc_id", $"source",
+      $"n_chars".cast("long").as("n_chars"),
+      TextAnalysis.tokenCount($"text").as("n_tokens"),
+      explode(sequence(lit(1L), lit(maxEpochs.toLong))).as("epoch"))
+    Scale.runningSum(sized, Some("source"),
+      Seq($"epoch".asc, $"n_chars".desc, $"doc_id".asc), Some("n_tokens"),
+      partitions)
+      .rows.filter($"cum" <= budget)
+      .select($"source", $"epoch", $"doc_id", $"n_tokens", $"cum".as("cum_tokens"))
       .orderBy("source", "cum_tokens")
   }
 
@@ -1892,12 +1818,8 @@ object Curation {
     * rank), so the min-k aggregator that retired the top-cap windows
     * does not apply; and a window partition cannot be split by AQE,
     * so a hot source's full mass sorted through ONE task. The rank is
-    * now [[Scale.perKeyRowNumber]]'s two-pass distributed prefix
-    * count: range-partition on the FULL (source, n_tokens, doc_id)
-    * order (a mega-source parallelizes across partitions), ship one
-    * bounded (partition, source) count per boundary to the driver,
-    * emit ranks from per-partition base offsets. Output unchanged —
-    * same oracle, same ranks.
+    * now [[Scale.perKeyRowNumber]] (a per-source [[Scale.runningSum]]
+    * of 1). Output unchanged — same oracle, same ranks.
     */
   def mixCurriculum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

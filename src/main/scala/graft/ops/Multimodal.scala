@@ -491,7 +491,7 @@ object Multimodal {
     * split (placeholders pay context but no text loss).
     *
     * 100 TB shape: the global offset is [[Packing.packSequencesOf]]'s
-    * two-pass distributed prefix sum (never an unpartitioned window);
+    * [[Scale.runningSum]] (never an unpartitioned window);
     * the split arithmetic is codegen'd integer min/max on the span
     * rows; one seq_id aggregation ends the plan. All-integer ⇒
     * hash-exact.
@@ -505,13 +505,9 @@ object Multimodal {
         TextAnalysis.tokenCount($"text").as("nt"))
       .select($"doc_id", $"it", ($"it" + $"nt").as("eff"))
       .filter($"eff" > 0L)
-      .gatedCheckpoint() // feeds the ranged kernel AND the span join
-    val ranged = eff.select($"doc_id", $"eff")
-      .repartitionByRange(partitions, $"doc_id")
-      .sortWithinPartitions($"doc_id")
-      .as[(Long, Long)]
-      .gatedCheckpoint() // freeze sampled range boundaries
-    val spans = Packing.packSequencesOf(ranged, Packing.SeqLen)
+      .gatedCheckpoint() // feeds the running sum AND the span join
+    val spans = Packing.packSequencesOf(
+      eff.select($"doc_id", $"eff").as[(Long, Long)], Packing.SeqLen, partitions)
     spans.join(eff.select($"doc_id", $"it"), "doc_id")
       // span [tok_from, tok_to) on the doc's LOCAL axis; images occupy
       // the [0, it) prefix, so the image share is an integer clamp

@@ -23,13 +23,9 @@ import graft.ops.Scale.GatedCheckpoint
   *
   * 100 TB shape of pack_sequences: the global token offset is a prefix
   * sum over a total order — the naive form (`Window.orderBy` with no
-  * partition key) funnels the corpus through ONE task. This
-  * implementation is the standard two-pass distributed prefix sum
-  * instead: range-partition by doc_id, per-partition token totals (one
-  * tiny job: #partitions rows to the driver — 1000 rows on a
-  * 1000-executor cluster), then each partition emits its rows knowing
-  * only its base offset. Cost is two scans of (doc_id, n_tokens) and no
-  * wide shuffle of text at all.
+  * partition key) funnels the corpus through ONE task; here it is a
+  * [[Scale.runningSum]] over (doc_id, n_tokens), with no wide shuffle
+  * of text at all.
   */
 object Packing {
 
@@ -38,72 +34,35 @@ object Packing {
   val ChunkOverlap = 64L
   val ChunkStride: Long = ChunkLen - ChunkOverlap
 
-  /** (doc_id, n_tokens) for non-empty docs, range-partitioned and sorted
-    * so partition p holds a contiguous doc_id range and ranges ascend
-    * with p. localCheckpoint freezes the layout: the totals job and the
-    * emit job MUST see identical partitions (the range boundaries come
-    * from sampling, so two independent evaluations could legally split
-    * differently).
-    */
-  private def rangedTokenCounts(s: SparkSession, dir: String, partitions: Int) = {
-    import s.implicits._
-    t(s, dir, "documents")
-      .select($"doc_id", TextAnalysis.tokenCount($"text").as("n"))
-      .filter($"n" > 0L)
-      .repartitionByRange(partitions, $"doc_id")
-      .sortWithinPartitions($"doc_id")
-      .as[(Long, Long)]
-      .gatedCheckpoint()
-  }
-
   /** Concat-and-chunk packing: rows (doc_id, seq_id, tok_from, tok_to) —
     * tokens [tok_from, tok_to) of doc_id belong to training sequence
     * seq_id. A document longer than `seqLen` spans several sequences; a
     * sequence boundary mid-document splits the document's slice.
     */
   def packSequences(s: SparkSession, dir: String, seqLen: Long = SeqLen,
-      partitions: Int = 32): DataFrame =
-    packSequencesOf(rangedTokenCounts(s, dir, partitions), seqLen)
+      partitions: Int = 32): DataFrame = {
+    import s.implicits._
+    packSequencesOf(t(s, dir, "documents")
+      .select($"doc_id", TextAnalysis.tokenCount($"text").as("n"))
+      .as[(Long, Long)], seqLen, partitions)
+  }
 
-  /** [[packSequences]] over a pre-ranged (doc_id, n) Dataset — the form
-    * the ScalaCheck property drives with generated corpora. The input
-    * MUST be range-partitioned and sorted by doc_id (the registered
-    * query's rangedTokenCounts guarantees it).
+  /** [[packSequences]] over any (doc_id, n) Dataset — the form the
+    * ScalaCheck property drives with generated corpora. Empty documents
+    * (n = 0) take no slice of any sequence.
     */
   def packSequencesOf(
-      ranged: org.apache.spark.sql.Dataset[(Long, Long)],
-      seqLen: Long): DataFrame = {
-    val s = ranged.sparkSession
-    // pass 1: per-partition token totals -> base offset per partition
-    val totals = ranged.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var sum = 0L
-        it.foreach(sum += _._2)
-        Iterator.single((pid, sum))
-      }
-      .collect()
-      .sortBy(_._1)
-    val base = new Array[Long](totals.length + 1)
-    totals.foreach { case (pid, sum) => base(pid + 1) = sum }
-    var i = 1
-    while (i < base.length) { base(i) += base(i - 1); i += 1 }
-    val baseBc = s.sparkContext.broadcast(base)
-    // pass 2: emit (doc, seq) incidences from the per-partition scan
-    val rows = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var off = baseBc.value(pid)
-      it.flatMap { case (id, n) =>
-        val start = off
-        off += n
-        val first = start / seqLen
-        val last = (start + n - 1) / seqLen
-        (first to last).iterator.map { sq =>
-          (id, sq, math.max(0L, sq * seqLen - start),
-            math.min(n, (sq + 1) * seqLen - start))
-        }
-      }
-    }
-    s.createDataFrame(rows)
-      .toDF("doc_id", "seq_id", "tok_from", "tok_to")
+      counts: org.apache.spark.sql.Dataset[(Long, Long)],
+      seqLen: Long, partitions: Int = 32): DataFrame = {
+    val rs = Scale.runningSum(counts.toDF("doc_id", "n").filter(col("n") > 0L),
+      None, Seq(col("doc_id").asc), Some("n"), partitions)
+    rs.rows
+      .select(col("doc_id"), col("n"), (col("cum") - col("n")).as("start"),
+        explode(sequence(expr(s"(cum - n) div $seqLen"),
+          expr(s"(cum - 1) div $seqLen"))).as("seq_id"))
+      .select(col("doc_id"), col("seq_id"),
+        greatest(lit(0L), col("seq_id") * seqLen - col("start")).as("tok_from"),
+        least(col("n"), (col("seq_id") + 1L) * seqLen - col("start")).as("tok_to"))
       .orderBy("doc_id", "seq_id")
   }
 
@@ -137,42 +96,26 @@ object Packing {
     * document per block, deterministic and engine-replayable where
     * true greedy bin-packing is inherently sequential.
     *
-    * 100 TB shape: the global size rank is the [[packSequencesOf]]
-    * two-pass distributed prefix COUNT over the
-    * range-partitioned (n desc, id) order — no single-partition
-    * window; per-partition row counts (≤ partitions rows) are the only
-    * driver traffic, and the per-shard summary aggregates with
-    * map-side partials. Output is the N-row shard manifest.
+    * 100 TB shape: the global size rank is a [[Scale.runningSum]] of 1
+    * over the (n desc, id) order — no single-partition window — and the
+    * per-shard summary aggregates with map-side partials. Output is the
+    * N-row shard manifest.
     */
   def packShards(s: SparkSession, dir: String,
       shards: Int = ShardCount, partitions: Int = 32): DataFrame = {
     import s.implicits._
-    val ranged = t(s, dir, "documents")
-      .select($"doc_id", TextAnalysis.tokenCount($"text").as("n"))
-      .filter($"n" > 0L)
-      .repartitionByRange(partitions, $"n".desc, $"doc_id".asc)
-      .sortWithinPartitions($"n".desc, $"doc_id".asc)
-      .as[(Long, Long)]
-      .gatedCheckpoint()
-    val counts = ranged.rdd
-      .mapPartitionsWithIndex { (pid, it) => Iterator.single((pid, it.size.toLong)) }
-      .collect().sortBy(_._1)
-    val base = new Array[Long](counts.length + 1)
-    counts.foreach { case (pid, c) => base(pid + 1) = c }
-    var i = 1
-    while (i < base.length) { base(i) += base(i - 1); i += 1 }
-    val baseBc = s.sparkContext.broadcast(base)
-    val assigned = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var r = baseBc.value(pid) // 0-based global rank
-      it.map { case (id, n) =>
-        val block = r / shards
-        val pos = (r % shards).toInt
-        val shard = if (block % 2 == 0L) pos else shards - 1 - pos
-        r += 1
-        (shard.toLong, id, n)
-      }
-    }
-    s.createDataFrame(assigned).toDF("shard_id", "doc_id", "n_tokens")
+    val docs = t(s, dir, "documents")
+      .select($"doc_id", TextAnalysis.tokenCount($"text").as("n_tokens"))
+      .filter($"n_tokens" > 0L)
+    // serpentine deal of the 0-based global size rank cum − 1: block
+    // (cum − 1) / N deals left-to-right when even, right-to-left when odd
+    val pos = ($"cum" - 1L) % shards.toLong
+    Scale.runningSum(docs, None, Seq($"n_tokens".desc, $"doc_id".asc), None,
+      partitions)
+      .rows.select(
+        when(expr(s"(cum - 1) div $shards") % 2L === 0L, pos)
+          .otherwise(lit(shards - 1L) - pos).as("shard_id"),
+        $"doc_id", $"n_tokens")
       .groupBy($"shard_id")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_tokens").as("shard_tokens"),

@@ -170,10 +170,8 @@ object Sampling {
     * distributed: the corpus replicates ×epochs (codegen'd sequence
     * explode), orders per source by (epoch, md5(doc_id), doc_id) — the
     * uniform recomputable draw of the cap/temperature ops — and the
-    * inclusive running total comes from the same two-pass distributed
-    * prefix sum as the mix family (range-partitioned on the full sort
-    * key, so a mega-source parallelizes; only per-(partition, source)
-    * partials reach the driver). All-integer output → hash-exact
+    * inclusive running total is a per-source [[Scale.runningSum]].
+    * All-integer output → hash-exact
     * against the DuckDB oracle, whose allocator is a recursive CTE over
     * the same capacity order.
     */
@@ -232,46 +230,15 @@ object Sampling {
       maxEpochs: Int = UnimaxEpochs, partitions: Int = 32): DataFrame = {
     val s = sized.sparkSession
     import s.implicits._
-    // epoch-replicated uniform-draw order + distributed prefix sum
-    val rep = sized
-      .withColumn("epoch", explode(sequence(lit(1L), lit(maxEpochs.toLong))))
-      .withColumn("h", md5($"doc_id".cast("string")))
-      .repartitionByRange(partitions,
-        $"source".asc, $"epoch".asc, $"h".asc, $"doc_id".asc)
-      .sortWithinPartitions(
-        $"source".asc, $"epoch".asc, $"h".asc, $"doc_id".asc)
-      .select($"source", $"epoch", $"doc_id", $"n_tokens")
-      .as[(String, Long, Long, Long)]
-      .gatedCheckpoint() // freeze sampled range boundaries
-    val partials = rep.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { case (src, _, _, n) =>
-        m.update(src, m.getOrElse(src, 0L) + n)
-      }
-      m.iterator.map { case (src, tot) => (pid, src, tot) }
-    }.collect() // bounded: <= partitions + sources rows
-    val base: Map[(Int, String), Long] =
-      partials.groupBy(_._2).flatMap { case (src, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, _, tot) =>
-          val e = ((pid, src), acc); acc += tot; e
-        }
-      }
-    val baseBc = s.sparkContext.broadcast(base)
-    val budgetBc = s.sparkContext.broadcast(budgetOf)
-    val kept = rep.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val bases = baseBc.value
-      val buds = budgetBc.value
-      var cur: String = null
-      var run = 0L
-      it.flatMap { case (src, epoch, id, n) =>
-        if (src != cur) { cur = src; run = bases.getOrElse((pid, src), 0L) }
-        run += n
-        if (run <= buds(src)) Iterator.single((src, epoch, id, n))
-        else Iterator.empty
-      }
-    }
-    s.createDataFrame(kept).toDF("source", "epoch", "doc_id", "n_tokens")
+    // per-source running sum over the epoch-replicated uniform-draw order
+    val rep = sized.select($"source",
+      explode(sequence(lit(1L), lit(maxEpochs.toLong))).as("epoch"),
+      $"doc_id", $"n_tokens")
+    Scale.runningSum(rep, Some("source"),
+      Seq($"epoch".asc, md5($"doc_id".cast("string")).asc, $"doc_id".asc),
+      Some("n_tokens"), partitions)
+      .rows.filter($"cum" <= Scale.groupValue($"source", budgetOf))
+      .select("source", "epoch", "doc_id", "n_tokens")
   }
 
   /** [[sampleUnimax]] over an arbitrary (doc_id, source, text) frame. */

@@ -1,8 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, NullType}
 
 /** Scale patterns as reusable operators: skew-salted aggregation and
   * bucketed co-located joins. These exist so pipelines have first-class
@@ -246,13 +249,133 @@ object Scale {
       .drop("__z")
       .write.mode("overwrite").parquet(path)
 
+  /** What [[runningSum]] returns: the input rows with the inclusive
+    * running sum appended as the non-null long column `cum`, and each
+    * group's weight total (an ungrouped sum keeps its one total under
+    * the `null` key). `rows` is lazy; the totals are already on the
+    * driver.
+    */
+  final case class RunningSums(rows: DataFrame, totals: Map[Any, Long]) {
+    def total: Long = totals.values.sum
+  }
+
+  /** The distributed running sum: each row's `cum` is the sum of the
+    * long column `weight` (1 per row when None) over the rows of its
+    * `group` (every row when None) at or before it in `order` — what
+    * `sum(weight).over(Window.partitionBy(group).orderBy(order))`
+    * computes, without the window. A window funnels each group (all
+    * rows, when ungrouped) through ONE task; here the rows
+    * range-partition on the full (group asc, order) key, so a mega-group
+    * parallelizes across partitions, and the sum is the two-pass
+    * distributed prefix sum:
+    *
+    *  1. range-partition and sort on (group, order), then freeze the
+    *     layout with [[GatedCheckpoint.gatedCheckpoint]] — the range
+    *     boundaries are sampled, so the totals job and the scan must
+    *     read one frozen layout. The freeze is inside the kernel:
+    *     callers neither pre-range nor freeze their input;
+    *  2. collect the per-(partition, group) weight totals — the only
+    *     data that reaches the driver, ≤ partitions + |groups| rows at
+    *     any corpus scale;
+    *  3. broadcast each group's base per partition (its weight in the
+    *     earlier partitions) and scan: a partition's first row starts
+    *     from its group's base whatever the group value, null included.
+    *
+    * Steps 1–2 run eagerly (the range sample, the freeze and the totals
+    * collect: three jobs); the scan runs inside the caller's action, so
+    * an emission rule written as a filter over `cum` and the totals
+    * costs one more job.
+    *
+    * Contract: (group, order) must be a total order over the rows —
+    * give `order` an id tiebreaker — or tied rows may sum in either
+    * order; `weight` must be a non-null long column; the input must not
+    * have a `cum` column.
+    */
+  def runningSum(df: DataFrame, group: Option[String], order: Seq[Column],
+      weight: Option[String], partitions: Int): RunningSums = {
+    require(!df.columns.contains("cum"), "runningSum appends `cum`; rename the input's")
+    require(weight.forall(df.schema(_).dataType == LongType), "runningSum weighs by a long column")
+    val s = df.sparkSession
+    val sortCols = group.map(col(_).asc).toSeq ++ order
+    val sorted = df
+      .repartitionByRange(partitions, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+      .gatedCheckpoint()
+    val schema = sorted.schema
+    val gIdx = group.fold(-1)(schema.fieldIndex)
+    val gType = group.fold[DataType](NullType)(schema(_).dataType)
+    val wIdx = weight.fold(-1)(schema.fieldIndex)
+    // both passes read the frozen catalyst rows as they are; a group's
+    // rows are contiguous in a partition, so a group value is copied
+    // out of its row once per run, never per row
+    val frozen = sorted.queryExecution.toRdd
+    val groupOf: InternalRow => Any =
+      r => if (gIdx < 0 || r.isNullAt(gIdx)) null else r.get(gIdx, gType)
+    val weightOf: InternalRow => Long = r => if (wIdx < 0) 1L else r.getLong(wIdx)
+    val partials = frozen.mapPartitionsWithIndex { (pid, it) =>
+      val runs = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Long)]
+      var cur: Any = null
+      var started = false
+      var tot = 0L
+      it.foreach { r =>
+        val g = groupOf(r)
+        if (!started || g != cur) {
+          if (started) runs += ((pid, cur, tot))
+          cur = InternalRow.copyValue(g); started = true
+          tot = 0L
+        }
+        tot += weightOf(r)
+      }
+      if (started) runs += ((pid, cur, tot))
+      runs.iterator
+    }.collect()
+    val bases: Map[(Int, Any), Long] =
+      partials.groupBy(_._2).flatMap { case (g, rows) =>
+        var acc = 0L
+        rows.sortBy(_._1).map { case (pid, _, w) =>
+          val e = ((pid, g), acc); acc += w; e
+        }
+      }
+    val basesBc = s.sparkContext.broadcast(bases)
+    val outSchema = schema.add("cum", LongType, nullable = false)
+    val scanned = frozen.mapPartitionsWithIndex { (pid, it) =>
+      val base = basesBc.value
+      val toUnsafe = UnsafeProjection.create(outSchema)
+      val joined = new JoinedRow()
+      val cumRow = new GenericInternalRow(1)
+      var cur: Any = null
+      var started = false
+      var cum = 0L
+      it.map { r =>
+        val g = groupOf(r)
+        if (!started || g != cur) {
+          cur = InternalRow.copyValue(g); started = true
+          cum = base((pid, cur))
+        }
+        cum += weightOf(r)
+        cumRow.setLong(0, cum)
+        toUnsafe(joined(r, cumRow)): InternalRow
+      }
+    }
+    val toScala = CatalystTypeConverters.createToScalaConverter(gType)
+    RunningSums(org.apache.spark.sql.graft.CatalystFrames.of(s, scanned, outSchema),
+      partials.groupMapReduce(p => toScala(p._2))(_._3)(_ + _))
+  }
+
+  /** `byGroup(group)` as a column, for emission rules over
+    * [[runningSum]] rows: a null-safe `when` chain over the (few)
+    * groups, so a null group finds its entry; null for a group the map
+    * lacks.
+    */
+  def groupValue(group: Column, byGroup: Map[_, Long]): Column =
+    byGroup.foldLeft(lit(null).cast("long")) { case (acc, (g, v)) =>
+      when(group <=> lit(g), lit(v)).otherwise(acc)
+    }
+
   /** Equi-depth cutpoints of a numeric column: the 2^bits − 1 inclusive
     * integer-rank boundaries (cut_q = min v with 2^bits·cum ≥ q·n) of
     * the ACTUAL distribution — the rank grid behind [[rankScaleToBits]].
-    * Computed by the q66 kernel: (value, count) collapse with map-side
-    * partials, range partition, two-pass distributed prefix sum; no
-    * monolithic percentile buffer, and only the ≤ 2^bits − 1 crossing
-    * rows ever reach the driver. Empty input yields an empty array.
+    * Empty input yields an empty array.
     */
   def rankCutpoints(
       df: DataFrame, c: Column, bits: Int, partitions: Int = 32): Array[Double] =
@@ -261,39 +384,27 @@ object Scale {
   /** [[rankCutpoints]] with an arbitrary denominator: the den − 1
     * inclusive integer-rank boundaries (cut_q = min v with den·cum ≥
     * q·n). den = 10 gives exact deciles — the q66 definition, exposed
-    * for any operator needing equi-depth boundaries of a column.
+    * for any operator needing equi-depth boundaries of a column. The
+    * column collapses to (value, count) with map-side partials and the
+    * cumulative count is a [[runningSum]]; only the ≤ den − 1 crossing
+    * rows reach the driver, never a monolithic percentile buffer.
     */
   def rankCutpointsN(
       df: DataFrame, c: Column, den: Int, partitions: Int = 32): Array[Double] = {
-    val s = df.sparkSession
-    import s.implicits._
-    val sorted = df.select(c.cast("double").as("v"))
-      .groupBy($"v").agg(count(lit(1)).as("c"))
-      .repartitionByRange(partitions, $"v".asc)
-      .sortWithinPartitions($"v".asc)
-      .as[(Double, Long)]
-      .gatedCheckpoint() // freeze sampled range boundaries
-    val partials = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var tot = 0L
-      it.foreach(tot += _._2)
-      Iterator.single((pid, tot))
-    }.collect().sortBy(_._1)
-    val n = partials.map(_._2).sum
+    val counts = df.select(c.cast("double").as("v"))
+      .groupBy(col("v")).agg(count(lit(1)).as("c"))
+    val rs = runningSum(counts, None, Seq(col("v").asc), Some("c"), partitions)
+    val n = rs.total
     if (n == 0L) return Array.empty
-    val bases = partials.scanLeft((0, 0L)) { case ((_, acc), (pid, tot)) =>
-      (pid + 1, acc + tot)
-    }.init.map { case (pid, acc) => pid -> acc }.toMap
-    val basesBc = s.sparkContext.broadcast(bases)
-    val cuts = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cum = basesBc.value(pid)
-      it.flatMap { case (v, cnt) =>
-        val prev = cum
-        cum += cnt
-        (1 until den).iterator
-          .filter(q => den.toLong * prev < q.toLong * n && den.toLong * cum >= q.toLong * n)
-          .map(q => q -> v)
-      }
-    }.collect().toMap
+    // a row crosses rank q when den·(cum − c) < q·n ≤ den·cum: the q in
+    // (lo, hi], in integer division
+    val cuts = rs.rows
+      .select(col("v"), expr(s"($den * (cum - c)) div $n").as("lo"),
+        least(expr(s"($den * cum) div $n"), lit(den - 1L)).as("hi"))
+      .filter(col("hi") > col("lo"))
+      .collect()
+      .flatMap(r => (r.getLong(1) + 1 to r.getLong(2)).map(q => q.toInt -> r.getDouble(0)))
+      .toMap
     (1 until den).map(cuts).toArray
   }
 
@@ -305,13 +416,10 @@ object Scale {
     * total = q·n + r, the first r tiles hold q+1 rows; tile t's last
     * row has rank t·q + min(t, r).
     *
-    * Kernel: range-partition by (key, id), per-partition COUNTS (one
-    * tiny job — #partitions rows to the driver), prefix-sum bases,
-    * then each partition emits only the ≤ n−1 rows whose global rank
-    * is a tile boundary. Two scans of (key, id), nothing else ever
-    * leaves the executors. The caller turns the boundaries into a
-    * codegen'd score with [[ntileFromBoundaries]] — a broadcast-free
-    * comparison chain against n−1 literal pairs.
+    * The global rank is a [[runningSum]] of 1; only the ≤ n − 1 rows
+    * whose rank is a tile boundary reach the driver. The caller turns
+    * the boundaries into a codegen'd score with [[ntileFromBoundaries]]
+    * — a broadcast-free comparison chain against n−1 literal pairs.
     *
     * The (key, id) pair must be unique (id a tiebreaker), exactly the
     * precondition a deterministic ntile ordering needs anyway. DESC
@@ -320,41 +428,20 @@ object Scale {
     */
   def ntileBoundaries(df: DataFrame, key: Column, id: Column, n: Int,
       partitions: Int = 32): Array[(Long, Long)] = {
-    val s = df.sparkSession
-    import s.implicits._
-    val sorted = df.select(key.cast("long").as("k"), id.cast("long").as("id"))
-      .repartitionByRange(partitions, $"k".asc, $"id".asc)
-      .sortWithinPartitions($"k".asc, $"id".asc)
-      .as[(Long, Long)]
-      .gatedCheckpoint() // freeze sampled range boundaries
-    val partials = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var c = 0L
-      it.foreach(_ => c += 1)
-      Iterator.single((pid, c))
-    }.collect().sortBy(_._1)
-    val total = partials.map(_._2).sum
+    val rs = runningSum(
+      df.select(key.cast("long").as("k"), id.cast("long").as("id")),
+      None, Seq(col("k").asc, col("id").asc), None, partitions)
+    val total = rs.total
     if (total == 0L) return Array.empty
     val per = total / n
     val rem = (total % n).toInt
     // rank (1-based) of the LAST row of tile q, q = 1..n-1; duplicates
     // when total < n (trailing empty tiles share the final row's rank)
-    val targets = (1 until n).map(q => q * per + math.min(q, rem)).toArray
-    val bases = partials.scanLeft((0, 0L)) { case ((_, acc), (pid, c)) =>
-      (pid + 1, acc + c)
-    }.init.map { case (pid, acc) => pid -> acc }.toMap
-    val basesBc = s.sparkContext.broadcast(bases)
-    val targetsBc = s.sparkContext.broadcast(targets)
-    val found = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var rank = basesBc.value(pid)
-      val ts = targetsBc.value
-      it.flatMap { case (k, id) =>
-        rank += 1
-        val r = rank
-        ts.indices.iterator.filter(ts(_) == r).map(qi => (qi, k, id))
-      }
-    }.collect()
-    val byQ = found.map { case (qi, k, id) => qi -> ((k, id)) }.toMap
-    (0 until n - 1).map(byQ).toArray
+    val targets = (1 until n).map(q => q * per + math.min(q, rem))
+    val byRank = rs.rows.filter(col("cum").isin(targets.distinct: _*))
+      .select("cum", "k", "id").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    targets.map(byRank).toArray
   }
 
   /** The ntile score column for [[ntileBoundaries]] output: a row's
@@ -378,65 +465,17 @@ object Scale {
     * assigns a rank to EVERY row, and a window partition cannot be
     * split by AQE: a hot key's full mass sorts through ONE task at
     * 100 TB (the smell the min-k aggregator kills for top-CAP shapes —
-    * but min-k cannot produce a full ranking). This kernel can: it is
-    * the [[ntileBoundaries]]/unimax two-pass distributed prefix count.
-    *
-    * Pass 0 range-partitions on the FULL (key, order) sort key, so a
-    * mega-key PARALLELIZES across partitions instead of serializing
-    * through one. Pass 1 ships one (partition, key) row count per
-    * boundary to the driver (≤ partitions + |keys| rows — bounded at
-    * any corpus scale). Pass 2 emits each row with rank = its key's
-    * base offset for this partition + the local running position.
-    * Nothing corpus-sized ever leaves the executors.
+    * but min-k cannot produce a full ranking). The rank is a per-key
+    * [[runningSum]] of 1, so a mega-key parallelizes across partitions.
     *
     * The (key, orderCols) tuple must be a total order (unique — give
     * it an id tiebreaker), exactly what a deterministic rank needs
     * anyway. DESC orderings: negate the column.
     */
   def perKeyRowNumber(df: DataFrame, keyCol: String, orderCols: Seq[String],
-      rankCol: String, partitions: Int = 32): DataFrame = {
-    val s = df.sparkSession
-    val sortCols = (keyCol +: orderCols).map(c => col(c).asc)
-    val sorted = df
-      .repartitionByRange(partitions, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .gatedCheckpoint() // freeze sampled range boundaries
-    val keyIdx = sorted.schema.fieldIndex(keyCol)
-    val partials = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[Any, Long]
-      it.foreach { r =>
-        val k = r.get(keyIdx)
-        m.update(k, m.getOrElse(k, 0L) + 1L)
-      }
-      m.iterator.map { case (k, c) => (pid, k, c) }
-    }.collect() // bounded: <= partitions + |keys| rows
-    val base: Map[(Int, Any), Long] =
-      partials.groupBy(_._2).flatMap { case (k, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, _, c) =>
-          val e = ((pid, k), acc); acc += c; e
-        }
-      }
-    val baseBc = s.sparkContext.broadcast(base)
-    val schema = sorted.schema
-      .add(rankCol, org.apache.spark.sql.types.LongType, nullable = false)
-    val ranked = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val bases = baseBc.value
-      var cur: Any = null
-      var started = false
-      var rank = 0L
-      it.map { r =>
-        val k = r.get(keyIdx)
-        if (!started || k != cur) {
-          cur = k; started = true
-          rank = bases.getOrElse((pid, k), 0L)
-        }
-        rank += 1L
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ rank)
-      }
-    }
-    s.createDataFrame(ranked, schema)
-  }
+      rankCol: String, partitions: Int = 32): DataFrame =
+    runningSum(df, Some(keyCol), orderCols.map(col(_).asc), None, partitions)
+      .rows.withColumnRenamed("cum", rankCol)
 
   /** Rank (equi-depth) scaling to the [0, 2^bits) grid: a value's cell
     * is how many cutpoints it exceeds — each cell holds ~the same row

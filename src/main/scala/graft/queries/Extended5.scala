@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables.t
-import graft.ops.Scale.GatedCheckpoint
 
 /** Fifth extension block of the SQL-pass-through surface (SURVEY.md
   * §2.B): the interval/temporal join family Spark has no dedicated
@@ -156,51 +155,17 @@ object Extended5 {
     * Scale shape: a monolithic percentile aggregate buffers the whole
     * column in ONE reducer per percentile (the first cut of this query
     * cost 18 s at sf0.1 — 9 aggregates × 600 k buffered doubles); here
-    * the column collapses to (value, count) with map-side partials,
-    * range-partitions by value, and the cumulative count is the
-    * standard two-pass distributed prefix sum ([[graft.ops.Curation
-    * .mixBudgetOf]]'s pattern): pass 1 ships one per-partition total
-    * (≤ #partitions rows) to the driver, pass 2 finds the ≤ 9 rows
-    * whose cumulative count crosses a decile rank — every stage is
-    * parallel, nothing corpus-sized ever sits in one buffer. The nine
-    * cutpoints then broadcast back over the scan and each row's bucket
-    * is a sum of nine comparisons — same bucketing pass as before. At
-    * 100 TB swap the exact cutpoints for approx_percentile if the
+    * the cutpoints are [[graft.ops.Scale.rankCutpointsN]] (den = 10),
+    * and each row's bucket is a sum of nine comparisons against them.
+    * At 100 TB swap the exact cutpoints for approx_percentile if the
     * (value, count) table itself is too hot — the bucket pass is
     * unchanged; that swap is the only scale knob.
     */
   def q66EquidepthHist(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val li = t(s, dir, "lineitem").select($"l_extendedprice".as("x"))
-    val parts = 32
-    val sorted = li.groupBy($"x").agg(count(lit(1)).as("c"))
-      .repartitionByRange(parts, $"x".asc)
-      .sortWithinPartitions($"x".asc)
-      .as[(Double, Long)]
-      .gatedCheckpoint() // freeze sampled range boundaries
-    val partials = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var tot = 0L
-      it.foreach(tot += _._2)
-      Iterator.single((pid, tot))
-    }.collect().sortBy(_._1) // bounded: one row per partition
-    val n = partials.map(_._2).sum
-    val bases = partials.scanLeft((0, 0L)) { case ((_, acc), (pid, tot)) =>
-      (pid + 1, acc + tot)
-    }.init.map { case (pid, acc) => pid -> acc }.toMap
-    val basesBc = s.sparkContext.broadcast(bases)
-    val cuts = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cum = basesBc.value(pid)
-      it.flatMap { case (x, c) =>
-        val prev = cum
-        cum += c
-        (1 to 9).iterator
-          .filter(q => 10L * prev < q * n && 10L * cum >= q * n)
-          .map(q => q -> x)
-      }
-    }.collect().toMap // bounded: exactly 9 rows
-    val bucket = (1 to 9)
-      .map(q => when($"x" > lit(cuts(q)), 1).otherwise(0))
-      .reduce(_ + _)
+    val bucket = graft.ops.Scale.rankScaleToBits($"x",
+      graft.ops.Scale.rankCutpointsN(li, $"x", 10))
     li.select($"x", bucket.as("bucket"))
       .groupBy($"bucket")
       .agg(count(lit(1)).as("n"), min($"x").as("lo"), max($"x").as("hi"))

@@ -190,56 +190,23 @@ object QualityQueries {
   /** Exact per-group discrete medians (percentile_disc(0.5) semantics:
     * min v with 2·cum ≥ n — the inclusive rational comparison both
     * engines implement, cleared of the division so there is no float
-    * boundary hazard) via the two-pass distributed prefix sum over
-    * (group, value) counts. A grouped percentile aggregate buffers
-    * every group's whole column in one reducer; here the column
-    * collapses to (group, value, count) with map-side partials,
-    * range-partitions on the (group, value) total order — so one huge
-    * group PARALLELIZES across partitions — and only per-(partition,
-    * group) totals (bounded) ever reach the driver. The result is a
-    * tiny group→median map, not a frame.
+    * boundary hazard): cum is the per-group [[graft.ops.Scale.runningSum]]
+    * of 1 over (group, value), so one huge group parallelizes across
+    * partitions, and only the one crossing row per group reaches the
+    * driver. Raw rows go in directly (one exchange) — a (group, value)
+    * pre-count would be a second shuffle for no reduction when values
+    * are near-distinct, and duplicate rows walk the same crossing rule
+    * at weight 1. The result is a tiny group→median map, not a frame.
     */
   private def groupedDiscMedian(
       pairs: org.apache.spark.sql.Dataset[(String, Double)],
       parts: Int = 32): Map[String, Double] = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    // raw rows range-partition directly (one exchange) — a (group,
-    // value) pre-count would be a second shuffle for no reduction when
-    // values are near-distinct, and duplicate rows walk the same
-    // crossing logic at c = 1
-    val sorted = pairs.toDF("g", "v")
-      .repartitionByRange(parts, $"g".asc, $"v".asc)
-      .sortWithinPartitions($"g".asc, $"v".asc)
-      .as[(String, Double)]
-      .gatedCheckpoint() // freeze sampled range boundaries
-    val partials = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { case (g, _) => m.update(g, m.getOrElse(g, 0L) + 1L) }
-      m.iterator.map { case (g, tot) => (pid, g, tot) }
-    }.collect() // bounded: <= partitions + groups rows
-    val nByG = partials.groupBy(_._2).map { case (g, rs) => g -> rs.map(_._3).sum }
-    val base: Map[(Int, String), Long] =
-      partials.groupBy(_._2).flatMap { case (g, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, _, tot) =>
-          val e = ((pid, g), acc); acc += tot; e
-        }
-      }
-    val baseBc = s.sparkContext.broadcast(base)
-    val nBc = s.sparkContext.broadcast(nByG)
-    sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cur: String = null
-      var cum = 0L
-      it.flatMap { case (g, v) =>
-        if (g != cur) { cur = g; cum = baseBc.value.getOrElse((pid, g), 0L) }
-        val prev = cum
-        cum += 1L
-        val n = nBc.value(g)
-        if (2L * prev < n && 2L * cum >= n) Iterator.single(g -> v)
-        else Iterator.empty
-      }
-    }.collect().toMap // bounded: one crossing row per group
+    val rs = graft.ops.Scale.runningSum(pairs.toDF("g", "v"), Some("g"),
+      Seq(col("v").asc), None, parts)
+    val n = graft.ops.Scale.groupValue(col("g"), rs.totals)
+    rs.rows.filter(lit(2L) * (col("cum") - 1L) < n && lit(2L) * col("cum") >= n)
+      .select("g", "v").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
   }
 
   def dqOutlierMad(s: SparkSession, dir: String): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Crash-safe, replay-idempotent commit protocol for the foreachBatch
   * streaming states ([[graft.examples.StreamingCuration]]). Every state
@@ -131,15 +132,17 @@ object VersionedState {
   def latest(root: String, name: String): Option[(Int, String)] =
     newestCommitted(versions(root, name))
 
+  /** The meta row read with its fixed schema, so the 1-row read is one
+    * job and never a schema-inference job too. An r10-era row has no
+    * `folded_above` column; it reads as null, the empty set.
+    */
+  private val MetaSchema = StructType(Seq(
+    StructField("folded_watermark", LongType),
+    StructField("folded_above", ArrayType(LongType))))
+
   private def readMeta(spark: SparkSession, dir: String): Meta = {
-    val df = spark.read.parquet(s"$dir/$MetaTable")
-    val row = df.head()
-    val wm = row.getLong(row.fieldIndex("folded_watermark"))
-    val above =
-      if (df.columns.contains("folded_above"))
-        row.getSeq[Long](row.fieldIndex("folded_above"))
-      else Seq.empty[Long]
-    Meta(wm, above)
+    val row = spark.read.schema(MetaSchema).parquet(s"$dir/$MetaTable").head()
+    Meta(row.getLong(0), if (row.isNullAt(1)) Seq.empty else row.getSeq[Long](1))
   }
 
   /** The folded-id record of `name` ([[EmptyMeta]] when the state does

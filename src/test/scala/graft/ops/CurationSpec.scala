@@ -479,6 +479,19 @@ class CurationSpec extends SparkSpec {
     assert(at8.nonEmpty)
   }
 
+  test("mix budget: a null source keeps its running sum across partitions") {
+    // 60 null-source docs and 20 in source `a`, one token each: the null
+    // group spans several range partitions at partitions = 7, and each
+    // partition after the first must continue its run, not restart at 0
+    val docs = (1L to 80L).map(i => (i, if (i <= 60L) null else "a", 1L, "w"))
+      .toDF("doc_id", "source", "n_chars", "text")
+    def kept(p: Int) = Curation.mixBudgetOf(docs, budget = 10L, partitions = p)
+      .collect().map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(3))).toSet
+    val at1 = kept(1)
+    assert(at1.size == 20)
+    assert(kept(7) == at1, "selection must not depend on the partition count")
+  }
+
   test("mix epochs: full epochs precede partial ones, cap and budget bind, partition-independent") {
     val rows = Curation.mixEpochs(spark, sfDir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))

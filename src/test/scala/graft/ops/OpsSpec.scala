@@ -756,6 +756,19 @@ class SamplingSpec extends SparkSpec {
     assert(a1.sameElements(a7), "selection must not depend on partitioning")
   }
 
+  test("unimax: a null source keeps its running sum across partitions") {
+    // 60 null-source docs and 20 in source `a`, one token each: the null
+    // group spans several range partitions at partitions = 7, and each
+    // partition after the first must continue its run, not restart at 0
+    val docs = (1L to 80L).map(i => (i, if (i <= 60L) null else "a", "w"))
+      .toDF("doc_id", "source", "text")
+    def kept(p: Int) = Sampling.unimaxSelection(docs, 10L, 1, p).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
+    val at1 = kept(1)
+    assert(at1.size == 10)
+    assert(kept(7) == at1, "selection must not depend on the partition count")
+  }
+
   test("ScalaCheck: unimax allocator spends exactly, respects caps, ignores input order") {
     import org.scalacheck.Gen
     val genCase = for {

@@ -62,11 +62,7 @@ class PackingSpec extends SparkSpec {
     (0 until 10).foreach { seed =>
       genCase.apply(org.scalacheck.Gen.Parameters.default,
         org.scalacheck.rng.Seed(seed.toLong)).foreach { case (docs, seqLen, parts) =>
-        val ranged = docs.toDF("doc_id", "n")
-          .repartitionByRange(parts, $"doc_id")
-          .sortWithinPartitions($"doc_id")
-          .as[(Long, Long)]
-        val rows = Packing.packSequencesOf(ranged, seqLen).collect()
+        val rows = Packing.packSequencesOf(docs.toDS(), seqLen, parts).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         // reference: sequential scan of the doc_id-ordered token stream
         var off = 0L

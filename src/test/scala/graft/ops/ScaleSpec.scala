@@ -412,4 +412,59 @@ class ScaleSpec extends SparkSpec {
       assert(got == ref, s"n=$n")
     }
   }
+
+  test("runningSum equals a sequential scan: null groups, zero weights, empty partitions, any partitioning") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(0x5ca1e)
+    // (group, v, id, weight) rows, about one weight in four zero
+    def gen(n: Int, groups: IndexedSeq[String]) = (0 until n).map { i =>
+      (groups(rnd.nextInt(groups.length)), rnd.nextInt(20).toLong, i.toLong,
+        if (rnd.nextInt(4) == 0) 0L else rnd.nextInt(100).toLong)
+    }
+    val mixed = IndexedSeq(null, null, "a", "b", "hot", "hot", "hot")
+    // empty input; fewer rows than partitions (empty partitions); one
+    // group owning every row, so it spans every partition; mixed groups
+    // with nulls
+    val inputs = Seq(gen(0, mixed), gen(5, mixed), gen(400, IndexedSeq("hot")),
+      gen(400, mixed))
+    for (rows <- inputs; grouped <- Seq(true, false); p <- Seq(1, 7, 32)) {
+      val df = rows.toDF("g", "v", "id", "w")
+      val rs = Scale.runningSum(df, if (grouped) Some("g") else None,
+        Seq($"v".asc, $"id".asc), Some("w"), p)
+      val got = rs.rows.select("id", "cum").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // reference: one sequential pass over the driver-sorted rows
+      val ordered =
+        if (grouped) rows.sortBy(r => (Option(r._1), r._2, r._3))
+        else rows.sortBy(r => (r._2, r._3))
+      val run = scala.collection.mutable.Map.empty[Any, Long]
+      val want = ordered.map { case (g, _, id, w) =>
+        val k: Any = if (grouped) g else null
+        run(k) = run.getOrElse(k, 0L) + w
+        id -> run(k)
+      }.toMap
+      val what = s"n=${rows.length} grouped=$grouped p=$p"
+      assert(got == want, what)
+      assert(rs.totals == run.toMap, what)
+      if (rows.length == 400 && rows.forall(_._1 == "hot"))
+        assert(rs.rows.select(spark_partition_id()).distinct().count() == p,
+          s"the one group must span every partition: $what")
+    }
+  }
+
+  test("the two-pass prefix scan lives only in Scale.runningSum") {
+    // every per-partition scan in the program is the one kernel's: the
+    // hand-copied scans drifted apart (a null group restarted its sum
+    // in every partition after the first)
+    val lines = graft.MainSources.lines
+    val scans = lines.filter(_._2.contains("mapPartitionsWithIndex")).map(_._1)
+    val scale = lines.filter(_._1.startsWith("src/main/scala/graft/ops/Scale.scala:"))
+    val from = scale.indexWhere(_._2.contains("def runningSum("))
+    val to = scale.indexWhere(_._2.startsWith("  def "), from + 1)
+    assert(from >= 0 && to > from, "Scale.runningSum not found")
+    val kernel = scale.slice(from, to).map(_._1).toSet
+    assert(scans.nonEmpty && scans.forall(kernel),
+      s"mapPartitionsWithIndex outside Scale.runningSum (use the kernel): " +
+        scans.filterNot(kernel))
+  }
 }

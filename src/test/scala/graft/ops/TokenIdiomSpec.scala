@@ -127,16 +127,7 @@ class TokenIdiomSpec extends SparkSpec {
   }
 
   test("the JVM whitespace split lives only in TextAnalysis.words") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"expected to run from the repo root; missing $root")
-    val lines = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toList
-      .flatMap { f =>
-        Files.readAllLines(f, java.nio.charset.StandardCharsets.UTF_8).asScala
-          .zipWithIndex.map { case (l, i) => (s"$f:${i + 1}", l) }
-      }
+    val lines = graft.MainSources.lines
     val splits = lines.filter(_._2.contains(""".split("\\s+")"""))
     assert(splits.isEmpty,
       s"inline whitespace splits (use TextAnalysis.words): ${splits.map(_._1)}")

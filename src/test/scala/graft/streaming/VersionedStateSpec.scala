@@ -165,7 +165,7 @@ class VersionedStateSpec extends SparkSpec {
     }
   }
 
-  test("a steady managed fold launches 7 jobs and a replay 2: one listing, one meta read") {
+  test("a steady managed fold launches 6 jobs and a replay 1: one listing, one meta read") {
     import spark.implicits._
     val sc = spark.sparkContext
     val dir = Files.createTempDirectory("graft-vsjobs").toString
@@ -189,19 +189,28 @@ class VersionedStateSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      // prior state exists: the meta read is 2 jobs (schema inference +
-      // the 1-row head), the prior payload's schema inference 1, the
-      // merged write and the meta write the rest
+      // prior state exists: the meta read is 1 job (the 1-row head under
+      // the fixed meta schema), the prior payload's schema inference 1,
+      // the merged write and the meta write the rest
       val steady = jobsOf(
         StreamingCuration.mergeKeyCountState(spark, dir, rows, "source", 1L))
-      assert(steady == 7, s"a steady fold launched $steady jobs")
+      assert(steady == 6, s"a steady fold launched $steady jobs")
       val replay = jobsOf(
         StreamingCuration.mergeKeyCountState(spark, dir, rows, "source", 1L))
-      assert(replay == 2, s"a replayed fold launched $replay jobs")
+      assert(replay == 1, s"a replayed fold launched $replay jobs")
     } finally sc.removeSparkListener(listener)
     assert(VersionedState.readTable(spark, dir, name).get
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("a" -> 4L, "b" -> 2L))
+  }
+
+  test("an r10-era meta row (watermark only) reads as an empty folded-above set") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-vsr10").toString
+    Seq(5L).toDF("folded_watermark")
+      .write.parquet(s"$dir/${name}_v1/${VersionedState.MetaTable}")
+    assert(VersionedState.meta(spark, dir, name) == VersionedState.Meta(5L, Nil))
+    assert(VersionedState.watermark(spark, dir, name) == 5L)
   }
 
   test("out-of-order managed folds apply exactly once and compact (VERDICT r10 #1)") {
