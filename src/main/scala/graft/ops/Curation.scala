@@ -1947,16 +1947,10 @@ object Curation {
     "dedup_semantic_kmeans" -> ((s, d) => dedupSemanticKmeans(s, d)),
     "dedup_representatives" -> dedupRepresentatives)
 
-  /** DuckDB oracles. Cosine arithmetic replays the same left-to-right
-    * IEEE-double folds as `cosine_sim` (pattern proven bit-exact by the
-    * sim_* oracles); centroids regenerate from md5 as documented on
-    * [[centroids]].
-    */
-  private def duckCosL(a: String, b: String) = {
-    def dt(x: String, y: String) =
-      s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-    s"(${dt(a, b)} / (sqrt(${dt(a, a)}) * sqrt(${dt(b, b)})))"
-  }
+  // DuckDB oracles. Cosine arithmetic replays the same left-to-right
+  // IEEE-double folds as `cosine_sim` (Similarity.DuckSql); centroids
+  // regenerate from md5 as documented on [[centroids]].
+  import Similarity.DuckSql.{cosFold, doubles}
 
   /** Shared per-doc importance-score CTE chain (ends in `isc`) — one
     * source of truth for the ta_importance oracle and the dsir-top-k
@@ -2063,7 +2057,7 @@ object Curation {
       ORDER BY d.doc_id"""
 
   /** dedup_semantic_kmeans oracle: the FROZEN-CENTROID replay (the
-    * [[Similarity.pqOracleSql]] codebook contract applied to the
+    * [[Similarity.DuckSql]] frozen-model contract applied to the
     * Lloyd's quantizer). The trained centroids are read from the SAME
     * cached quantizer the registered query scores under
     * ([[ensureSemanticQuantizer]] — whichever side runs first trains,
@@ -2087,9 +2081,8 @@ object Curation {
         CAST(NULL AS BIGINT) AS keeper_id, CAST(NULL AS DOUBLE) AS cos
       WHERE FALSE"""
     val dim = cents(0).length
-    def dl(x: Double): String = java.lang.Double.toString(x)
     val centRows = cents.zipWithIndex
-      .map { case (c, i) => s"($i, [${c.map(dl).mkString(", ")}])" }
+      .map { case (c, i) => s"($i, ${doubles(c)})" }
       .mkString(", ")
     // per-dimension (v-c)² terms then one left-to-right list_sum — the
     // exact op sequence of assignEuclidean's compiled loop
@@ -2106,7 +2099,7 @@ object Curation {
           FROM e CROSS JOIN cents c) WHERE rk = 1),
       hits AS (
         SELECT x.cluster, x.vec_id AS a, y.vec_id AS b,
-               ${duckCosL("x.v", "y.v")} AS cos
+               ${cosFold("x.v", "y.v")} AS cos
         FROM assign x JOIN assign y
           ON x.cluster = y.cluster AND x.vec_id < y.vec_id)
       SELECT CAST(cluster AS BIGINT) AS cluster, b AS dup_id,
@@ -2138,7 +2131,7 @@ object Curation {
         SELECT vec_id, label, k AS cluster FROM (
           SELECT e.vec_id, e.label, c.k,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ${duckCosL("v", "cv")} DESC, c.k ASC) AS rk
+              ORDER BY ${cosFold("v", "cv")} DESC, c.k ASC) AS rk
           FROM e CROSS JOIN cents c) WHERE rk = 1),
       lc AS (
         SELECT cluster, label, CAST(COUNT(*) AS BIGINT) AS n
@@ -2529,7 +2522,7 @@ object Curation {
         SELECT vec_id, k AS cluster FROM (
           SELECT e.vec_id, c.k,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ${duckCosL("v", "cv")} DESC, c.k ASC) AS rk
+              ORDER BY ${cosFold("v", "cv")} DESC, c.k ASC) AS rk
           FROM e CROSS JOIN cents c) WHERE rk = 1),
       counts AS (
         SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_vecs
@@ -2564,11 +2557,11 @@ object Curation {
         SELECT vec_id, v, k AS cluster FROM (
           SELECT e.vec_id, e.v, c.k,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ${duckCosL("v", "cv")} DESC, c.k ASC) AS rk
+              ORDER BY ${cosFold("v", "cv")} DESC, c.k ASC) AS rk
           FROM e CROSS JOIN cents c) WHERE rk = 1),
       hits AS (
         SELECT x.cluster, x.vec_id AS a, y.vec_id AS b,
-               ${duckCosL("x.v", "y.v")} AS cos
+               ${cosFold("x.v", "y.v")} AS cos
         FROM assign x JOIN assign y
           ON x.cluster = y.cluster AND x.vec_id < y.vec_id)
       SELECT cluster, b AS dup_id, min(a) AS keeper_id, min_by(cos, a) AS cos

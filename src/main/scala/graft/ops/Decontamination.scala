@@ -712,12 +712,7 @@ object Decontamination {
         GROUP BY 1, 2
         HAVING COUNT(*) >= $minShared)"""
 
-  /** Left-to-right IEEE dot fold over DOUBLE-cast lists — the proven
-    * cosine-oracle idiom (the raw list is FLOAT; folding it uncast
-    * diverges in the 9th digit).
-    */
-  private def dt(x: String, y: String) =
-    s"list_sum([CAST($x AS DOUBLE[])[i] * CAST($y AS DOUBLE[])[i] for i in range(1, 65)])"
+  import Similarity.DuckSql.castDot
 
   /** Static entries plus — when [[Similarity.oracleContext]] is set by
     * Verify and the corpus passes [[TextAnalysis.asciiReplaySafe]] —
@@ -872,16 +867,16 @@ object Decontamination {
       WITH ev AS (
         SELECT vec_id, embedding FROM embeddings
         WHERE md5(CAST(vec_id AS VARCHAR)) >= '$EvalLower'
-          AND sqrt(${dt("embedding", "embedding")}) > 0),
+          AND sqrt(${castDot("embedding", "embedding")}) > 0),
       tr AS (
         SELECT vec_id, embedding FROM embeddings
         WHERE md5(CAST(vec_id AS VARCHAR)) < '$EvalLower'
-          AND sqrt(${dt("embedding", "embedding")}) > 0),
+          AND sqrt(${castDot("embedding", "embedding")}) > 0),
       p AS (
         SELECT tr.vec_id AS train_id, ev.vec_id AS eval_id,
-          (${dt("tr.embedding", "ev.embedding")}
-            / (sqrt(${dt("tr.embedding", "tr.embedding")})
-             * sqrt(${dt("ev.embedding", "ev.embedding")}))) AS cos
+          (${castDot("tr.embedding", "ev.embedding")}
+            / (sqrt(${castDot("tr.embedding", "tr.embedding")})
+             * sqrt(${castDot("ev.embedding", "ev.embedding")}))) AS cos
         FROM tr CROSS JOIN ev)
       SELECT train_id, eval_id, cos FROM p
       WHERE cos >= $SemThreshold

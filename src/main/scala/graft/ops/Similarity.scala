@@ -522,20 +522,13 @@ object Similarity {
   def simIvfANN(s: SparkSession, dir: String, nprobe: Int = NProbe): DataFrame = {
     import s.implicits._
     val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
-    val cents = broadcast(centroidsExact(emb(s, dir)))
-    def nearest(n: Int, vecCol: String, idCol: String, df: DataFrame) = {
-      val w = Window.partitionBy(col(idCol)).orderBy($"d".asc, $"cent_id".asc)
-      df.crossJoin(cents)
-        .select(col(idCol), col(vecCol), $"cent_id",
-          (-cosine(col(vecCol), $"cent")).as("d"))
-        .withColumn("cr", row_number().over(w))
-        .filter($"cr" <= n)
-    }
-    val assigned = nearest(1, "e", "vec_id", all)
+    val cents = centroidsExact(emb(s, dir))
+    val assigned = rankCells(all, cents, "vec_id", "e")
+      .filter($"cr" === 1)
       .select($"vec_id".as("cand_id"), $"e", $"cent_id")
-    val probes = nearest(nprobe, "qe", "query_id",
-      all.filter($"vec_id" < NumQueries)
-        .select($"vec_id".as("query_id"), $"e".as("qe")))
+    val probes = rankCells(all.filter($"vec_id" < NumQueries)
+        .select($"vec_id".as("query_id"), $"e".as("qe")), cents, "query_id", "qe")
+      .filter($"cr" <= nprobe)
       .select($"query_id", $"qe", $"cent_id")
     val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cand_id".asc)
     assigned.join(broadcast(probes), Seq("cent_id"))
@@ -547,23 +540,6 @@ object Similarity {
       .orderBy("query_id", "rk")
   }
 
-  /** IVF recall curve — recall@[[TopK]] as a function of nprobe, the
-    * tuning artifact every IVF deployment derives before picking its
-    * probe budget (recall rises with nprobe, scan cost rises
-    * linearly; the knee is the operating point). Computed in ONE pass:
-    * each (query, candidate) pair carries the PROBE RANK of the
-    * candidate's centroid for that query, so "reachable at nprobe=p"
-    * is just `pr <= p` — the curve needs no per-p re-search, only a
-    * 10-way fan-out of the bounded pair set and one window per p.
-    * nprobe = k is exhaustive ⇒ equals brute force, so the truth set
-    * is internal and recall(k) = 1 by construction (spec-pinned).
-    * Deterministic end-to-end ([[centroidsExact]] + integer counts +
-    * one IEEE division) ⇒ full oracle.
-    *
-    * 100 TB shape: the pair set is queries × probed-partition
-    * contents (bounded query batch), the fan-out multiplies by the
-    * centroid count only, and each window ranks a per-(query,p) slice.
-    */
   /** IVF cell-balance report: vectors per coarse cell plus the
     * imbalance diagnostics an ANN deployment reads before trusting its
     * nprobe math — probe-cost estimates assume near-even cells, and a
@@ -621,7 +597,6 @@ object Similarity {
     import s.implicits._
     val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
     val centsRaw = centroidsExact(emb(s, dir))
-    val cents = broadcast(centsRaw)
     // count the CENTROID TABLE itself, not countDistinct(label) over
     // the vectors (ADVICE r10 #3): countDistinct excludes NULLs while
     // centroidsExact's GROUP BY — and the oracle's COUNT(*) FROM cent
@@ -630,10 +605,7 @@ object Similarity {
     // the divergence impossible. Still a lazy column-pruned 1-row
     // aggregate, never a construction-time job.
     val kdf = centsRaw.agg(count(lit(1)).as("k_cells"))
-    val wv = Window.partitionBy($"vec_id").orderBy($"d".asc, $"cent_id".asc)
-    val cells = all.crossJoin(cents)
-      .select($"vec_id", $"cent_id", (-cosine($"e", $"cent")).as("d"))
-      .withColumn("cr", row_number().over(wv))
+    val cells = rankCells(all, centsRaw, "vec_id", "e")
       .filter($"cr" === 1)
       .groupBy($"cent_id").agg(count(lit(1)).as("n_vecs"))
     val tot = cells.agg(coalesce(sum($"n_vecs"), lit(0L)).as("n_total"))
@@ -690,31 +662,39 @@ object Similarity {
       .orderBy("cent_id")
   }
 
+  /** IVF recall curve — recall@[[TopK]] as a function of nprobe, the
+    * tuning artifact every IVF deployment derives before picking its
+    * probe budget (recall rises with nprobe, scan cost rises
+    * linearly; the knee is the operating point). Computed in ONE pass:
+    * each (query, candidate) pair carries the PROBE RANK of the
+    * candidate's centroid for that query, so "reachable at nprobe=p"
+    * is just `pr <= p` — the curve needs no per-p re-search, only a
+    * 10-way fan-out of the bounded pair set and one window per p.
+    * nprobe = k is exhaustive ⇒ equals brute force, so the truth set
+    * is internal and recall(k) = 1 by construction (spec-pinned).
+    * Deterministic end-to-end ([[centroidsExact]] + integer counts +
+    * one IEEE division) ⇒ full oracle.
+    *
+    * 100 TB shape: the pair set is queries × probed-partition
+    * contents (bounded query batch), the fan-out multiplies by the
+    * centroid count only, and each window ranks a per-(query,p) slice.
+    */
   def simRecallCurve(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
     val centsRaw = centroidsExact(emb(s, dir))
-    val cents = broadcast(centsRaw)
     // centroid count as a LAZY 1-row aggregate (VERDICT r14 ask #5:
     // the former distinct().count() ran an embeddings scan at
     // plan-construction time) — the ivfCells k_cells pattern: counting
     // the centroid table itself keeps NULL-label semantics identical
     // to the oracle's COUNT(*) FROM cent.
     val kdf = centsRaw.agg(count(lit(1)).as("k_cells"))
-    val wv = Window.partitionBy($"vec_id").orderBy($"d".asc, $"cent_id".asc)
-    val assigned = all.crossJoin(cents)
-      .select($"vec_id", $"e", $"cent_id", (-cosine($"e", $"cent")).as("d"))
-      .withColumn("cr", row_number().over(wv))
+    val assigned = rankCells(all, centsRaw, "vec_id", "e")
       .filter($"cr" === 1)
       .select($"vec_id".as("cand_id"), $"e", $"cent_id")
-    val wq = Window.partitionBy($"query_id").orderBy($"d".asc, $"cent_id".asc)
-    val probes = all.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"e".as("qe"))
-      .crossJoin(cents)
-      .select($"query_id", $"qe", $"cent_id",
-        (-cosine($"qe", $"cent")).as("d"))
-      .withColumn("pr", row_number().over(wq))
-      .select($"query_id", $"qe", $"cent_id", $"pr")
+    val probes = rankCells(all.filter($"vec_id" < NumQueries)
+        .select($"vec_id".as("query_id"), $"e".as("qe")), centsRaw, "query_id", "qe")
+      .select($"query_id", $"qe", $"cent_id", $"cr".as("pr"))
     val pairs = assigned.join(broadcast(probes), Seq("cent_id"))
       .filter($"cand_id" =!= $"query_id")
       .select($"query_id", $"cand_id", $"pr", cosine($"qe", $"e").as("cos"))
@@ -846,11 +826,7 @@ object Similarity {
   def simOodOutliers(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val all = emb(s, dir).select($"vec_id", asDouble($"embedding").as("e"))
-    val cents = broadcast(centroidsExact(emb(s, dir)))
-    val wv = Window.partitionBy($"vec_id").orderBy($"d".asc, $"cent_id".asc)
-    all.crossJoin(cents)
-      .select($"vec_id", $"cent_id", (-cosine($"e", $"cent")).as("d"))
-      .withColumn("cr", row_number().over(wv))
+    rankCells(all, centroidsExact(emb(s, dir)), "vec_id", "e")
       .filter($"cr" === 1)
       .select($"vec_id", $"cent_id", (-$"d").as("cos"))
       .orderBy($"cos".asc, $"vec_id".asc)
@@ -859,24 +835,30 @@ object Similarity {
 
   /** Persist the IVF layout SCALING.md describes: every corpus vector
     * written under its nearest centroid's partition directory
-    * (`cent_id=<k>/`), plus the coarse quantizer itself FROZEN at
-    * `_centroids/` inside the same root (underscore-prefixed, so corpus
-    * scans skip it). Freezing matters: probes, appends, and the stored
-    * assignment must all use the SAME centroids — recomputing means
-    * from a grown corpus would silently shift assignments. This is the
-    * on-disk form that makes [[searchIvfIndex]] I/O-proportional to
-    * nprobe/k of the corpus: partition pruning happens in the parquet
-    * scan, before any row is read.
+    * (`codes/cent_id=<k>/`, [[cellsDir]]), plus the coarse quantizer
+    * itself FROZEN at `centroids/` inside the same root. Freezing
+    * matters: probes, appends, and the stored assignment must all use
+    * the SAME centroids — recomputing means from a grown corpus would
+    * silently shift assignments. This is the on-disk form that makes
+    * [[searchIvfIndex]] I/O-proportional to nprobe/k of the corpus:
+    * partition pruning happens in the parquet scan, before any row is
+    * read.
     */
   def writeIvfIndex(s: SparkSession, dir: String, path: String): Unit = {
     import s.implicits._
-    // overwrite of the root truncates it, so the corpus goes first and
-    // the quantizer snapshot second (from the same materialized frame)
     val cents = centroids(emb(s, dir)).gatedCheckpoint()
+    StateFs.deleteRecursively(path) // a rewrite replaces the whole index
     assignTo(cents, emb(s, dir).select($"vec_id", asDouble($"embedding").as("e")))
-      .write.mode("overwrite").partitionBy("cent_id").parquet(path)
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
+      .write.mode("overwrite").partitionBy("cent_id").parquet(cellsDir(path))
+    cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
   }
+
+  /** The cell-partitioned rows (`cent_id=<k>/`) of the index at `path`.
+    * The model sidecars are its siblings, so reading either never
+    * lists the other, and no sidecar needs the `_` prefix that Spark's
+    * file index treats as hidden.
+    */
+  private def cellsDir(path: String): String = s"$path/codes"
 
   /** Incremental index maintenance: a new batch is assigned against the
     * FROZEN quantizer and appended into the existing partition
@@ -885,22 +867,31 @@ object Similarity {
     */
   def appendIvfBatch(s: SparkSession, path: String, batch: DataFrame): Unit =
     assignTo(storedCentroids(s, path), batch)
-      .write.mode("append").partitionBy("cent_id").parquet(path)
+      .write.mode("append").partitionBy("cent_id").parquet(cellsDir(path))
 
   private def storedCentroids(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"$path/_centroids")
+    s.read.parquet(s"$path/centroids")
 
   /** Nearest-centroid assignment of (vec_id, e) rows. */
-  private def assignTo(centroidDf: DataFrame, vecs: DataFrame): DataFrame = {
-    val s = vecs.sparkSession
-    import s.implicits._
-    val cents = broadcast(centroidDf)
-    val w = Window.partitionBy($"vec_id").orderBy($"d".asc, $"cent_id".asc)
-    vecs.crossJoin(cents)
-      .select($"vec_id", $"e", $"cent_id", (-cosine($"e", $"cent")).as("d"))
+  private def assignTo(centroidDf: DataFrame, vecs: DataFrame): DataFrame =
+    rankCells(vecs, centroidDf, "vec_id", "e")
+      .filter(col("cr") === 1)
+      .select(col("vec_id"), col("e"), col("cent_id"))
+
+  /** Every row of `rows` against every coarse cell of `cents` (cent_id,
+    * cent, broadcast): `d` = −cosine(`vec`, cent) and `cr` = the cell's
+    * nearest-cell rank for the row's `id`, by (d asc, cent_id asc). The
+    * one nearest-cell ranking of the IVF operators, replayed by the
+    * oracles' [[DuckSql.nearestCell]]; each caller filters the rank
+    * itself.
+    */
+  private def rankCells(rows: DataFrame, cents: DataFrame, id: String,
+      vec: String): DataFrame = {
+    val w = Window.partitionBy(col(id)).orderBy(col("d").asc, col("cent_id").asc)
+    rows.crossJoin(broadcast(cents))
+      .select(col(id), col(vec), col("cent_id"),
+        (-cosine(col(vec), col("cent"))).as("d"))
       .withColumn("cr", row_number().over(w))
-      .filter($"cr" === 1)
-      .select($"vec_id", $"e", $"cent_id")
   }
 
   /** IVF ANN against a [[writeIvfIndex]] layout: queries rank the FROZEN
@@ -917,19 +908,15 @@ object Similarity {
       s: SparkSession, dir: String, path: String,
       nprobe: Int = NProbe): DataFrame = {
     import s.implicits._
-    val cents = broadcast(storedCentroids(s, path))
-    val wp = Window.partitionBy($"query_id").orderBy($"d".asc, $"cent_id".asc)
-    val probes = emb(s, dir)
+    val queries = emb(s, dir)
       .filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), asDouble($"embedding").as("qe"))
-      .crossJoin(cents)
-      .select($"query_id", $"qe", $"cent_id", (-cosine($"qe", $"cent")).as("d"))
-      .withColumn("cr", row_number().over(wp))
+    val probes = rankCells(queries, storedCentroids(s, path), "query_id", "qe")
       .filter($"cr" <= nprobe)
       .select($"query_id", $"qe", $"cent_id")
     val probeIds = probes.select($"cent_id").distinct().collect()
       .map(_.get(0)).toIndexedSeq
-    val idx = s.read.parquet(path).filter($"cent_id".isin(probeIds: _*))
+    val idx = s.read.parquet(cellsDir(path)).filter($"cent_id".isin(probeIds: _*))
     val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cand_id".asc)
     idx.select($"vec_id".as("cand_id"), $"e", $"cent_id")
       .join(broadcast(probes), Seq("cent_id"))
@@ -1159,7 +1146,7 @@ object Similarity {
     * deterministic end-to-end (driver-side training is a pure function
     * of the vec_id-ordered sample), so it carries a FULL oracle: the
     * codebook re-derives at Verify time and interpolates into the SQL
-    * as literals ([[pqOracleSql]]); recall ≥ bound vs brute force is
+    * as literals ([[pqAnnOracleSql]]); recall ≥ bound vs brute force is
     * additionally spec-pinned.
     */
   def simPqANN(s: SparkSession, dir: String): DataFrame = {
@@ -1211,7 +1198,7 @@ object Similarity {
     *    term stays unrotated.
     *
     * A frozen index records its encoding itself (`_residual`/`_opq`
-    * markers, `_rotation` sidecar), and [[indexTier]] reads it back, so
+    * markers, `rotation` sidecar), and [[indexTier]] reads it back, so
     * search and append can never pick another tier's decoder.
     */
   final case class PqEncoding(anchored: Boolean,
@@ -1254,9 +1241,12 @@ object Similarity {
     def marker: Option[String] =
       if (rotation.isDefined) Some("opq") else if (anchored) Some("residual") else None
 
-    /** The artifact-store kind of its frozen index (`graft_<kind>_*`). */
+    /** The artifact-store kind of its frozen index (`graft_<kind>_*`).
+      * `_v2` is the `codes/` layout: a marked cache of the earlier
+      * layout, codes at the index root, is rebuilt, never served.
+      */
     def kind: String =
-      if (rotation.isDefined) "ivfpqo" else if (anchored) "ivfpqr" else "ivfpq"
+      (if (rotation.isDefined) "ivfpqo" else if (anchored) "ivfpqr" else "ivfpq") + "_v2"
   }
 
   object PqEncoding {
@@ -1507,13 +1497,12 @@ object Similarity {
   /** Write the frozen IVF-PQ index: 8-byte PQ codes partitioned by
     * coarse cell (probes become PARTITION FILTERS — directories
     * outside the probe set are never opened), plus the model sidecars
-    * (`_pqcentroids`, `_codebook`, and for OPQ the 64×64 `_rotation`
+    * (`pqcentroids`, `codebook`, and for OPQ the 64×64 `rotation`
     * as (i, row) rows — the index is self-contained, a reader
     * recomputing R from a different reflector count would decode
     * garbage) and the encoding's marker directory (`_residual` /
-    * `_opq`, read back by [[indexTier]]). Sidecars are
-    * underscore-prefixed so root scans ignore them, the
-    * [[writeIvfIndex]] `_centroids` convention. The index stores NO
+    * `_opq`, only ever probed for existence by [[indexTier]]), all
+    * siblings of the codes ([[cellsDir]]). The index stores NO
     * vectors: 8 B/vector of codes vs 256 B of float32 — the 32×
     * RAM/disk compression that makes >10⁹-vector serving fit a
     * cluster; the exact re-rank reads the full vectors by id from the
@@ -1526,19 +1515,19 @@ object Similarity {
       .select($"vec_id", asDouble($"embedding").as("e"))
       .as[(Long, Array[Double])]
     val (cents, books) = ivfPqModel(s, dir, typed, enc)
-    // root overwrite truncates, so codes go first, sidecars second
+    StateFs.deleteRecursively(path) // a rewrite replaces the whole index
     assignEncode(typed, cents, books, enc)
-      .write.mode("overwrite").partitionBy("cent_id").parquet(path)
+      .write.mode("overwrite").partitionBy("cent_id").parquet(cellsDir(path))
     cents.toSeq.toDF("cent_id", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_pqcentroids")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/pqcentroids")
     (for { m <- 0 until PqM; k <- 0 until PqK }
       yield (m, k, books(m)(k).toSeq))
       .toDF("m", "k", "c")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebook")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
     enc.rotation.foreach { rot =>
       rot.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
         .toDF("i", "r")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/_rotation")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
     }
     enc.marker.foreach { m =>
       Seq(true).toDF(m)
@@ -1549,7 +1538,7 @@ object Similarity {
   private def readPqCentroids(
       s: SparkSession, path: String): Array[(Long, Array[Double])] = {
     import s.implicits._
-    s.read.parquet(s"$path/_pqcentroids")
+    s.read.parquet(s"$path/pqcentroids")
       .select(col("cent_id").cast("long"), col("cent"))
       .as[(Long, Array[Double])].collect().sortBy(_._1)
   }
@@ -1557,7 +1546,7 @@ object Similarity {
   private def readPqCodebook(
       s: SparkSession, path: String): Array[Array[Array[Double]]] = {
     import s.implicits._
-    val rows = s.read.parquet(s"$path/_codebook")
+    val rows = s.read.parquet(s"$path/codebook")
       .select(col("m").cast("int"), col("k").cast("int"), col("c"))
       .as[(Int, Int, Array[Double])].collect()
     val books = Array.ofDim[Array[Double]](PqM, PqK)
@@ -1566,7 +1555,7 @@ object Similarity {
   }
 
   /** The [[PqEncoding]] of the index at `path`, from the writer-owned
-    * marker directories and the `_rotation` sidecar — legacy
+    * marker directories and the `rotation` sidecar — legacy
     * marker-less layouts are plain by construction. The layouts are
     * physically identical (cent_id-partitioned 8-byte codes) but the
     * codes mean different things per tier, so search and append take
@@ -1583,14 +1572,14 @@ object Similarity {
     * `_SUCCESS` is ever written, and a `_SUCCESS`-keyed probe would
     * fail OPEN. Keying on the directory fails CLOSED: a half-written
     * `_opq` marker still selects the rotated decoder, whose missing
-    * `_rotation` sidecar then fails the read.
+    * `rotation` sidecar then fails the read.
     */
   private[graft] def indexTier(s: SparkSession, path: String): PqEncoding = {
     import s.implicits._
     def marked(m: String): Boolean = StateFs.exists(s"$path/$m")
     if (marked("_opq"))
       PqEncoding(anchored = true, Some(
-        s.read.parquet(s"$path/_rotation")
+        s.read.parquet(s"$path/rotation")
           .select(col("i").cast("int"), col("r"))
           .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)))
     else if (marked("_residual")) PqEncoding.Residual
@@ -1609,7 +1598,7 @@ object Similarity {
     assignEncode(
       batch.select(col("vec_id"), col("e")).as[(Long, Array[Double])],
       readPqCentroids(s, path), readPqCodebook(s, path), indexTier(s, path))
-      .write.mode("append").partitionBy("cent_id").parquet(path)
+      .write.mode("append").partitionBy("cent_id").parquet(cellsDir(path))
   }
 
   /** IVF-PQ ANN against a [[writeIvfPqIndex]] layout — the serving
@@ -1634,7 +1623,7 @@ object Similarity {
     val tables = ivfPqProbeTables(queries, cents, books, enc, nprobe)
     val probeIds = tables.keys.toSeq.sorted
     val bcTables = s.sparkContext.broadcast(tables)
-    val idx = s.read.parquet(path)
+    val idx = s.read.parquet(cellsDir(path))
       .filter($"cent_id".isin(probeIds: _*))
       .select($"vec_id", $"cent_id".cast("long").as("cent_id"), $"code")
       .as[(Long, Long, Array[Byte])]
@@ -1746,8 +1735,8 @@ object Similarity {
   }
 
   /** Build-once gate for the frozen per-corpus-fingerprint IVF-PQ
-    * index of encoding `enc` ([[ArtifactStore]]; `graft_ivfpq_*`,
-    * `graft_ivfpqr_*`, `graft_ivfpqo_*`).
+    * index of encoding `enc` ([[ArtifactStore]]; `graft_ivfpq_v2_*`,
+    * `graft_ivfpqr_v2_*`, `graft_ivfpqo_v2_*`).
     */
   private[graft] def ensureIvfPqIndex(s: SparkSession, dir: String,
       enc: PqEncoding = PqEncoding.Plain): String =
@@ -2783,15 +2772,201 @@ object Similarity {
     "dedup_embcos" -> ((s, d) => dedupEmbCosineTiled(s, d, numBlocks = 8)),
     "dedup_embcos_tiled" -> ((s, d) => dedupEmbCosineTiled(s, d, numBlocks = 4)))
 
-  /** DuckDB double cosine with the same left-to-right fold:
-    * list comprehension products + list_sum over DOUBLE.
+  /** The SQL vocabulary of the embedding oracles. Every DuckDB replay of
+    * an embedding operator, here and in [[Curation]] and
+    * [[Decontamination]], is composed from these fragments, and each
+    * fragment is written once.
+    *
+    * Trust model. A fragment replays its Spark counterpart's IEEE
+    * arithmetic in the same order: each dot product, norm and
+    * per-coordinate mean is a left-to-right `list_sum` fold over DOUBLE
+    * lists, exactly as [[dotArr]], [[cosine]] and [[centroidsExact]]
+    * fold, so both engines round every step identically and the oracle
+    * compares hash-exact. Frozen models (the PQ codebook, the OPQ
+    * rotation) are never read from the run under check: the oracle map
+    * re-derives them with the same pure functions the queries call
+    * ([[ivfPqModel]], [[opqRotation]]) and interpolates them as
+    * `Double.toString` literals, which DuckDB's correctly-rounded parse
+    * reads back to the identical bits. Everything else (coarse
+    * centroids, assignments, probe ranks, codes, scores and ranks)
+    * DuckDB derives itself from the stored embeddings.
     */
-  private def duckCos(a: String, b: String) = {
-    def d(v: String) = s"CAST($v AS DOUBLE[])"
-    def dt(x: String, y: String) =
-      s"list_sum([${d(x)}[i] * ${d(y)}[i] for i in range(1, 65)])"
-    s"(${dt(a, b)} / (sqrt(${dt(a, a)}) * sqrt(${dt(b, b)})))"
+  private[graft] object DuckSql {
+
+    /** Left-to-right dot fold of two n-dim DOUBLE lists. */
+    def dotFold(x: String, y: String, n: Int = 64): String =
+      s"list_sum([$x[i] * $y[i] for i in range(1, ${n + 1})])"
+
+    /** Cosine of two DOUBLE lists: the dot fold over the two norm folds. */
+    def cosFold(x: String, y: String, n: Int = 64): String =
+      s"(${dotFold(x, y, n)} / (sqrt(${dotFold(x, x, n)}) * sqrt(${dotFold(y, y, n)})))"
+
+    private def asDoubles(v: String): String = s"CAST($v AS DOUBLE[])"
+
+    /** [[dotFold]] of two stored FLOAT lists, cast to DOUBLE first:
+      * folding the raw FLOAT lists diverges in the 9th digit.
+      */
+    def castDot(a: String, b: String): String = dotFold(asDoubles(a), asDoubles(b))
+
+    /** [[cosFold]] of two stored FLOAT lists over their first n
+      * coordinates, cast to DOUBLE first.
+      */
+    def duckCos(a: String, b: String, n: Int = 64): String =
+      cosFold(asDoubles(a), asDoubles(b), n)
+
+    /** A frozen DOUBLE list literal (`Double.toString` round-trips). */
+    def doubles(xs: Array[Double]): String =
+      xs.map(java.lang.Double.toString).mkString("[", ", ", "]")
+
+    private def cte(name: String, materialized: Boolean): String =
+      if (materialized) s"$name AS MATERIALIZED (" else s"$name AS ("
+
+    /** `e(vec_id, label, v)`, the DOUBLE vectors, and the exact
+      * label-centroid fold `cent(cent_id, c)`: each coordinate is the
+      * vec_id-ordered left-to-right mean of its label's vectors
+      * ([[centroidsExact]]).
+      */
+    def labelCentroids(materialized: Boolean = false): String = s"""e AS (
+        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      coords AS (
+        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
+      csum AS (
+        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
+        FROM coords GROUP BY label, i),
+      ${cte("cent", materialized)}
+        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label)"""
+
+    /** The nearest-cell order of a (vector `v`, centroid `c`) row:
+      * negated cosine ascending, then cent_id ([[rankCells]]).
+      */
+    val nearestCell: String = s"-(${cosFold("v", "c")}) ASC, cent_id ASC"
+
+    /** `ranked_cents`: every vector of `e` against every cell of `cent`,
+      * `cr` the cell's nearest-cell rank for that vector.
+      */
+    def rankedCents(cols: String, materialized: Boolean = false): String =
+      s"""${cte("ranked_cents", materialized)}
+        SELECT $cols,
+          ROW_NUMBER() OVER (PARTITION BY vec_id
+            ORDER BY $nearestCell) AS cr
+        FROM e CROSS JOIN cent)"""
+
+    /** The frozen codebook `books(m, k, c)`: centroid k of subspace m. */
+    def codebook(books: Array[Array[Array[Double]]]): String = {
+      val rows = for { m <- books.indices; k <- books(m).indices }
+        yield s"($m, $k, ${doubles(books(m)(k))})"
+      s"books AS (SELECT * FROM (VALUES ${rows.mkString(", ")}) b(m, k, c))"
+    }
+
+    /** The frozen OPQ rotation `rot(i, rw)`: row i (1-based) of R. */
+    def rotation(rot: Array[Array[Double]]): String = {
+      val rows = rot.zipWithIndex.map { case (row, i) => s"(${i + 1}, ${doubles(row)})" }
+      s"rot AS MATERIALIZED (SELECT * FROM (VALUES ${rows.mkString(", ")}) r(i, rw))"
+    }
+
+    /** The rows of `select` with list column `c` rotated to R·c, row by
+      * row in i order ([[rotate]]).
+      */
+    def rotated(select: String, c: String): String = s"""SELECT s.vec_id,
+          list(${dotFold("rot.rw", s"s.$c")} ORDER BY rot.i) AS $c
+        FROM ($select) s CROSS JOIN rot GROUP BY s.vec_id"""
+
+    /** `un(vec_id, u)`: each vector of `e` over its norm ([[unitVec]]). */
+    val unitVecs: String = s"""un AS MATERIALIZED (
+        SELECT vec_id,
+          [v[i] / sqrt(${dotFold("v", "v")}) for i in range(1, 65)] AS u
+        FROM e)"""
+
+    /** `codes(vec_id, m, k)`: the PQ code of each list `x` of `src`, per
+      * subspace the nearest codebook centroid by squared L2, lowest k
+      * on ties ([[pqEncode]]).
+      */
+    def pqCodes(src: String, x: String): String = s"""dists AS (
+        SELECT s.vec_id, b.m, b.k,
+          list_sum([(s.$x[b.m * $PqDim + i] - b.c[i]) * (s.$x[b.m * $PqDim + i] - b.c[i])
+                    for i in range(1, ${PqDim + 1})]) AS d
+        FROM $src s CROSS JOIN books b),
+      codes AS (
+        SELECT vec_id, m, k FROM (
+          SELECT vec_id, m, k,
+            ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d ASC, k ASC) AS cr
+          FROM dists) WHERE cr = 1)"""
+
+    /** One ADC table term: subvector `c.m` of query list `q` · the coded
+      * centroid `b.c` ([[adcTableOf]]).
+      */
+    def adcTerm(q: String): String =
+      s"list_sum([$q[c.m * $PqDim + i] * b.c[i] for i in range(1, ${PqDim + 1})])"
+
+    /** The pool, exact re-rank and top-K tail ([[rerankPool]]): per
+      * query the top `cand` rows of `from` by `score` (cand_id
+      * ascending on ties), re-ranked by exact cosine over the stored
+      * embeddings.
+      */
+    def topK(score: String, from: String, cand: Int): String = s"""pool AS (
+        SELECT query_id, cand_id FROM (
+          SELECT query_id, cand_id,
+            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY $score DESC, cand_id ASC) AS ark
+          FROM $from) WHERE ark <= $cand),
+      rer AS (
+        SELECT p.query_id, p.cand_id,
+          ${duckCos("qe.embedding", "ce.embedding")} AS cos
+        FROM pool p
+        JOIN embeddings qe ON qe.vec_id = p.query_id
+        JOIN embeddings ce ON ce.vec_id = p.cand_id)
+      SELECT query_id, rk, cand_id, cos FROM (
+        SELECT query_id, cand_id, cos,
+          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rk
+        FROM rer) WHERE rk <= $TopK
+      ORDER BY query_id, rk"""
+
+    /** The recall-curve tail ([[simIvfPqRecallCurve]]): for each nprobe
+      * in 1..k, the [[PqCand]] pool of `approx(query_id, cand_id, pr,
+      * a)` rows with probe rank `pr` ≤ nprobe, its exact top-K, and the
+      * recall of that top-K against the brute-force truth.
+      */
+    val recallCurve: String = s"""ks AS (SELECT unnest(range(1, (SELECT COUNT(*) FROM cent) + 1))
+        AS nprobe),
+      pool AS (
+        SELECT nprobe, query_id, cand_id FROM (
+          SELECT k.nprobe, x.query_id, x.cand_id,
+            ROW_NUMBER() OVER (PARTITION BY k.nprobe, x.query_id
+              ORDER BY x.a DESC, x.cand_id ASC) AS ark
+          FROM ks k JOIN approx x ON x.pr <= k.nprobe)
+        WHERE ark <= $PqCand),
+      rer AS (
+        SELECT p.nprobe, p.query_id, p.cand_id FROM (
+          SELECT p0.nprobe, p0.query_id, p0.cand_id,
+            ROW_NUMBER() OVER (PARTITION BY p0.nprobe, p0.query_id
+              ORDER BY ${duckCos("qe.embedding", "ce.embedding")} DESC,
+                p0.cand_id ASC) AS rk
+          FROM pool p0
+          JOIN embeddings qe ON qe.vec_id = p0.query_id
+          JOIN embeddings ce ON ce.vec_id = p0.cand_id) p
+        WHERE p.rk <= $TopK),
+      truth AS MATERIALIZED (
+        SELECT query_id, cand_id FROM (
+          SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
+            ROW_NUMBER() OVER (PARTITION BY q.vec_id
+              ORDER BY ${duckCos("q.embedding", "c.embedding")} DESC,
+                c.vec_id ASC) AS rk
+          FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+          WHERE q.vec_id < $NumQueries)
+        WHERE rk <= $TopK),
+      hits AS (
+        SELECT r.nprobe, CAST(COUNT(*) AS BIGINT) AS n_hits
+        FROM rer r SEMI JOIN truth t
+          ON t.query_id = r.query_id AND t.cand_id = r.cand_id
+        GROUP BY r.nprobe),
+      nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth)
+      SELECT CAST(k.nprobe AS BIGINT) AS nprobe,
+        COALESCE(h.n_hits, 0) AS n_hits,
+        CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / CAST(nt.n_truth AS DOUBLE)
+          AS recall
+      FROM ks k LEFT JOIN hits h ON h.nprobe = k.nprobe CROSS JOIN nt
+      ORDER BY nprobe"""
   }
+  import DuckSql.duckCos
 
   /** Set by [[graft.Verify]] (before dumping oracle_sql.json) to the
     * live (session, sfDir) so oracles may interpolate data-derived
@@ -2806,23 +2981,31 @@ object Similarity {
   def oracles: Map[String, String] =
     staticOracles ++
       oracleContext.map { case (s, dir) =>
+        import s.implicits._
+        val typed = emb(s, dir)
+          .select($"vec_id", asDouble($"embedding").as("e"))
+          .as[(Long, Array[Double])]
+        // each tier's codebook, re-derived by the queries' own trainer
+        def tier(enc: PqEncoding) = {
+          val books = ivfPqModel(s, dir, typed, enc)._2
+          (ivfPqServeOracleSql(enc, books), ivfPqCurveOracleSql(enc, books), books)
+        }
+        val (plain, plainCurve, plainBooks) = tier(PqEncoding.Plain)
+        val (residual, residualCurve, _) = tier(PqEncoding.Residual)
+        val (opq, opqCurve, _) = tier(PqEncoding.Opq)
         Map(
-          "sim_pq_ann" -> pqOracleSql(s, dir),
-          "sim_ivfpq_ann" -> ivfPqOracleSql(s, dir),
-          "sim_ivfpq_residual" -> ivfPqResidualOracleSql(s, dir),
-          // serve == inline residual exactly (spec-pinned) → shared replay
-          "sim_ivfpq_residual_serve" -> ivfPqResidualOracleSql(s, dir),
-          "sim_ivfpq_opq" -> ivfPqOpqOracleSql(s, dir),
-          // serve == inline OPQ exactly (spec-pinned) → shared replay
-          "sim_ivfpq_opq_serve" -> ivfPqOpqOracleSql(s, dir),
-          // the frozen-index serve is output-identical to the inline
-          // hybrid (spec-pinned), so it shares the full replay
-          "sim_ivfpq_serve" -> ivfPqOracleSql(s, dir),
-          "sim_ivfpq_recall_curve" -> ivfPqRecallCurveOracleSql(s, dir),
-          "sim_ivfpq_residual_recall_curve" ->
-            ivfPqResidualRecallCurveOracleSql(s, dir),
-          "sim_ivfpq_opq_recall_curve" ->
-            ivfPqOpqRecallCurveOracleSql(s, dir),
+          "sim_pq_ann" -> pqAnnOracleSql(plainBooks),
+          // each frozen-index serve is output-identical to its inline
+          // tier (spec-pinned), so it shares that tier's replay
+          "sim_ivfpq_ann" -> plain,
+          "sim_ivfpq_serve" -> plain,
+          "sim_ivfpq_residual" -> residual,
+          "sim_ivfpq_residual_serve" -> residual,
+          "sim_ivfpq_opq" -> opq,
+          "sim_ivfpq_opq_serve" -> opq,
+          "sim_ivfpq_recall_curve" -> plainCurve,
+          "sim_ivfpq_residual_recall_curve" -> residualCurve,
+          "sim_ivfpq_opq_recall_curve" -> opqCurve,
           "sim_knn_graph" -> knnGraphOracleSql(s, dir),
           "sim_graph_search" -> graphSearchOracleSql(s, dir),
           "sim_graph_centrality" -> graphCentralityOracleSql(s, dir))
@@ -2882,7 +3065,7 @@ object Similarity {
   }
 
   /** Frozen-pair oracle shared by sim_knn_graph and sim_graph_search
-    * (VERDICT r10 ask #5) — the pqOracleSql contract applied to the
+    * (VERDICT r10 ask #5) — the [[DuckSql]] frozen-model contract applied to the
     * graph queries: the iterative NN-Descent build and the beam walk
     * are DETERMINISTIC pure functions of the corpus (md5-ordered entry
     * points, total-order beam cuts and edge cuts), so the final
@@ -2934,7 +3117,9 @@ object Similarity {
       .select($"query_id", $"cand_id").as[(Long, Long)].collect())
   }
 
-  private lazy val staticOracles: Map[String, String] = Map(
+  private lazy val staticOracles: Map[String, String] = {
+    import DuckSql.{cosFold, labelCentroids, nearestCell, rankedCents, topK}
+    Map(
     "sample_hard_negatives" -> s"""
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
@@ -3081,14 +3266,8 @@ object Similarity {
       WHERE rk <= $TopK
       ORDER BY query_id, rk""",
     "sim_matryoshka" -> {
-      def duckCosN(a: String, b: String, n: Int) = {
-        def d(v: String) = s"CAST($v AS DOUBLE[])"
-        def dt(x: String, y: String) =
-          s"list_sum([${d(x)}[i] * ${d(y)}[i] for i in range(1, ${n + 1})])"
-        s"(${dt(a, b)} / (sqrt(${dt(a, a)}) * sqrt(${dt(b, b)})))"
-      }
       val cosCols = MatryoshkaDims.map(dm =>
-        s"${duckCosN("q.embedding", "c.embedding", dm)} AS cos_$dm").mkString(",\n               ")
+        s"${duckCos("q.embedding", "c.embedding", dm)} AS cos_$dm").mkString(",\n               ")
       val branches = MatryoshkaDims.map(dm => s"""
         SELECT $dm AS dims, query_id, cand_id FROM (
           SELECT query_id, cand_id,
@@ -3191,10 +3370,6 @@ object Similarity {
     // rk) + left-to-right list_sum), mirroring the Spark
     // sort_array+aggregate fold bit for bit
     "sim_bitext_mining" -> {
-      def dt(x: String, y: String) =
-        s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-      def cosv(x: String, y: String) =
-        s"(${dt(x, y)} / (sqrt(${dt(x, x)}) * sqrt(${dt(y, y)})))"
       s"""
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -3202,7 +3377,7 @@ object Similarity {
       xs AS (SELECT vec_id AS x_id, v AS xv FROM e WHERE vec_id % 2 = 0),
       ys AS (SELECT vec_id AS y_id, v AS yv FROM e WHERE vec_id % 2 <> 0),
       p AS (
-        SELECT x_id, y_id, ${cosv("xv", "yv")} AS cos
+        SELECT x_id, y_id, ${cosFold("xv", "yv")} AS cos
         FROM xs CROSS JOIN ys),
       rx AS (
         SELECT x_id, y_id, cos,
@@ -3283,48 +3458,21 @@ object Similarity {
           CAST(list_sum([q.qv[i] * c.qv[i] for i in range(1, 65)]) AS BIGINT) AS adot
         FROM q8 q JOIN q8 c ON q.vec_id <> c.vec_id
         WHERE q.vec_id < $NumQueries),
-      pool AS (
-        SELECT query_id, cand_id FROM (
-          SELECT query_id, cand_id,
-            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adot DESC, cand_id ASC) AS ark
-          FROM adots) WHERE ark <= $QuantCand),
-      rer AS (
-        SELECT p.query_id, p.cand_id,
-          ${duckCos("qe.embedding", "ce.embedding")} AS cos
-        FROM pool p
-        JOIN embeddings qe ON qe.vec_id = p.query_id
-        JOIN embeddings ce ON ce.vec_id = p.cand_id)
-      SELECT query_id, rk, cand_id, cos FROM (
-        SELECT query_id, cand_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rk
-        FROM rer) WHERE rk <= $TopK
-      ORDER BY query_id, rk""",
+      ${topK("adot", "adots", QuantCand)}""",
     // IVF replays END-TO-END (r7 ask #3): the coarse quantizer is the
     // vec_id-ordered per-coordinate fold (centroidsExact), so the
     // centroid build, the nearest-centroid assignment, the nprobe probe
     // ranking, and the exact re-rank are all the same IEEE op chains in
     // both engines — no frozen literals needed.
     "sim_ivf_balance" -> {
-      def dt(x: String, y: String) =
-        s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-      def cosv(x: String, y: String) =
-        s"(${dt(x, y)} / (sqrt(${dt(x, x)}) * sqrt(${dt(y, y)})))"
       s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
+      WITH ${labelCentroids()},
       k AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM cent),
       asg AS (
         SELECT vec_id, cent_id FROM (
           SELECT vec_id, cent_id,
             ROW_NUMBER() OVER (PARTITION BY vec_id
-              ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
+              ORDER BY $nearestCell) AS cr
           FROM e CROSS JOIN cent) WHERE cr = 1),
       cells AS (
         SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS n_vecs
@@ -3337,26 +3485,14 @@ object Similarity {
       ORDER BY cent_id"""
     },
     "sim_ivf_rebalance" -> {
-      def dt(x: String, y: String) =
-        s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-      def cosv(x: String, y: String) =
-        s"(${dt(x, y)} / (sqrt(${dt(x, x)}) * sqrt(${dt(y, y)})))"
       s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
+      WITH ${labelCentroids()},
       k AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM cent),
       asg AS (
         SELECT vec_id, cent_id FROM (
           SELECT vec_id, cent_id,
             ROW_NUMBER() OVER (PARTITION BY vec_id
-              ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
+              ORDER BY $nearestCell) AS cr
           FROM e CROSS JOIN cent) WHERE cr = 1),
       cells AS (
         SELECT cent_id, CAST(COUNT(*) AS BIGINT) AS n_vecs
@@ -3371,7 +3507,7 @@ object Similarity {
       pd AS (
         SELECT a.cent_id AS mid, b.cent_id AS tid,
           ROW_NUMBER() OVER (PARTITION BY a.cent_id
-            ORDER BY -(${cosv("ca.c", "cb.c")}) ASC, b.cent_id ASC) AS r
+            ORDER BY -(${cosFold("ca.c", "cb.c")}) ASC, b.cent_id ASC) AS r
         FROM cls a
         JOIN cent ca ON ca.cent_id = a.cent_id
         CROSS JOIN cls b
@@ -3382,25 +3518,9 @@ object Similarity {
       ORDER BY cls.cent_id"""
     },
     "sim_ivf_ann" -> {
-      def dt(x: String, y: String) =
-        s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-      def cosv(x: String, y: String) =
-        s"(${dt(x, y)} / (sqrt(${dt(x, x)}) * sqrt(${dt(y, y)})))"
       s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
-      ranked_cents AS (
-        SELECT vec_id, v, cent_id,
-          ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
-        FROM e CROSS JOIN cent),
+      WITH ${labelCentroids()},
+      ${rankedCents("vec_id, v, cent_id")},
       asg AS (
         SELECT vec_id AS cand_id, v AS cv, cent_id
         FROM ranked_cents WHERE cr = 1),
@@ -3408,7 +3528,7 @@ object Similarity {
         SELECT vec_id AS query_id, v AS qv, cent_id
         FROM ranked_cents WHERE vec_id < $NumQueries AND cr <= $NProbe),
       scored AS (
-        SELECT p.query_id, a.cand_id, ${cosv("p.qv", "a.cv")} AS cos
+        SELECT p.query_id, a.cand_id, ${cosFold("p.qv", "a.cv")} AS cos
         FROM asg a JOIN probes p ON a.cent_id = p.cent_id
         WHERE a.cand_id <> p.query_id),
       rnk AS (
@@ -3444,10 +3564,6 @@ object Similarity {
       FROM n GROUP BY norm_band ORDER BY norm_band""",
     // per-label half-corpus centroid folds + one cosine — full replay
     "sim_centroid_drift" -> {
-      def dt(x: String, y: String) =
-        s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-      def cosv(x: String, y: String) =
-        s"(${dt(x, y)} / (sqrt(${dt(x, x)}) * sqrt(${dt(y, y)})))"
       def halfCte(tag: String, parity: Int) = s"""
       coords_$tag AS (
         SELECT label, vec_id, i, v[i] AS x
@@ -3469,7 +3585,7 @@ object Similarity {
           CAST(SUM(CASE WHEN vec_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
         FROM e GROUP BY label)
       SELECT ca.label AS label, counts.n_a, counts.n_b,
-        ${cosv("ca.c", "cb.c")} AS drift_cos
+        ${cosFold("ca.c", "cb.c")} AS drift_cos
       FROM cent_a ca
       JOIN cent_b cb ON ca.label = cb.label
       JOIN counts ON ca.label = counts.label
@@ -3477,25 +3593,9 @@ object Similarity {
     },
     // lowest assignment-cosine rows under the same centroid fold
     "sim_ood_outliers" -> {
-      def dt(x: String, y: String) =
-        s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-      def cosv(x: String, y: String) =
-        s"(${dt(x, y)} / (sqrt(${dt(x, x)}) * sqrt(${dt(y, y)})))"
       s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
-      ranked_cents AS (
-        SELECT vec_id, cent_id, -(${cosv("v", "c")}) AS d,
-          ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
-        FROM e CROSS JOIN cent)
+      WITH ${labelCentroids()},
+      ${rankedCents(s"vec_id, cent_id, -(${cosFold("v", "c")}) AS d")}
       SELECT vec_id, cent_id, -(d) AS cos
       FROM ranked_cents WHERE cr = 1
       ORDER BY cos ASC, vec_id ASC
@@ -3505,25 +3605,9 @@ object Similarity {
     // probe ranking; "reachable at nprobe=p" = probe rank <= p, truth
     // slice = p = k (exhaustive == brute force)
     "sim_recall_curve" -> {
-      def dt(x: String, y: String) =
-        s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-      def cosv(x: String, y: String) =
-        s"(${dt(x, y)} / (sqrt(${dt(x, x)}) * sqrt(${dt(y, y)})))"
       s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
-      ranked_cents AS (
-        SELECT vec_id, v, cent_id,
-          ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
-        FROM e CROSS JOIN cent),
+      WITH ${labelCentroids()},
+      ${rankedCents("vec_id, v, cent_id")},
       asg AS (
         SELECT vec_id AS cand_id, v AS cv, cent_id
         FROM ranked_cents WHERE cr = 1),
@@ -3532,7 +3616,7 @@ object Similarity {
         FROM ranked_cents WHERE vec_id < $NumQueries),
       pairs AS (
         SELECT p.query_id, a.cand_id, p.pr,
-          ${cosv("p.qv", "a.cv")} AS cos
+          ${cosFold("p.qv", "a.cv")} AS cos
         FROM asg a JOIN probes p ON a.cent_id = p.cent_id
         WHERE a.cand_id <> p.query_id),
       ks AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM cent),
@@ -3555,6 +3639,7 @@ object Similarity {
       JOIN truth tr ON t.query_id = tr.query_id AND t.cand_id = tr.cand_id
       GROUP BY t.nprobe ORDER BY t.nprobe"""
     })
+  }
 
   private lazy val embCosOracle = s"""
       SELECT x.vec_id AS a, y.vec_id AS b,
@@ -3563,54 +3648,22 @@ object Similarity {
       WHERE ${duckCos("x.embedding", "y.embedding")} >= 0.40
       ORDER BY a, b"""
 
-  /** PQ full oracle (r7 ask #3): the codebook is re-derived here by the
-    * SAME deterministic driver-side trainer the query uses (bounded
-    * sample in vec_id order, fixed Lloyd iterations, lowest-index
-    * tie-breaks — a pure function of the data), then interpolated into
-    * the SQL as double literals (`Double.toString` round-trips, and
-    * DuckDB's correctly-rounded parse recovers the identical bits). The
-    * SQL then replays unit-normalization, per-subspace encode
-    * (squared-L2 arg-min, strict-<-lowest-index), the ADC approx sum in
-    * subspace order, the top-[[PqCand]] pool, and the exact re-rank —
-    * every accumulation a left-to-right fold matching the Scala loops.
+  /** sim_pq_ann oracle, the no-IVF PQ replay of [[simPqANN]]: DuckDB
+    * unit-normalises every vector, encodes it against the frozen
+    * codebook literals, folds each (query, cand) pair's ADC terms in
+    * subspace order, and ends in the exact re-rank.
     */
-  def pqOracleSql(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    val sample = emb(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("e"))
-      .as[(Long, Array[Double])]
-      .filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(t => unitVec(t._2))
-    val books = pqTrain(sample)
-    def dl(x: Double): String = java.lang.Double.toString(x)
-    val bookRows = (for {
-      m <- 0 until PqM
-      k <- 0 until PqK
-    } yield s"($m, $k, [${books(m)(k).map(dl).mkString(", ")}])")
-      .mkString(", ")
-    def dt64(x: String, y: String) =
-      s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
+  private def pqAnnOracleSql(books: Array[Array[Array[Double]]]): String = {
+    import DuckSql._
     s"""
-      WITH books AS (SELECT * FROM (VALUES $bookRows) b(m, k, c)),
+      WITH ${codebook(books)},
       e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      un AS (
-        SELECT vec_id,
-          [v[i] / sqrt(${dt64("v", "v")}) for i in range(1, 65)] AS u
-        FROM e),
-      dists AS (
-        SELECT un.vec_id, b.m, b.k,
-          list_sum([(un.u[b.m * 8 + i] - b.c[i]) * (un.u[b.m * 8 + i] - b.c[i])
-                    for i in range(1, 9)]) AS d
-        FROM un CROSS JOIN books b),
-      codes AS (
-        SELECT vec_id, m, k FROM (
-          SELECT vec_id, m, k,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d ASC, k ASC) AS cr
-          FROM dists) WHERE cr = 1),
+      $unitVecs,
+      ${pqCodes("un", "u")},
       terms AS (
         SELECT q.vec_id AS query_id, c.vec_id AS cand_id, c.m,
-          list_sum([q.u[c.m * 8 + i] * b.c[i] for i in range(1, 9)]) AS t
+          ${adcTerm("q.u")} AS t
         FROM codes c
         JOIN books b ON b.m = c.m AND b.k = c.k
         CROSS JOIN un q
@@ -3618,649 +3671,81 @@ object Similarity {
       approx AS (
         SELECT query_id, cand_id, list_sum(list(t ORDER BY m)) AS a
         FROM terms GROUP BY query_id, cand_id),
-      pool AS (
-        SELECT query_id, cand_id FROM (
-          SELECT query_id, cand_id,
-            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY a DESC, cand_id ASC) AS ark
-          FROM approx) WHERE ark <= $PqCand),
-      rer AS (
-        SELECT p.query_id, p.cand_id,
-          ${duckCos("qe.embedding", "ce.embedding")} AS cos
-        FROM pool p
-        JOIN embeddings qe ON qe.vec_id = p.query_id
-        JOIN embeddings ce ON ce.vec_id = p.cand_id)
-      SELECT query_id, rk, cand_id, cos FROM (
-        SELECT query_id, cand_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rk
-        FROM rer) WHERE rk <= $TopK
-      ORDER BY query_id, rk"""
-  }
-  // sim_lsh_ann / sim_sq_ann / sim_ivf_ann replay fully in static SQL;
-  // sim_pq_ann needs the Verify-time oracleContext for its codebook
-  // literals (rows-only fallback when unset). Recall ≥ bound vs brute
-  // force additionally asserted in SimilaritySpec for all ANN tiers.
-
-  /** sim_ivfpq_ann oracle: the [[pqOracleSql]] codebook-literal replay
-    * composed with the sim_ivf_ann coarse CTEs — DuckDB independently
-    * re-derives the exact label-centroid fold, the coarse assignment
-    * and probe ranking (raw-vector cosine, the Spark side's exact
-    * comparison), the unit vectors, the PQ codes from the interpolated
-    * codebook, the ADC terms restricted to probed (query, cand) pairs,
-    * the top-[[PqCand]] pool, and the exact re-rank.
-    */
-  def ivfPqOracleSql(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    val sample = emb(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("e"))
-      .as[(Long, Array[Double])]
-      .filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(t => unitVec(t._2))
-    val books = pqTrain(sample)
-    def dl(x: Double): String = java.lang.Double.toString(x)
-    val bookRows = (for {
-      m <- 0 until PqM
-      k <- 0 until PqK
-    } yield s"($m, $k, [${books(m)(k).map(dl).mkString(", ")}])")
-      .mkString(", ")
-    def dt64(x: String, y: String) =
-      s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-    def cosv(x: String, y: String) =
-      s"(${dt64(x, y)} / (sqrt(${dt64(x, x)}) * sqrt(${dt64(y, y)})))"
-    s"""
-      WITH books AS (SELECT * FROM (VALUES $bookRows) b(m, k, c)),
-      e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
-      ranked_cents AS MATERIALIZED (
-        SELECT vec_id, v, cent_id,
-          ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
-        FROM e CROSS JOIN cent),
-      asg AS (
-        SELECT vec_id AS cand_id, cent_id FROM ranked_cents WHERE cr = 1),
-      probes AS (
-        SELECT vec_id AS query_id, cent_id
-        FROM ranked_cents WHERE vec_id < $NumQueries AND cr <= $NProbe),
-      un AS MATERIALIZED (
-        SELECT vec_id,
-          [v[i] / sqrt(${dt64("v", "v")}) for i in range(1, 65)] AS u
-        FROM e),
-      dists AS (
-        SELECT un.vec_id, b.m, b.k,
-          list_sum([(un.u[b.m * 8 + i] - b.c[i]) * (un.u[b.m * 8 + i] - b.c[i])
-                    for i in range(1, 9)]) AS d
-        FROM un CROSS JOIN books b
-        -- codes exist only for vectors in PROBED cells (the Spark scan
-        -- never encodes an unprobed vector; restricting here keeps the
-        -- replay's work IVF-shaped too)
-        WHERE un.vec_id IN (SELECT a.cand_id FROM asg a
-          JOIN probes p ON a.cent_id = p.cent_id)),
-      codes AS (
-        SELECT vec_id, m, k FROM (
-          SELECT vec_id, m, k,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d ASC, k ASC) AS cr
-          FROM dists) WHERE cr = 1),
-      cand0 AS (
-        SELECT p.query_id, a.cand_id
-        FROM asg a JOIN probes p ON a.cent_id = p.cent_id
-        WHERE a.cand_id <> p.query_id),
-      terms AS (
-        SELECT pr.query_id, pr.cand_id, c.m,
-          list_sum([qu.u[c.m * 8 + i] * b.c[i] for i in range(1, 9)]) AS t
-        FROM cand0 pr
-        JOIN codes c ON c.vec_id = pr.cand_id
-        JOIN books b ON b.m = c.m AND b.k = c.k
-        JOIN un qu ON qu.vec_id = pr.query_id),
-      approx AS (
-        SELECT query_id, cand_id, list_sum(list(t ORDER BY m)) AS a
-        FROM terms GROUP BY query_id, cand_id),
-      pool AS (
-        SELECT query_id, cand_id FROM (
-          SELECT query_id, cand_id,
-            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY a DESC, cand_id ASC) AS ark
-          FROM approx) WHERE ark <= $PqCand),
-      rer AS (
-        SELECT p.query_id, p.cand_id,
-          ${duckCos("qe.embedding", "ce.embedding")} AS cos
-        FROM pool p
-        JOIN embeddings qe ON qe.vec_id = p.query_id
-        JOIN embeddings ce ON ce.vec_id = p.cand_id)
-      SELECT query_id, rk, cand_id, cos FROM (
-        SELECT query_id, cand_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rk
-        FROM rer) WHERE rk <= $TopK
-      ORDER BY query_id, rk"""
+      ${topK("a", "approx", PqCand)}"""
   }
 
-  /** sim_ivfpq_residual oracle: the [[ivfPqOracleSql]] replay with the
-    * residual twist — DuckDB re-derives the unit centroids, subtracts
-    * each probed vector's unit coarse centroid before encoding against
-    * the (residual-trained) codebook literals, and assembles
-    * approx = coarse + Σ table terms in the query's exact float
-    * association (`coarse + list_sum(list(t ORDER BY m))`).
+  /** The serve-shape IVF-PQ oracle of encoding `enc` ([[simIvfPqANN]]
+    * and [[simIvfPqServe]]): each query probes its [[NProbe]] nearest
+    * cells, then the pool, exact re-rank and top-K tail.
     */
-  def ivfPqResidualOracleSql(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    val typed = emb(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("e"))
-      .as[(Long, Array[Double])]
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(_._2)
-    val books = PqEncoding.Residual.train(sample, cents)
-    def dl(x: Double): String = java.lang.Double.toString(x)
-    val bookRows = (for {
-      m <- 0 until PqM
-      k <- 0 until PqK
-    } yield s"($m, $k, [${books(m)(k).map(dl).mkString(", ")}])")
-      .mkString(", ")
-    def dt64(x: String, y: String) =
-      s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-    def cosv(x: String, y: String) =
-      s"(${dt64(x, y)} / (sqrt(${dt64(x, x)}) * sqrt(${dt64(y, y)})))"
-    s"""
-      WITH books AS (SELECT * FROM (VALUES $bookRows) b(m, k, c)),
-      e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS MATERIALIZED (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
-      ranked_cents AS MATERIALIZED (
-        SELECT vec_id, v, cent_id,
-          ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
-        FROM e CROSS JOIN cent),
-      asg AS MATERIALIZED (
-        SELECT vec_id AS cand_id, cent_id FROM ranked_cents WHERE cr = 1),
-      probes AS (
-        SELECT vec_id AS query_id, cent_id
-        FROM ranked_cents WHERE vec_id < $NumQueries AND cr <= $NProbe),
-      un AS MATERIALIZED (
-        SELECT vec_id,
-          [v[i] / sqrt(${dt64("v", "v")}) for i in range(1, 65)] AS u
-        FROM e),
-      -- residuals (vs the RAW cell mean — the zero-mean anchor) exist
-      -- only for vectors in PROBED cells (the Spark scan never encodes
-      -- an unprobed vector)
-      res AS MATERIALIZED (
-        SELECT un.vec_id, [un.u[i] - ct.c[i] for i in range(1, 65)] AS r
+  private def ivfPqServeOracleSql(enc: PqEncoding,
+      books: Array[Array[Array[Double]]]): String =
+    ivfPqReplaySql(enc, books, s" AND cr <= $NProbe", DuckSql.topK("a", "approx", PqCand))
+
+  /** The curve-shape IVF-PQ oracle of encoding `enc`
+    * ([[simIvfPqRecallCurve]]): every cell is scored with its probe
+    * rank, then the recall-curve tail.
+    */
+  private def ivfPqCurveOracleSql(enc: PqEncoding,
+      books: Array[Array[Array[Double]]]): String =
+    ivfPqReplaySql(enc, books, "", DuckSql.recallCurve)
+
+  /** The IVF-PQ replay up to `approx(query_id, cand_id, pr, a)`, then
+    * `tail`. `books` is the codebook [[ivfPqModel]] trains for `enc`;
+    * the coarse centroids are not interpolated, DuckDB re-derives them
+    * (the exact label-centroid fold, raw-vector cosine ranking). The
+    * SQL branches only where [[PqEncoding]] does: the residual
+    * subtraction and the rotation of the coded vector (`coded`), the
+    * rotation of the query table (`table`) and the coarse term
+    * (`coarse`, added first as in [[adcScores]]). Codes are built only
+    * for vectors some query probes, as the Spark scan builds them.
+    */
+  private def ivfPqReplaySql(enc: PqEncoding,
+      books: Array[Array[Array[Double]]], probed: String, tail: String): String = {
+    import DuckSql._
+    val x = if (enc.anchored) "[un.u[i] - ct.c[i] for i in range(1, 65)]" else "un.u"
+    val unrotated = s"""SELECT un.vec_id, $x AS x
         FROM un
         JOIN asg a ON a.cand_id = un.vec_id
         JOIN cent ct ON ct.cent_id = a.cent_id
-        WHERE un.vec_id IN (SELECT a2.cand_id FROM asg a2
-          JOIN probes p ON a2.cent_id = p.cent_id)),
-      dists AS (
-        SELECT res.vec_id, b.m, b.k,
-          list_sum([(res.r[b.m * 8 + i] - b.c[i]) * (res.r[b.m * 8 + i] - b.c[i])
-                    for i in range(1, 9)]) AS d
-        FROM res CROSS JOIN books b),
-      codes AS (
-        SELECT vec_id, m, k FROM (
-          SELECT vec_id, m, k,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d ASC, k ASC) AS cr
-          FROM dists) WHERE cr = 1),
-      cand0 AS MATERIALIZED (
-        SELECT p.query_id, a.cand_id, a.cent_id
-        FROM asg a JOIN probes p ON a.cent_id = p.cent_id
-        WHERE a.cand_id <> p.query_id),
-      coarse AS (
-        SELECT c0.query_id, c0.cand_id,
-          list_sum([qu.u[i] * cc.c[i] for i in range(1, 65)]) AS ct
-        FROM cand0 c0
-        JOIN un qu ON qu.vec_id = c0.query_id
-        JOIN cent cc ON cc.cent_id = c0.cent_id),
-      terms AS (
-        SELECT pr.query_id, pr.cand_id, c.m,
-          list_sum([qu.u[c.m * 8 + i] * b.c[i] for i in range(1, 9)]) AS t
-        FROM cand0 pr
-        JOIN codes c ON c.vec_id = pr.cand_id
-        JOIN books b ON b.m = c.m AND b.k = c.k
-        JOIN un qu ON qu.vec_id = pr.query_id),
-      approx AS (
-        SELECT t.query_id, t.cand_id,
-          co.ct + list_sum(list(t.t ORDER BY t.m)) AS a
-        FROM terms t
-        JOIN coarse co ON co.query_id = t.query_id AND co.cand_id = t.cand_id
-        GROUP BY t.query_id, t.cand_id, co.ct),
-      pool AS (
-        SELECT query_id, cand_id FROM (
-          SELECT query_id, cand_id,
-            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY a DESC, cand_id ASC) AS ark
-          FROM approx) WHERE ark <= $PqCand),
-      rer AS (
-        SELECT p.query_id, p.cand_id,
-          ${duckCos("qe.embedding", "ce.embedding")} AS cos
-        FROM pool p
-        JOIN embeddings qe ON qe.vec_id = p.query_id
-        JOIN embeddings ce ON ce.vec_id = p.cand_id)
-      SELECT query_id, rk, cand_id, cos FROM (
-        SELECT query_id, cand_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rk
-        FROM rer) WHERE rk <= $TopK
-      ORDER BY query_id, rk"""
-  }
-
-  /** sim_ivfpq_opq oracle: the [[ivfPqResidualOracleSql]] replay with
-    * the rotation twist — R interpolates as 64 (i, row) literals (the
-    * frozen-model trust: [[opqRotation]] is a pure function, so Verify
-    * re-derives the query's exact matrix), DuckDB rotates each probed
-    * residual and each unit query by the same j-ascending
-    * list-comprehension fold, and codes/tables live in rotated space
-    * while the coarse term stays in the original space.
-    */
-  def ivfPqOpqOracleSql(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    val typed = emb(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("e"))
-      .as[(Long, Array[Double])]
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(_._2)
-    val rot = opqRotation()
-    val books = PqEncoding(anchored = true, Some(rot)).train(sample, cents)
-    def dl(x: Double): String = java.lang.Double.toString(x)
-    val bookRows = (for {
-      m <- 0 until PqM
-      k <- 0 until PqK
-    } yield s"($m, $k, [${books(m)(k).map(dl).mkString(", ")}])")
-      .mkString(", ")
-    val rotRows = rot.zipWithIndex
-      .map { case (row, i) => s"(${i + 1}, [${row.map(dl).mkString(", ")}])" }
-      .mkString(", ")
-    def dt64(x: String, y: String) =
-      s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-    def cosv(x: String, y: String) =
-      s"(${dt64(x, y)} / (sqrt(${dt64(x, x)}) * sqrt(${dt64(y, y)})))"
+        WHERE un.vec_id IN (SELECT cand_id FROM cand0)"""
+    val rotating = enc.rotation.isDefined
+    val coded = if (enc.anchored && rotating) rotated(unrotated, "x") else unrotated
+    val queries = s"SELECT vec_id, u FROM un WHERE vec_id < $NumQueries"
+    val table = if (rotating) rotated(queries, "u") else queries
+    val coarse = if (enc.anchored) dotFold("qu.u", "cc.c") else "CAST(0 AS DOUBLE)"
     s"""
-      WITH books AS (SELECT * FROM (VALUES $bookRows) b(m, k, c)),
-      rot AS MATERIALIZED (SELECT * FROM (VALUES $rotRows) r(i, rw)),
-      e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS MATERIALIZED (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
-      ranked_cents AS MATERIALIZED (
-        SELECT vec_id, v, cent_id,
-          ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
-        FROM e CROSS JOIN cent),
+      WITH ${codebook(books)},${enc.rotation.fold("")(r => s"\n      ${rotation(r)},")}
+      ${labelCentroids(materialized = true)},
+      ${rankedCents("vec_id, cent_id", materialized = true)},
       asg AS MATERIALIZED (
         SELECT vec_id AS cand_id, cent_id FROM ranked_cents WHERE cr = 1),
       probes AS (
-        SELECT vec_id AS query_id, cent_id
-        FROM ranked_cents WHERE vec_id < $NumQueries AND cr <= $NProbe),
-      un AS MATERIALIZED (
-        SELECT vec_id,
-          [v[i] / sqrt(${dt64("v", "v")}) for i in range(1, 65)] AS u
-        FROM e),
-      -- residuals (vs the RAW cell mean) for vectors in PROBED cells
-      res AS MATERIALIZED (
-        SELECT un.vec_id, [un.u[i] - ct.c[i] for i in range(1, 65)] AS r
-        FROM un
-        JOIN asg a ON a.cand_id = un.vec_id
-        JOIN cent ct ON ct.cent_id = a.cent_id
-        WHERE un.vec_id IN (SELECT a2.cand_id FROM asg a2
-          JOIN probes p ON a2.cent_id = p.cent_id)),
-      -- the OPQ twist: codes quantize R·r, so rotate each residual
-      -- (row·vector dots, j ascending — the rotate() fold)
-      rres AS MATERIALIZED (
-        SELECT res.vec_id,
-          list(list_sum([rot.rw[j] * res.r[j] for j in range(1, 65)])
-            ORDER BY rot.i) AS r
-        FROM res CROSS JOIN rot GROUP BY res.vec_id),
-      -- ...and the ADC table dots the ROTATED unit query: qu·Rᵀẑ = (R·qu)·ẑ
-      run AS MATERIALIZED (
-        SELECT un.vec_id,
-          list(list_sum([rot.rw[j] * un.u[j] for j in range(1, 65)])
-            ORDER BY rot.i) AS u
-        FROM un CROSS JOIN rot
-        WHERE un.vec_id < $NumQueries GROUP BY un.vec_id),
-      dists AS (
-        SELECT rres.vec_id, b.m, b.k,
-          list_sum([(rres.r[b.m * 8 + i] - b.c[i]) * (rres.r[b.m * 8 + i] - b.c[i])
-                    for i in range(1, 9)]) AS d
-        FROM rres CROSS JOIN books b),
-      codes AS (
-        SELECT vec_id, m, k FROM (
-          SELECT vec_id, m, k,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d ASC, k ASC) AS cr
-          FROM dists) WHERE cr = 1),
+        SELECT vec_id AS query_id, cent_id, cr AS pr
+        FROM ranked_cents WHERE vec_id < $NumQueries$probed),
+      $unitVecs,
       cand0 AS MATERIALIZED (
-        SELECT p.query_id, a.cand_id, a.cent_id
-        FROM asg a JOIN probes p ON a.cent_id = p.cent_id
+        SELECT p.query_id, a.cand_id, p.pr, $coarse AS ct
+        FROM asg a
+        JOIN probes p ON a.cent_id = p.cent_id
+        JOIN un qu ON qu.vec_id = p.query_id
+        JOIN cent cc ON cc.cent_id = a.cent_id
         WHERE a.cand_id <> p.query_id),
-      -- the coarse term stays in the ORIGINAL space (unrotated qu·c̄)
-      coarse AS (
-        SELECT c0.query_id, c0.cand_id,
-          list_sum([qu.u[i] * cc.c[i] for i in range(1, 65)]) AS ct
-        FROM cand0 c0
-        JOIN un qu ON qu.vec_id = c0.query_id
-        JOIN cent cc ON cc.cent_id = c0.cent_id),
+      coded AS MATERIALIZED (
+        $coded),
+      qt AS MATERIALIZED (
+        $table),
+      ${pqCodes("coded", "x")},
       terms AS (
-        SELECT pr.query_id, pr.cand_id, c.m,
-          list_sum([qu.u[c.m * 8 + i] * b.c[i] for i in range(1, 9)]) AS t
+        SELECT pr.query_id, pr.cand_id, pr.pr, pr.ct, c.m,
+          ${adcTerm("qu.u")} AS t
         FROM cand0 pr
         JOIN codes c ON c.vec_id = pr.cand_id
         JOIN books b ON b.m = c.m AND b.k = c.k
-        JOIN run qu ON qu.vec_id = pr.query_id),
-      approx AS (
-        SELECT t.query_id, t.cand_id,
-          co.ct + list_sum(list(t.t ORDER BY t.m)) AS a
-        FROM terms t
-        JOIN coarse co ON co.query_id = t.query_id AND co.cand_id = t.cand_id
-        GROUP BY t.query_id, t.cand_id, co.ct),
-      pool AS (
-        SELECT query_id, cand_id FROM (
-          SELECT query_id, cand_id,
-            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY a DESC, cand_id ASC) AS ark
-          FROM approx) WHERE ark <= $PqCand),
-      rer AS (
-        SELECT p.query_id, p.cand_id,
-          ${duckCos("qe.embedding", "ce.embedding")} AS cos
-        FROM pool p
-        JOIN embeddings qe ON qe.vec_id = p.query_id
-        JOIN embeddings ce ON ce.vec_id = p.cand_id)
-      SELECT query_id, rk, cand_id, cos FROM (
-        SELECT query_id, cand_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rk
-        FROM rer) WHERE rk <= $TopK
-      ORDER BY query_id, rk"""
-  }
-
-  /** sim_ivfpq_residual_recall_curve oracle: the
-    * [[ivfPqResidualOracleSql]] replay with the probe-rank tag and the
-    * per-tier pool/re-rank fan-out of [[ivfPqRecallCurveOracleSql]] —
-    * residual codes for EVERY vector (the exhaustive tier probes every
-    * cell), approx = the per-(query, cand) coarse term + the ordered
-    * ADC fold, scored against the independently re-derived brute
-    * truth.
-    */
-  def ivfPqResidualRecallCurveOracleSql(s: SparkSession,
-      dir: String): String =
-    ivfPqResidualCurveOracleWith(s, dir, None)
-
-  /** sim_ivfpq_opq_recall_curve oracle: the residual-curve replay with
-    * the rotation literals — rotated residual codes, rotated query
-    * tables, unrotated coarse terms (one generator, rotation an
-    * Option, mirroring the Scala side's shared curve kernel).
-    */
-  def ivfPqOpqRecallCurveOracleSql(s: SparkSession, dir: String): String =
-    ivfPqResidualCurveOracleWith(s, dir, Some(opqRotation()))
-
-  private def ivfPqResidualCurveOracleWith(s: SparkSession, dir: String,
-      rotOpt: Option[Array[Array[Double]]]): String = {
-    import s.implicits._
-    val typed = emb(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("e"))
-      .as[(Long, Array[Double])]
-    val cents = centroidsExact(emb(s, dir))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val sample = typed.filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(_._2)
-    val books = PqEncoding(anchored = true, rotOpt).train(sample, cents)
-    def dl(x: Double): String = java.lang.Double.toString(x)
-    val bookRows = (for {
-      m <- 0 until PqM
-      k <- 0 until PqK
-    } yield s"($m, $k, [${books(m)(k).map(dl).mkString(", ")}])")
-      .mkString(", ")
-    def dt64(x: String, y: String) =
-      s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-    def cosv(x: String, y: String) =
-      s"(${dt64(x, y)} / (sqrt(${dt64(x, x)}) * sqrt(${dt64(y, y)})))"
-    // rotation plumbing: with Some(rot), a `rot` literal CTE plus
-    // rotated residuals (cres) and rotated unit queries (cun) replace
-    // the identity versions the unrotated replay reads
-    val rotCte = rotOpt.map { rot =>
-      val rotRows = rot.zipWithIndex
-        .map { case (row, i) => s"(${i + 1}, [${row.map(dl).mkString(", ")}])" }
-        .mkString(", ")
-      s"""rot AS MATERIALIZED (SELECT * FROM (VALUES $rotRows) r(i, rw)),
-      cres AS MATERIALIZED (
-        SELECT res.vec_id,
-          list(list_sum([rot.rw[j] * res.r[j] for j in range(1, 65)])
-            ORDER BY rot.i) AS r
-        FROM res CROSS JOIN rot GROUP BY res.vec_id),
-      cun AS MATERIALIZED (
-        SELECT un.vec_id,
-          list(list_sum([rot.rw[j] * un.u[j] for j in range(1, 65)])
-            ORDER BY rot.i) AS u
-        FROM un CROSS JOIN rot
-        WHERE un.vec_id < $NumQueries GROUP BY un.vec_id),"""
-    }.getOrElse("""cres AS (SELECT vec_id, r FROM res),
-      cun AS (SELECT vec_id, u FROM un),""")
-    s"""
-      WITH books AS (SELECT * FROM (VALUES $bookRows) b(m, k, c)),
-      e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS MATERIALIZED (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
-      ranked_cents AS MATERIALIZED (
-        SELECT vec_id, v, cent_id,
-          ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
-        FROM e CROSS JOIN cent),
-      asg AS MATERIALIZED (
-        SELECT vec_id AS cand_id, cent_id FROM ranked_cents WHERE cr = 1),
-      un AS MATERIALIZED (
-        SELECT vec_id,
-          [v[i] / sqrt(${dt64("v", "v")}) for i in range(1, 65)] AS u
-        FROM e),
-      res AS MATERIALIZED (
-        SELECT un.vec_id, [un.u[i] - ct.c[i] for i in range(1, 65)] AS r
-        FROM un
-        JOIN asg a ON a.cand_id = un.vec_id
-        JOIN cent ct ON ct.cent_id = a.cent_id),
-      $rotCte
-      dists AS (
-        SELECT cres.vec_id, b.m, b.k,
-          list_sum([(cres.r[b.m * 8 + i] - b.c[i]) * (cres.r[b.m * 8 + i] - b.c[i])
-                    for i in range(1, 9)]) AS d
-        FROM cres CROSS JOIN books b),
-      codes AS (
-        SELECT vec_id, m, k FROM (
-          SELECT vec_id, m, k,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d ASC, k ASC) AS cr
-          FROM dists) WHERE cr = 1),
-      cand0 AS MATERIALIZED (
-        SELECT q.vec_id AS query_id, a.cand_id, a.cent_id, p.cr AS pr
-        FROM e q
-        JOIN asg a ON a.cand_id <> q.vec_id
-        JOIN ranked_cents p ON p.vec_id = q.vec_id AND p.cent_id = a.cent_id
-        WHERE q.vec_id < $NumQueries),
-      coarse AS (
-        SELECT c0.query_id, c0.cand_id,
-          list_sum([qu.u[i] * cc.c[i] for i in range(1, 65)]) AS ct
-        FROM cand0 c0
-        JOIN un qu ON qu.vec_id = c0.query_id
-        JOIN cent cc ON cc.cent_id = c0.cent_id),
-      terms AS (
-        SELECT pr.query_id, pr.cand_id, pr.pr, c.m,
-          list_sum([qu.u[c.m * 8 + i] * b.c[i] for i in range(1, 9)]) AS t
-        FROM cand0 pr
-        JOIN codes c ON c.vec_id = pr.cand_id
-        JOIN books b ON b.m = c.m AND b.k = c.k
-        JOIN cun qu ON qu.vec_id = pr.query_id),
+        JOIN qt qu ON qu.vec_id = pr.query_id),
       approx AS MATERIALIZED (
-        SELECT t.query_id, t.cand_id, t.pr,
-          co.ct + list_sum(list(t.t ORDER BY t.m)) AS a
-        FROM terms t
-        JOIN coarse co ON co.query_id = t.query_id AND co.cand_id = t.cand_id
-        GROUP BY t.query_id, t.cand_id, t.pr, co.ct),
-      ks AS (SELECT unnest(range(1, (SELECT COUNT(*) FROM cent) + 1))
-        AS nprobe),
-      pool AS (
-        SELECT nprobe, query_id, cand_id FROM (
-          SELECT k.nprobe, x.query_id, x.cand_id,
-            ROW_NUMBER() OVER (PARTITION BY k.nprobe, x.query_id
-              ORDER BY x.a DESC, x.cand_id ASC) AS ark
-          FROM ks k JOIN approx x ON x.pr <= k.nprobe)
-        WHERE ark <= $PqCand),
-      rer AS (
-        SELECT p.nprobe, p.query_id, p.cand_id FROM (
-          SELECT p0.nprobe, p0.query_id, p0.cand_id,
-            ROW_NUMBER() OVER (PARTITION BY p0.nprobe, p0.query_id
-              ORDER BY ${duckCos("qe.embedding", "ce.embedding")} DESC,
-                p0.cand_id ASC) AS rk
-          FROM pool p0
-          JOIN embeddings qe ON qe.vec_id = p0.query_id
-          JOIN embeddings ce ON ce.vec_id = p0.cand_id) p
-        WHERE p.rk <= $TopK),
-      truth AS MATERIALIZED (
-        SELECT query_id, cand_id FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY ${duckCos("q.embedding", "c.embedding")} DESC,
-                c.vec_id ASC) AS rk
-          FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-          WHERE q.vec_id < $NumQueries)
-        WHERE rk <= $TopK),
-      hits AS (
-        SELECT r.nprobe, CAST(COUNT(*) AS BIGINT) AS n_hits
-        FROM rer r SEMI JOIN truth t
-          ON t.query_id = r.query_id AND t.cand_id = r.cand_id
-        GROUP BY r.nprobe),
-      nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth)
-      SELECT CAST(k.nprobe AS BIGINT) AS nprobe,
-        COALESCE(h.n_hits, 0) AS n_hits,
-        CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / CAST(nt.n_truth AS DOUBLE)
-          AS recall
-      FROM ks k LEFT JOIN hits h ON h.nprobe = k.nprobe CROSS JOIN nt
-      ORDER BY nprobe"""
-  }
-
-  /** sim_ivfpq_recall_curve oracle: the [[ivfPqOracleSql]] replay with
-    * the probe-rank tag and the per-tier pool/re-rank fan-out, scored
-    * against the independently re-derived brute-force truth.
-    */
-  def ivfPqRecallCurveOracleSql(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    val sample = emb(s, dir)
-      .select($"vec_id", asDouble($"embedding").as("e"))
-      .as[(Long, Array[Double])]
-      .filter(_._1 < PqSampleIds).collect()
-      .sortBy(_._1).map(t => unitVec(t._2))
-    val books = pqTrain(sample)
-    def dl(x: Double): String = java.lang.Double.toString(x)
-    val bookRows = (for {
-      m <- 0 until PqM
-      k <- 0 until PqK
-    } yield s"($m, $k, [${books(m)(k).map(dl).mkString(", ")}])")
-      .mkString(", ")
-    def dt64(x: String, y: String) =
-      s"list_sum([$x[i] * $y[i] for i in range(1, 65)])"
-    def cosv(x: String, y: String) =
-      s"(${dt64(x, y)} / (sqrt(${dt64(x, x)}) * sqrt(${dt64(y, y)})))"
-    s"""
-      WITH books AS (SELECT * FROM (VALUES $bookRows) b(m, k, c)),
-      e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      coords AS (
-        SELECT label, vec_id, i, v[i] AS x FROM e, UNNEST(range(1, 65)) AS u(i)),
-      csum AS (
-        SELECT label, i, list_sum(list(x ORDER BY vec_id)) / count(*) AS m
-        FROM coords GROUP BY label, i),
-      cent AS MATERIALIZED (
-        SELECT label AS cent_id, list(m ORDER BY i) AS c FROM csum GROUP BY label),
-      ranked_cents AS MATERIALIZED (
-        SELECT vec_id, v, cent_id,
-          ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY -(${cosv("v", "c")}) ASC, cent_id ASC) AS cr
-        FROM e CROSS JOIN cent),
-      asg AS (
-        SELECT vec_id AS cand_id, cent_id FROM ranked_cents WHERE cr = 1),
-      un AS MATERIALIZED (
-        SELECT vec_id,
-          [v[i] / sqrt(${dt64("v", "v")}) for i in range(1, 65)] AS u
-        FROM e),
-      dists AS (
-        SELECT un.vec_id, b.m, b.k,
-          list_sum([(un.u[b.m * 8 + i] - b.c[i]) * (un.u[b.m * 8 + i] - b.c[i])
-                    for i in range(1, 9)]) AS d
-        FROM un CROSS JOIN books b),
-      codes AS (
-        SELECT vec_id, m, k FROM (
-          SELECT vec_id, m, k,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d ASC, k ASC) AS cr
-          FROM dists) WHERE cr = 1),
-      -- every (query, cand) pair, tagged with the probe rank of the
-      -- cand's cell in the QUERY's centroid ranking
-      cand0 AS (
-        SELECT q.vec_id AS query_id, a.cand_id, p.cr AS pr
-        FROM e q
-        JOIN asg a ON a.cand_id <> q.vec_id
-        JOIN ranked_cents p ON p.vec_id = q.vec_id AND p.cent_id = a.cent_id
-        WHERE q.vec_id < $NumQueries),
-      terms AS (
-        SELECT pr.query_id, pr.cand_id, pr.pr, c.m,
-          list_sum([qu.u[c.m * 8 + i] * b.c[i] for i in range(1, 9)]) AS t
-        FROM cand0 pr
-        JOIN codes c ON c.vec_id = pr.cand_id
-        JOIN books b ON b.m = c.m AND b.k = c.k
-        JOIN un qu ON qu.vec_id = pr.query_id),
-      approx AS MATERIALIZED (
-        SELECT query_id, cand_id, pr, list_sum(list(t ORDER BY m)) AS a
-        FROM terms GROUP BY query_id, cand_id, pr),
-      ks AS (SELECT unnest(range(1, (SELECT COUNT(*) FROM cent) + 1))
-        AS nprobe),
-      pool AS (
-        SELECT nprobe, query_id, cand_id FROM (
-          SELECT k.nprobe, x.query_id, x.cand_id,
-            ROW_NUMBER() OVER (PARTITION BY k.nprobe, x.query_id
-              ORDER BY x.a DESC, x.cand_id ASC) AS ark
-          FROM ks k JOIN approx x ON x.pr <= k.nprobe)
-        WHERE ark <= $PqCand),
-      rer AS (
-        SELECT p.nprobe, p.query_id, p.cand_id FROM (
-          SELECT p0.nprobe, p0.query_id, p0.cand_id,
-            ROW_NUMBER() OVER (PARTITION BY p0.nprobe, p0.query_id
-              ORDER BY ${duckCos("qe.embedding", "ce.embedding")} DESC,
-                p0.cand_id ASC) AS rk
-          FROM pool p0
-          JOIN embeddings qe ON qe.vec_id = p0.query_id
-          JOIN embeddings ce ON ce.vec_id = p0.cand_id) p
-        WHERE p.rk <= $TopK),
-      truth AS MATERIALIZED (
-        SELECT query_id, cand_id FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY ${duckCos("q.embedding", "c.embedding")} DESC,
-                c.vec_id ASC) AS rk
-          FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-          WHERE q.vec_id < $NumQueries)
-        WHERE rk <= $TopK),
-      hits AS (
-        SELECT r.nprobe, CAST(COUNT(*) AS BIGINT) AS n_hits
-        FROM rer r SEMI JOIN truth t
-          ON t.query_id = r.query_id AND t.cand_id = r.cand_id
-        GROUP BY r.nprobe),
-      nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth)
-      SELECT CAST(k.nprobe AS BIGINT) AS nprobe,
-        COALESCE(h.n_hits, 0) AS n_hits,
-        CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / CAST(nt.n_truth AS DOUBLE)
-          AS recall
-      FROM ks k LEFT JOIN hits h ON h.nprobe = k.nprobe CROSS JOIN nt
-      ORDER BY nprobe"""
+        SELECT query_id, cand_id, pr, ct + list_sum(list(t ORDER BY m)) AS a
+        FROM terms GROUP BY query_id, cand_id, pr, ct),
+      $tail"""
   }
 }

@@ -1212,7 +1212,7 @@ class SimilaritySpec extends SparkSpec {
     val work = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
     Similarity.writeIvfPqIndex(spark, sfDir, work, enc)
     // one code directory per coarse cell; the model sidecars coexist
-    val dirs = new java.io.File(work).listFiles()
+    val dirs = new java.io.File(s"$work/codes").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cent_id="))
     assert(dirs.length > 2, s"expected several cell partitions: ${dirs.toSeq}")
     // serve must equal the inline tier — rank, id, AND score (same
@@ -1241,7 +1241,7 @@ class SimilaritySpec extends SparkSpec {
     base.unionByName(twins).write.parquet(s"$fixDir/embeddings.parquet")
     Similarity.appendIvfPqBatch(spark, work, twins
       .select($"vec_id", $"embedding".cast("array<double>").as("e")))
-    val codes = spark.read.parquet(work)
+    val codes = spark.read.parquet(s"$work/codes")
       .select($"vec_id", $"cent_id".cast("long"), $"code").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getAs[Array[Byte]](2).toSeq)))
       .toMap
@@ -1301,6 +1301,85 @@ class SimilaritySpec extends SparkSpec {
           assert(got != other, s"$path decodes as another tier")
         }
         assert(got == own)
+    }
+  }
+
+  test("index sidecars: writing, appending to and searching every tier's index never trips Spark's hidden-path filter") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    import scala.jdk.CollectionConverters._
+    // Spark's file index treats `_`-prefixed paths as hidden: reading
+    // one by name logs "All paths were ignored" and works only because
+    // Spark keeps a path it was handed explicitly
+    // the session starts first: starting it reconfigures log4j, which
+    // would drop a capture attached before
+    val batch = graft.Tables.t(spark, sfDir, "embeddings")
+      .filter($"vec_id" < 5L)
+      .select(($"vec_id" + 100000L).as("vec_id"),
+        $"embedding".cast("array<double>").as("e"))
+    val name = "org.apache.spark.sql.execution.datasources.DataSource"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-datasource-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        seen.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    val logger = LogManager.getLogger(name).asInstanceOf[CoreLogger]
+    val level = logger.getLevel
+    capture.start()
+    logger.addAppender(capture)
+    Configurator.setLevel(name, Level.WARN)
+    try {
+      def fresh() = java.nio.file.Files.createTempDirectory("graft-sidecars").toString
+      val ivf = fresh()
+      Similarity.writeIvfIndex(spark, sfDir, ivf)
+      Similarity.appendIvfBatch(spark, ivf, batch)
+      Similarity.searchIvfIndex(spark, sfDir, ivf).collect()
+      import Similarity.PqEncoding.{Opq, Plain, Residual}
+      Seq(Plain, Residual, Opq).foreach { enc =>
+        val pq = fresh()
+        Similarity.writeIvfPqIndex(spark, sfDir, pq, enc)
+        Similarity.appendIvfPqBatch(spark, pq, batch)
+        Similarity.searchIvfPqIndex(spark, sfDir, pq).collect()
+      }
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+      Configurator.setLevel(name, level)
+    }
+    val hidden = seen.asScala.filter(_.contains("All paths were ignored"))
+    assert(hidden.isEmpty,
+      s"index reads went through the hidden-path filter:\n${hidden.mkString("\n")}")
+  }
+
+  test("context oracles: all 13 derive, and re-derive to identical text under shuffle partitions 1 and 7") {
+    // the codebook, rotation and graph-pair literals come from the data
+    // alone, so no partitioning may change a byte of them
+    val saved = Similarity.oracleContext
+    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      Similarity.oracleContext = None
+      val static = Similarity.oracles.keySet
+      Similarity.oracleContext = Some((spark, sfDir))
+      val builds = Seq("1", "7").map { p =>
+        spark.conf.set("spark.sql.shuffle.partitions", p)
+        Similarity.oracles
+      }
+      val context = Set("sim_pq_ann", "sim_ivfpq_ann", "sim_ivfpq_serve",
+        "sim_ivfpq_residual", "sim_ivfpq_residual_serve", "sim_ivfpq_opq",
+        "sim_ivfpq_opq_serve", "sim_ivfpq_recall_curve",
+        "sim_ivfpq_residual_recall_curve", "sim_ivfpq_opq_recall_curve",
+        "sim_knn_graph", "sim_graph_search", "sim_graph_centrality")
+      builds.foreach { o => assert(o.keySet -- static == context) }
+      val drifted = builds(0).keySet.filter(k => builds(0)(k) != builds(1)(k))
+      assert(drifted.isEmpty, s"oracle text depends on the partitioning: $drifted")
+    } finally {
+      Similarity.oracleContext = saved
+      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
     }
   }
 

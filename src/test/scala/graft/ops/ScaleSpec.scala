@@ -26,7 +26,7 @@ class ScaleSpec extends SparkSpec {
     val work = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     graft.ops.Similarity.writeIvfIndex(spark, sfDir, work)
     // one directory per centroid on disk
-    val dirs = new java.io.File(work).listFiles()
+    val dirs = new java.io.File(s"$work/codes").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cent_id=")).map(_.getName)
     assert(dirs.length > 2, s"expected several centroid partitions, got ${dirs.toSeq}")
 

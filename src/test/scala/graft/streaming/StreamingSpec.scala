@@ -1126,7 +1126,7 @@ class StreamingSpec extends SparkSpec {
     val work = Files.createTempDirectory("graft-ivf-stream")
     val index = work.resolve("index").toString
     graft.ops.Similarity.writeIvfIndex(spark, sfd, index)
-    val before = spark.read.parquet(index).count()
+    val before = spark.read.parquet(s"$index/codes").count()
 
     // two micro-batches of new vectors (twins of existing top-k
     // candidates, ids offset) land via the streaming path
@@ -1152,10 +1152,10 @@ class StreamingSpec extends SparkSpec {
       trigger = TriggerConfig.AvailableNow).startStream(spark)
     q.awaitTermination(60000)
 
-    assert(spark.read.parquet(index).count() == before + newVecs.count())
+    assert(spark.read.parquet(s"$index/codes").count() == before + newVecs.count())
     // exhaustive search from the grown index == brute force over the union
     graft.functions.GraftFunctions.register(spark)
-    val k = new java.io.File(index).listFiles()
+    val k = new java.io.File(s"$index/codes").listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("cent_id="))
     val got = graft.ops.Similarity.searchIvfIndex(spark, sfd, index, nprobe = k)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
